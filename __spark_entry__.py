@@ -25,6 +25,7 @@ from z_rad_spark.operators.asof import asof_state
 from z_rad_spark.operators.backfill import backfill
 from z_rad_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, ngram_jaccard, simhash
 from z_rad_spark.operators.sessionize import with_lag_lead, with_sessions
+from z_rad_spark.operators.skew import _spread
 from z_rad_spark.operators.similarity import cosine_topk, lsh_bucket_topk
 from z_rad_spark.operators.text import (
     with_fingerprint,
@@ -32,6 +33,7 @@ from z_rad_spark.operators.text import (
     with_quality,
     with_token_counts,
 )
+from z_rad_spark.session import memo_plan
 from z_rad_spark.transcripts import load_transcripts, with_signal
 
 CUTOFFS = ["2024-01-08 00:00:00", "2024-01-15 00:00:00", "2024-01-22 00:00:00"]
@@ -79,69 +81,28 @@ def _t(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_transcripts(spark, sf_dir, token_signal=True)
 
 
-#: scan-split counts per (sf_dir, table) — metadata only, cached so each
-#: query build does not re-plan the scan to re-learn the file layout
-_SPLIT_CACHE: dict[tuple[str, str], bool] = {}
-
-
-def _spread(df: DataFrame, key: str, tag: tuple[str, str]) -> DataFrame:
-    """Spread a small scan across the cluster before heavy per-row work.
-
-    A test-scale corpus arrives as ONE parquet split, so every narrow
-    per-row stage (regex normalization, n-gram shingling, the
-    interpreted array folds of the embedding kernels) serializes in a
-    single task regardless of core count. Repartition by the row key
-    ONLY when the scan has fewer splits than the session parallelism —
-    at production scale the input has thousands of splits and no
-    repartition (and no shuffle of the payload) ever fires. Guide §2.5
-    input-skew fix, made scale-adaptive."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    need = _SPLIT_CACHE.get(tag)
-    if need is None:
-        need = df.rdd.getNumPartitions() < par
-        _SPLIT_CACHE[tag] = need
-    # explicit partition count: a bare repartition(key) is byte-based-
-    # coalesced by AQE right back to one partition on small inputs, which
-    # re-serializes the CPU-bound per-row stages this spread exists for
-    # (the extractor's bucket-count lesson); a user-specified count is
-    # never coalesced
-    return df.repartition(2 * par, key) if need else df
-
-
-#: memoized source *plans* (same contract as transcripts._PLAN_CACHE:
-#: immutable unresolved plans keyed by application id — zero materialized
-#: data, every action still computes from parquet)
-_SRC_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _docs(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "docs", spread)
-    d = _SRC_CACHE.get(key)
-    if d is None:
+    # spread=False for queries whose whole plan is one cheap map-side-
+    # combined aggregation or narrow projection: there the pre-shuffle
+    # only adds an exchange (and at production split counts it is a no-op
+    # anyway — _spread never fires on a multi-split scan)
+    def build() -> DataFrame:
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # spread=False for queries whose whole plan is one cheap map-side-
-        # combined aggregation or narrow projection: there the pre-shuffle
-        # only adds an exchange (and at production split counts it is a no-op
-        # anyway — _spread never fires on a multi-split scan)
-        if spread:
-            d = _spread(d, "doc_id", (sf_dir, "documents"))
-        _SRC_CACHE[key] = d
-    return d
+        return _spread(d, "doc_id") if spread else d
+
+    return memo_plan(spark, ("docs", sf_dir, spread), build)
 
 
 def _emb(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "emb", spread)
-    e = _SRC_CACHE.get(key)
-    if e is None:
+    def build() -> DataFrame:
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         if spread:
-            e = _spread(e, "vec_id", (sf_dir, "embeddings"))
-        e = e.withColumn(
+            e = _spread(e, "vec_id")
+        return e.withColumn(
             "embedding", F.transform("embedding", lambda x: x.cast("double"))
         )
-        _SRC_CACHE[key] = e
-    return e
+
+    return memo_plan(spark, ("emb", sf_dir, spread), build)
 
 
 def _r6(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -670,6 +670,50 @@ def test_connected_components_star_long_chain_few_rounds(spark):
     assert set(out["cluster_id"]) == {"n000"}
 
 
+def test_connected_components_star_leaves_session_conf_alone(spark, monkeypatch):
+    """A library operator must not rewrite session-global confs: another
+    query running on the same session would pick up the change."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from z_rad_spark.operators.dedup import connected_components_star
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    out = connected_components_star(chain).toPandas()
+    assert len(out) == 41 and set(out["cluster_id"]) == {0}
+    assert "spark.sql.shuffle.partitions" not in keys
+
+
+def test_unpersist_intermediates_releases_every_registered_frame(spark):
+    from pyspark import StorageLevel
+
+    from z_rad_spark import session
+    from z_rad_spark.operators.graph import pagerank_bipartite
+
+    session.unpersist_intermediates()
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e"), (3, "x y z w")], "doc_id long, text string"
+    )
+    assert ngram_jaccard(docs, n=2).count() > 0
+    events = spark.createDataFrame(
+        [(1, "click"), (2, "view"), (1, "view")], "user_id long, event_type string"
+    )
+    assert pagerank_bipartite(events, n_iter=2).count() > 0
+    frames = list(session._PERSISTED)
+    assert len(frames) == 3  # shingles; pagerank's edges and degrees
+    assert all(f.storageLevel != StorageLevel.NONE for f in frames)
+    session.unpersist_intermediates()
+    assert all(f.storageLevel == StorageLevel.NONE for f in frames)
+    assert session._PERSISTED == []
+
+
 def test_salt_bucket_assignment_has_no_window(spark, tdf):
     """Bucket assignment must be pure column arithmetic on the turn_idx
     ordinal — a row_number window over bare conv_id would serialize the

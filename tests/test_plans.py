@@ -10,8 +10,18 @@ plan. Assertions are deliberately coarse (marker present/absent, counts
 bounded) so they survive Spark version cosmetics.
 """
 
+import logging
+import pathlib
+import sys
+import threading
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
+
+import z_rad_spark
+from z_rad_spark import session
+from z_rad_spark.session import _MEMO_SIZE, get_spark, memo_plan
 
 
 def _plan(df) -> str:
@@ -1121,3 +1131,90 @@ def test_final_session9_plan_shapes(spark):
     # the tiny (group, week) frame) — 4 textual mentions in the AQE plan
     plan = _plan(vocab_turnover(t, k=5))
     assert plan.count("Window") <= 4 and "CartesianProduct" not in plan
+
+
+def _app(app_id):
+    """Stands in for a SparkSession: memo_plan reads only the application id."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_plan_memo_lru_evicts_oldest_key():
+    app = _app("app-lru")
+    built = []
+
+    def build(i):
+        return lambda: built.append(i) or i
+
+    for i in range(_MEMO_SIZE + 1):
+        assert memo_plan(app, ("lru", i), build(i)) == i
+    assert memo_plan(app, ("lru", _MEMO_SIZE), build(-1)) == _MEMO_SIZE  # newest: hit
+    assert memo_plan(app, ("lru", 1), build(-1)) == 1  # oldest survivor: hit
+    assert built == list(range(_MEMO_SIZE + 1))
+    assert memo_plan(app, ("lru", 0), build(0)) == 0  # evicted: rebuilt
+    assert built[-1] == 0 and len(built) == _MEMO_SIZE + 2
+
+
+def test_plan_memo_drops_other_applications_on_insert():
+    dead, live = _app("app-dead"), _app("app-live")
+    memo_plan(dead, ("k",), lambda: "dead")
+    assert memo_plan(dead, ("k",), lambda: "rebuilt") == "dead"
+    memo_plan(live, ("k",), lambda: "live")
+    assert memo_plan(dead, ("k",), lambda: "rebuilt") == "rebuilt"
+
+
+def test_plan_memo_pin_mismatch_is_a_miss():
+    app, a, b = _app("app-pin"), object(), object()
+    assert memo_plan(app, ("p",), lambda: "a", pin=a) == "a"
+    assert memo_plan(app, ("p",), lambda: "x", pin=a) == "a"
+    assert memo_plan(app, ("p",), lambda: "b", pin=b) == "b"
+
+
+def test_plan_memo_keeps_its_bound_under_threads():
+    app, errors = _app("app-threads"), []
+
+    def work(t):
+        try:
+            for i in range(300):
+                memo_plan(app, ("thr", t, i), lambda: i)
+                memo_plan(app, ("thr", t, i // 2), lambda: -1)
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(session._MEMO) <= _MEMO_SIZE
+
+
+def test_get_spark_warns_when_a_static_conf_is_ignored(spark, caplog):
+    """spark.sql.codegen.cache.maxEntries is static: attaching to a live
+    session cannot change it, and get_spark must say so."""
+    with caplog.at_level(logging.WARNING, logger="z_rad_spark.session"):
+        s = get_spark(
+            cores=4, shuffle_partitions=8,
+            extra_conf={"spark.sql.codegen.cache.maxEntries": "123"},
+        )
+    assert s is spark
+    assert any("spark.sql.codegen.cache.maxEntries" in r.getMessage() for r in caplog.records)
+
+
+def test_library_never_sets_session_conf():
+    """Operators run on long-lived shared sessions: none may mutate a
+    session-global conf."""
+    root = pathlib.Path(z_rad_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if ".conf.set(" in line
+    ]
+    assert hits == []

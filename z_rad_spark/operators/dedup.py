@@ -24,6 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import persist_intermediate
+from .skew import _spread
+
 
 def normalize_text(col):
     """Lowercase + collapse whitespace (portable: lower/trim/regexp)."""
@@ -55,18 +58,13 @@ def word_shingles(
     dedup shuffle for consumers whose downstream aggregate is
     duplicate-idempotent (MIN in the minhash signature).
     """
-    # A small-file corpus arrives as one input split; repartition the RAW
-    # docs before ANY per-doc compute so the regex normalization, the
+    # A small-file corpus arrives as one input split; spread the RAW docs
+    # before ANY per-doc compute so the regex normalization, the
     # tokenization, and the explode all run across the cluster instead of
     # in one scan task (the \s+ collapse alone is milliseconds per doc —
-    # serialized over a corpus it dominates the whole LSH job). Skip the
-    # shuffle when the input is already at least that parallel (e.g. a
-    # pre-spread scan or a production corpus with thousands of splits).
-    n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
-    if docs.rdd.getNumPartitions() >= n_parts:
-        n_parts = None
+    # serialized over a corpus it dominates the whole LSH job).
     toks = (
-        (docs if n_parts is None else docs.repartition(n_parts, id_col))
+        _spread(docs, id_col)
         .select(F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("toks"))
         .where(F.size("toks") >= n)
     )
@@ -437,54 +435,38 @@ def connected_components_star(
         return int(row["n"]), int(row["h"])
 
     fp = _fingerprint(edges)
-    # Size the loop's shuffles to the EDGE LIST, not the session default
-    # (guide §2.2 "fewer, larger partitions"): each half-round is 2-3 tiny
-    # shuffles whose per-stage scheduling overhead dominates when the
-    # session partition count (2-3x cores) far exceeds what the edge list
-    # needs. ~2M edge rows (~50 MB) per reduce partition, clamped to the
-    # session setting so a corpus-scale edge list keeps full parallelism.
-    # Results are partitioning-invariant (min/distinct algebra), and the
-    # session value is restored before returning. Measured at sf0.1:
-    # interleaved A/B median 0.75x the round-trip wall.
-    spark = pairs.sparkSession
-    sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(1, min(sess_parts, (fp[0] + 1_999_999) // 2_000_000))
-    converged = False
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for _ in range(max_iter):
-            # large-star over the symmetric neighbourhood
-            sym = edges.select("u", "v").unionByName(
-                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-            mins = mins.select("u", F.least("u", "mn").alias("m"))
-            large = (
-                sym.join(mins, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .where(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # small-star on large→small directed edges
-            mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-            small = (
-                large.join(mins2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionByName(mins2.select(F.col("u"), F.col("m").alias("v")))
-                .where(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            new_fp = _fingerprint(small)
-            edges = small
-            if new_fp == fp:
-                converged = True
-                break
-            fp = new_fp
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-    if not converged:
+    # each half-round is 2-3 tiny shuffles; AQE coalescing sizes them to
+    # the edge list (results are partitioning-invariant: min/distinct)
+    for _ in range(max_iter):
+        # large-star over the symmetric neighbourhood
+        sym = edges.select("u", "v").unionByName(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
+        mins = mins.select("u", F.least("u", "mn").alias("m"))
+        large = (
+            sym.join(mins, "u")
+            .where(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .where(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # small-star on large→small directed edges
+        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
+        small = (
+            large.join(mins2, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionByName(mins2.select(F.col("u"), F.col("m").alias("v")))
+            .where(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        new_fp = _fingerprint(small)
+        edges = small
+        if new_fp == fp:
+            break
+        fp = new_fp
+    else:
         raise RuntimeError(
             f"connected_components_star did not reach a fixpoint in {max_iter} "
             "rounds; raise max_iter (expected O(log n) rounds)"
@@ -505,17 +487,12 @@ def dup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 64,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Near-duplicate clusters: MinHash-LSH candidate pairs -> connected
-    components -> (doc_id, cluster_id = min doc id in the cluster).
-
-    ``algorithm="star"`` (default) uses the O(log n)-round large/small-star
-    contraction — the scale path; ``"label"`` keeps min-label propagation
-    (O(diameter) rounds, fine for shallow graphs)."""
+    components (the O(log n)-round :func:`connected_components_star`) ->
+    (doc_id, cluster_id = min doc id in the cluster)."""
     pairs = minhash_lsh_pairs(docs, n, n_hashes, band_size, text_col, id_col, max_bucket)
-    cc = connected_components_star if algorithm == "star" else connected_components
-    return cc(pairs).select(F.col("id").alias(id_col), "cluster_id")
+    return connected_components_star(pairs).select(F.col("id").alias(id_col), "cluster_id")
 
 
 def ngram_jaccard(
@@ -542,7 +519,8 @@ def ngram_jaccard(
 
     Cache lifetime: the shingle frame is persisted because it feeds three
     consumers of one lazy plan; the blocks stay cached until the caller
-    evaluates the result and calls ``unpersist_intermediates(result)`` (or
+    evaluates the result and calls
+    :func:`z_rad_spark.session.unpersist_intermediates` (or
     ``spark.catalog.clearCache()``) — long-lived sessions issuing many
     calls should do so to keep executor storage bounded.
     """
@@ -550,7 +528,7 @@ def ngram_jaccard(
     # (and optionally the doc-frequency filter): persist it so the
     # shingle explode + regex normalization run once, not once per
     # consumer (Spark re-executes a multi-consumed subtree from the scan).
-    sh = word_shingles(docs, n, text_col, id_col).persist()
+    sh = persist_intermediate(word_shingles(docs, n, text_col, id_col))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     join_sh = sh
     if pairs is None and max_doc_freq is not None:
@@ -581,36 +559,7 @@ def ngram_jaccard(
             ).alias("jaccard"),
         )
     )
-    out = out.where(F.col("jaccard") >= threshold)
-    out._zrs_cached = (sh,)  # see unpersist_intermediates
-    _CACHED_FRAMES.append(sh)
-    return out
-
-
-#: every frame this module has persisted in the session, in order —
-#: survives DataFrame transformations that drop the per-frame attribute
-_CACHED_FRAMES: list = []
-
-
-def unpersist_intermediates(df: DataFrame | None = None) -> None:
-    """Release intermediate frames operators in this module persisted.
-
-    Operators like :func:`ngram_jaccard` cache a multi-consumed subtree;
-    because the result is lazy they cannot unpersist it themselves. Call
-    this after the final action. Pass the EXACT frame the operator
-    returned to release just its intermediates (the record rides a Python
-    attribute, so derived frames — ``.orderBy()`` etc. — lose it), or
-    call with no argument to release everything this module persisted in
-    the session. No-op if nothing is cached.
-    """
-    if df is not None:
-        for cached in getattr(df, "_zrs_cached", ()):
-            cached.unpersist()
-            if cached in _CACHED_FRAMES:
-                _CACHED_FRAMES.remove(cached)
-        return
-    while _CACHED_FRAMES:
-        _CACHED_FRAMES.pop().unpersist()
+    return out.where(F.col("jaccard") >= threshold)
 
 
 def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -900,9 +849,9 @@ def ngram_containment(
     stop-shingles from candidate generation only, so surviving scores
     are documented lower bounds); denominators are always the full
     per-doc shingle counts. The shingle frame is persisted for its three
-    consumers — release with ``unpersist_intermediates``.
+    consumers — release with :func:`z_rad_spark.session.unpersist_intermediates`.
     """
-    sh = word_shingles(docs, n, text_col, id_col).persist()
+    sh = persist_intermediate(word_shingles(docs, n, text_col, id_col))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     join_sh = sh
     if pairs is None and max_doc_freq is not None:
@@ -940,10 +889,7 @@ def ngram_containment(
             ).alias("containment"),
         )
     )
-    out = out.where(F.col("containment") >= threshold)
-    out._zrs_cached = (sh,)
-    _CACHED_FRAMES.append(sh)
-    return out
+    return out.where(F.col("containment") >= threshold)
 
 
 def dup_survivors(
@@ -1504,10 +1450,10 @@ def dup_threshold_sweep(
     pairs = minhash_lsh_pairs(
         docs, n, n_hashes, band_size, text_col, id_col, max_bucket
     )
-    scored = ngram_jaccard(
+    # pair-count sized; consumed by both aggregate passes
+    scored = persist_intermediate(ngram_jaccard(
         docs, pairs=pairs, n=n, text_col=text_col, id_col=id_col, threshold=0.0
-    ).persist()  # pair-count sized; consumed by both aggregate passes
-    _CACHED_FRAMES.append(scored)
+    ))
     tot = docs.select(F.count("*").cast("long").alias("_nd"))
     ths = sorted(float(x) for x in thresholds)
     # ONE pass for the pair counts (conditional sums) and ONE for the

@@ -32,6 +32,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import memo_plan
 from .asof import cutoff_grid
 
 SENTINEL = 1_000_000.0
@@ -44,27 +45,6 @@ _QFRACS = (("10", 0.1), ("25", 0.25), ("50", 0.5), ("75", 0.75), ("90", 0.9))
 def _expand(df: DataFrame, spark: SparkSession, cutoffs: Iterable[str]) -> DataFrame:
     grid = cutoff_grid(spark, cutoffs)
     return df.join(F.broadcast(grid), F.col("ts") <= F.col("as_of"))
-
-
-#: memoized *plans* for the pure as-of builders (same contract as
-#: transcripts._PLAN_CACHE: no job runs during construction, so nothing
-#: material is ever cached — every action still computes from the
-#: input). Keyed by application id + INPUT FRAME IDENTITY (the stored
-#: input reference is compared with `is`, so a recycled id() can never
-#: alias) + the parameters. stats_asof/hist_asof rebuilt a ~5,000-py4j-
-#: round-trip window chain on every call (~0.5-0.8 s of driver time per
-#: bench pass each, profiled r6).
-_PLAN_MEMO: dict = {}
-
-
-def _memo_plan(kind: str, df: DataFrame, params: tuple, build) -> DataFrame:
-    key = (df.sparkSession.sparkContext.applicationId, kind, id(df), params)
-    hit = _PLAN_MEMO.get(key)
-    if hit is not None and hit[0] is df:
-        return hit[1]
-    out = build()
-    _PLAN_MEMO[key] = (df, out)
-    return out
 
 
 def _lerp(nm: str, qf: float) -> Column:
@@ -125,11 +105,12 @@ def stats_asof(
     Pure plan construction (no job, no collect), so the built frame is
     memoized per (application, input frame, cutoffs, signal)."""
     cutoffs = tuple(cutoffs)
-    return _memo_plan(
-        "stats_asof",
-        df,
-        (cutoffs, signal_col),
+    # the build is ~5,000 py4j round-trips (0.5-0.8 s, profiled r6)
+    return memo_plan(
+        spark,
+        ("stats_asof", id(df), cutoffs, signal_col),
         lambda: _stats_asof_build(df, spark, cutoffs, signal_col),
+        pin=df,
     )
 
 
@@ -329,11 +310,11 @@ def hist_asof(
     Pure plan construction (no job, no collect), so the built frame is
     memoized per (application, input frame, cutoffs, bins, signal)."""
     cutoffs = tuple(cutoffs)
-    return _memo_plan(
-        "hist_asof",
-        df,
-        (cutoffs, n_bins, signal_col),
+    return memo_plan(
+        spark,
+        ("hist_asof", id(df), cutoffs, n_bins, signal_col),
         lambda: _hist_asof_build(df, spark, cutoffs, n_bins, signal_col),
+        pin=df,
     )
 
 

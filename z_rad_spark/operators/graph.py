@@ -27,9 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# shared session cache registry — frames persisted here are released by
-# dedup.unpersist_intermediates(None) or per-frame via the _zrs_cached tag
-from .dedup import _CACHED_FRAMES
+# frames persisted here are released by session.unpersist_intermediates()
+from ..session import persist_intermediate
 
 
 def pagerank_bipartite(
@@ -85,15 +84,13 @@ def pagerank_bipartite(
     # the edge table and degree table are consumed 2x per iteration (the
     # share join and the inbox join) — persist both so the K-iteration
     # loop reuses one materialization instead of re-deriving the distinct
-    # pair set 2K times (the dedup-module cache registry idiom; release
-    # with unpersist_intermediates after the final action)
+    # pair set 2K times (release with session.unpersist_intermediates()
+    # after the final action)
     # cached pre-partitioned on src (the docstring's production advice):
     # the K inbox joins then reuse the cached partitioning instead of
     # re-shuffling the edge table every iteration
-    edges = edges.repartition("src").persist()
-    _CACHED_FRAMES.append(edges)
-    deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("od")).persist()
-    _CACHED_FRAMES.append(deg)
+    edges = persist_intermediate(edges.repartition("src"))
+    deg = persist_intermediate(edges.groupBy("src").agg(F.count("*").cast("long").alias("od")))
     nodes = deg.select(F.col("src").alias("node"))
     n_nodes = nodes.count()  # driver scalar: graph order
     nd = F.lit(float(n_nodes))
@@ -119,13 +116,11 @@ def pagerank_bipartite(
             F.col("dst").alias("node"),
             (base + F.lit(damping) * summed).alias("pr"),
         )
-    out = (
+    return (
         pr.orderBy(F.col("pr").desc(), F.col("node").asc())
         .limit(top_k)
         .select("node", (F.col("pr") * nd).alias("pr_scaled"))
     )
-    out._zrs_cached = (edges, deg)  # see dedup.unpersist_intermediates
-    return out
 
 
 def triangle_stats(
@@ -163,21 +158,18 @@ def triangle_stats(
     n_triangles long, transitivity double — NULL when no wedges).
     """
     a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-    und = (
+    # consumed by degrees, orientation, and closure
+    und = persist_intermediate(
         edges.select(F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b"))
         .where(F.col("_a") < F.col("_b"))
         .distinct()
-        .persist()  # consumed by degrees, orientation, and closure
     )
-    _CACHED_FRAMES.append(und)
-    deg = (
+    deg = persist_intermediate(
         und.select(F.col("_a").alias("_n"))
         .unionByName(und.select(F.col("_b").alias("_n")))
         .groupBy("_n")
         .agg(F.count("*").cast("long").alias("_d"))
-        .persist()
     )
-    _CACHED_FRAMES.append(deg)
     e = (
         und.join(deg.withColumnRenamed("_n", "_a").withColumnRenamed("_d", "_da"), "_a")
         .join(deg.withColumnRenamed("_n", "_b").withColumnRenamed("_d", "_db"), "_b")
@@ -208,11 +200,9 @@ def triangle_stats(
         F.lit(3.0) * F.col("n_triangles").cast("double")
         / F.col("n_wedges").cast("double"),
     )
-    out = g.select(
+    return g.select(
         "n_nodes", "n_edges", "n_wedges", "n_triangles", trans.alias("transitivity")
     )
-    out._zrs_cached = (und, deg)  # see dedup.unpersist_intermediates
-    return out
 
 
 def hits_bipartite(
@@ -253,16 +243,14 @@ def hits_bipartite(
     string, score double), hubs first, each block by (score desc,
     node asc).
     """
-    pairs = (
+    pairs = persist_intermediate(
         df.where(F.col(left_col).isNotNull() & F.col(right_col).isNotNull())
         .select(
             F.col(left_col).cast("string").alias("u"),
             F.col(right_col).cast("string").alias("t"),
         )
         .distinct()
-        .persist()
     )
-    _CACHED_FRAMES.append(pairs)
 
     def _l2_normalize(scores: DataFrame, node_col: str, score_col: str) -> DataFrame:
         # truncate lineage on both sides of the normalize: the raw frame
@@ -328,9 +316,7 @@ def hits_bipartite(
             F.col("a").alias("score"),
         )
     )
-    out = hubs.unionByName(auths)
-    out._zrs_cached = (pairs,)  # see dedup.unpersist_intermediates
-    return out
+    return hubs.unionByName(auths)
 
 
 def label_propagation(
@@ -374,10 +360,11 @@ def label_propagation(
         .where(F.col("_a") < F.col("_b"))
         .distinct()
     )
-    dir_e = und.select(F.col("_a").alias("src"), F.col("_b").alias("dst")).unionByName(
-        und.select(F.col("_b").alias("src"), F.col("_a").alias("dst"))
-    ).persist()
-    _CACHED_FRAMES.append(dir_e)
+    dir_e = persist_intermediate(
+        und.select(F.col("_a").alias("src"), F.col("_b").alias("dst")).unionByName(
+            und.select(F.col("_b").alias("src"), F.col("_a").alias("dst"))
+        )
+    )
     lab = dir_e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -395,7 +382,7 @@ def label_propagation(
             .select("node", "lbl")
         )
     sizes = lab.groupBy("lbl").agg(F.count("*").cast("long").alias("_sz"))
-    out = sizes.agg(
+    return sizes.agg(
         F.sum("_sz").cast("long").alias("n_nodes"),
         F.count("*").cast("long").alias("n_communities"),
         F.max("_sz").cast("long").alias("max_size"),
@@ -407,8 +394,6 @@ def label_propagation(
             "mean_size"
         ),
     )
-    out._zrs_cached = (dir_e,)  # see dedup.unpersist_intermediates
-    return out
 
 
 def kcore_peel(
@@ -534,13 +519,11 @@ def degree_assortativity(
     zero, e.g. a perfect matching or a single clique).
     """
     a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-    und = (
+    und = persist_intermediate(
         edges.select(F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b"))
         .where(F.col("_a") < F.col("_b"))
         .distinct()
-        .persist()
     )
-    _CACHED_FRAMES.append(und)
     deg = (
         und.select(F.explode(F.array("_a", "_b")).alias("_n"))
         .groupBy("_n")
@@ -564,7 +547,7 @@ def degree_assortativity(
     nn = deg.agg(F.count("*").cast("long").alias("n_nodes"))
     num = F.col("_m") * F.col("_sjk") - F.col("_sj") * F.col("_sj")
     den = F.col("_m") * F.col("_sjj") - F.col("_sj") * F.col("_sj")
-    out = nn.crossJoin(g).select(  # two single-row aggregates
+    return nn.crossJoin(g).select(  # two single-row aggregates
         "n_nodes",
         "n_edges",
         F.col("_sj").cast("long").alias("s_j"),
@@ -575,8 +558,6 @@ def degree_assortativity(
             num.cast("double") / den.cast("double"),
         ).alias("assortativity"),
     )
-    out._zrs_cached = (und,)  # see dedup.unpersist_intermediates
-    return out
 
 
 def wl_conversation_fingerprint(
@@ -626,13 +607,11 @@ def wl_conversation_fingerprint(
     )
     lagw = Window.partitionBy(group_col).orderBy(ts_col, idx_col)
     ordered = base.withColumn("_prev", F.lag("_r").over(lagw))
-    edges = (
+    edges = persist_intermediate(
         ordered.where(F.col("_prev").isNotNull())
         .groupBy(group_col, F.col("_prev").alias("_src"), F.col("_r").alias("_dst"))
         .agg(F.count("*").cast("long").alias("_cnt"))
-        .persist()
     )
-    _CACHED_FRAMES.append(edges)
     colors = (
         base.select(group_col, F.col("_r").alias("_node"))
         .distinct()
@@ -689,12 +668,10 @@ def wl_conversation_fingerprint(
             "wl_fingerprint"
         )
     )
-    out = fp.groupBy("wl_fingerprint").agg(
+    return fp.groupBy("wl_fingerprint").agg(
         F.count("*").cast("long").alias("n_convs"),
         F.min(group_col).alias("rep_conv"),
     )
-    out._zrs_cached = (edges,)  # see dedup.unpersist_intermediates
-    return out
 
 
 def adamic_adar(
@@ -842,21 +819,17 @@ def local_clustering(
     double), one row per node with degree >= 2.
     """
     a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-    und = (
+    und = persist_intermediate(
         edges.select(F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b"))
         .where(F.col("_a") < F.col("_b"))
         .distinct()
-        .persist()
     )
-    _CACHED_FRAMES.append(und)
-    deg = (
+    deg = persist_intermediate(
         und.select(F.col("_a").alias("_n"))
         .unionByName(und.select(F.col("_b").alias("_n")))
         .groupBy("_n")
         .agg(F.count("*").cast("long").alias("_d"))
-        .persist()
     )
-    _CACHED_FRAMES.append(deg)
     e = (
         und.join(deg.select(F.col("_n").alias("_a"), F.col("_d").alias("_da")), "_a")
         .join(deg.select(F.col("_n").alias("_b"), F.col("_d").alias("_db")), "_b")
@@ -926,13 +899,11 @@ def rich_club(
     long, phi double — NULL when N_k < 2), one row per k, ascending.
     """
     a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-    und = (
+    und = persist_intermediate(
         edges.select(F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b"))
         .where(F.col("_a") < F.col("_b"))
         .distinct()
-        .persist()
     )
-    _CACHED_FRAMES.append(und)
     deg = (
         und.select(F.col("_a").alias("_n"))
         .unionByName(und.select(F.col("_b").alias("_n")))

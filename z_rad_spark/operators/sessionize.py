@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import persist_intermediate
+
 _ORDER = ("ts", "turn_idx")
 
 
@@ -1819,16 +1821,14 @@ def markov_stationary(df: DataFrame, n_iter: int = 3) -> DataFrame:
     w_all = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    from .dedup import _CACHED_FRAMES
-
-    cells = trans.select(
+    # |roles|^2 rows, reused by every iteration
+    cells = persist_intermediate(trans.select(
         "_u",
         "_v",
         (F.col("_n").cast("double") / F.sum("_n").over(w_u).cast("double")).alias(
             "_p"
         ),
-    ).persist()  # |roles|^2 rows, reused by every iteration
-    _CACHED_FRAMES.append(cells)
+    ))
     roles = cells.select(F.col("_u").alias("_r")).distinct()
     k = roles.count()
     pi = roles.select("_r", F.lit(1.0 / float(k)).alias("_pi"))

@@ -51,6 +51,29 @@ def skew_metrics(df: DataFrame) -> dict:
     return d
 
 
+def _spread(df: DataFrame, key: str) -> DataFrame:
+    """Spread a small scan across the cluster before heavy per-row work.
+
+    A test-scale corpus arrives as ONE parquet split, so every narrow
+    per-row stage (regex normalization, n-gram shingling, the
+    interpreted array folds of the embedding kernels) serializes in a
+    single task regardless of core count. Repartition by the row key
+    ONLY when the scan has fewer splits than the session parallelism —
+    at production scale the input has thousands of splits and no
+    repartition (and no shuffle of the payload) ever fires. Guide §2.5
+    input-skew fix, made scale-adaptive.
+
+    The count is explicit: a bare repartition(key) is byte-based-
+    coalesced by AQE right back to one partition on small inputs, which
+    re-serializes the CPU-bound per-row stages this spread exists for
+    (the extractor's bucket-count lesson); a user-specified count is
+    never coalesced."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    return df.repartition(2 * par, key)
+
+
 def repartition_range(df: DataFrame, n: int | None = None) -> DataFrame:
     """Range partition by (conv_id, ts) + secondary sort within partitions
     — the engine's canonical physical layout (SURVEY.md §2.1 geometric
