@@ -2723,19 +2723,38 @@ def q_dup_spans(spark, sf_dir):
     return _r6(out, ["dup_frac"])
 
 
-def _replay_stream(spark, sf_dir, build_output, prefix):
-    """Shared harness for the streaming gate queries: replay the
-    events-derived (conv_id, ts, signal) frame through a file stream
-    source with an availableNow trigger into a memory sink, and return
-    the emitted table.
+def _conv_signal(events):
+    """The streaming gate queries' default source: the events-derived
+    (conv_id, ts, signal) conversation frame."""
+    return events.select(
+        F.concat(F.lit("c"), F.col("user_id").cast("string")).alias("conv_id"),
+        F.col("ts").cast("timestamp").alias("ts"),
+        (1 + F.abs(F.floor("value").cast("int")) % 9).cast("double").alias("signal"),
+    )
+
+
+def _event_keys(events):
+    """Raw (event_type, key) pairs — the shape the sketch operators
+    consume (group + hashable key)."""
+    return events.select(
+        F.col("event_type").cast("string").alias("event_type"),
+        F.col("user_id").cast("long").alias("key"),
+    )
+
+
+def _replay_stream(spark, sf_dir, build_output, prefix, project=_conv_signal):
+    """Shared harness for the streaming gate queries: replay
+    ``project(events)`` through a file stream source with an availableNow
+    trigger into a memory sink, and return the emitted table.
 
     * The source copy is written with a handful of parallel files;
       availableNow with no file rate limit processes them as ONE
       micro-batch, so file order cannot create late-drop nondeterminism.
-    * Shuffle partitions are scoped to 8 for the stream only: per-batch
-      state-store commit cost is proportional to partitions, and the
-      state here is tiny (a real deployment sizes this to state volume,
-      not cores).
+    * The stream runs on its own ``newSession()`` (same SparkContext and
+      builder confs) with 8 shuffle partitions: per-batch state-store
+      commit cost is proportional to partitions, and the state here is
+      tiny (a real deployment sizes this to state volume, not cores).
+      The caller's session conf is never written.
     * awaitTermination's result is CHECKED — a timeout would otherwise
       surface as a silent partial sink; the query is stopped and the
       source copy deleted either way (the memory sink keeps the emitted
@@ -2745,27 +2764,14 @@ def _replay_stream(spark, sf_dir, build_output, prefix):
     import tempfile
     import uuid
 
-    from pyspark.sql import types as T
-
+    stream_spark = spark.newSession()
+    stream_spark.conf.set("spark.sql.shuffle.partitions", "8")
     src = tempfile.mkdtemp(prefix=prefix)
-    base = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.concat(F.lit("c"), F.col("user_id").cast("string")).alias("conv_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        (1 + F.abs(F.floor("value").cast("int")) % 9).cast("double").alias("signal"),
-    )
+    base = project(stream_spark.read.parquet(f"{sf_dir}/events.parquet"))
     base.repartition(4).write.mode("overwrite").parquet(src)
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("signal", T.DoubleType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = stream_spark.readStream.schema(base.schema).parquet(src)
     out = build_output(stream)
     name = prefix + uuid.uuid4().hex
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     q = None
     try:
         q = (
@@ -2784,9 +2790,8 @@ def _replay_stream(spark, sf_dir, build_output, prefix):
     finally:
         if q is not None:
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name)
+    return stream_spark.table(name)
 
 
 def q_stream_window_stats(spark, sf_dir):
@@ -4526,57 +4531,6 @@ def q_label_prop(spark, sf_dir):
     return _r6(label_propagation(pairs), ["mean_size"])
 
 
-def _replay_stream_kv(spark, sf_dir, build_output, prefix):
-    """_replay_stream variant streaming raw (event_type, key) pairs —
-    the shape the sketch operators consume (group + hashable key)
-    instead of the conversation-signal frame. Same availableNow /
-    memory-sink / scoped-partitions mechanics."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from pyspark.sql import types as T
-
-    src = tempfile.mkdtemp(prefix=prefix)
-    base = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("event_type").cast("string").alias("event_type"),
-        F.col("user_id").cast("long").alias("key"),
-    )
-    base.repartition(4).write.mode("overwrite").parquet(src)
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("key", T.LongType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = build_output(stream)
-    name = prefix + uuid.uuid4().hex
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = None
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-        if not finished:
-            raise RuntimeError(
-                f"{name}: streaming replay did not finish within 600s — "
-                "refusing to read a partial memory sink"
-            )
-    finally:
-        if q is not None:
-            q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name)
-
-
 def q_stream_hll(spark, sf_dir):
     """Stateful streaming HyperLogLog (streaming.streaming_hll via
     applyInPandasWithState): fixed 256-register state per event_type,
@@ -4587,7 +4541,7 @@ def q_stream_hll(spark, sf_dir):
     consistency end to end."""
     from z_rad_spark.streaming import streaming_hll
 
-    res = _replay_stream_kv(spark, sf_dir, streaming_hll, "q_stream_hll_")
+    res = _replay_stream(spark, sf_dir, streaming_hll, "q_stream_hll_", _event_keys)
     return _r6(res, ["est_distinct"])
 
 
@@ -5718,7 +5672,7 @@ def q_stream_kmv(spark, sf_dir):
     SQL) hash-matches it bit-for-bit."""
     from z_rad_spark.streaming import streaming_kmv
 
-    res = _replay_stream_kv(spark, sf_dir, streaming_kmv, "q_stream_kmv_")
+    res = _replay_stream(spark, sf_dir, streaming_kmv, "q_stream_kmv_", _event_keys)
     return _r6(res, ["est_distinct"])
 
 
@@ -6095,7 +6049,7 @@ def q_stream_cms(spark, sf_dir):
     bucket-sum SQL oracle bit-for-bit."""
     from z_rad_spark.streaming import streaming_cms
 
-    res = _replay_stream_kv(spark, sf_dir, streaming_cms, "q_stream_cms_")
+    res = _replay_stream(spark, sf_dir, streaming_cms, "q_stream_cms_", _event_keys)
     return res
 
 

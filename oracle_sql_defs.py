@@ -889,7 +889,7 @@ feat AS (
         )
     # averaged methods: features per matrix, then a (weighted) mean per
     # conversation, NaN-propagating like np.average over dicts containing
-    # NaN (kernels/texture.py _agg_dicts); conversations with no
+    # NaN (kernels/texture.py _average); conversations with no
     # pair-bearing matrix still emit an all-NULL row. Weighted: session
     # turn count / conversation turn count, normalized by the sum of
     # participating weights exactly like np.average.
@@ -1057,7 +1057,7 @@ def _runs16_session_sql(
     boundaries like slices): merge=True pools run counts across sessions
     before the formulas (2.5D MERG); merge=False computes the 16 formulas
     per session (voxel count = session size) then means them per
-    conversation (2D AVER, kernels/texture.py _zone_family).
+    conversation (2D AVER, kernels/texture.py texture_features).
     ``dzm_dist`` replaces the run length with the zone's min taxicab
     distance to its SESSION border (GLDZM 2.5D: kernels/prep.py
     border_distance with session boundaries as the per-slice border)."""
@@ -1196,7 +1196,7 @@ ORACLES["q_glrlm"] = _runs16_sql(
 )
 
 # 1-D GLSZM: zones are runs (26-connectivity degenerates to run adjacency),
-# so the matrix equals GLRLM's — kernels/texture.py _zone_family 'szm'
+# so the matrix equals GLRLM's — kernels/texture.py FAMILIES 'glszm'
 ORACLES["q_glszm"] = _runs16_sql(
     ["szm_sze", "szm_lze", "szm_lgze", "szm_hgze", "szm_szlge", "szm_szhge",
      "szm_lzlge", "szm_lzhge", "szm_glnu", "szm_glnu_norm", "szm_zsnu",
@@ -1222,7 +1222,7 @@ def _ngldm_sql(session_bounded: bool = False, avg_2d: bool = False) -> str:
     sessions (2.5D: per-session matrices summed before the formulas);
     avg_2d additionally computes the 17 formulas PER SESSION (voxel
     count = session size) and plain-means them per conversation (2D
-    AVER, kernels/texture.ngldm_features)."""
+    AVER, kernels/texture.texture_features)."""
     if session_bounded or avg_2d:
         src = f"""
 g0 AS (
@@ -1326,7 +1326,7 @@ def _ngtdm_sql(session_bounded: bool = False, avg_2d: bool = False) -> str:
     session (2.5D: per-session [n_i, s_i] matrices summed); avg_2d
     computes the 5 formulas per session and plain-means them per
     conversation, excluding neighbourless (single-turn) sessions — the
-    kernel's 2D AVER path (kernels/texture.ngtdm_features)."""
+    kernel's 2D AVER path (kernels/texture.texture_features)."""
     if session_bounded or avg_2d:
         src = f"""
 g0 AS (

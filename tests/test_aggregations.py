@@ -181,6 +181,13 @@ CONFIGS = [
 ]
 
 
+def test_weighted_median_config_rejected_when_built():
+    """Texture aggregation has no weighted median: the config refuses it
+    when built, instead of every row's kernel failing into a null row."""
+    with pytest.raises(ValueError, match="weighted median"):
+        FeatureConfig(aggr_dim="2D", aggr_method="AVER", slice_weight=True, slice_median=True)
+
+
 @pytest.mark.parametrize("dim,method,sw,sm", CONFIGS)
 def test_glcm_aggregation_matrix(spark, pdf, dim, method, sw, sm):
     cfg, got = _extract(
@@ -245,6 +252,38 @@ def test_gldzm_3d_vs_oracle(spark, pdf):
         for g, ln, a, b in runs:
             m[g][min(dist[a], dist[b]) - 1] += 1
         vals = orc.texture_matrix_features_oracle(m, len(grey))
+        want = dict(zip(GLDZM_NAMES, (vals[a] for a in TEXTURE_ATTRS)))
+        _check(got.loc[conv_id], want, cfg.dim_suffix)
+
+
+@pytest.mark.parametrize("dim", ["2D", "2.5D"])
+def test_gldzm_per_session_vs_oracle(spark, pdf, dim):
+    """2D / 2.5D GLDZM: a zone's distance is to its SESSION border (the
+    per-slice image border), then per-session features are averaged (2D)
+    or per-session matrices merged (2.5D)."""
+    from z_rad_spark.kernels.texture import GLDZM_NAMES
+
+    method = "AVER" if dim == "2D" else "MERG"
+    cfg, got = _extract(spark, pdf, families=("gldzm",), aggr_dim=dim, aggr_method=method)
+    for conv_id, cpdf in pdf.groupby("conv_id"):
+        grey, sess = _conv_arrays(cpdf)
+        lvl = int(max(grey)) + 1
+        dist = orc.border_distance_oracle([True] * len(grey), sess)
+        runs = orc.runs_oracle(grey, sess)
+        mats, counts = [], []
+        for s in sorted(set(sess)):
+            zones = [(g, min(dist[a], dist[b])) for g, _, a, b in runs if sess[a] == s]
+            m = [[0.0] * max(d for _, d in zones) for _ in range(lvl)]
+            for g, d in zones:
+                m[g][d - 1] += 1
+            mats.append(m)
+            counts.append(sess.count(s))
+        if dim == "2.5D":
+            vals = orc.texture_matrix_features_oracle(_pad_sum(mats, lvl), sum(counts))
+        else:
+            vals = _mean_dicts(
+                [orc.texture_matrix_features_oracle(m, c) for m, c in zip(mats, counts)]
+            )
         want = dict(zip(GLDZM_NAMES, (vals[a] for a in TEXTURE_ATTRS)))
         _check(got.loc[conv_id], want, cfg.dim_suffix)
 

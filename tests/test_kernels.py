@@ -117,7 +117,7 @@ def test_border_distance_vs_oracle():
 def test_glcm_matrix_and_features_vs_oracle(lag):
     g = _rand_signal(n=150, seed=lag)
     lvl = int(np.nanmax(g)) + 1
-    got_m = texture.glcm_count_matrix(g, lag, lvl)
+    got_m = texture.glcm_count_matrix(g, (lag,), lvl)
     want_m = np.array(orc.glcm_matrix_oracle(list(g), lag))
     np.testing.assert_allclose(got_m, want_m)
     got = texture.glcm_feature_values(got_m)
@@ -179,13 +179,18 @@ def test_glcm_aggregations_consistency():
     """MERG vs AVER must differ in general; 2.5D MERG equals summing all."""
     g = _rand_signal(n=200, lvl=4, seed=30)
     sess = _rand_sessions(200, seed=31)
-    merg = texture.glcm_features(g, sess, None, (1, 2), False, False, "2.5D", "MERG")
-    aver = texture.glcm_features(g, sess, None, (1, 2), False, False, "2D", "AVER")
+    elig = ~np.isnan(g)
+
+    def glcm(dim, method):
+        return texture.texture_features(("glcm",), g, elig, sess, (1, 2), dim, method)["glcm"]
+
+    merg = glcm("2.5D", "MERG")
+    aver = glcm("2D", "AVER")
     assert merg["cm_joint_entr"] != pytest.approx(aver["cm_joint_entr"])
     # 3D MERG with lag set == manual merge
     lvl = int(np.nanmax(g)) + 1
-    m = sum(texture.glcm_count_matrix(g, k, lvl) for k in (1, 2))
+    m = sum(texture.glcm_count_matrix(g, (k,), lvl) for k in (1, 2))
     want = texture.glcm_feature_values(m)
-    got = texture.glcm_features(g, sess, None, (1, 2), False, False, "3D", "MERG")
+    got = glcm("3D", "MERG")
     for k in want:
         _close(got[k], want[k], k)

@@ -31,7 +31,7 @@ def test_pct_sorted_matches_numpy(x, q):
 @settings(max_examples=100, deadline=None)
 def test_glcm_matrix_symmetric_and_counts(g, lag):
     lvl = int(g.max()) + 1
-    m = glcm_count_matrix(g, lag, lvl)
+    m = glcm_count_matrix(g, (lag,), lvl)
     assert np.array_equal(m, m.T)
     n_pairs = max(g.size - lag, 0)
     assert m.sum() == 2 * n_pairs

@@ -372,3 +372,36 @@ def test_streaming_hll_matches_batch(spark, tmp_path):
     for g in want:
         assert got[g][0] == want[g][0] and got[g][1] == want[g][1], g
         assert got[g][2] == pytest.approx(want[g][2], rel=1e-12), g
+
+
+def test_replay_stream_leaves_caller_conf_alone(spark, tmp_path, monkeypatch):
+    """The streaming gate queries' replay helper scopes its shuffle
+    partitions to a session of its own: a query running on the caller's
+    session at the same time must not see them change."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    import __spark_entry__ as entry
+
+    events = pd.DataFrame(
+        {
+            "user_id": [1, 1, 2],
+            "ts": pd.to_datetime(["2024-01-01 00:00", "2024-01-01 00:05", "2024-01-01 00:07"]),
+            "value": [1.5, 2.5, 3.0],
+            "event_type": ["a", "b", "a"],
+        }
+    )
+    spark.createDataFrame(events).write.parquet(str(tmp_path / "events.parquet"))
+    caller_keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        if self is spark.conf:
+            caller_keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    res = entry._replay_stream(spark, str(tmp_path), lambda s: s, "t_replay_")
+    assert sorted(res.toPandas()["signal"]) == [2.0, 3.0, 4.0]
+    assert caller_keys == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

@@ -83,24 +83,33 @@ def main():
     spark = get_spark("check_queries", cores=8)
 
     # DuckDB memory discipline, tuned by failure mode (2026-08-18):
-    # the default memory_limit is 80% of RAM (100 GiB here) but the
-    # sandbox caps the PROCESS far lower, and a long-lived connection's
-    # buffer pool grows monotonically across 160+ oracle queries
-    # (nothing evicts while under its own limit) until tiny mallocs fail
-    # ("Failed to allocate block of 3420 bytes" with 124 GB system-free;
-    # intermittent even under a 12 GB cap). Strategy: a 12 GB cap big
-    # enough for the heaviest single oracle (the GLCM matrix replays
-    # peak ~8-10 GB of unspillable list aggregates), applied to a FRESH
-    # connection per oracle below.
-    # SPARK_GRAFT_DUCK_MEM overrides when the box is under concurrent
-    # memory pressure (e.g. parallel sweep chunks): a smaller cap makes
-    # DuckDB spill instead of failing tiny mallocs at the process
-    # ceiling.
-    duck_mem = os.environ.get("SPARK_GRAFT_DUCK_MEM", "12GB")
+    # the default memory_limit is 80% of RAM but the sandbox caps the
+    # PROCESS far lower, and a long-lived connection's buffer pool grows
+    # monotonically across 160+ oracle queries (nothing evicts while
+    # under its own limit) until tiny mallocs fail ("Failed to allocate
+    # block of 3420 bytes" with 124 GB system-free). Strategy: a cap
+    # applied to a FRESH connection per oracle below. The cap is a
+    # quarter of physical memory, at most 12 GB (the GLCM matrix
+    # replays, the heaviest oracles, peak at ~8-10 GB of unspillable list
+    # aggregates on large inputs): the Spark driver (12g heap) shares the
+    # box, and on a 15 GB box a fixed 12 GB cap next to it segfaulted
+    # the sweep (exit 139) at q_target_encode. SPARK_GRAFT_DUCK_MEM overrides when the box is
+    # under concurrent memory pressure (e.g. parallel sweep chunks): a
+    # smaller cap makes DuckDB spill instead of failing tiny mallocs at
+    # the process ceiling.
+    # Each oracle runs single-threaded: with worker threads, DuckDB's
+    # allocations for q_mi_assoc's wide fold left ~60k small anonymous
+    # mappings in this process even after the connection closed, so the
+    # next oracle's mallocs failed at vm.max_map_count (65530) — "Failed
+    # to allocate block of 16384 bytes (bad allocation)" with GBs free,
+    # or a segfault. One thread keeps the process at ~700 mappings.
+    phys_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    duck_mem = os.environ.get("SPARK_GRAFT_DUCK_MEM", f"{min(phys_mib // 4, 12 * 1024)}MiB")
 
     def fresh_con():
         c = duckdb.connect()
         c.execute(f"SET memory_limit='{duck_mem}'")
+        c.execute("SET threads=1")
         c.execute("SET temp_directory='/tmp/duckdb_mirror_spill'")
         for t in TABLES:
             c.execute(

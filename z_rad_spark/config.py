@@ -94,6 +94,8 @@ class FeatureConfig:
             raise ValueError(f"bad aggr_dim {self.aggr_dim}")
         if self.aggr_method not in AGGR_METHOD_SUFFIX:
             raise ValueError(f"bad aggr_method {self.aggr_method}")
+        if self.slice_weight and self.slice_median:
+            raise ValueError("weighted median is not supported for texture aggregation")
         if self.bin_size is not None and self.n_bins is not None:
             raise ValueError("specify at most one of bin_size / n_bins")
         unknown = set(self.families) - set(ALL_FAMILIES)

@@ -62,20 +62,15 @@ def feature_names(cfg: FeatureConfig) -> list[str]:
         names += list(shape.SHAPE_NAMES)
         if cfg.enable_moran:
             names += list(shape.MORAN_NAMES)
-    cm_sfx, d_sfx = cfg.cm_suffix, cfg.dim_suffix
-    if "glcm" in fam:
-        names += [f"{n}_{cm_sfx}" for n in texture.GLCM_NAMES]
-    if "glrlm" in fam:
-        names += [f"{n}_{cm_sfx}" for n in texture.GLRLM_NAMES]
-    if "glszm" in fam:
-        names += [f"{n}_{d_sfx}" for n in texture.GLSZM_NAMES]
-    if "gldzm" in fam:
-        names += [f"{n}_{d_sfx}" for n in texture.GLDZM_NAMES]
-    if "ngtdm" in fam:
-        names += [f"{n}_{d_sfx}" for n in texture.NGTDM_NAMES]
-    if "ngldm" in fam:
-        names += [f"{n}_{d_sfx}" for n in texture.NGLDM_NAMES]
+    sfx = _texture_suffixes(cfg)
+    for f, tex in texture.FAMILIES.items():
+        if f in fam:
+            names += [f"{n}_{sfx[tex.suffix]}" for n in tex.names]
     return names
+
+
+def _texture_suffixes(cfg: FeatureConfig) -> dict:
+    return {"cm": cfg.cm_suffix, "dim": cfg.dim_suffix}
 
 
 def output_schema(cfg: FeatureConfig) -> T.StructType:
@@ -169,34 +164,16 @@ def compute_one(
         if cfg.enable_moran:
             out.update(shape.moran_geary(ts_us, masked))
 
-    args = (cfg.aggr_dim, cfg.aggr_method)
-    sw, sm = cfg.slice_weight, cfg.slice_median
-    cm_sfx, d_sfx = cfg.cm_suffix, cfg.dim_suffix
-    if "glcm" in fam:
-        vals = texture.glcm_features(grey, sessions, None, cfg.lags, sw, sm, *args)
-        out.update({f"{k}_{cm_sfx}": v for k, v in vals.items()})
-    zone_vals = None
-    if "glrlm" in fam or "glszm" in fam:
-        # one run decomposition serves both: 1-D zones == runs and the
-        # voxel normalizer is identical (direction multiplicity 1), so
-        # GLSZM values equal GLRLM's under different names — asserted by
-        # tests/test_aggregations.py::test_glszm_equals_glrlm_matrix_in_1d
-        zone_vals = texture.glrlm_features(grey, sessions, eligible, cfg.aggr_dim, sw, sm)
-    if "glrlm" in fam:
-        out.update({f"{k}_{cm_sfx}": v for k, v in zone_vals.items()})
-    if "glszm" in fam:
-        out.update(
-            {f"{n}_{d_sfx}": v for n, v in zip(texture.GLSZM_NAMES, zone_vals.values())}
+    tex = [f for f in texture.FAMILIES if f in fam]
+    if tex:
+        sfx = _texture_suffixes(cfg)
+        vals = texture.texture_features(
+            tex, grey, eligible, sessions, cfg.lags, cfg.aggr_dim, cfg.aggr_method,
+            cfg.slice_weight, cfg.slice_median,
         )
-    if "gldzm" in fam:
-        vals = texture.gldzm_features(grey, sessions, eligible, cfg.aggr_dim, sw, sm)
-        out.update({f"{k}_{d_sfx}": v for k, v in vals.items()})
-    if "ngtdm" in fam:
-        vals = texture.ngtdm_features(grey, sessions, cfg.aggr_dim, sw, sm)
-        out.update({f"{k}_{d_sfx}": v for k, v in vals.items()})
-    if "ngldm" in fam:
-        vals = texture.ngldm_features(grey, sessions, cfg.aggr_dim, sw, sm)
-        out.update({f"{k}_{d_sfx}": v for k, v in vals.items()})
+        for f, v in vals.items():
+            s = sfx[texture.FAMILIES[f].suffix]
+            out.update({f"{k}_{s}": x for k, x in v.items()})
     return out
 
 

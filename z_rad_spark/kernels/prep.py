@@ -142,19 +142,21 @@ def _forward_run_length(ok: np.ndarray, brk: np.ndarray) -> np.ndarray:
     return idx - last_restart + 1
 
 
-def border_distance(eligible: np.ndarray, session: np.ndarray) -> np.ndarray:
+def border_distance(eligible: np.ndarray, session: np.ndarray | None = None) -> np.ndarray:
     """Taxicab distance to the nearest ineligible turn or session border,
     for eligible positions (1 at a border). 1-D analogue of the
     zero-padded distance_transform_cdt on the morphological mask
     (zrad/radiomics/texture_base.py:320-324, 371-374); session boundaries
-    play the role of the per-slice image border.
+    (none when ``session`` is None) play the role of the per-slice image
+    border.
     """
     n = eligible.size
     if n == 0:
         return np.zeros(0, dtype=np.int64)
     ok = eligible.astype(bool)
     brk = np.zeros(n, dtype=bool)
-    brk[1:] = session[1:] != session[:-1]
+    if session is not None:
+        brk[1:] = session[1:] != session[:-1]
     fwd = _forward_run_length(ok, brk)
     brk_rev = np.zeros(n, dtype=bool)
     brk_rev[1:] = brk[::-1][:-1]  # boundary between i and i+1, reversed view

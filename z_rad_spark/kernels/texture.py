@@ -12,15 +12,27 @@ lags play the role of spatial directions:
 * NGTDM  — neighbour grey-tone diff     (zrad/radiomics/ngtdm.py:17-257)
 * NGLDM  — neighbour dependence counts  (zrad/radiomics/ngldm.py:30-223)
 
-Aggregation semantics follow the reference exactly (glcm.py:437-509):
-"merge" sums count matrices BEFORE normalizing; "average" computes
-features per matrix then (weighted-)averages — the order is contractual.
+Two pieces tie them together:
+
+* ``FAMILIES`` — the family table. Each family gives only its output
+  names, a count-matrix builder over one segment and a set of lags, its
+  reducer ``(M, n_voxels) -> values``, an "empty matrix" rule, and
+  whether it is directional (one matrix per lag; only GLCM is).
+* ``texture_features`` — the one aggregation driver. It cuts the
+  segments once (the whole conversation for 3D; for 2D/2.5D each
+  session slice holding a finite grey level) and applies Z-Rad's one
+  aggregation policy (glcm.py:437-509) to every requested family:
+  "merge" sums count matrices BEFORE the reducer; "average" reduces per
+  matrix, then (weighted-)averages — the order is contractual.
 
 All matrices are tiny (lvl x lvl with lvl <= O(64)); every build is a
 vectorized np.add.at / bincount, never per-element Python.
 """
 
 from __future__ import annotations
+
+from functools import partial
+from typing import Callable, NamedTuple
 
 import numpy as np
 
@@ -173,25 +185,26 @@ def _seq_sum(a) -> float:
 # --------------------------------------------------------------------------
 
 
-def glcm_count_matrix(g: np.ndarray, lag: int, lvl: int, session: np.ndarray | None = None) -> np.ndarray:
-    """Symmetrized lag-k co-occurrence counts.
+def glcm_count_matrix(g: np.ndarray, lags, lvl: int) -> np.ndarray:
+    """Symmetrized co-occurrence counts merged over ``lags``.
 
-    Pairs (g[i], g[i+lag]) where both finite; when ``session`` is given,
-    pairs must stay within one session (the per-slice analogue). Symmetrize
-    by adding the transpose (reference: glcm.py:163, 205-206).
+    Pairs (g[i], g[i+lag]) where both are finite, gathered across every
+    lag and added in both directions in ONE scatter-add (reference:
+    glcm.py:163, 205-206); a single lag gives the per-direction matrix.
     """
+    ai, bi = [], []
+    for lag in lags:
+        if g.size <= lag:
+            continue
+        a, b = g[:-lag], g[lag:]
+        valid = ~np.isnan(a) & ~np.isnan(b)
+        ai.append(a[valid])
+        bi.append(b[valid])
     m = np.zeros((lvl, lvl), dtype=np.float64)
-    if g.size <= lag:
-        return m
-    a, b = g[:-lag], g[lag:]
-    valid = ~np.isnan(a) & ~np.isnan(b)
-    if session is not None:
-        valid &= session[:-lag] == session[lag:]
-    if valid.any():
-        ai = a[valid].astype(np.int64)
-        bi = b[valid].astype(np.int64)
-        np.add.at(m, (ai, bi), 1.0)
-        np.add.at(m, (bi, ai), 1.0)
+    if ai:
+        i = np.concatenate(ai).astype(np.int64)
+        j = np.concatenate(bi).astype(np.int64)
+        np.add.at(m, (np.concatenate((i, j)), np.concatenate((j, i))), 1.0)
     return m
 
 
@@ -290,93 +303,6 @@ def glcm_feature_values(M: np.ndarray) -> dict:
     }
 
 
-def _agg_dicts(dicts, names, weights=None, median=False):
-    """Feature-dict aggregation (reference: glcm.py:422-435,
-    texture_base.py:70-78)."""
-    if not dicts:
-        return {n: np.nan for n in names}
-    if median:
-        return {n: float(np.median([d[n] for d in dicts])) for n in names}
-    return {n: float(np.average([d[n] for d in dicts], weights=weights)) for n in names}
-
-
-def glcm_features(g, session, sess_counts, lags, slice_weight, slice_median, aggr_dim, aggr_method) -> dict:
-    """GLCM features with full aggregation-method support.
-
-    2D = per-(session, lag) matrices; 2.5D = merged across sessions;
-    3D = whole-conversation pairs (lags may cross session borders, like 3-D
-    directions cross slices). Reference dispatch: glcm.py:104-130.
-    """
-    finite = ~np.isnan(g)
-    if not finite.any():
-        return {n: np.nan for n in GLCM_NAMES}
-    lvl = int(np.nanmax(g)) + 1
-    total = int(finite.sum())
-
-    if aggr_dim == "3D":
-        if aggr_method == "MERG":
-            # merged matrix in ONE scatter-add: gather valid pair indices
-            # across all lags, add both symmetric directions at once
-            ai_all, bi_all = [], []
-            for lag in lags:
-                if g.size <= lag:
-                    continue
-                a, b = g[:-lag], g[lag:]
-                valid = ~np.isnan(a) & ~np.isnan(b)
-                if valid.any():
-                    ai_all.append(a[valid].astype(np.int64))
-                    bi_all.append(b[valid].astype(np.int64))
-            m = np.zeros((lvl, lvl), dtype=np.float64)
-            if ai_all:
-                ai = np.concatenate(ai_all)
-                bi = np.concatenate(bi_all)
-                np.add.at(m, (np.concatenate((ai, bi)), np.concatenate((bi, ai))), 1.0)
-            return glcm_feature_values(m) if m.sum() > 0 else {n: np.nan for n in GLCM_NAMES}
-        mats = [glcm_count_matrix(g, lag, lvl) for lag in lags]
-        dicts = [glcm_feature_values(m) for m in mats if m.sum() > 0]
-        return _agg_dicts(dicts, GLCM_NAMES)
-
-    # per-session matrices: sessions with no finite grey are skipped, like
-    # all-NaN slices (glcm.py:156-158)
-    sess_ids = [s for s in np.unique(session) if np.any(finite & (session == s))]
-    per_sess = []
-    weights_per_sess = []
-    for s in sess_ids:
-        seg = g[session == s]
-        per_sess.append([glcm_count_matrix(seg, lag, lvl) for lag in lags])
-        weights_per_sess.append(float(np.sum(~np.isnan(seg))) / total if slice_weight else 1.0)
-
-    if aggr_dim == "2.5D":
-        if aggr_method == "MERG":
-            msum = np.sum([m for row in per_sess for m in row], axis=0)
-            return glcm_feature_values(msum) if msum.sum() > 0 else {n: np.nan for n in GLCM_NAMES}
-        # DIR_MERG: sum over sessions per lag, features per lag, plain mean
-        dicts = []
-        for li in range(len(lags)):
-            msum = np.sum([row[li] for row in per_sess], axis=0)
-            if msum.sum() > 0:
-                dicts.append(glcm_feature_values(msum))
-        return _agg_dicts(dicts, GLCM_NAMES)
-
-    # 2D
-    if slice_median and slice_weight:
-        raise ValueError("weighted median is not supported for texture aggregation")
-    dicts, weights = [], []
-    if aggr_method == "SLICE_MERG":
-        for row, w in zip(per_sess, weights_per_sess):
-            msum = np.sum(row, axis=0)
-            if msum.sum() > 0:
-                dicts.append(glcm_feature_values(msum))
-                weights.append(w)
-    else:  # AVER
-        for row, w in zip(per_sess, weights_per_sess):
-            for m in row:
-                if m.sum() > 0:
-                    dicts.append(glcm_feature_values(m))
-                    weights.append(w)
-    return _agg_dicts(dicts, GLCM_NAMES, None if slice_median else weights, median=slice_median)
-
-
 # --------------------------------------------------------------------------
 # shared 16(+energy) reducer for the run/zone/dependence families
 # --------------------------------------------------------------------------
@@ -452,22 +378,16 @@ def matrix_feature_values(
     return out
 
 
-def _pad_stack(mats: list[np.ndarray]) -> np.ndarray:
-    """Stack count matrices of differing widths by zero-padding columns."""
-    w = max(m.shape[1] for m in mats)
-    return np.stack([np.pad(m, ((0, 0), (0, w - m.shape[1]))) for m in mats])
-
-
 # --------------------------------------------------------------------------
 # runs (GLRLM + GLSZM zones + GLDZM zones)
 # --------------------------------------------------------------------------
 
 
-def find_runs(g: np.ndarray, session: np.ndarray):
+def find_runs(g: np.ndarray, session: np.ndarray | None = None):
     """Runs of consecutive equal finite grey levels; NaN holes and session
-    borders break runs. Vectorized change-point detection — the same
-    diff/split algorithm as the reference's _rle_1d
-    (zrad/radiomics/glrlm.py:82-102).
+    borders (when ``session`` is given) break runs. Vectorized
+    change-point detection — the same diff/split algorithm as the
+    reference's _rle_1d (zrad/radiomics/glrlm.py:82-102).
 
     Returns (levels, lengths, start_idx, end_idx) int64 arrays.
     """
@@ -478,7 +398,9 @@ def find_runs(g: np.ndarray, session: np.ndarray):
         return z, z, z, z
     start = valid.copy()
     if n > 1:
-        cont = valid[1:] & valid[:-1] & (session[1:] == session[:-1]) & (g[1:] == g[:-1])
+        cont = valid[1:] & valid[:-1] & (g[1:] == g[:-1])
+        if session is not None:
+            cont &= session[1:] == session[:-1]
         start[1:] = valid[1:] & ~cont
     idx = np.arange(n)
     starts = idx[start]
@@ -490,15 +412,15 @@ def find_runs(g: np.ndarray, session: np.ndarray):
     return levels, lengths.astype(np.int64), starts, ends
 
 
-def rlm_matrix(levels, lengths, lvl, width=None) -> np.ndarray:
-    w = int(width if width is not None else (lengths.max() if lengths.size else 1))
+def rlm_matrix(levels, lengths, lvl) -> np.ndarray:
+    w = int(lengths.max()) if lengths.size else 1
     m = np.zeros((lvl, w), dtype=np.float64)
     if levels.size:
         np.add.at(m, (levels, lengths - 1), 1.0)
     return m
 
 
-def dzm_matrix(levels, starts, ends, dist, lvl, width=None) -> np.ndarray:
+def dzm_matrix(levels, starts, ends, dist, lvl) -> np.ndarray:
     """GLDZM counts: zone -> (level, min border distance). In 1-D the min
     distance over a contiguous run is min(dist[start], dist[end]) because
     the in-segment distance profile is unimodal
@@ -507,80 +429,9 @@ def dzm_matrix(levels, starts, ends, dist, lvl, width=None) -> np.ndarray:
         return np.zeros((lvl, 1), dtype=np.float64)
     min_d = np.minimum(dist[starts], dist[ends]).astype(np.int64)
     min_d = np.maximum(min_d, 1)
-    w = int(width if width is not None else min_d.max())
-    m = np.zeros((lvl, w), dtype=np.float64)
+    m = np.zeros((lvl, int(min_d.max())), dtype=np.float64)
     np.add.at(m, (levels, min_d - 1), 1.0)
     return m
-
-
-def _zone_family(g, session, eligible, aggr_dim, slice_weight, slice_median, kind, voxel_scale_dirs=1):
-    """Shared driver for GLRLM / GLSZM / GLDZM (they differ only in the
-    matrix builder and the voxel-count normalization; reference dispatch:
-    glrlm.py:278-318, glszm.py:102-123, gldzm.py:?).
-
-    kind: 'rlm' | 'szm' | 'dzm'. In 1-D, zones coincide with runs, so SZM
-    shares the run machinery; this degeneracy is a property of the 1-D
-    connectivity (26-connectivity collapses to run adjacency).
-    """
-    finite = ~np.isnan(g)
-    names = {"rlm": GLRLM_NAMES, "szm": GLSZM_NAMES, "dzm": GLDZM_NAMES}[kind]
-    if not finite.any():
-        return {n: np.nan for n in names}
-    lvl = int(np.nanmax(g)) + 1
-    total = int(finite.sum())
-
-    whole_session = np.zeros_like(session) if aggr_dim == "3D" else session
-    if kind == "dzm":
-        dist = border_distance(eligible, whole_session)
-
-    def build(mask_sess=None):
-        if mask_sess is None:
-            seg, segsess, segdist = g, whole_session, dist if kind == "dzm" else None
-        else:
-            sel = session == mask_sess
-            seg, segsess = g[sel], session[sel]
-            segdist = dist[sel] if kind == "dzm" else None
-        levels, lengths, starts, ends = find_runs(seg, segsess)
-        if kind == "dzm":
-            return dzm_matrix(levels, starts, ends, segdist, lvl)
-        return rlm_matrix(levels, lengths, lvl)
-
-    ordered = kind == "dzm"  # see matrix_feature_values ordered_recip
-    if aggr_dim == "3D":
-        M = build()
-        vc = total * (voxel_scale_dirs if kind == "rlm" else 1)
-        vals = matrix_feature_values(M, vc, ordered_recip=ordered)
-        return dict(zip(names, (vals[a] for a in TEXTURE_ATTRS)))
-
-    sess_ids = [s for s in np.unique(session) if np.any(finite & (session == s))]
-    mats = [build(s) for s in sess_ids]
-    counts = [float(np.sum(finite & (session == s))) for s in sess_ids]
-
-    if aggr_dim == "2.5D":
-        M = _pad_stack(mats).sum(axis=0)
-        vc = sum(counts) * (voxel_scale_dirs if kind == "rlm" else 1)
-        vals = matrix_feature_values(M, vc, ordered_recip=ordered)
-        return dict(zip(names, (vals[a] for a in TEXTURE_ATTRS)))
-
-    # 2D: per-session features, weighted mean / median
-    if slice_median and slice_weight:
-        raise ValueError("weighted median is not supported for texture aggregation")
-    dicts = [matrix_feature_values(m, c, ordered_recip=ordered) for m, c in zip(mats, counts)]
-    weights = [c / total if slice_weight else 1.0 for c in counts]
-    vals = _agg_dicts(dicts, TEXTURE_ATTRS, None if slice_median else weights, median=slice_median)
-    return dict(zip(names, (vals[a] for a in TEXTURE_ATTRS)))
-
-
-def glrlm_features(g, session, eligible, aggr_dim, slice_weight, slice_median) -> dict:
-    return _zone_family(g, session, eligible, aggr_dim, slice_weight, slice_median, "rlm")
-
-
-def glszm_features(g, session, eligible, aggr_dim, slice_weight, slice_median) -> dict:
-    return _zone_family(g, session, eligible, aggr_dim, slice_weight, slice_median, "szm")
-
-
-def gldzm_features(g, session, eligible, aggr_dim, slice_weight, slice_median) -> dict:
-    return _zone_family(g, session, eligible, aggr_dim, slice_weight, slice_median, "dzm")
 
 
 # --------------------------------------------------------------------------
@@ -659,30 +510,6 @@ def ngtdm_feature_values(m: np.ndarray) -> dict:
     }
 
 
-def ngtdm_features(g, session, aggr_dim, slice_weight, slice_median) -> dict:
-    finite = ~np.isnan(g)
-    if not finite.any():
-        return {k: np.nan for k in NGTDM_NAMES}
-    lvl = int(np.nanmax(g)) + 1
-    total = int(finite.sum())
-    if aggr_dim == "3D":
-        return ngtdm_feature_values(ngtdm_matrix(g, lvl))
-    sess_ids = [s for s in np.unique(session) if np.any(finite & (session == s))]
-    mats = [ngtdm_matrix(g[session == s], lvl) for s in sess_ids]
-    if aggr_dim == "2.5D":
-        return ngtdm_feature_values(np.sum(mats, axis=0))
-    if slice_median and slice_weight:
-        raise ValueError("weighted median is not supported for texture aggregation")
-    counts = [float(np.sum(finite & (session == s))) for s in sess_ids]
-    # skip neighbourless sessions (single-turn): the reference raises a
-    # DataStructureError for them (ngtdm.py:133-134); at scale we exclude
-    # them from the per-session average instead
-    keep = [i for i, m in enumerate(mats) if m[:, 0].sum() > 0]
-    dicts = [ngtdm_feature_values(mats[i]) for i in keep]
-    weights = [counts[i] / total if slice_weight else 1.0 for i in keep]
-    return _agg_dicts(dicts, NGTDM_NAMES, None if slice_median else weights, median=slice_median)
-
-
 # --------------------------------------------------------------------------
 # NGLDM
 # --------------------------------------------------------------------------
@@ -705,26 +532,153 @@ def ngldm_matrix(g: np.ndarray, lvl: int) -> np.ndarray:
     return m
 
 
-def ngldm_features(g, session, aggr_dim, slice_weight, slice_median) -> dict:
+# --------------------------------------------------------------------------
+# the family table
+# --------------------------------------------------------------------------
+
+
+class Family(NamedTuple):
+    names: tuple  # output names, in the order of the reducer's values
+    suffix: str  # "cm": suffixed by dim + method (GLCM/GLRLM), "dim": by dim
+    # (grey, eligible, lags, lvl) -> count matrix of ONE segment
+    build: Callable
+    # (count matrix, n_voxels) -> dict whose values follow ``names``
+    reduce: Callable
+    # a matrix that carries no features: skipped when averaging, NaN alone
+    empty: Callable = lambda m: False
+    # one matrix per lag unless the method merges them
+    directional: bool = False
+
+
+def _run_matrix(g, eligible, lags, lvl):
+    levels, lengths, _, _ = find_runs(g)
+    return rlm_matrix(levels, lengths, lvl)
+
+
+def _zone_distance_matrix(g, eligible, lags, lvl):
+    # the segment border is the session border (the per-slice image border)
+    levels, _, starts, ends = find_runs(g)
+    return dzm_matrix(levels, starts, ends, border_distance(eligible), lvl)
+
+
+FAMILIES = {
+    "glcm": Family(
+        GLCM_NAMES, "cm", lambda g, e, lags, lvl: glcm_count_matrix(g, lags, lvl),
+        lambda m, n: glcm_feature_values(m),
+        empty=lambda m: m.sum() == 0, directional=True,
+    ),
+    # 1-D zones are runs with the same voxel normalizer, so GLSZM shares
+    # GLRLM's builder and reducer: one run decomposition serves both
+    "glrlm": Family(GLRLM_NAMES, "cm", _run_matrix, matrix_feature_values),
+    "glszm": Family(GLSZM_NAMES, "dim", _run_matrix, matrix_feature_values),
+    # see matrix_feature_values ordered_recip
+    "gldzm": Family(
+        GLDZM_NAMES, "dim", _zone_distance_matrix, partial(matrix_feature_values, ordered_recip=True)
+    ),
+    # neighbourless (single-turn) sessions: the reference raises a
+    # DataStructureError (ngtdm.py:133-134); at scale they are left out
+    "ngtdm": Family(
+        NGTDM_NAMES, "dim", lambda g, e, lags, lvl: ngtdm_matrix(g, lvl),
+        lambda m, n: ngtdm_feature_values(m), empty=lambda m: m[:, 0].sum() == 0,
+    ),
+    "ngldm": Family(
+        NGLDM_NAMES, "dim", lambda g, e, lags, lvl: ngldm_matrix(g, lvl),
+        partial(matrix_feature_values, include_energy=True),
+    ),
+}
+
+
+# --------------------------------------------------------------------------
+# the aggregation driver
+# --------------------------------------------------------------------------
+
+
+def texture_features(
+    families, g, eligible, session, lags, aggr_dim, aggr_method,
+    slice_weight=False, slice_median=False,
+) -> dict:
+    """``{family: {name: value}}`` for every requested texture family of
+    one conversation: grey levels ``g`` (NaN holes), role ``eligible``
+    mask and ascending contiguous ``session`` ids (prep.sessionize).
+
+    3D = one whole-conversation segment (lags and zones cross session
+    borders, like 3-D directions cross slices); 2D/2.5D = one segment per
+    session slice holding a finite grey level, like all-NaN slices are
+    skipped (glcm.py:156-158). Reference dispatch: glcm.py:104-130. A
+    weighted median is rejected by FeatureConfig; here the median wins.
+    """
     finite = ~np.isnan(g)
     if not finite.any():
-        return {k: np.nan for k in NGLDM_NAMES}
+        return {f: dict.fromkeys(FAMILIES[f].names, np.nan) for f in families}
     lvl = int(np.nanmax(g)) + 1
     total = int(finite.sum())
-
-    def to_named(vals):
-        return dict(zip(NGLDM_NAMES, (vals[a] for a in NGLDM_ATTRS)))
-
     if aggr_dim == "3D":
-        return to_named(matrix_feature_values(ngldm_matrix(g, lvl), total, include_energy=True))
-    sess_ids = [s for s in np.unique(session) if np.any(finite & (session == s))]
-    mats = [ngldm_matrix(g[session == s], lvl) for s in sess_ids]
-    counts = [float(np.sum(finite & (session == s))) for s in sess_ids]
-    if aggr_dim == "2.5D":
-        return to_named(matrix_feature_values(np.sum(mats, axis=0), sum(counts), include_energy=True))
-    if slice_median and slice_weight:
-        raise ValueError("weighted median is not supported for texture aggregation")
-    dicts = [matrix_feature_values(m, c, include_energy=True) for m, c in zip(mats, counts)]
-    weights = [c / total if slice_weight else 1.0 for c in counts]
-    vals = _agg_dicts(dicts, NGLDM_ATTRS, None if slice_median else weights, median=slice_median)
-    return to_named(vals)
+        segs = [(slice(None), total)]
+    else:
+        cut = np.flatnonzero(session[1:] != session[:-1]) + 1
+        starts, ends = np.concatenate(([0], cut)), np.concatenate((cut, [g.size]))
+        seen = np.concatenate(([0], np.cumsum(finite)))
+        segs = [
+            (slice(a, b), int(c)) for a, b, c in zip(starts, ends, seen[ends] - seen[starts]) if c
+        ]
+    out, done = {}, {}
+    for f in families:
+        fam = FAMILIES[f]
+        key = (fam.build, fam.reduce)  # GLSZM reuses GLRLM's values
+        if key not in done:
+            done[key] = _aggregate(
+                fam, g, eligible, segs, lvl, total, lags, aggr_dim, aggr_method,
+                slice_weight, slice_median,
+            )
+        out[f] = dict(zip(fam.names, done[key]))
+    return out
+
+
+def _aggregate(fam, g, eligible, segs, lvl, total, lags, aggr_dim, aggr_method, sw, sm):
+    """One family's values, in ``fam.names`` order."""
+
+    def matrix(seg, lag_set):
+        return fam.build(g[seg], eligible[seg], lag_set, lvl)
+
+    nan = [np.nan] * len(fam.names)
+    if aggr_dim != "2D":
+        if fam.directional and aggr_method != "MERG":
+            # per lag: merge over sessions, reduce, then a plain mean
+            mats = [_summed([matrix(s, (lag,)) for s, _ in segs]) for lag in lags]
+            rows = [fam.reduce(m, total).values() for m in mats if not fam.empty(m)]
+            return _average(rows, None, False) if rows else nan
+        # one merged matrix: the reducer's values as-is (np.average would
+        # turn a -0.0 into 0.0)
+        m = _summed([matrix(s, lags) for s, _ in segs])
+        return nan if fam.empty(m) else list(fam.reduce(m, total).values())
+
+    # 2D: per-session (and, averaging, per-lag) matrices, weighted by the
+    # session's share of finite turns; SLICE_MERG merges a session's lags
+    lag_sets = [(lag,) for lag in lags] if fam.directional and aggr_method != "SLICE_MERG" else [lags]
+    rows, weights = [], []
+    for s, c in segs:
+        for lag_set in lag_sets:
+            m = matrix(s, lag_set)
+            if not fam.empty(m):
+                rows.append(fam.reduce(m, c).values())
+                weights.append(c / total if sw else 1.0)
+    return _average(rows, None if sm else weights, sm) if rows else nan
+
+
+def _summed(mats):
+    """Sum one family's segment matrices in session order, zero-padding
+    the run/zone widths."""
+    if len(mats) == 1:
+        return mats[0]
+    out = np.zeros((mats[0].shape[0], max(m.shape[1] for m in mats)))
+    for m in mats:
+        out[:, : m.shape[1]] += m
+    return out
+
+
+def _average(rows, weights, median):
+    """Per-name mean / median over feature rows (reference:
+    glcm.py:422-435, texture_base.py:70-78)."""
+    if median:
+        return [float(np.median(col)) for col in zip(*rows)]
+    return [float(np.average(col, weights=weights)) for col in zip(*rows)]

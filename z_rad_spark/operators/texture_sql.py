@@ -27,18 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels.texture import (
-    GLCM_NAMES,
-    GLDZM_NAMES,
-    GLRLM_NAMES,
-    NGLDM_ATTRS,
-    NGLDM_NAMES,
-    NGTDM_NAMES,
-    TEXTURE_ATTRS,
-    glcm_feature_values,
-    matrix_feature_values,
-    ngtdm_feature_values,
-)
+from ..kernels.texture import FAMILIES
 
 _W = lambda: Window.partitionBy("conv_id").orderBy("ts", "turn_idx")  # noqa: E731
 
@@ -132,45 +121,32 @@ def _bucketed_reduce(joined: DataFrame, one, names) -> DataFrame:
     )
 
 
+# cell-frame layout per family: (row column, column column, column base)
+_CELL_AXES = {
+    "glcm": ("i", "j", 0),
+    "glrlm": ("lvl", "len", 1),
+    "gldzm": ("lvl", "len", 1),
+    "ngldm": ("lvl", "dep", 0),
+}
+
+
 def _cells_to_features(cells: DataFrame, vox: DataFrame, kind: str) -> DataFrame:
-    """Reduce per-conversation cell lists with the shared kernel formulas.
+    """Reduce per-conversation cell lists with the kernel family table's
+    reducer (kernels/texture.FAMILIES — the DZM ordered sde/sdhge folds
+    that match the q_gldzm* oracles ride along).
 
     Input cardinality is <= lvl*width per conversation — tiny — so the
     reduction runs through ``_bucketed_reduce``."""
-    joined = cells.join(vox, "conv_id")
-    if kind == "glcm":
-        names = GLCM_NAMES
-    elif kind == "glrlm":
-        names = GLRLM_NAMES
-    elif kind == "gldzm":
-        names = GLDZM_NAMES
-    else:
-        names = NGLDM_NAMES
+    fam = FAMILIES[kind]
+    row, col, base = _CELL_AXES[kind]
 
     def one(pdf: pd.DataFrame) -> dict:
-        vc = float(pdf["vc"].iloc[0])
-        if kind == "glcm":
-            lvl = int(pdf["gmax"].iloc[0]) + 1
-            m = np.zeros((lvl, lvl))
-            m[pdf["i"].to_numpy(), pdf["j"].to_numpy()] = pdf["c"].to_numpy()
-            return glcm_feature_values(m)
-        if kind in ("glrlm", "gldzm"):
-            lvl = int(pdf["gmax"].iloc[0]) + 1
-            width = int(pdf["len"].max())
-            m = np.zeros((lvl, width))
-            m[pdf["lvl"].to_numpy(), pdf["len"].to_numpy() - 1] = pdf["c"].to_numpy()
-            # DZM rides the ordered sde/sdhge folds (kernels/texture
-            # ordered_recip contract) to match the q_gldzm* oracles
-            raw = matrix_feature_values(m, vc, ordered_recip=(kind == "gldzm"))
-            out_names = GLRLM_NAMES if kind == "glrlm" else GLDZM_NAMES
-            return dict(zip(out_names, (raw[a] for a in TEXTURE_ATTRS)))
-        lvl = int(pdf["gmax"].iloc[0]) + 1
-        m = np.zeros((lvl, 3))
-        m[pdf["lvl"].to_numpy(), pdf["dep"].to_numpy()] = pdf["c"].to_numpy()
-        raw = matrix_feature_values(m, vc, include_energy=True)
-        return dict(zip(NGLDM_NAMES, (raw[a] for a in NGLDM_ATTRS)))
+        r, c = pdf[row].to_numpy(), pdf[col].to_numpy() - base
+        m = np.zeros((int(pdf["gmax"].iloc[0]) + 1, int(c.max()) + 1))
+        m[r, c] = pdf["c"].to_numpy()
+        return dict(zip(fam.names, fam.reduce(m, float(pdf["vc"].iloc[0])).values()))
 
-    return _bucketed_reduce(joined, one, names)
+    return _bucketed_reduce(cells.join(vox, "conv_id"), one, fam.names)
 
 
 def glcm_cells_salted(
@@ -405,14 +381,14 @@ def ngtdm_features_distributed(
     vox = _vox(df, signal_col)
     joined = cells.join(vox, "conv_id")
 
-    def one(pdf: pd.DataFrame) -> dict:
-        lvl = int(pdf["gmax"].iloc[0]) + 1
-        m = np.zeros((lvl, 2))
-        m[pdf["lvl"].to_numpy(), 0] = pdf["n_i"].to_numpy()
-        m[pdf["lvl"].to_numpy(), 1] = pdf["s_i"].to_numpy()
-        return ngtdm_feature_values(m)
+    fam = FAMILIES["ngtdm"]
 
-    return _bucketed_reduce(joined, one, NGTDM_NAMES)
+    def one(pdf: pd.DataFrame) -> dict:
+        m = np.zeros((int(pdf["gmax"].iloc[0]) + 1, 2))
+        m[pdf["lvl"].to_numpy()] = pdf[["n_i", "s_i"]].to_numpy()
+        return fam.reduce(m, float(pdf["vc"].iloc[0]))
+
+    return _bucketed_reduce(joined, one, fam.names)
 
 
 def glcm_features_distributed(df: DataFrame, lags=(1,), signal_col: str = "signal") -> DataFrame:
