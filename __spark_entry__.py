@@ -681,14 +681,14 @@ _GLCM_COLS = [
 def q_glcm_dist(spark, sf_dir):
     """Distributed GLCM (window pairs + cell groupBy): the scale path for
     giant conversations — same values, same oracle as q_glcm."""
-    from z_rad_spark.operators.texture_sql import glcm_features_distributed
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    out = glcm_features_distributed(_t(spark, sf_dir), lags=(1,))
+    out = texture_features_distributed(_t(spark, sf_dir), "glcm")
     return _r6(out.select("conv_id", *_GLCM_COLS), _GLCM_COLS)
 
 
 def q_glrlm_dist(spark, sf_dir):
-    from z_rad_spark.operators.texture_sql import glrlm_features_distributed
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     cols = [
         "rlm_sre", "rlm_lre", "rlm_lgre", "rlm_hgre", "rlm_srlge",
@@ -696,12 +696,12 @@ def q_glrlm_dist(spark, sf_dir):
         "rlm_rlnu", "rlm_rlnu_norm", "rlm_r_perc", "rlm_gl_var",
         "rlm_rl_var", "rlm_rl_entr",
     ]
-    out = glrlm_features_distributed(_t(spark, sf_dir))
+    out = texture_features_distributed(_t(spark, sf_dir), "glrlm")
     return _r6(out.select("conv_id", *cols), cols)
 
 
 def q_ngldm_dist(spark, sf_dir):
-    from z_rad_spark.operators.texture_sql import ngldm_features_distributed
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     cols = [
         "ngl_lde", "ngl_hde", "ngl_lgce", "ngl_hgce", "ngl_ldlge",
@@ -709,7 +709,7 @@ def q_ngldm_dist(spark, sf_dir):
         "ngl_dcnu", "ngl_dcnu_norm", "ngl_dc_perc", "ngl_gl_var",
         "ngl_dc_var", "ngl_dc_entr", "ngl_dc_energy",
     ]
-    out = ngldm_features_distributed(_t(spark, sf_dir))
+    out = texture_features_distributed(_t(spark, sf_dir), "ngldm")
     return _r6(out.select("conv_id", *cols), cols)
 
 
@@ -812,9 +812,9 @@ def q_glcm_salted(spark, sf_dir):
     """Skew path: salt-bucketed pair extraction with k-overlap borders —
     exact (same oracle as q_glcm); turns_per_bucket=16 forces real splits
     at test scale."""
-    from z_rad_spark.operators.texture_sql import glcm_features_salted
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    out = glcm_features_salted(_t(spark, sf_dir), lags=(1,), turns_per_bucket=16)
+    out = texture_features_distributed(_t(spark, sf_dir), "glcm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *_GLCM_COLS), _GLCM_COLS)
 
 
@@ -853,7 +853,7 @@ def q_glrlm_salted(spark, sf_dir):
     """Skew path for run-lengths: distributed RLE with cross-bucket run
     merge — exact (same oracle as q_glrlm); turns_per_bucket=16 forces
     runs to straddle bucket borders at test scale."""
-    from z_rad_spark.operators.texture_sql import glrlm_features_salted
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     cols = [
         "rlm_sre", "rlm_lre", "rlm_lgre", "rlm_hgre", "rlm_srlge",
@@ -861,14 +861,14 @@ def q_glrlm_salted(spark, sf_dir):
         "rlm_rlnu", "rlm_rlnu_norm", "rlm_r_perc", "rlm_gl_var",
         "rlm_rl_var", "rlm_rl_entr",
     ]
-    out = glrlm_features_salted(_t(spark, sf_dir), turns_per_bucket=16)
+    out = texture_features_distributed(_t(spark, sf_dir), "glrlm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *cols), cols)
 
 
 def q_ngldm_salted(spark, sf_dir):
     """Skew path for dependence counts: 1-row overlap on both sides of
     every bucket border — exact (same oracle as q_ngldm)."""
-    from z_rad_spark.operators.texture_sql import ngldm_features_salted
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     cols = [
         "ngl_lde", "ngl_hde", "ngl_lgce", "ngl_hgce", "ngl_ldlge",
@@ -876,7 +876,7 @@ def q_ngldm_salted(spark, sf_dir):
         "ngl_dcnu", "ngl_dcnu_norm", "ngl_dc_perc", "ngl_gl_var",
         "ngl_dc_var", "ngl_dc_entr", "ngl_dc_energy",
     ]
-    out = ngldm_features_salted(_t(spark, sf_dir), turns_per_bucket=16)
+    out = texture_features_distributed(_t(spark, sf_dir), "ngldm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *cols), cols)
 
 
@@ -992,7 +992,7 @@ def q_filter_wavelet_db4(spark, sf_dir):
 def q_gldzm_dist(spark, sf_dir):
     """Distributed GLDZM: declarative runs + border distances from global
     positions (same oracle as q_gldzm)."""
-    from z_rad_spark.operators.texture_sql import gldzm_features_distributed
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     cols = [
         "dzm_sde", "dzm_lde", "dzm_lgze", "dzm_hgze", "dzm_sdlge",
@@ -1000,7 +1000,7 @@ def q_gldzm_dist(spark, sf_dir):
         "dzm_zdnu", "dzm_zdnu_norm", "dzm_z_perc", "dzm_gl_var",
         "dzm_zd_var", "dzm_zd_entr",
     ]
-    out = gldzm_features_distributed(_t(spark, sf_dir))
+    out = texture_features_distributed(_t(spark, sf_dir), "gldzm")
     return _r6(out.select("conv_id", *cols), cols)
 
 
@@ -1009,17 +1009,17 @@ _NGT_COLS = ["ngt_coarseness", "ngt_contrast", "ngt_busyness", "ngt_complexity",
 
 def q_ngtdm_dist(spark, sf_dir):
     """Distributed NGTDM: lag/lead neighbour means + per-level groupBy."""
-    from z_rad_spark.operators.texture_sql import ngtdm_features_distributed
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    out = ngtdm_features_distributed(_t(spark, sf_dir))
+    out = texture_features_distributed(_t(spark, sf_dir), "ngtdm")
     return _r6(out.select("conv_id", *_NGT_COLS), _NGT_COLS)
 
 
 def q_ngtdm_salted(spark, sf_dir):
     """Skew path: same plan with per-bucket windows (1-row overlaps)."""
-    from z_rad_spark.operators.texture_sql import ngtdm_features_distributed
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    out = ngtdm_features_distributed(_t(spark, sf_dir), turns_per_bucket=16)
+    out = texture_features_distributed(_t(spark, sf_dir), "ngtdm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *_NGT_COLS), _NGT_COLS)
 
 
@@ -2185,7 +2185,7 @@ def q_gldzm_salted(spark, sf_dir):
     start/end positions across bucket borders, keyed by border distance —
     exact (same oracle as q_gldzm); turns_per_bucket=16 forces zones to
     straddle borders at test scale."""
-    from z_rad_spark.operators.texture_sql import gldzm_features_salted
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     cols = [
         "dzm_sde", "dzm_lde", "dzm_lgze", "dzm_hgze", "dzm_sdlge",
@@ -2193,7 +2193,7 @@ def q_gldzm_salted(spark, sf_dir):
         "dzm_zdnu", "dzm_zdnu_norm", "dzm_z_perc", "dzm_gl_var",
         "dzm_zd_var", "dzm_zd_entr",
     ]
-    out = gldzm_features_salted(_t(spark, sf_dir), turns_per_bucket=16)
+    out = texture_features_distributed(_t(spark, sf_dir), "gldzm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *cols), cols)
 
 
@@ -4032,18 +4032,6 @@ def q_edit_sim(spark, sf_dir):
         "edit_sim",
     )
     return _r6(out, ["edit_sim"])
-
-
-def q_benford(spark, sf_dir):
-    """Benford first-digit screening of lineitem extended prices per
-    return flag (curation.benford_screen): integer-part leading digit,
-    9 conditional counts in one aggregation, fixed literal chi2/MAD
-    chains — oracle-replayable."""
-    from z_rad_spark.operators.curation import benford_screen
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = benford_screen(li, "l_extendedprice", "l_returnflag")
-    return _r6(out, ["chi2", "mad"])
 
 
 def q_gini(spark, sf_dir):

@@ -7667,78 +7667,6 @@ FROM d
 """
 
 
-# Benford screening: identical literal p_d constants as the engine's
-# BENFORD_P table (sync locked by a pytest); fixed 9-term chains
-_BENFORD_P = (
-    0.3010299956639812,
-    0.17609125905568124,
-    0.12493873660829992,
-    0.09691001300805642,
-    0.07918124604762482,
-    0.06694678963061322,
-    0.05799194697768673,
-    0.05115252244738129,
-    0.04575749056067514,
-)
-
-
-def _benford_sql() -> str:
-    counts = ",\n         ".join(
-        f"CAST(COUNT(CASE WHEN ok AND digit = '{d}' THEN 1 END) AS BIGINT) AS c_{d}"
-        for d in range(1, 10)
-    )
-    chi_terms = [
-        f"((CAST(c_{d} AS DOUBLE) - CAST(n AS DOUBLE) * {p!r})"
-        f" * (CAST(c_{d} AS DOUBLE) - CAST(n AS DOUBLE) * {p!r})"
-        f" / (CAST(n AS DOUBLE) * {p!r}))"
-        for d, p in zip(range(1, 10), _BENFORD_P)
-    ]
-    mad_terms = [
-        f"ABS(CAST(c_{d} AS DOUBLE) / CAST(n AS DOUBLE) - {p!r})"
-        for d, p in zip(range(1, 10), _BENFORD_P)
-    ]
-    chi = chi_terms[0]
-    for t_ in chi_terms[1:]:
-        chi = f"({chi} + {t_})"
-    mad = mad_terms[0]
-    for t_ in mad_terms[1:]:
-        mad = f"({mad} + {t_})"
-    return f"""
-WITH v AS (
-  SELECT l_returnflag,
-         ABS(CAST(l_extendedprice AS DOUBLE)) AS a,
-         l_extendedprice AS raw
-  FROM lineitem
-),
-flg AS (
-  SELECT l_returnflag,
-         (a IS NOT NULL AND a >= 1.0 AND NOT isnan(a)) AS ok,
-         CASE WHEN a IS NOT NULL AND a >= 1.0 AND NOT isnan(a)
-              THEN substring(CAST(CAST(FLOOR(a) AS BIGINT) AS VARCHAR), 1, 1) END AS digit,
-         raw
-  FROM v
-),
-g AS (
-  SELECT l_returnflag,
-         CAST(COUNT(CASE WHEN ok THEN 1 END) AS BIGINT) AS n,
-         CAST(COUNT(CASE WHEN NOT ok OR raw IS NULL THEN 1 END) AS BIGINT) AS n_skipped,
-         {counts}
-  FROM flg GROUP BY l_returnflag
-)
-SELECT l_returnflag, n, n_skipped,
-       {", ".join(f"c_{d}" for d in range(1, 10))},
-       {{chi2}},
-       {{mad}}
-FROM g
-""".format(
-        chi2=r6(f"CASE WHEN n > 0 THEN {chi} END", "chi2"),
-        mad=r6(f"CASE WHEN n > 0 THEN ({mad}) / 9.0 END", "mad"),
-    )
-
-
-ORACLES["q_benford"] = _benford_sql()
-
-
 # Gini: tie-stable (value, id) rank, exact integer rank-sum identity
 ORACLES["q_gini"] = f"""
 WITH p AS (

@@ -1313,43 +1313,6 @@ def test_langid_kappa_hand_computed(spark):
     assert np.isclose(got.kappa, (po - pe) / (1 - pe), atol=1e-12)
 
 
-def test_benford_screen_constants_and_chi2(spark):
-    import math
-
-    import pandas as pd
-
-    from z_rad_spark.operators.curation import BENFORD_P, benford_screen
-
-    # the engine table and the oracle table must both equal log10(1+1/d)
-    assert BENFORD_P == tuple(math.log10(1 + 1 / d) for d in range(1, 10))
-    from oracle_sql_defs import _BENFORD_P
-
-    assert _BENFORD_P == BENFORD_P
-
-    # a perfectly Benford-weighted sample scores chi2 ~ 0
-    rows = []
-    for d in range(1, 10):
-        for k in range(round(BENFORD_P[d - 1] * 1000)):
-            rows.append(("g", float(d * 10 + (k % 10))))
-    pdf = pd.DataFrame(rows, columns=["grp", "val"])
-    got = benford_screen(spark.createDataFrame(pdf), "val", "grp").toPandas().iloc[0]
-    assert got.n == len(rows) and got.n_skipped == 0
-    assert got.chi2 < 1.0 and got.mad < 0.005
-    # a uniform-first-digit sample is flagged hard
-    pdf2 = pd.DataFrame(
-        [("u", float(d * 10)) for d in range(1, 10) for _ in range(100)],
-        columns=["grp", "val"],
-    )
-    bad = benford_screen(spark.createDataFrame(pdf2), "val", "grp").toPandas().iloc[0]
-    assert bad.chi2 > 100.0
-    # sub-1 and NULL values are excluded and counted
-    pdf3 = pd.DataFrame(
-        [("s", 0.5), ("s", None), ("s", 42.0)], columns=["grp", "val"]
-    )
-    sk = benford_screen(spark.createDataFrame(pdf3), "val", "grp").toPandas().iloc[0]
-    assert sk.n == 1 and sk.n_skipped == 2 and sk.c_4 == 1
-
-
 def test_gini_concentration_extremes(spark):
     import numpy as np
     import pandas as pd

@@ -476,13 +476,13 @@ def test_salted_glcm_exact_across_bucket_borders(spark, tdf):
     """Salt-bucketed pair extraction (k-row overlap, left-endpoint
     ownership) must reproduce the unsalted cell counts exactly — including
     pairs that straddle bucket borders."""
-    from z_rad_spark.operators.texture_sql import glcm_cells, glcm_cells_salted
+    from z_rad_spark.operators.texture_sql import glcm_cells
 
     df, _ = tdf
     for lags in [(1,), (1, 2, 3)]:
         plain = glcm_cells(df, lags=lags).toPandas().sort_values(["conv_id", "i", "j"]).reset_index(drop=True)
         salted = (
-            glcm_cells_salted(df, lags=lags, turns_per_bucket=7)
+            glcm_cells(df, lags=lags, turns_per_bucket=7)
             .toPandas()
             .sort_values(["conv_id", "i", "j"])
             .reset_index(drop=True)
@@ -491,15 +491,12 @@ def test_salted_glcm_exact_across_bucket_borders(spark, tdf):
 
 
 def test_salted_glcm_features_match_distributed(spark, tdf):
-    from z_rad_spark.operators.texture_sql import (
-        glcm_features_distributed,
-        glcm_features_salted,
-    )
+    from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     df, _ = tdf
-    a = glcm_features_distributed(df, lags=(1,)).toPandas().sort_values("conv_id").reset_index(drop=True)
+    a = texture_features_distributed(df, "glcm", lags=(1,)).toPandas().sort_values("conv_id").reset_index(drop=True)
     b = (
-        glcm_features_salted(df, lags=(1,), turns_per_bucket=11)
+        texture_features_distributed(df, "glcm", lags=(1,), turns_per_bucket=11)
         .toPandas()
         .sort_values("conv_id")
         .reset_index(drop=True)
@@ -567,24 +564,19 @@ def test_salted_runs_and_deps_exact(spark, tdf):
     """Distributed RLE with cross-bucket merge and double-overlap dependence
     counts must equal the unsalted window plans exactly, including runs
     spanning multiple whole buckets (tiny bucket size forces that)."""
-    from z_rad_spark.operators.texture_sql import (
-        glrlm_cells,
-        glrlm_cells_salted,
-        ngldm_cells,
-        ngldm_cells_salted,
-    )
+    from z_rad_spark.operators.texture_sql import glrlm_cells, ngldm_cells
 
     df, _ = tdf
     for size in (5, 16):
         a = glrlm_cells(df).toPandas().sort_values(["conv_id", "lvl", "len"]).reset_index(drop=True)
         b = (
-            glrlm_cells_salted(df, turns_per_bucket=size)
+            glrlm_cells(df, turns_per_bucket=size)
             .toPandas().sort_values(["conv_id", "lvl", "len"]).reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(a, b, check_exact=True)
         c = ngldm_cells(df).toPandas().sort_values(["conv_id", "lvl", "dep"]).reset_index(drop=True)
         d = (
-            ngldm_cells_salted(df, turns_per_bucket=size)
+            ngldm_cells(df, turns_per_bucket=size)
             .toPandas().sort_values(["conv_id", "lvl", "dep"]).reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(c, d, check_exact=True)
@@ -770,12 +762,12 @@ def test_salt_bucket_no_phantom_trailing_bucket(spark, tdf):
 def test_gldzm_salted_matches_plain(spark, tdf):
     """Salted distance-zone cells (runs merged across bucket borders with
     positions) == the single-window gldzm_cells, exactly."""
-    from z_rad_spark.operators.texture_sql import gldzm_cells, gldzm_cells_salted
+    from z_rad_spark.operators.texture_sql import gldzm_cells
 
     df, _ = tdf
     key = ["conv_id", "lvl", "len"]
     plain = gldzm_cells(df).toPandas().sort_values(key).reset_index(drop=True)
-    salted = gldzm_cells_salted(df, turns_per_bucket=7).toPandas().sort_values(key).reset_index(drop=True)
+    salted = gldzm_cells(df, turns_per_bucket=7).toPandas().sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(plain, salted, check_exact=True)
 
 

@@ -1218,3 +1218,39 @@ def test_library_never_sets_session_conf():
         if ".conf.set(" in line
     ]
     assert hits == []
+
+
+def test_query_and_oracle_registries_have_no_shadowed_definition():
+    """A second ``def q_*`` in __spark_entry__.py silently replaces the
+    first, and so does a second ``ORACLES[k] = ...`` in oracle_sql_defs.py;
+    the only re-assignment allowed is one that builds on the old value
+    (``ORACLES[k] = (ORACLES[k] ...``, e.g. a later substitution)."""
+    import ast
+
+    repo = pathlib.Path(z_rad_spark.__file__).parent.parent
+    entry = ast.parse((repo / "__spark_entry__.py").read_text())
+    names = [n.name for n in entry.body
+             if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")]
+    assert sorted({n for n in names if names.count(n) > 1}) == []
+
+    def key(node):
+        if (isinstance(node, ast.Subscript) and isinstance(node.value, ast.Name)
+                and node.value.id == "ORACLES" and isinstance(node.slice, ast.Constant)):
+            return node.slice.value
+        return None
+
+    def base(node):  # the innermost receiver of a method/operator chain
+        while isinstance(node, (ast.Call, ast.Attribute, ast.BinOp)):
+            node = node.func if isinstance(node, ast.Call) else (
+                node.value if isinstance(node, ast.Attribute) else node.left)
+        return node
+
+    seen, shadowed = set(), []
+    oracles = ast.parse((repo / "oracle_sql_defs.py").read_text())
+    for n in oracles.body:
+        if isinstance(n, ast.Assign) and len(n.targets) == 1 and key(n.targets[0]):
+            k = key(n.targets[0])
+            if k in seen and key(base(n.value)) != k:
+                shadowed.append(f"{k} (line {n.lineno})")
+            seen.add(k)
+    assert shadowed == []

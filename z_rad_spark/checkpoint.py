@@ -26,9 +26,9 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import __version__
+from .operators.skew import conv_bucket
 
 
 def input_snapshot_id(sf_dir: str) -> str:
@@ -96,7 +96,7 @@ def run_resumable(
     """Run a bucketed job with per-bucket manifests; skip completed buckets.
 
     build_df must produce the output DataFrame for one bucket (the caller
-    filters its input by ``pmod(hash(conv_id), n_buckets) = bucket``).
+    filters its input with ``bucket_filter(bucket, n_buckets)``).
     Returns run metrics (buckets computed / skipped, rows, seconds).
     """
     done = load_manifests(out_dir)
@@ -135,5 +135,6 @@ def run_resumable(
 
 
 def bucket_filter(bucket: int, n_buckets: int):
-    """Deterministic conv_id -> bucket assignment for resumable runs."""
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)) == bucket
+    """Deterministic conv_id -> bucket assignment for resumable runs: the
+    engine's one bucket expression (operators/skew.conv_bucket)."""
+    return conv_bucket(n_buckets) == bucket

@@ -5,14 +5,16 @@ Logical plan (all declarative until the single grouped-map kernel)::
     transcripts scan
       -> ts <= max(cutoffs) filter            (predicate pushdown to scan)
       -> signal + eligibility columns          (whole-stage codegen)
-      -> groupBy(conv_id).applyInPandas(...)   (one Arrow batch per conv)
+      -> skew.map_conversations(kernel)        (hash buckets of conv_id: one
+                                               Arrow batch per bucket, each
+                                               conversation a sorted slice)
       -> wide feature row per (conv_id, as_of)
 
 Scale notes
 -----------
-* The shuffle key is ``conv_id`` — the same key every other per-entity
-  operator uses, so plans that chain extraction with as-of joins or
-  sessionization reuse one exchange.
+* The shuffle key is a hash bucket of ``conv_id``, the one layout every
+  grouped kernel in the engine shares (operators/skew.map_conversations):
+  a conversation is never split, and one kernel call covers a bucket.
 * All cutoffs for a conversation are swept in ONE pass over its sorted
   turns (prefix views of a single sort), so the cost is
   O(turns + cutoffs * kernel) per entity, not O(turns * cutoffs).
@@ -33,13 +35,13 @@ from __future__ import annotations
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .config import FeatureConfig
 from .kernels import firstorder, prep, shape, texture
+from .operators.skew import map_conversations
 from .transcripts import with_signal
 
 ROLE_CODE = {"user": 0, "assistant": 1, "system": 2, "tool": 3}
@@ -177,36 +179,18 @@ def compute_one(
     return out
 
 
-def _make_kernel(cfg: FeatureConfig, cutoffs_us: list[int], columns: list[str]):
-    """Grouped-map kernel closure over one BUCKET of conversations.
+def _make_kernel(cfg: FeatureConfig, cutoffs_us: list[int]):
+    """Kernel over one bucket of conversations (skew.map_conversations):
+    each conversation arrives as a sorted slice, and the cutoff sweep
+    shares that one sort (np.searchsorted prefixes)."""
 
-    One kernel call per hash bucket, not per conversation: at 10^8+
-    conversations a per-conversation grouped map pays the Arrow/pandas
-    boundary cost 10^8 times; bucketing amortizes it to one crossing per
-    bucket while the per-conversation work stays pure NumPy slicing. Inside
-    a bucket, one stable lexicographic sort on (conv_id, ts, turn_idx)
-    yields every conversation as a contiguous slice; the cutoff sweep then
-    shares that single sort per conversation (np.searchsorted prefixes)."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # stable secondary sort on integer keys: factorize conv_id once
-        # (string compares are the hot cost at scale) and np.lexsort —
-        # stable, so (ts, turn_idx) ties keep input order like mergesort
-        codes, conv_names = pd.factorize(pdf["conv_id"].to_numpy())
-        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-        turn = pdf["turn_idx"].to_numpy(dtype=np.int64)
-        order = np.lexsort((turn, ts_us, codes))
-        codes = codes[order]
-        ts_us = ts_us[order]
-        signal = pdf["signal"].to_numpy(dtype=np.float64)[order]
-        eligible = pdf["eligible"].to_numpy(dtype=bool)[order]
-        role_codes = pdf["role_code"].to_numpy(dtype=np.int64)[order]
-        tool_mask = pdf["has_tool"].to_numpy(dtype=bool)[order]
-
-        # conversation boundaries within the sorted bucket
-        brk = np.nonzero(codes[1:] != codes[:-1])[0] + 1
-        starts = np.concatenate(([0], brk))
-        ends = np.concatenate((brk, [codes.size]))
+    def kernel(cols: dict, starts, ends) -> list[dict]:
+        conv = cols["conv_id"]
+        ts_us = cols["ts"]
+        signal = cols["signal"].astype(np.float64, copy=False)
+        eligible = cols["eligible"].astype(bool, copy=False)
+        role_codes = cols["role_code"].astype(np.int64, copy=False)
+        tool_mask = cols["has_tool"].astype(bool, copy=False)
 
         rows = []
         n_failed = 0
@@ -214,7 +198,7 @@ def _make_kernel(cfg: FeatureConfig, cutoffs_us: list[int], columns: list[str]):
         first_err_conv = None
         for s, e in zip(starts, ends):
             t_slice = ts_us[s:e]
-            conv_id = conv_names[codes[s]]
+            conv_id = conv[s]
             for cut in cutoffs_us:
                 hi = s + int(np.searchsorted(t_slice, cut, side="right"))
                 row = {"conv_id": conv_id, "as_of": np.datetime64(cut, "us")}
@@ -245,7 +229,7 @@ def _make_kernel(cfg: FeatureConfig, cutoffs_us: list[int], columns: list[str]):
                 "this bucket; first failure conv_id=%r: %r",
                 n_failed, len(rows), first_err_conv, first_err,
             )
-        return pd.DataFrame(rows, columns=columns)
+        return rows
 
     return kernel
 
@@ -286,29 +270,5 @@ def extract_features(df: DataFrame, cfg: FeatureConfig, cutoffs: Iterable) -> Da
     # cutoff is ever read by the kernel
     prepared = prepared.filter(F.col("ts") <= F.lit(max_cut.item()))
 
-    # Bucketed grouped map: the shuffle/group key is a hash bucket of
-    # conv_id, not conv_id itself. One Arrow exchange + one kernel call per
-    # bucket amortizes the Python boundary over thousands of conversations
-    # (at 10^8+ entities a per-entity grouped map is boundary-bound), while
-    # hash bucketing keeps every conversation wholly inside one bucket.
-    # Bucket count = 4x parallelism: enough granularity for AQE-free load
-    # balance, coarse enough that per-call overhead stays amortized. A
-    # user-specified repartition count is never coalesced by AQE (byte-based
-    # coalescing would serialize this CPU-bound stage onto few tasks), and
-    # hashpartitioning on bucket satisfies the groupBy — no second shuffle.
-    spark = prepared.sparkSession
-    # Bucket count defaults to 4x parallelism, overridable via
-    # spark.z_rad_spark.extract.buckets. On a real cluster you size the
-    # partition count to the DATASET, not to whichever cluster size runs
-    # the job — a fixed count across N and 4N executors is what makes
-    # cluster-size scaling comparisons (and reruns) apples-to-apples.
-    n_parts = int(spark.conf.get("spark.z_rad_spark.extract.buckets", "0")) or max(
-        4 * spark.sparkContext.defaultParallelism, 8
-    )
-    prepared = prepared.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_parts)).cast("int")
-    ).repartition(n_parts, "bucket")
-
-    schema = output_schema(cfg)
-    kernel = _make_kernel(cfg, cutoffs_us, [f.name for f in schema.fields])
-    return prepared.groupBy("bucket").applyInPandas(kernel, schema=schema)
+    kernel = _make_kernel(cfg, cutoffs_us)
+    return map_conversations(prepared, kernel, output_schema(cfg))

@@ -1357,83 +1357,6 @@ def truncate_middle(
     )
 
 
-# Benford's-law expected first-digit probabilities log10(1 + 1/d),
-# written out as repr'd doubles so the Spark literals and the oracle SQL
-# embed the IDENTICAL constants (math.log10 at import time would too,
-# but the explicit table keeps both engines visibly in sync)
-BENFORD_P = (
-    0.3010299956639812,
-    0.17609125905568124,
-    0.12493873660829992,
-    0.09691001300805642,
-    0.07918124604762482,
-    0.06694678963061322,
-    0.05799194697768673,
-    0.05115252244738129,
-    0.04575749056067514,
-)
-
-
-def benford_screen(
-    df: DataFrame, value_col: str, group_col: str
-) -> DataFrame:
-    """Benford's-law first-digit screening of a positive numeric column
-    per group — the classic fabricated-/synthetic-data tripwire for
-    financial and telemetry feeds (naturally occurring multi-order-of-
-    magnitude values follow P(d) = log10(1 + 1/d); generated or
-    truncated ones usually don't):
-
-        chi2 = sum_d (c_d - n*p_d)^2 / (n*p_d)         (8 dof)
-        mad  = mean_d |c_d/n - p_d|                    (Nigrini's MAD)
-
-    First digit = leading digit of the INTEGER part (floor then
-    BIGINT->string head), which sidesteps engine-specific double
-    formatting and log10 boundary rounding (log10(1000.0) floors to 2
-    in IEEE); rows with |value| < 1 or NULL are excluded and counted.
-
-    Determinism: the 9 digit counts are exact integers from one
-    map-side-combined conditional aggregation (no explode, no window);
-    chi2 and mad are FIXED 9-term literal chains over those counts with
-    the p_d constants embedded identically in the engine and the SQL
-    oracle — bit-replayable. One groupBy = one shuffle.
-
-    Output: (group_col, n long, n_skipped long, c_1..c_9 long,
-    chi2 double, mad double — both NULL when n = 0).
-    """
-    v = F.abs(F.col(value_col).cast("double"))
-    ok = v.isNotNull() & (v >= 1.0) & ~F.isnan(v)
-    digit = F.substring(F.floor(v).cast("long").cast("string"), 1, 1)
-    aggs = [
-        F.count(F.when(ok, 1)).cast("long").alias("n"),
-        F.count(F.when(~ok | F.col(value_col).isNull(), 1))
-        .cast("long")
-        .alias("n_skipped"),
-    ]
-    for d in range(1, 10):
-        aggs.append(
-            F.count(F.when(ok & (digit == str(d)), 1)).cast("long").alias(f"c_{d}")
-        )
-    g = df.groupBy(group_col).agg(*aggs)
-    n = F.col("n").cast("double")
-    chi2 = None
-    mad = None
-    for d, p in zip(range(1, 10), BENFORD_P):
-        c = F.col(f"c_{d}").cast("double")
-        e = n * F.lit(p)
-        t_chi = (c - e) * (c - e) / e
-        t_mad = F.abs(c / n - F.lit(p))
-        chi2 = t_chi if chi2 is None else chi2 + t_chi
-        mad = t_mad if mad is None else mad + t_mad
-    return g.select(
-        group_col,
-        "n",
-        "n_skipped",
-        *[f"c_{d}" for d in range(1, 10)],
-        F.when(F.col("n") > 0, chi2).alias("chi2"),
-        F.when(F.col("n") > 0, mad / F.lit(9.0)).alias("mad"),
-    )
-
-
 def gini_concentration(
     df: DataFrame, value_col: str, group_col: str, id_col: str
 ) -> DataFrame:

@@ -540,13 +540,7 @@ def quantile_transform(
     ).drop("_g", "_val")
 
 
-def isotonic_fit(
-    df: DataFrame,
-    signal_col: str = "signal",
-    group_col: str = "conv_id",
-    ts_col: str = "ts",
-    idx_col: str = "turn_idx",
-) -> DataFrame:
+def isotonic_fit(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     """Per-conversation isotonic regression (non-decreasing L2 fit) of
     the integer-valued signal against the stable turn order — the
     calibration workhorse (Zadrozny & Elkan 2002): the monotone trend a
@@ -556,10 +550,10 @@ def isotonic_fit(
     behind [[calibration_bins]]'s binned ECE.
 
     Algorithm: pool-adjacent-violators (PAVA), run per conversation
-    inside ONE Arrow-batched ``applyInPandas`` kernel (the engine's
-    grouped-kernel idiom — conversations are hash-bucketed so one task
-    fits many, never one window per conv). Each pooled block keeps
-    EXACT integer (sum, count) moments; violator comparisons use
+    inside the engine's one grouped-kernel primitive
+    (skew.map_conversations: conversations are hash-bucketed so one
+    Arrow crossing serves many, never one window per conv). Each pooled
+    block keeps EXACT integer (sum, count) moments; violator comparisons use
     integer cross-multiplication (sum_a * cnt_b vs sum_b * cnt_a), so
     no float enters until each block's single final division.
 
@@ -576,84 +570,61 @@ def isotonic_fit(
     The O(n^2)-per-conversation oracle is gate-scale only; the engine
     kernel is O(n) per conversation.
 
-    Output: one row per turn (group, idx int, ts passthrough, x long,
+    Output: one row per turn (conv_id, turn_idx int, ts_us long, x long,
     iso_fit double) — iso_fit non-decreasing within each conversation.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from .skew import map_conversations
 
     schema = T.StructType(
         [
-            T.StructField(group_col, T.StringType(), False),
-            T.StructField(idx_col, T.IntegerType(), False),
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("turn_idx", T.IntegerType(), False),
             T.StructField("ts_us", T.LongType(), False),
             T.StructField("x", T.LongType(), False),
             T.StructField("iso_fit", T.DoubleType(), True),
         ]
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        codes, _ = pd.factorize(pdf[group_col].to_numpy())
-        ts_us = pdf[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-        turn = pdf[idx_col].to_numpy(dtype=np.int64)
-        order = np.lexsort((turn, ts_us, codes))
-        codes, ts_us, turn = codes[order], ts_us[order], turn[order]
-        x = pdf[signal_col].to_numpy(dtype=np.int64)[order]
-        conv = pdf[group_col].to_numpy()[order]
+    def kernel(cols: dict, starts, ends) -> dict:
+        x = cols[signal_col].astype(np.int64, copy=False)
         fit = np.empty(x.size, dtype=np.float64)
-        start = 0
-        for end in range(1, x.size + 1):
-            if end == x.size or codes[end] != codes[start]:
-                # PAVA over x[start:end] with exact (sum, count) blocks
-                sums: list[int] = []
-                cnts: list[int] = []
-                lens: list[int] = []
-                for v in x[start:end]:
-                    sums.append(int(v))
-                    cnts.append(1)
-                    lens.append(1)
-                    # merge while the last block mean < the previous
-                    # block mean (exact integer cross-multiplication)
-                    while (
-                        len(sums) > 1
-                        and sums[-1] * cnts[-2] < sums[-2] * cnts[-1]
-                    ):
-                        sums[-2] += sums[-1]
-                        cnts[-2] += cnts[-1]
-                        lens[-2] += lens[-1]
-                        sums.pop()
-                        cnts.pop()
-                        lens.pop()
-                pos = start
-                for s, c, ln in zip(sums, cnts, lens):
-                    fit[pos : pos + ln] = s / c  # the block's ONE division
-                    pos += ln
-                start = end
-        return pd.DataFrame(
-            {
-                group_col: conv,
-                idx_col: turn.astype("int32"),
-                "ts_us": ts_us,
-                "x": x,
-                "iso_fit": fit,
-            }
-        )
+        for start, end in zip(starts, ends):
+            # PAVA over x[start:end] with exact (sum, count) blocks
+            sums: list[int] = []
+            cnts: list[int] = []
+            lens: list[int] = []
+            for v in x[start:end]:
+                sums.append(int(v))
+                cnts.append(1)
+                lens.append(1)
+                # merge while the last block mean < the previous
+                # block mean (exact integer cross-multiplication)
+                while len(sums) > 1 and sums[-1] * cnts[-2] < sums[-2] * cnts[-1]:
+                    sums[-2] += sums[-1]
+                    cnts[-2] += cnts[-1]
+                    lens[-2] += lens[-1]
+                    sums.pop()
+                    cnts.pop()
+                    lens.pop()
+            pos = start
+            for s, c, ln in zip(sums, cnts, lens):
+                fit[pos : pos + ln] = s / c  # the block's ONE division
+                pos += ln
+        return {
+            "conv_id": cols["conv_id"],
+            "turn_idx": cols["turn_idx"].astype("int32"),
+            "ts_us": cols["ts"],
+            "x": x,
+            "iso_fit": fit,
+        }
 
-    spark = df.sparkSession
-    n_parts = max(2 * spark.sparkContext.defaultParallelism, 8)
     src = df.where(F.col(signal_col).isNotNull()).select(
-        group_col,
-        idx_col,
-        ts_col,
-        F.col(signal_col).cast("long").alias(signal_col),
+        "conv_id", "turn_idx", "ts", F.col(signal_col).cast("long").alias(signal_col)
     )
-    bucketed = src.withColumn(
-        "bucket", F.pmod(F.xxhash64(group_col), F.lit(n_parts)).cast("int")
-    )
-    return bucketed.repartition(n_parts, "bucket").groupBy("bucket").applyInPandas(
-        kernel, schema=schema
-    )
+    return map_conversations(src, kernel, schema)
 
 
 def confident_learning_noise(

@@ -27,11 +27,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_ORDER = ("ts", "turn_idx")
-
-
-def _conv_window() -> Window:
-    return Window.partitionBy("conv_id").orderBy(*_ORDER)
+from .sessionize import _ORDER, _conv_window
 
 
 def signal_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
@@ -1245,7 +1241,7 @@ def max_drawdown(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     x = F.col(signal_col).cast("long")
-    ord_w = Window.partitionBy("conv_id").orderBy(*_ORDER)
+    ord_w = _conv_window()
     p = df.select(
         "conv_id",
         x.alias("_x"),
@@ -1362,7 +1358,7 @@ def hurst_rs(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         .orderBy(*_ORDER)
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    ord_w = Window.partitionBy("conv_id").orderBy(*_ORDER)
+    ord_w = _conv_window()
     p = scored.select(
         "conv_id",
         x.alias("_x"),
@@ -1436,7 +1432,7 @@ def sax_word(df: DataFrame, w: int = 4, signal_col: str = "signal") -> DataFrame
         .orderBy(*_ORDER)
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    ord_w = Window.partitionBy("conv_id").orderBy(*_ORDER)
+    ord_w = _conv_window()
     p = scored.select(
         "conv_id",
         x.alias("_x"),
@@ -1824,7 +1820,7 @@ def log_rank(
     if group_expr is None:
         group_expr = F.dayofweek(F.col("ts").cast("timestamp")).isin(1, 7)
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("conv_id").orderBy(*_ORDER)
+    w = _conv_window()
     flagged = df.withColumn("_rn", F.row_number().over(w)).withColumn(
         "_g1", group_expr
     )
@@ -3243,7 +3239,7 @@ def handoff_latency_matrix(df: DataFrame) -> DataFrame:
     on the compacted histogram. Output: (from_role, to_role, n long,
     mean_sec, p50_sec, p90_sec doubles), pairs with n >= 1.
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     pairs = (
         df.select(
@@ -3319,14 +3315,14 @@ def tool_chains(df: DataFrame, k: int = 10) -> DataFrame:
     (from_tool, to_tool, n long, share double, rank long), rank
     1..k.
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     t = df.where(F.col("tool").isNotNull()).select(
         "conv_id",
         "ts",
         "turn_idx",
         F.col("tool").alias("_to"),
         F.lag("tool", 1).over(
-            Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+            _conv_window()
         ).alias("_from"),
     )
     # note: the lag window above runs on the FILTERED frame, so _from
@@ -3746,7 +3742,7 @@ def position_profile(df: DataFrame, n_bins: int = 10) -> DataFrame:
     aggregate. Output: (bin long, n long, mean_signal double),
     bins ascending.
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     w_len = Window.partitionBy("conv_id")
     x = F.col("signal").cast("long")
     pos = df.where(x.isNotNull()).select(
@@ -4006,7 +4002,7 @@ def stutter_rate(df: DataFrame) -> DataFrame:
     double, share_of_stutters double — NULL when the corpus has
     none), one row per role with pairs.
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     pairs = (
         df.select(
             "conv_id",
@@ -4060,7 +4056,7 @@ def tool_error_rate(df: DataFrame) -> DataFrame:
     division. Output: (tool, n_calls long, n_errors long, error_rate
     double), one row per tool.
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     seq = df.select(
         "conv_id",
         "ts",
@@ -4100,7 +4096,7 @@ def role_trigrams(df: DataFrame, k: int = 10) -> DataFrame:
     one division. Output: (pattern string, n long, share double,
     rank long), rank 1..k.
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     tri = (
         df.select(
             "conv_id",

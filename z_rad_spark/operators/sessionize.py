@@ -14,8 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import persist_intermediate
-
-_ORDER = ("ts", "turn_idx")
+from .skew import ORDER as _ORDER, map_conversations
 
 
 def _conv_window() -> Window:
@@ -35,7 +34,7 @@ def with_sessions(df: DataFrame, gap_seconds: float) -> DataFrame:
     gap_us = ts_us - F.lag(ts_us).over(w)
     df = df.withColumn("gap_sec", (gap_us / 1e6).cast("double"))
     new_sess = F.when(F.col("gap_sec") > F.lit(gap_seconds), 1).otherwise(0)
-    running = Window.partitionBy("conv_id").orderBy(*_ORDER).rowsBetween(Window.unboundedPreceding, 0)
+    running = _conv_window().rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("session_id", F.sum(new_sess).over(running).cast("int"))
 
 
@@ -85,7 +84,6 @@ def with_time_decay_sum(
     inside the bucketed Arrow kernel (stateful scans do not exist as Spark
     window functions)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -97,38 +95,17 @@ def with_time_decay_sum(
     )
     tau_us = tau_seconds * 1e6
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        codes, _ = pd.factorize(pdf["conv_id"].to_numpy())
-        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-        turn = pdf["turn_idx"].to_numpy(dtype=np.int64)
-        order = np.lexsort((turn, ts_us, codes))
-        codes, ts_us, turn = codes[order], ts_us[order], turn[order]
-        x = pdf[signal_col].to_numpy(dtype=np.float64)[order]
-        conv = pdf["conv_id"].to_numpy()[order]
+    def kernel(cols: dict, starts, ends) -> dict:
+        ts_us = cols["ts"]
+        x = cols[signal_col].astype(np.float64, copy=False)
         s = np.empty_like(x)
-        prev_code = -1
-        prev_s = 0.0
-        prev_t = 0
-        for i in range(x.size):
-            if codes[i] != prev_code:
-                prev_s = x[i]
-            else:
-                prev_s = x[i] + prev_s * np.exp(-(ts_us[i] - prev_t) / tau_us)
-            s[i] = prev_s
-            prev_code = codes[i]
-            prev_t = ts_us[i]
-        return pd.DataFrame(
-            {"conv_id": conv, "turn_idx": turn.astype("int32"), out: s}
-        )
+        for a, b in zip(starts, ends):
+            s[a] = x[a]
+            for i in range(a + 1, b):
+                s[i] = x[i] + s[i - 1] * np.exp(-(ts_us[i] - ts_us[i - 1]) / tau_us)
+        return {"conv_id": cols["conv_id"], "turn_idx": cols["turn_idx"].astype("int32"), out: s}
 
-    spark = df.sparkSession
-    n_parts = max(2 * spark.sparkContext.defaultParallelism, 8)
-    bucketed = df.select("conv_id", "turn_idx", "ts", signal_col).withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_parts)).cast("int")
-    )
-    return bucketed.repartition(n_parts, "bucket").groupBy("bucket").applyInPandas(
-        kernel, schema=schema
-    )
+    return map_conversations(df.select("conv_id", "turn_idx", "ts", signal_col), kernel, schema)
 
 
 def session_stats(df: DataFrame, gap_seconds: float) -> DataFrame:
@@ -608,7 +585,7 @@ def spearman_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         .orderBy(x.asc_nulls_last())
         .rangeBetween(Window.unboundedPreceding, 0)
     )
-    wo = Window.partitionBy("conv_id").orderBy(*_ORDER)
+    wo = _conv_window()
     t = F.count(x).over(wv)
     upto = F.count(x).over(wc)
     two_r = (F.lit(2) * (upto - t) + t + F.lit(1)).cast("long")
@@ -843,7 +820,7 @@ def with_topic_boundaries(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     )
     base = df.withColumn("_tk", toks)
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     left_f = w.rowsBetween(-(k - 1), 0)
     right_f = w.rowsBetween(1, k)
     left = F.array_distinct(F.flatten(F.collect_list("_tk").over(left_f)))
@@ -1167,7 +1144,7 @@ def funnel_steps(
     ordinal where each stage was reached, NULL once a stage is missed,
     reached int = number of stages reached).
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     base = df.select(
         "conv_id",
         F.col(role_col).alias("_role"),
@@ -1618,7 +1595,7 @@ def entropy_rate(df: DataFrame) -> DataFrame:
     (n_trans long, h_rate, h_marg, gain doubles — NULL when no
     transitions).
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     trans = (
         df.select("conv_id", "ts", "turn_idx", F.col("role").alias("_u"))
         .withColumn("_v", F.lead("_u", 1).over(w))
@@ -1809,7 +1786,7 @@ def markov_stationary(df: DataFrame, n_iter: int = 3) -> DataFrame:
     work is ONE counting pass. Output: (role, pi double, marginal
     double, gap double), one row per role.
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = _conv_window()
     trans = (
         df.select("conv_id", "ts", "turn_idx", F.col("role").alias("_u"))
         .withColumn("_v", F.lead("_u", 1).over(w))

@@ -1,33 +1,97 @@
-"""Skew handling: salted decomposition for giant conversations.
+"""Conversation layout across tasks: hash buckets, salting, skew metrics.
 
-Zipf-skewed transcript tables put one conversation's 10^8 turns in one
-task. Three levels of defense, cheapest first:
+Every per-conversation operator needs a conversation whole inside one
+task, in the stable (ts, turn_idx) order. This module decides how that
+happens, once:
 
-1. AQE skew-join/partition split (on by default in session.py) — handles
-   shuffle-partition skew transparently.
-2. ``repartition_range`` — range partitioning on (conv_id, ts) keeps each
-   task's memory bounded for scan-shaped work.
-3. ``salted_extract`` — for the applyInPandas feature kernel, split each
-   giant conversation into B buckets WITH k-turn overlap so lag-k pairs
-   and runs spanning bucket borders are still observed exactly once, then
-   merge partial matrices. Border correctness: a pair/run crossing the
-   cut is counted by the bucket that OWNS its left endpoint; the overlap
-   rows are marked read-only (own=false) so no double counting
-   (SURVEY.md §4 item 2).
-
-The salted path is exact for MERG aggregations (matrix sums are
-associative); AVER-style per-session feature averaging is computed from
-the merged per-session matrices, which sessionization keys make exact as
-well because buckets split only at session boundaries when possible.
-This module currently ships the partitioning + bucket-assignment
-machinery and the exact salted GLCM merge; remaining families fall back
-to level 1/2 (documented, logged).
+1. ``map_conversations`` — the one grouped-kernel primitive. Rows go to
+   ``conv_bucket(n)`` hash buckets (``bucket_count`` sets n), each bucket
+   crosses the Arrow boundary ONCE, and the kernel gets the bucket's
+   columns sorted by (conv_id, ts, turn_idx) plus each conversation's
+   slice bounds. The flagship extractor, the decay-sum and isotonic
+   kernels and the distributed texture reducers all run on it, and
+   resumable runs (checkpoint.bucket_filter) split work by the same
+   bucket expression.
+2. ``with_salt_bucket`` — for conversations too large for one task:
+   split each conversation into ordinal buckets with a k-row overlap
+   so lag-k pairs and runs spanning bucket borders are still observed
+   exactly once. A pair/run crossing the cut is counted by the bucket
+   that OWNS its left endpoint; overlap rows are marked read-only
+   (own=false) so nothing is counted twice (SURVEY.md §4 item 2). All
+   five distributed texture families (operators/texture_sql.py) take
+   it as an argument of their one plan, and the matrix merge is an
+   associative cell sum, so the salted plan is exact.
+3. ``skew_metrics`` — the driver-side size summary that picks between
+   the plain and the salted plan (texture_sql.texture_features_auto);
+   ``repartition_range`` and AQE's skew split cover scan-shaped work.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# the engine's stable within-conversation order (conv_id first)
+ORDER = ("ts", "turn_idx")
+
+
+def conv_bucket(n_buckets: int) -> Column:
+    """The one conversation -> hash bucket assignment."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+def bucket_count(spark: SparkSession) -> int:
+    """Hash buckets for a grouped kernel: ``spark.z_rad_spark.extract.buckets``
+    when set, else 4x parallelism (at least 8) — enough granularity for
+    load balance without AQE, coarse enough that per-call overhead stays
+    amortized. On a real cluster, set the conf from the DATASET size, not
+    from whichever cluster runs the job: a fixed count across N and 4N
+    executors keeps scaling comparisons and reruns apples-to-apples. The
+    key keeps its extractor-era name because the bench and perfbench set it."""
+    return int(spark.conf.get("spark.z_rad_spark.extract.buckets", "0")) or max(
+        4 * spark.sparkContext.defaultParallelism, 8
+    )
+
+
+def map_conversations(
+    df: DataFrame, fn, schema: T.StructType, order=ORDER
+) -> DataFrame:
+    """Run the kernel ``fn(cols, starts, ends)`` once per hash bucket of
+    conversations; it returns the output columns (a dict of arrays or a
+    list of row dicts) for ``schema``.
+
+    One Arrow crossing per bucket, not per conversation: at 10^8+
+    conversations a per-conversation grouped map is boundary-bound. The
+    bucket repartition has an explicit count (AQE never coalesces it, so
+    this CPU-bound stage is not serialized onto a few tasks), and hash
+    partitioning on ``bucket`` satisfies the groupBy: one exchange.
+
+    ``cols`` maps every input column to a NumPy array in the stable
+    (conv_id, *order) order, ``ts`` as int64 epoch microseconds. conv_id
+    is factorized to integer codes first (string compares are the hot
+    cost), and np.lexsort is stable, so ties keep input order.
+    Conversation ``i`` is rows ``starts[i]:ends[i]``."""
+    n = bucket_count(df.sparkSession)
+    names = [f.name for f in schema.fields]
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns if c != "bucket"}
+        if "ts" in cols:
+            cols["ts"] = cols["ts"].astype("datetime64[us]").astype(np.int64)
+        codes, _ = pd.factorize(cols["conv_id"])
+        idx = np.lexsort([cols[c] for c in reversed(order)] + [codes])
+        cols = {c: v[idx] for c, v in cols.items()}
+        codes = codes[idx]
+        brk = np.nonzero(codes[1:] != codes[:-1])[0] + 1
+        starts = np.concatenate(([0], brk))
+        ends = np.concatenate((brk, [codes.size]))
+        return pd.DataFrame(fn(cols, starts, ends), columns=names)
+
+    bucketed = df.withColumn("bucket", conv_bucket(n)).repartition(n, "bucket")
+    return bucketed.groupBy("bucket").applyInPandas(kernel, schema=schema)
 
 
 def conv_sizes(df: DataFrame) -> DataFrame:

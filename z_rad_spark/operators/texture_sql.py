@@ -1,8 +1,8 @@
 """Distributed texture-matrix plans — the giant-conversation scale path.
 
-The grouped-map extractor materializes one conversation per task; a
+The grouped-map extractor holds one conversation inside one task; a
 10^8-turn conversation would blow that task. These plans instead build
-the texture matrices DECLARATIVELY:
+the texture matrices DECLARATIVELY, one plan per family:
 
 * pairs / runs / dependence counts come from window functions over
   (conv_id, ts, turn_idx) — one pass, whole-stage codegen;
@@ -10,220 +10,105 @@ the texture matrices DECLARATIVELY:
   the cell, so ONE conversation's work spreads over many reducers
   (map-side partial counts make the shuffle tiny: <= lvl^2 rows per
   conversation per map task);
-* the final 16/25-formula reduction runs on <= lvl^2 rows per
-  conversation — a trivially small applyInPandas (or could be a second
-  groupBy; the kernel keeps formula code shared with the extractor).
+* the final reduction runs on <= lvl^2 rows per conversation with the
+  kernel family table's reducer (kernels/texture.FAMILIES), inside the
+  engine's grouped-kernel primitive (skew.map_conversations).
 
-Results are value-identical to the extractor's 3D MERG path (tested), so
-the engine can switch paths per conversation size (operators/skew.py
-metrics drive the choice).
+Every cell builder takes ``turns_per_bucket``. ``None`` gives the plain
+plan: one window per conversation. A number salts the same plan
+(skew.with_salt_bucket): the window runs per (conv_id, bucket), so one
+conversation's pass spreads over many tasks, and overlap rows (GLCM,
+NGLDM, NGTDM) or a cross-bucket run merge (GLRLM, GLDZM) keep the counts
+exact. ``texture_features_distributed`` is the one feature entry;
+``texture_features_auto`` picks ``turns_per_bucket`` from observed
+conversation size (skew.skew_metrics). Both plans are value-identical to
+the extractor's 3D MERG path (tested).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels.texture import FAMILIES
-
-_W = lambda: Window.partitionBy("conv_id").orderBy("ts", "turn_idx")  # noqa: E731
-
-
-def _grey(df: DataFrame, signal_col: str = "signal") -> DataFrame:
-    return df.select("conv_id", "ts", "turn_idx", F.col(signal_col).cast("double").alias("g"))
+from .sessionize import _conv_window
+from .skew import ORDER, map_conversations, skew_metrics, with_salt_bucket
 
 
-def glcm_cells(df: DataFrame, lags=(1,), signal_col: str = "signal") -> DataFrame:
-    """Symmetrized lag-k co-occurrence counts: (conv_id, i, j, c)."""
-    g = _grey(df, signal_col)
-    parts = []
-    for lag in lags:
-        lead = F.lead("g", lag).over(_W())
-        p = g.select("conv_id", F.col("g").alias("a"), lead.alias("b")).where(F.col("b").isNotNull())
-        parts.append(p)
-    pairs = parts[0]
-    for p in parts[1:]:
-        pairs = pairs.unionByName(p)
-    sym = pairs.unionByName(pairs.select("conv_id", F.col("b").alias("a"), F.col("a").alias("b")))
-    return sym.groupBy("conv_id", F.col("a").cast("int").alias("i"), F.col("b").cast("int").alias("j")).agg(
-        F.count("*").cast("double").alias("c")
-    )
-
-
-def glrlm_cells(df: DataFrame, signal_col: str = "signal") -> DataFrame:
-    """Run cells: (conv_id, lvl, len, c) via gaps-and-islands windows."""
-    g = _grey(df, signal_col)
-    w = _W()
-    brk = F.when(F.lag("g").over(w).isNull() | (F.lag("g").over(w) != F.col("g")), 1).otherwise(0)
-    marked = g.withColumn("brk", brk)
-    run_id = F.sum("brk").over(
-        Window.partitionBy("conv_id").orderBy("ts", "turn_idx").rowsBetween(Window.unboundedPreceding, 0)
-    )
-    runs = (
-        marked.withColumn("run_id", run_id)
-        .groupBy("conv_id", "run_id")
-        .agg(F.min("g").cast("int").alias("lvl"), F.count("*").cast("int").alias("len"))
-    )
-    return runs.groupBy("conv_id", "lvl", "len").agg(F.count("*").cast("double").alias("c"))
-
-
-def ngldm_cells(df: DataFrame, signal_col: str = "signal") -> DataFrame:
-    """Dependence cells: (conv_id, lvl, dep, c)."""
-    g = _grey(df, signal_col)
-    w = _W()
-    dep = (
-        F.when(F.lag("g").over(w) == F.col("g"), 1).otherwise(0)
-        + F.when(F.lead("g").over(w) == F.col("g"), 1).otherwise(0)
-    )
-    return (
-        g.withColumn("dep", dep)
-        .groupBy("conv_id", F.col("g").cast("int").alias("lvl"), F.col("dep").cast("int").alias("dep"))
-        .agg(F.count("*").cast("double").alias("c"))
-    )
-
-
-def _vox(df: DataFrame, signal_col: str = "signal") -> DataFrame:
-    return df.groupBy("conv_id").agg(
-        F.count("*").cast("double").alias("vc"),
-        F.max(F.col(signal_col)).cast("int").alias("gmax"),
-    )
-
-
-def _bucketed_reduce(joined: DataFrame, one, names) -> DataFrame:
-    """Grouped-map reduction per hash BUCKET of conversations (one Arrow
-    crossing per bucket, numpy slicing per conversation inside) — the same
-    boundary amortization as the extractor: a per-conversation grouped map
-    at 10^8 entities is Python-boundary-bound, not compute-bound."""
-    schema = T.StructType(
-        [T.StructField("conv_id", T.StringType(), False)]
-        + [T.StructField(n, T.DoubleType(), True) for n in names]
-    )
-    columns = [f.name for f in schema.fields]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for conv, grp in pdf.groupby("conv_id", sort=False):
-            row = {"conv_id": conv}
-            row.update(one(grp))
-            rows.append(row)
-        return pd.DataFrame(rows, columns=columns)
-
-    spark = joined.sparkSession
-    n_parts = max(2 * spark.sparkContext.defaultParallelism, 8)
-    bucketed = joined.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_parts)).cast("int")
-    )
-    return bucketed.repartition(n_parts, "bucket").groupBy("bucket").applyInPandas(
-        kernel, schema=schema
-    )
-
-
-# cell-frame layout per family: (row column, column column, column base)
-_CELL_AXES = {
-    "glcm": ("i", "j", 0),
-    "glrlm": ("lvl", "len", 1),
-    "gldzm": ("lvl", "len", 1),
-    "ngldm": ("lvl", "dep", 0),
-}
-
-
-def _cells_to_features(cells: DataFrame, vox: DataFrame, kind: str) -> DataFrame:
-    """Reduce per-conversation cell lists with the kernel family table's
-    reducer (kernels/texture.FAMILIES — the DZM ordered sde/sdhge folds
-    that match the q_gldzm* oracles ride along).
-
-    Input cardinality is <= lvl*width per conversation — tiny — so the
-    reduction runs through ``_bucketed_reduce``."""
-    fam = FAMILIES[kind]
-    row, col, base = _CELL_AXES[kind]
-
-    def one(pdf: pd.DataFrame) -> dict:
-        r, c = pdf[row].to_numpy(), pdf[col].to_numpy() - base
-        m = np.zeros((int(pdf["gmax"].iloc[0]) + 1, int(c.max()) + 1))
-        m[r, c] = pdf["c"].to_numpy()
-        return dict(zip(fam.names, fam.reduce(m, float(pdf["vc"].iloc[0])).values()))
-
-    return _bucketed_reduce(cells.join(vox, "conv_id"), one, fam.names)
-
-
-def glcm_cells_salted(
-    df: DataFrame, lags=(1,), turns_per_bucket: int = 100_000, signal_col: str = "signal"
-) -> DataFrame:
-    """Salt-bucketed co-occurrence counts — exact, for giant conversations.
-
-    Each conversation is split into ~turns_per_bucket row buckets with a
-    max(lags)-row overlap replicated (read-only, own=false) into the
-    previous bucket, so every lag-k pair is observed by exactly the bucket
-    owning its LEFT endpoint (SURVEY.md §4 item 2). The window partition
-    key becomes (conv_id, bucket): one conversation's pair extraction
-    spreads over many tasks instead of one, and the matrix merge is the
-    same associative cell groupBy as glcm_cells (sums of partial counts).
-    """
-    from .skew import with_salt_bucket
-
+def _layout(df: DataFrame, signal_col: str, turns_per_bucket, overlap=0, overlap_before=0):
+    """Grey rows ``g`` with an ``own`` flag, their window and its partition
+    keys: one window per conversation, or with ``turns_per_bucket`` one
+    per salt bucket, where borrowed overlap rows carry own=false."""
     g = df.select("conv_id", "ts", "turn_idx", F.col(signal_col).cast("double").alias("g"))
-    b = with_salt_bucket(g, turns_per_bucket=turns_per_bucket, overlap=max(lags))
-    w = Window.partitionBy("conv_id", "bucket").orderBy("ts", "turn_idx")
-    parts = []
+    if turns_per_bucket is None:
+        return g.withColumn("own", F.lit(True)), _conv_window(), ["conv_id"]
+    rows = with_salt_bucket(
+        g, turns_per_bucket=turns_per_bucket, overlap=overlap, overlap_before=overlap_before
+    )
+    keys = ["conv_id", "bucket"]
+    return rows, Window.partitionBy(*keys).orderBy(*ORDER), keys
+
+
+def glcm_cells(
+    df: DataFrame, lags=(1,), signal_col: str = "signal", turns_per_bucket: int | None = None
+) -> DataFrame:
+    """Symmetrized lag-k co-occurrence counts: (conv_id, i, j, c).
+
+    Salted, a max(lags)-row overlap is replicated read-only into the
+    previous bucket, so every lag-k pair is observed by exactly the bucket
+    owning its LEFT endpoint (SURVEY.md §4 item 2); the matrix merge is
+    the same associative cell groupBy (sums of partial counts)."""
+    rows, w, _ = _layout(df, signal_col, turns_per_bucket, overlap=max(lags))
+    pairs = None
     for lag in lags:
-        lead = F.lead("g", lag).over(w)
         p = (
-            b.select("conv_id", "own", F.col("g").alias("a"), lead.alias("b"))
+            rows.select("conv_id", "own", F.col("g").alias("a"), F.lead("g", lag).over(w).alias("b"))
             .where(F.col("b").isNotNull() & F.col("own"))
             .drop("own")
         )
-        parts.append(p)
-    pairs = parts[0]
-    for p in parts[1:]:
-        pairs = pairs.unionByName(p)
+        pairs = p if pairs is None else pairs.unionByName(p)
     sym = pairs.unionByName(pairs.select("conv_id", F.col("b").alias("a"), F.col("a").alias("b")))
     return sym.groupBy(
         "conv_id", F.col("a").cast("int").alias("i"), F.col("b").cast("int").alias("j")
     ).agg(F.count("*").cast("double").alias("c"))
 
 
-def _runs_salted(
-    df: DataFrame, turns_per_bucket: int = 100_000, signal_col: str = "signal"
-) -> DataFrame:
-    """Salt-bucketed exact distributed RLE with run POSITIONS — the shared
-    machinery for giant-conversation GLRLM and GLDZM. Buckets partition
-    each conversation (no overlap); local gaps-and-islands finds
-    per-bucket runs; runs interior to a bucket are final, and the <=2
-    border runs per bucket are merged across adjacent buckets by a second
-    (tiny) gaps-and-islands over the edge-run sequence — a run spanning
-    whole buckets chains through them exactly once. Output: one row per
-    final run (conv_id, lvl, len, srn, ern) with 1-based start/end
-    positions (srn/ern = turn_idx + 1, valid under the transcripts
-    ordinal contract)."""
-    from .skew import with_salt_bucket
+def _runs(df: DataFrame, signal_col: str, turns_per_bucket) -> DataFrame:
+    """One row per maximal equal-grey run, (conv_id, lvl, len, srn, ern),
+    with 1-based start/end positions — the one run builder of GLRLM and
+    GLDZM, by gaps-and-islands windows.
 
-    g = df.select("conv_id", "ts", "turn_idx", F.col(signal_col).cast("double").alias("g"))
-    b = with_salt_bucket(g, turns_per_bucket=turns_per_bucket, overlap=0)
-    wb = Window.partitionBy("conv_id", "bucket").orderBy("ts", "turn_idx")
-    brk = F.when(F.lag("g").over(wb).isNull() | (F.lag("g").over(wb) != F.col("g")), 1).otherwise(0)
-    run_id = F.sum(brk).over(wb.rowsBetween(Window.unboundedPreceding, 0))
+    Plain, positions are row numbers. Salted, buckets partition each
+    conversation (no overlap); runs interior to a bucket are final, and
+    the <= 2 border runs per bucket are merged across adjacent buckets by
+    a second (tiny) gaps-and-islands over the edge-run sequence — a run
+    spanning whole buckets chains through them exactly once. Positions
+    are then turn_idx + 1, valid under the transcripts ordinal contract."""
+    rows, w, keys = _layout(df, signal_col, turns_per_bucket)
+    pos = F.row_number().over(w) if turns_per_bucket is None else F.col("turn_idx") + 1
+    brk = F.when(F.lag("g").over(w).isNull() | (F.lag("g").over(w) != F.col("g")), 1).otherwise(0)
     runs = (
-        b.withColumn("run_id", run_id)
-        .groupBy("conv_id", "bucket", "run_id")
+        rows.withColumn("pos", pos)
+        .withColumn("run_id", F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        .groupBy(*keys, "run_id")
         .agg(
             F.min("g").cast("int").alias("lvl"),
             F.count("*").cast("long").alias("len"),
-            (F.min("turn_idx") + 1).cast("long").alias("srn"),
-            (F.max("turn_idx") + 1).cast("long").alias("ern"),
+            F.min("pos").cast("long").alias("srn"),
+            F.max("pos").cast("long").alias("ern"),
         )
     )
-    wmax = Window.partitionBy("conv_id", "bucket")
-    runs = runs.withColumn("n_runs", F.max("run_id").over(wmax))
+    if turns_per_bucket is None:
+        return runs.drop("run_id")
+    runs = runs.withColumn("n_runs", F.max("run_id").over(Window.partitionBy(*keys)))
     runs = runs.withColumn("is_first", F.col("run_id") == 1).withColumn(
         "is_last", F.col("run_id") == F.col("n_runs")
     )
     interior = runs.where(~F.col("is_first") & ~F.col("is_last")).select(
         "conv_id", "lvl", "len", "srn", "ern"
     )
-
     edge = runs.where(F.col("is_first") | F.col("is_last"))
     we = Window.partitionBy("conv_id").orderBy("bucket", "run_id")
     cont = (
@@ -247,66 +132,24 @@ def _runs_salted(
     return interior.unionByName(merged)
 
 
-def glrlm_cells_salted(
-    df: DataFrame, turns_per_bucket: int = 100_000, signal_col: str = "signal"
+def glrlm_cells(
+    df: DataFrame, signal_col: str = "signal", turns_per_bucket: int | None = None
 ) -> DataFrame:
-    """Salt-bucketed run cells (conv_id, lvl, len, c) — see _runs_salted."""
-    allruns = _runs_salted(df, turns_per_bucket, signal_col)
-    return allruns.groupBy(
+    """Run cells: (conv_id, lvl, len, c) — see _runs."""
+    return _runs(df, signal_col, turns_per_bucket).groupBy(
         "conv_id", "lvl", F.col("len").cast("int").alias("len")
     ).agg(F.count("*").cast("double").alias("c"))
 
 
-def gldzm_cells_salted(
-    df: DataFrame, turns_per_bucket: int = 100_000, signal_col: str = "signal"
+def gldzm_cells(
+    df: DataFrame, signal_col: str = "signal", turns_per_bucket: int | None = None
 ) -> DataFrame:
-    """Salt-bucketed distance-zone cells: the same merged runs as GLRLM's
-    salted path, keyed by min taxicab distance of the run's endpoints to
-    the conversation border (identical distance formula to gldzm_cells).
-    Reference: zrad/radiomics/gldzm.py:28-159."""
-    runs = _runs_salted(df, turns_per_bucket, signal_col)
-    n = df.groupBy("conv_id").agg(F.count("*").cast("long").alias("_n"))
-    d = F.greatest(
-        F.least(
-            F.least(F.col("srn"), F.col("_n") - F.col("srn") + 1),
-            F.least(F.col("ern"), F.col("_n") - F.col("ern") + 1),
-        ),
-        F.lit(1),
-    )
-    zones = runs.join(n, "conv_id").select("conv_id", "lvl", d.cast("int").alias("len"))
-    return zones.groupBy("conv_id", "lvl", "len").agg(F.count("*").cast("double").alias("c"))
-
-
-def gldzm_features_salted(
-    df: DataFrame, turns_per_bucket: int = 100_000, signal_col: str = "signal"
-) -> DataFrame:
-    return _cells_to_features(
-        gldzm_cells_salted(df, turns_per_bucket, signal_col), _vox(df, signal_col), "gldzm"
-    )
-
-
-def gldzm_cells(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     """Distance-zone cells: runs keyed by min taxicab distance to the
     conversation border — min over the run's two endpoints, each scored
     min(position, n - position + 1) in 1-based positions (the declarative
-    twin of kernels/prep.border_distance + kernels/texture.dzm_matrix)."""
-    g = _grey(df, signal_col)
-    w = _W()
-    brk = F.when(F.lag("g").over(w).isNull() | (F.lag("g").over(w) != F.col("g")), 1).otherwise(0)
-    rn = F.row_number().over(w)
-    marked = g.withColumn("rn", rn).withColumn("brk", brk)
-    run_id = F.sum("brk").over(
-        Window.partitionBy("conv_id").orderBy("ts", "turn_idx").rowsBetween(Window.unboundedPreceding, 0)
-    )
-    runs = (
-        marked.withColumn("run_id", run_id)
-        .groupBy("conv_id", "run_id")
-        .agg(
-            F.min("g").cast("int").alias("lvl"),
-            F.min("rn").cast("long").alias("srn"),
-            F.max("rn").cast("long").alias("ern"),
-        )
-    )
+    twin of kernels/prep.border_distance + kernels/texture.dzm_matrix).
+    Reference: zrad/radiomics/gldzm.py:28-159."""
+    runs = _runs(df, signal_col, turns_per_bucket)
     n = df.groupBy("conv_id").agg(F.count("*").cast("long").alias("_n"))
     d = F.greatest(
         F.least(
@@ -319,22 +162,19 @@ def gldzm_cells(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     return zones.groupBy("conv_id", "lvl", "len").agg(F.count("*").cast("double").alias("c"))
 
 
-def ngldm_cells_salted(
-    df: DataFrame, turns_per_bucket: int = 100_000, signal_col: str = "signal"
+def ngldm_cells(
+    df: DataFrame, signal_col: str = "signal", turns_per_bucket: int | None = None
 ) -> DataFrame:
-    """Salt-bucketed dependence cells: both neighbours of every own row are
-    visible via 1-row overlap on each side; borrowed rows never emit."""
-    from .skew import with_salt_bucket
-
-    g = df.select("conv_id", "ts", "turn_idx", F.col(signal_col).cast("double").alias("g"))
-    b = with_salt_bucket(g, turns_per_bucket=turns_per_bucket, overlap=1, overlap_before=1)
-    w = Window.partitionBy("conv_id", "bucket").orderBy("ts", "turn_idx")
+    """Dependence cells: (conv_id, lvl, dep, c). Salted, both neighbours of
+    every own row are visible via 1-row overlap on each side; borrowed
+    rows never emit."""
+    rows, w, _ = _layout(df, signal_col, turns_per_bucket, overlap=1, overlap_before=1)
     dep = (
         F.when(F.lag("g").over(w) == F.col("g"), 1).otherwise(0)
         + F.when(F.lead("g").over(w) == F.col("g"), 1).otherwise(0)
     )
     return (
-        b.withColumn("dep", dep)
+        rows.withColumn("dep", dep)
         .where(F.col("own"))
         .groupBy("conv_id", F.col("g").cast("int").alias("lvl"), F.col("dep").cast("int").alias("dep"))
         .agg(F.count("*").cast("double").alias("c"))
@@ -345,18 +185,8 @@ def ngtdm_cells(
     df: DataFrame, signal_col: str = "signal", turns_per_bucket: int | None = None
 ) -> DataFrame:
     """Per-level (n_i, s_i) rows for NGTDM: neighbour mean via lag/lead,
-    aggregated per (conv_id, level). With ``turns_per_bucket`` the window
-    runs per salt bucket with 1-row overlap on each side — exact, and one
-    giant conversation's pass spreads over many tasks."""
-    g = _grey(df, signal_col)
-    if turns_per_bucket is None:
-        w = _W()
-        rows = g.withColumn("own", F.lit(True))
-    else:
-        from .skew import with_salt_bucket
-
-        rows = with_salt_bucket(g, turns_per_bucket=turns_per_bucket, overlap=1, overlap_before=1)
-        w = Window.partitionBy("conv_id", "bucket").orderBy("ts", "turn_idx")
+    aggregated per (conv_id, level). Salted, 1-row overlap on each side."""
+    rows, w, _ = _layout(df, signal_col, turns_per_bucket, overlap=1, overlap_before=1)
     lg, ld = F.lag("g").over(w), F.lead("g").over(w)
     nb_sum = F.coalesce(lg, F.lit(0.0)) + F.coalesce(ld, F.lit(0.0))
     nb_cnt = lg.isNotNull().cast("int") + ld.isNotNull().cast("int")
@@ -371,104 +201,75 @@ def ngtdm_cells(
     )
 
 
-def ngtdm_features_distributed(
-    df: DataFrame, signal_col: str = "signal", turns_per_bucket: int | None = None
-) -> DataFrame:
-    """NGTDM features from per-level cells (<= lvl rows per conversation),
-    reduced per hash bucket — one Arrow crossing per bucket, not per
-    conversation (same amortization as every other distributed reducer)."""
-    cells = ngtdm_cells(df, signal_col, turns_per_bucket)
-    vox = _vox(df, signal_col)
-    joined = cells.join(vox, "conv_id")
-
-    fam = FAMILIES["ngtdm"]
-
-    def one(pdf: pd.DataFrame) -> dict:
-        m = np.zeros((int(pdf["gmax"].iloc[0]) + 1, 2))
-        m[pdf["lvl"].to_numpy()] = pdf[["n_i", "s_i"]].to_numpy()
-        return fam.reduce(m, float(pdf["vc"].iloc[0]))
-
-    return _bucketed_reduce(joined, one, fam.names)
-
-
-def glcm_features_distributed(df: DataFrame, lags=(1,), signal_col: str = "signal") -> DataFrame:
-    return _cells_to_features(glcm_cells(df, lags, signal_col), _vox(df, signal_col), "glcm")
-
-
-def gldzm_features_distributed(df: DataFrame, signal_col: str = "signal") -> DataFrame:
-    return _cells_to_features(gldzm_cells(df, signal_col), _vox(df, signal_col), "gldzm")
-
-
-def glrlm_features_salted(
-    df: DataFrame, turns_per_bucket: int = 100_000, signal_col: str = "signal"
-) -> DataFrame:
-    return _cells_to_features(
-        glrlm_cells_salted(df, turns_per_bucket, signal_col), _vox(df, signal_col), "glrlm"
-    )
-
-
-def ngldm_features_salted(
-    df: DataFrame, turns_per_bucket: int = 100_000, signal_col: str = "signal"
-) -> DataFrame:
-    return _cells_to_features(
-        ngldm_cells_salted(df, turns_per_bucket, signal_col), _vox(df, signal_col), "ngldm"
-    )
-
-
-def glcm_features_salted(
-    df: DataFrame, lags=(1,), turns_per_bucket: int = 100_000, signal_col: str = "signal"
-) -> DataFrame:
-    """Value-identical to glcm_features_distributed (same oracle); the pair
-    extraction itself is parallel within a conversation."""
-    return _cells_to_features(
-        glcm_cells_salted(df, lags, turns_per_bucket, signal_col), _vox(df, signal_col), "glcm"
-    )
-
-
-def glrlm_features_distributed(df: DataFrame, signal_col: str = "signal") -> DataFrame:
-    return _cells_to_features(glrlm_cells(df, signal_col), _vox(df, signal_col), "glrlm")
-
-
-def ngldm_features_distributed(df: DataFrame, signal_col: str = "signal") -> DataFrame:
-    return _cells_to_features(ngldm_cells(df, signal_col), _vox(df, signal_col), "ngldm")
-
-
-_AUTO_PATHS = {
-    "glcm": (glcm_features_distributed, glcm_features_salted),
-    "glrlm": (glrlm_features_distributed, glrlm_features_salted),
-    "gldzm": (gldzm_features_distributed, gldzm_features_salted),
-    "ngldm": (ngldm_features_distributed, ngldm_features_salted),
-    "ngtdm": (
-        ngtdm_features_distributed,
-        lambda df, turns_per_bucket=100_000, signal_col="signal": ngtdm_features_distributed(
-            df, signal_col, turns_per_bucket
-        ),
-    ),
+# per family: cell plan (df, lags, turns_per_bucket) and the cell frame's
+# matrix axes (row column, column column, column base); NGTDM's cells are
+# whole (n_i, s_i) matrix rows
+_PLANS = {
+    "glcm": (lambda df, lags, tpb: glcm_cells(df, lags, turns_per_bucket=tpb), ("i", "j", 0)),
+    "glrlm": (lambda df, lags, tpb: glrlm_cells(df, turns_per_bucket=tpb), ("lvl", "len", 1)),
+    "gldzm": (lambda df, lags, tpb: gldzm_cells(df, turns_per_bucket=tpb), ("lvl", "len", 1)),
+    "ngldm": (lambda df, lags, tpb: ngldm_cells(df, turns_per_bucket=tpb), ("lvl", "dep", 0)),
+    "ngtdm": (lambda df, lags, tpb: ngtdm_cells(df, turns_per_bucket=tpb), None),
 }
+
+
+def _plan(family: str):
+    if family not in _PLANS:
+        raise ValueError(f"unknown texture family {family!r}; one of {sorted(_PLANS)}")
+    return _PLANS[family]
+
+
+def texture_features_distributed(
+    df: DataFrame, family: str, lags=(1,), turns_per_bucket: int | None = None
+) -> DataFrame:
+    """One row of ``family`` features per conversation, from its cell plan
+    (plain, or salted with ``turns_per_bucket``; ``lags`` is GLCM's). The
+    reduction sees <= lvl*width cells per conversation and uses the
+    kernel family table's reducer — the DZM ordered sde/sdhge folds that
+    match the q_gldzm* oracles ride along."""
+    build, axes = _plan(family)
+    fam = FAMILIES[family]
+    vox = df.groupBy("conv_id").agg(
+        F.count("*").cast("double").alias("vc"), F.max(F.col("signal")).cast("int").alias("gmax")
+    )
+    cells = build(df, lags, turns_per_bucket).join(vox, "conv_id")
+    schema = T.StructType(
+        [T.StructField("conv_id", T.StringType(), False)]
+        + [T.StructField(n, T.DoubleType(), True) for n in fam.names]
+    )
+
+    def kernel(cols: dict, starts, ends) -> list[dict]:
+        rows = []
+        for s, e in zip(starts, ends):
+            height = int(cols["gmax"][s]) + 1
+            if axes is None:
+                m = np.zeros((height, 2))
+                m[cols["lvl"][s:e]] = np.column_stack((cols["n_i"][s:e], cols["s_i"][s:e]))
+            else:
+                r, c = cols[axes[0]][s:e], cols[axes[1]][s:e] - axes[2]
+                m = np.zeros((height, int(c.max()) + 1))
+                m[r, c] = cols["c"][s:e]
+            vals = fam.reduce(m, float(cols["vc"][s])).values()
+            rows.append({"conv_id": cols["conv_id"][s], **dict(zip(fam.names, vals))})
+        return rows
+
+    return map_conversations(cells, kernel, schema, order=())
 
 
 def texture_features_auto(
     df: DataFrame,
     family: str,
-    signal_col: str = "signal",
+    lags=(1,),
     giant_threshold: int = 1_000_000,
     turns_per_bucket: int = 100_000,
-    **kw,
 ) -> DataFrame:
-    """Pick the physical strategy from the DATA: the plain distributed
-    plan (single window pass per conversation) when no conversation
-    exceeds ``giant_threshold`` turns, else the salt-bucketed exact plan
-    whose per-conversation passes spread over many tasks. The decision
-    reads one driver-side summary row (operators/skew.skew_metrics) —
-    the module docstring's "metrics drive the choice", made concrete.
-    Both paths are value-identical (same oracles), so the switch is a
-    pure physical-plan decision, like AQE but keyed on entity skew."""
-    from .skew import skew_metrics
-
-    if family not in _AUTO_PATHS:
-        raise ValueError(f"unknown texture family {family!r}; one of {sorted(_AUTO_PATHS)}")
-    plain, salted = _AUTO_PATHS[family]
-    m = skew_metrics(df)
-    if m["max_turns"] > giant_threshold:
-        return salted(df, turns_per_bucket=turns_per_bucket, signal_col=signal_col, **kw)
-    return plain(df, signal_col=signal_col, **kw)
+    """Pick the physical strategy from the DATA: the plain plan (single
+    window pass per conversation) when no conversation exceeds
+    ``giant_threshold`` turns, else the salt-bucketed exact plan whose
+    per-conversation passes spread over many tasks. The decision reads
+    one driver-side summary row (skew.skew_metrics). Both plans are
+    value-identical (same oracles), so the switch is a pure physical-plan
+    decision, like AQE but keyed on entity skew."""
+    _plan(family)
+    salted = skew_metrics(df)["max_turns"] > giant_threshold
+    return texture_features_distributed(df, family, lags, turns_per_bucket if salted else None)
