@@ -197,3 +197,50 @@ def test_extractor_config_matrix(spark, name):
                     assert gv == pytest.approx(v, rel=1e-9, abs=1e-12), (name, conv_id, cut, k)
                 checked += 1
     assert checked > 300, (name, checked)
+
+
+def test_bucket_kernel_isolates_a_failing_conversation(monkeypatch, caplog):
+    """A batched bucket call that raises is rerun one conversation at a
+    time: only the conversation that raises gets failure rows (n_turns
+    set, every other field NULL), every other row is byte-equal to a
+    clean run, and the bucket logs one error with the count and the
+    first failing conv_id."""
+    from test_batched_kernel import random_bucket
+
+    from z_rad_spark import extractor
+    from z_rad_spark.kernels import texture
+
+    cols, starts, ends, cuts = random_bucket(7)
+    bad = int(np.argmax(ends - starts))  # the longest conversation
+    cols["eligible"][starts[bad]:ends[bad]] = True
+    cols["signal"][starts[bad]] = 999.0  # a grey level only it has
+    cuts = [int(cols["ts"][starts[bad]])] + cuts  # every cutoff sees it
+    cfg = FeatureConfig(eligible_roles=("user", "assistant", "tool"), min_turns=1)
+    clean = extractor._make_kernel(cfg, cuts)(cols, starts, ends)
+
+    glcm = texture.FAMILIES["glcm"]
+
+    def poisoned(u, lags):
+        if (u.g == 999.0).any():
+            raise ValueError("poisoned builder")
+        return glcm.build(u, lags)
+
+    monkeypatch.setitem(texture.FAMILIES, "glcm", glcm._replace(build=poisoned))
+    with caplog.at_level("ERROR", logger="z_rad_spark.extractor"):
+        got = extractor._make_kernel(cfg, cuts)(cols, starts, ends)
+
+    failed = np.repeat(np.arange(starts.size) == bad, len(cuts))
+    assert list(got) == list(clean)
+    assert (got["conv_id"] == clean["conv_id"]).all()
+    assert (got["n_turns"] == clean["n_turns"]).all()
+    for k in got:
+        if k in ("conv_id", "as_of", "n_turns"):
+            continue
+        g = np.asarray(got[k], dtype=np.float64)
+        assert np.isnan(g[failed]).all(), k
+        want = np.asarray(clean[k], dtype=np.float64)[~failed]
+        assert (g[~failed].view(np.int64) == want.view(np.int64)).all(), k
+    errors = [r for r in caplog.records if r.levelname == "ERROR"]
+    assert len(errors) == 1
+    assert f"1/{starts.size} conversations failed" in errors[0].getMessage()
+    assert repr(cols["conv_id"][starts[bad]]) in errors[0].getMessage()

@@ -8,7 +8,7 @@ crosses a rounding boundary is a hard fail. Set STRICT=0 in the
 environment for the older tolerance compare (atol=1.5e-6) when
 bisecting.
 
-Usage: PYTHONPATH=/root/repo python tools/check_queries.py [sf_dir] [only...]
+Usage: python tools/check_queries.py [sf_dir] [only...]
 """
 
 from __future__ import annotations
@@ -22,7 +22,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script belongs to, wherever it is run from
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 

@@ -31,45 +31,74 @@ SHAPE_NAMES = (
 MORAN_NAMES = ("shape_moran_i", "shape_geary_c")
 
 
-def shape_features(ts_us, eligible, session, role_codes, tool_mask, masked_signal) -> dict:
-    n = ts_us.size
-    if n == 0:
-        return {k: np.nan for k in SHAPE_NAMES}
-    dur = float(ts_us[-1] - ts_us[0]) / 1e6
-    gaps = np.diff(ts_us).astype(np.float64) / 1e6 if n > 1 else np.zeros(0)
-    n_sessions = int(session[-1]) + 1 if n else 0
-    # role codes are small non-negative ints (+ -1 for unknown): bincount
-    # beats np.unique's sort on every call
-    role_counts = np.bincount(role_codes + 1)
-    role_counts = role_counts[role_counts > 0]
-    p = role_counts / role_counts.sum()
-    role_entropy = float(-np.sum(p * np.log2(p)))
+def shape_batch(ts_us, eligible, session, role_codes, tool_mask, masked_signal, seg, n) -> dict:
+    """The 12 shape features of ``n`` non-empty segments laid end to end
+    (``session``: 0-based session ids within each segment)."""
+    L = ts_us.size
+    size = np.bincount(seg, minlength=n)
+    start = np.cumsum(size) - size
+    end = start + size - 1
+    span = ts_us[end] - ts_us[start]
+    dur = span.astype(np.float64) / 1e6
+    inner = np.flatnonzero(seg[1:] == seg[:-1]) + 1
+    gseg = seg[inner]
+    gaps = (ts_us[inner] - ts_us[inner - 1]).astype(np.float64) / 1e6
+    n_gaps = size - 1
+    n_sessions = session[end] + 1
+    # role codes are small ints (+ -1 for unknown): one (segment, role)
+    # bincount; the nonzero cells arrive in role order per segment
+    width = int(role_codes.max()) + 2
+    rc = np.bincount(seg * width + role_codes + 1, minlength=n * width)
+    cell = np.flatnonzero(rc)
+    cseg = cell // width
+    p = rc[cell] / size[cseg]
+    role_entropy = -np.bincount(cseg, weights=p * np.log2(p), minlength=n)
 
     # centre-of-mass shift: |mean position of eligible turns - signal-weighted
     # mean position| in turns (analogue of morphology.py:112-122)
-    pos = np.arange(n, dtype=np.float64)
+    pos = (np.arange(L) - start[seg]).astype(np.float64)
     el = eligible.astype(bool)
-    com_geom = float(np.mean(pos[el])) if el.any() else np.nan
+    n_el = np.bincount(seg[el], minlength=n)
     w = np.nan_to_num(masked_signal, nan=0.0)
-    com_int = float(np.sum(pos * w) / np.sum(w)) if np.sum(w) > 0 else np.nan
-    return {
-        "shape_n_turns": float(n),
-        "shape_n_eligible": float(el.sum()),
-        "shape_duration_sec": dur,
-        "shape_turn_rate": float(n / dur) if dur > 0 else np.nan,
-        # exact form: the gap sum telescopes to (last - first), an exact
-        # integer, so ONE division chain replaces a float mean whose
-        # summation order differs between NumPy and SQL (at grid scale
-        # that ulp flipped the 6dp hash for ~0.5% of groups)
-        "shape_gap_mean": float(ts_us[-1] - ts_us[0]) / (n - 1) / 1e6 if gaps.size else np.nan,
-        "shape_gap_std": float(np.std(gaps)) if gaps.size else np.nan,
-        "shape_gap_max": float(np.max(gaps)) if gaps.size else np.nan,
-        "shape_n_sessions": float(n_sessions),
-        "shape_session_len_mean": float(n / n_sessions) if n_sessions else np.nan,
-        "shape_role_entropy": role_entropy,
-        "shape_tool_frac": float(np.mean(tool_mask)),
-        "shape_intensity_com_shift": abs(com_geom - com_int) if np.isfinite(com_geom) and np.isfinite(com_int) else np.nan,
-    }
+    w_sum = np.bincount(seg, weights=w, minlength=n)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        com_geom = np.bincount(seg[el], weights=pos[el], minlength=n) / n_el
+        com_int = np.where(w_sum > 0, np.bincount(seg, weights=pos * w, minlength=n) / w_sum, np.nan)
+        gap_mean = np.bincount(gseg, weights=gaps, minlength=n) / n_gaps
+        dev = gaps - gap_mean[gseg]
+        gap_std = np.sqrt(np.bincount(gseg, weights=dev * dev, minlength=n) / n_gaps)
+        gap_max = np.full(n, np.nan)
+        np.fmax.at(gap_max, gseg, gaps)
+        has_gaps = n_gaps > 0
+        return {
+            "shape_n_turns": size.astype(np.float64),
+            "shape_n_eligible": n_el.astype(np.float64),
+            "shape_duration_sec": dur,
+            "shape_turn_rate": np.where(dur > 0, size / dur, np.nan),
+            # exact form: the gap sum telescopes to (last - first), an exact
+            # integer, so ONE division chain replaces a float mean whose
+            # summation order differs between NumPy and SQL (at grid scale
+            # that ulp flipped the 6dp hash for ~0.5% of groups)
+            "shape_gap_mean": np.where(has_gaps, span.astype(np.float64) / n_gaps / 1e6, np.nan),
+            "shape_gap_std": np.where(has_gaps, gap_std, np.nan),
+            "shape_gap_max": gap_max,
+            "shape_n_sessions": n_sessions.astype(np.float64),
+            "shape_session_len_mean": size / n_sessions,
+            "shape_role_entropy": role_entropy,
+            "shape_tool_frac": np.bincount(seg, weights=tool_mask.astype(np.float64), minlength=n) / size,
+            "shape_intensity_com_shift": np.where(
+                np.isfinite(com_geom) & np.isfinite(com_int), np.abs(com_geom - com_int), np.nan
+            ),
+        }
+
+
+def shape_features(ts_us, eligible, session, role_codes, tool_mask, masked_signal) -> dict:
+    """shape_batch of one segment."""
+    if ts_us.size == 0:
+        return {k: np.nan for k in SHAPE_NAMES}
+    seg = np.zeros(ts_us.size, dtype=np.int64)
+    out = shape_batch(ts_us, eligible, session, role_codes, tool_mask, masked_signal, seg, 1)
+    return {k: float(v[0]) for k, v in out.items()}
 
 
 def moran_geary(ts_us, masked_signal, max_n: int = 2000) -> dict:

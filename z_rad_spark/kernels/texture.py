@@ -12,21 +12,34 @@ lags play the role of spatial directions:
 * NGTDM  — neighbour grey-tone diff     (zrad/radiomics/ngtdm.py:17-257)
 * NGLDM  — neighbour dependence counts  (zrad/radiomics/ngldm.py:30-223)
 
-Two pieces tie them together:
+Everything runs over a whole bucket at once, on the segment axis of
+kernels/prep.py (one segment per (conversation, cutoff) prefix):
 
-* ``FAMILIES`` — the family table. Each family gives only its output
-  names, a count-matrix builder over one segment and a set of lags, its
-  reducer ``(M, n_voxels) -> values``, an "empty matrix" rule, and
-  whether it is directional (one matrix per lag; only GLCM is).
-* ``texture_features`` — the one aggregation driver. It cuts the
-  segments once (the whole conversation for 3D; for 2D/2.5D each
-  session slice holding a finite grey level) and applies Z-Rad's one
-  aggregation policy (glcm.py:437-509) to every requested family:
-  "merge" sums count matrices BEFORE the reducer; "average" reduces per
-  matrix, then (weighted-)averages — the order is contractual.
+* Units. ``texture_batch`` cuts the segments once into matrix units: the
+  whole segment for 3D (lags and zones cross session borders, like 3-D
+  directions cross slices), one session slice of a segment for 2D/2.5D.
+  Lag pairs, runs, zones and neighbourhoods never cross a unit border.
+* The matrix-id axis. Each family's builder emits entries keyed by
+  unit (and, for GLCM, lag). The aggregation policy (glcm.py:437-509)
+  is id arithmetic on that key: merging keys entries on the segment
+  (3D/2.5D) or the unit (2D) BEFORE the reducer; a method that
+  averages per lag adds the lag to the key. One stable sort turns the
+  entries into ``Cells`` — the nonzero cells of every matrix, in
+  row-major (matrix id, i, j) order. A matrix without cells is empty:
+  it is NaN alone and skipped when averaging (GLCM with no pair, NGTDM
+  with no neighboured turn).
+* Batched reducers. Each family has ONE reducer over ``Cells``; per-id
+  sums are ``np.bincount`` folds, a strict left-to-right add in cell
+  order, so exact-integer numerators and the reciprocal-square folds
+  (cm_inv_var, dzm_sde/sdhge) are bit-stable. "Average" reduces per
+  matrix, then takes a (weighted) mean or median over each segment's
+  ids — the order is contractual. The distributed plans
+  (operators/texture_sql.py) call the same reducers once per bucket.
 
-All matrices are tiny (lvl x lvl with lvl <= O(64)); every build is a
-vectorized np.add.at / bincount, never per-element Python.
+``FAMILIES`` is the family table: output names, entry builder, reducer
+and whether the family is directional (one matrix per lag; only GLCM).
+``texture_features`` and the ``*_matrix`` / ``*_feature_values``
+functions are one-segment / one-matrix calls into the batched code.
 """
 
 from __future__ import annotations
@@ -165,19 +178,80 @@ NGLDM_NAMES = (
 SENTINEL = 1_000_000.0
 
 
-def _seq_sum(a) -> float:
-    """Strict left-to-right sequential sum. The reciprocal-square
-    reductions (cm_inv_var, dzm_sde/sdhge) have non-dyadic terms whose
-    float sum is order-dependent in the last ulp; NumPy's pairwise/
-    unrolled reduction and SQL's unordered SUM can land on opposite sides
-    of a 6dp rounding boundary (~5 per 700k values at sf0.1 —
-    BASELINE.md round-3 update 2). The SQL oracles fold the same terms
-    with an ORDER BY-ed list_reduce, so both engines execute the
-    identical double-add sequence and agree bit-for-bit."""
-    acc = 0.0
-    for x in a:
-        acc += float(x)
-    return acc
+class Units(NamedTuple):
+    """Grey levels of a bucket cut into matrix units."""
+
+    g: np.ndarray  # grey level per turn, NaN holes
+    eligible: np.ndarray  # role eligibility per turn (the GLDZM borders)
+    unit: np.ndarray  # nondecreasing unit id per turn
+
+
+class Entries(NamedTuple):
+    """A builder's matrix entries, before keying: one count (or, with
+    ``w``, one weighted count) at (i, j) of the unit's matrix."""
+
+    unit: np.ndarray
+    lag: np.ndarray | None  # index into the lag tuple (GLCM only)
+    i: np.ndarray
+    j: np.ndarray
+    w: np.ndarray | None = None
+
+
+class Cells(NamedTuple):
+    """Sparse count matrices: one row per nonzero cell, sorted row-major
+    by (matrix id, i, j); every id 0..n-1 has at least one cell."""
+
+    mid: np.ndarray
+    i: np.ndarray
+    j: np.ndarray
+    c: np.ndarray  # entry count
+    w: np.ndarray | None  # summed entry weights (NGTDM s_i)
+    n: int
+    lvl: np.ndarray  # per id: grey-level count (GLCM's N_g + 1)
+    vox: np.ndarray  # per id: voxel count
+
+
+def _sum(ids: np.ndarray, w: np.ndarray, n: int) -> np.ndarray:
+    """Per-id strict left-to-right sum."""
+    return np.bincount(ids, weights=w, minlength=n)
+
+
+def _group(mid: np.ndarray, k: np.ndarray, w: np.ndarray):
+    """Sum ``w`` over equal (mid, k): (mid, k, sum) per group, in (mid, k)
+    order — a sparse per-matrix vector such as a marginal."""
+    order = np.lexsort((k, mid))
+    m, kk = mid[order], k[order]
+    new = np.ones(m.size, dtype=bool)
+    new[1:] = (m[1:] != m[:-1]) | (kk[1:] != kk[:-1])
+    return m[new], kk[new], np.bincount(np.cumsum(new) - 1, weights=w[order])
+
+
+def _outer_pairs(gid: np.ndarray, n: int):
+    """Index pairs (a, b) of every two elements of the same contiguous
+    group, row-major per group — the sparse np.outer."""
+    size = np.bincount(gid, minlength=n)
+    rep = size[gid]
+    a = np.repeat(np.arange(gid.size), rep)
+    first = np.repeat(np.cumsum(rep) - rep, rep)
+    b = (np.cumsum(size) - size)[gid[a]] + np.arange(a.size) - first
+    return a, b
+
+
+def _to_cells(key: np.ndarray, e: Entries):
+    """Cells of the entries under a matrix key (one per entry), and the
+    key of each matrix id. The sort is stable, so weights add up in
+    entry order."""
+    order = np.lexsort((e.j, e.i, key))
+    k, i, j = key[order], e.i[order], e.j[order]
+    new = np.ones(k.size, dtype=bool)
+    new[1:] = (k[1:] != k[:-1]) | (i[1:] != i[:-1]) | (j[1:] != j[:-1])
+    cell = np.cumsum(new) - 1
+    c = np.bincount(cell).astype(np.float64)
+    w = None if e.w is None else np.bincount(cell, weights=e.w[order])
+    k, i, j = k[new], i[new], j[new]
+    first = np.ones(k.size, dtype=bool)
+    first[1:] = k[1:] != k[:-1]
+    return np.cumsum(first) - 1, i, j, c, w, k[first]
 
 
 # --------------------------------------------------------------------------
@@ -185,122 +259,114 @@ def _seq_sum(a) -> float:
 # --------------------------------------------------------------------------
 
 
-def glcm_count_matrix(g: np.ndarray, lags, lvl: int) -> np.ndarray:
-    """Symmetrized co-occurrence counts merged over ``lags``.
-
-    Pairs (g[i], g[i+lag]) where both are finite, gathered across every
-    lag and added in both directions in ONE scatter-add (reference:
-    glcm.py:163, 205-206); a single lag gives the per-direction matrix.
-    """
-    ai, bi = [], []
-    for lag in lags:
-        if g.size <= lag:
+def _glcm_entries(u: Units, lags) -> Entries:
+    """Symmetrized co-occurrence entries: pairs (g[p], g[p+lag]) inside one
+    unit where both are finite, added in both directions (reference:
+    glcm.py:163, 205-206), tagged with the lag's index."""
+    g, unit = u.g, u.unit
+    fin = ~np.isnan(g)
+    un, lag, a, b = [], [], [], []
+    for li, k in enumerate(lags):
+        if g.size <= k:
             continue
-        a, b = g[:-lag], g[lag:]
-        valid = ~np.isnan(a) & ~np.isnan(b)
-        ai.append(a[valid])
-        bi.append(b[valid])
-    m = np.zeros((lvl, lvl), dtype=np.float64)
-    if ai:
-        i = np.concatenate(ai).astype(np.int64)
-        j = np.concatenate(bi).astype(np.int64)
-        np.add.at(m, (np.concatenate((i, j)), np.concatenate((j, i))), 1.0)
-    return m
+        ok = fin[:-k] & fin[k:] & (unit[:-k] == unit[k:])
+        un.append(unit[:-k][ok])
+        lag.append(np.full(int(ok.sum()), li))
+        a.append(g[:-k][ok])
+        b.append(g[k:][ok])
+    if not un:
+        z = np.zeros(0, dtype=np.int64)
+        return Entries(z, z, z, z)
+    un, lag = np.concatenate(un), np.concatenate(lag)
+    a, b = np.concatenate(a).astype(np.int64), np.concatenate(b).astype(np.int64)
+    return Entries(
+        np.concatenate((un, un)), np.concatenate((lag, lag)),
+        np.concatenate((a, b)), np.concatenate((b, a)),
+    )
 
 
-def glcm_feature_values(M: np.ndarray) -> dict:
-    """All 25 GLCM scalar reductions from a COUNT matrix (caller guarantees
-    M.sum() > 0; normalization happens inside).
-
-    Vectorized equivalents of zrad/radiomics/glcm.py:211-420 — including the
-    O(lvl^2) info-corr loops (glcm.py:252-281). Joint-matrix sums iterate
-    NONZERO cells only (M is sparse: <= one cell per observed pair value);
-    zero cells contribute 0 to every weighted sum.
+def glcm_reduce(C: Cells) -> list:
+    """All 25 GLCM scalar reductions of every matrix id (vectorized
+    equivalents of zrad/radiomics/glcm.py:211-420 — including the
+    O(lvl^2) info-corr loops, glcm.py:252-281). Sums run over nonzero
+    cells only; zero cells contribute 0 to every weighted sum.
 
     Determinism contract (same as kernels/firstorder._det_stats): every
     reduction whose numerator is an INTEGER-weighted sum (max, averages,
     energy, contrast, dissimilarity, auto-correlation, the marginal mean)
     is computed as exact-integer-sum / total — one division at the end —
-    so NumPy's pairwise summation and SQL's sequential SUM produce the
-    bit-identical double. Summing pre-divided p-terms instead puts dyadic
-    true values (e.g. sum p^2 = 0.0340625) exactly on the driver's 6dp
+    so the bit-identical double comes out of any summation order,
+    including SQL's. Summing pre-divided p-terms instead puts dyadic true
+    values (e.g. sum p^2 = 0.0340625) exactly on the value hash's 6dp
     rounding boundary, where a 1-ulp order difference flips the hash.
     """
-    s = float(M.sum())
-    lvl = M.shape[0]
-    ii, jj = np.nonzero(M)
-    cs = M[ii, jj]
-    ps = cs / s
+    n, mid, ii, jj, cs = C.n, C.mid, C.i, C.j, C.c
+    s = _sum(mid, cs, n)
+    ps = cs / s[mid]
     di = np.abs(ii - jj)
-    cm_minus = np.bincount(di, weights=cs, minlength=lvl)
-    cm_plus = np.bincount(ii + jj, weights=cs, minlength=2 * lvl - 1)
-    p_minus = cm_minus / s
-    p_plus = cm_plus / s
-    km = np.arange(p_minus.size)
-    kp = np.arange(p_plus.size)
+    dm, km, cm_minus = _group(mid, di, cs)
+    pm_, kp, cm_plus = _group(mid, ii + jj, cs)
+    im, idx, c_i = _group(mid, jj, cs)
+    p_minus = cm_minus / s[dm]
+    p_plus = cm_plus / s[pm_]
+    p_i = c_i / s[im]
 
-    joint_avg = float((cs * ii).sum()) / s
-    diff_avg = float((cm_minus * km).sum()) / s
-    sum_avg = float((cm_plus * kp).sum()) / s
+    joint_avg = _sum(mid, cs * ii, n) / s
+    diff_avg = _sum(dm, cm_minus * km, n) / s
+    sum_avg = _sum(pm_, cm_plus * kp, n) / s
+    joint_entr = -_sum(mid, ps * np.log2(ps), n)
 
-    joint_entr = float(-(ps * np.log2(ps)).sum())
-    nzm = p_minus > 0
-    nzp = p_plus > 0
-
-    c_i = np.bincount(jj, weights=cs, minlength=lvl)
-    p_i = c_i / s
-    idx = np.arange(lvl)
-    mu_i = float((c_i * idx).sum()) / s
-    sigma_i2 = float(((idx - mu_i) ** 2 * p_i).sum())
-    auto_corr = float((cs * ii * jj).sum()) / s
-    corr = np.nan if sigma_i2 == 0 else (auto_corr - mu_i**2) / sigma_i2
-
-    n_g = lvl - 1
-    with np.errstate(divide="ignore", invalid="ignore"):
-        inv_diff_norm = np.nan if n_g == 0 else float((ps / (1 + di / n_g)).sum())
-        inv_diff_mom_norm = np.nan if n_g == 0 else float((p_minus / (1 + (km / n_g) ** 2)).sum())
+    mu_i = _sum(im, c_i * idx, n) / s
+    sigma_i2 = _sum(im, (idx - mu_i[im]) ** 2 * p_i, n)
+    auto_corr = _sum(mid, cs * ii * jj, n) / s
+    n_g = C.lvl - 1
 
     # information correlations (glcm.py:252-281): every nonzero cell has
-    # nonzero marginals, so hxy1 needs no masking; hxy2 runs on the
-    # compacted nonzero marginal vector
-    nzpi = p_i[p_i > 0]
-    hx = float(-(nzpi * np.log2(nzpi)).sum())
-    hxy1 = float(-(ps * np.log2(p_i[ii] * p_i[jj])).sum())
-    q = np.outer(nzpi, nzpi)
-    hxy2 = float(-(q * np.log2(q)).sum())
-    info1 = np.nan if hx == 0 else (joint_entr - hxy1) / hx
-    with np.errstate(invalid="ignore"):
-        info2 = float(np.sqrt(1 - np.exp(-2 * (hxy2 - joint_entr))))
-
-    cdev = ii + jj - 2 * mu_i
-    return {
-        "cm_joint_max": float(cs.max()) / s,
-        "cm_joint_avg": joint_avg,
-        "cm_joint_var": float((ps * (ii - joint_avg) ** 2).sum()),
-        "cm_joint_entr": joint_entr,
-        "cm_diff_avg": diff_avg,
-        "cm_diff_var": float((p_minus * (km - diff_avg) ** 2).sum()),
-        "cm_diff_entr": float(-(p_minus[nzm] * np.log2(p_minus[nzm])).sum()),
-        "cm_sum_avg": sum_avg,
-        "cm_sum_var": float((p_plus * (kp - sum_avg) ** 2).sum()),
-        "cm_sum_entr": float(-(p_plus[nzp] * np.log2(p_plus[nzp])).sum()),
-        "cm_energy": float((cs * cs).sum()) / (s * s),
-        "cm_contrast": float((cs * (ii - jj) ** 2).sum()) / s,
-        "cm_dissimilarity": float((cs * di).sum()) / s,
-        "cm_inv_diff": float((ps / (1 + di)).sum()),
-        "cm_inv_diff_norm": inv_diff_norm,
-        "cm_inv_diff_mom": float((p_minus / (1 + km**2)).sum()),
-        "cm_inv_diff_mom_norm": inv_diff_mom_norm,
-        # ordered fold (k ascending) — see _seq_sum; zero terms are no-ops
-        "cm_inv_var": _seq_sum(p_minus[1:] / km[1:] ** 2) if lvl > 1 else 0.0,
-        "cm_corr": corr,
-        "cm_auto_corr": auto_corr,
-        "cm_clust_tend": float((cdev**2 * ps).sum()),
-        "cm_clust_shade": float((cdev**3 * ps).sum()),
-        "cm_clust_prom": float((cdev**4 * ps).sum()),
-        "cm_info_corr1": info1,
-        "cm_info_corr2": info2,
-    }
+    # nonzero marginals, so hxy1 needs no masking; hxy2 runs over the
+    # pairs of nonzero marginals
+    width = int(idx.max()) + 1
+    mkey = im * width + idx
+    pi_a = p_i[np.searchsorted(mkey, mid * width + ii)]
+    pi_b = p_i[np.searchsorted(mkey, mid * width + jj)]
+    hx = -_sum(im, p_i * np.log2(p_i), n)
+    hxy1 = -_sum(mid, ps * np.log2(pi_a * pi_b), n)
+    a, b = _outer_pairs(im, n)
+    q = p_i[a] * p_i[b]
+    hxy2 = -_sum(im[a], q * np.log2(q), n)
+    cdev = ii + jj - 2 * mu_i[mid]
+    step = np.ones(mid.size, dtype=bool)
+    step[1:] = mid[1:] != mid[:-1]
+    k1 = km >= 1
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return [
+            np.maximum.reduceat(cs, np.flatnonzero(step)) / s,
+            joint_avg,
+            _sum(mid, ps * (ii - joint_avg[mid]) ** 2, n),
+            joint_entr,
+            diff_avg,
+            _sum(dm, p_minus * (km - diff_avg[dm]) ** 2, n),
+            -_sum(dm, p_minus * np.log2(p_minus), n),
+            sum_avg,
+            _sum(pm_, p_plus * (kp - sum_avg[pm_]) ** 2, n),
+            -_sum(pm_, p_plus * np.log2(p_plus), n),
+            _sum(mid, cs * cs, n) / (s * s),
+            _sum(mid, cs * (ii - jj) ** 2, n) / s,
+            _sum(mid, cs * di, n) / s,
+            _sum(mid, ps / (1 + di), n),
+            np.where(n_g == 0, np.nan, _sum(mid, ps / (1 + di / n_g[mid]), n)),
+            _sum(dm, p_minus / (1 + km**2), n),
+            np.where(n_g == 0, np.nan, _sum(dm, p_minus / (1 + (km / n_g[dm]) ** 2), n)),
+            # ordered fold, k ascending: the SQL oracles fold the same terms
+            # with an ORDER BY-ed list_reduce, so the doubles agree bit-for-bit
+            _sum(dm[k1], p_minus[k1] / km[k1] ** 2, n),
+            np.where(sigma_i2 == 0, np.nan, (auto_corr - mu_i**2) / sigma_i2),
+            auto_corr,
+            _sum(mid, cdev**2 * ps, n),
+            _sum(mid, cdev**3 * ps, n),
+            _sum(mid, cdev**4 * ps, n),
+            np.where(hx == 0, np.nan, (joint_entr - hxy1) / hx),
+            np.sqrt(1 - np.exp(-2 * (hxy2 - joint_entr))),
+        ]
 
 
 # --------------------------------------------------------------------------
@@ -308,74 +374,56 @@ def glcm_feature_values(M: np.ndarray) -> dict:
 # --------------------------------------------------------------------------
 
 
-def matrix_feature_values(
-    M: np.ndarray, voxel_count: float, include_energy: bool = False,
-    ordered_recip: bool = False,
-) -> dict:
+def matrix_reduce(C: Cells, include_energy: bool = False) -> list:
     """Vectorized port of TextureFeatureBase._matrix_feature_values
-    (zrad/radiomics/texture_base.py:40-214). M holds raw counts indexed
-    [grey_level, length-1]; zero-denominator cases yield NaN instead of the
-    reference's DataStructureError (scale contract: null rows, not
-    exceptions).
-
-    ``ordered_recip``: compute the two reciprocal-square reductions whose
-    cross-engine ulp drift was actually observed at sf0.1 (the GLDZM
-    sde/sdhge columns — BASELINE.md round-3 update 2) with the strict
-    sequential (lvl asc, jl asc) per-cell fold that the DZM oracles
-    mirror via ORDER BY-ed list_reduce. Enabled by the DZM family only;
-    the RLM/SZM/NGLDM twins keep the vectorized reduction (no observed
-    drift, and their oracles sum unordered)."""
-    names = NGLDM_ATTRS if include_energy else TEXTURE_ATTRS
-    n_s = float(M.sum())
-    if n_s == 0 or voxel_count == 0:
-        return {n: np.nan for n in names}
-    # iterate nonzero cells only (matrices are sparse: <= one cell per
-    # distinct (level, length) pair); zero cells contribute 0 to every sum
-    ii, jj = np.nonzero(M)
-    cs = M[ii, jj]
+    (zrad/radiomics/texture_base.py:40-214) for every matrix id. Cells
+    hold raw counts at [grey_level, length-1]; zero-denominator cases
+    yield NaN instead of the reference's DataStructureError (scale
+    contract: null rows, not exceptions). Cells arrive (lvl asc, jl asc)
+    per id — the order the ORDER BY-ed sde/sdhge folds of the DZM
+    oracles use."""
+    n, mid, ii, jj, cs = C.n, C.mid, C.i, C.j, C.c
+    n_s = _sum(mid, cs, n)
     i_f = ii.astype(np.float64)
     jl = (jj + 1).astype(np.float64)
     j_f = jj.astype(np.float64)
-    p = cs / n_s
+    p = cs / n_s[mid]
     i2 = i_f * i_f
     jl2 = jl * jl
-    nzi = ii != 0
-    row2 = M.sum(axis=1)
-    col2 = M.sum(axis=0)
-    mu_i = float((p * i_f).sum())
-    mu_j = float((p * j_f).sum())
-
-    # np.nonzero is row-major: cells arrive (lvl asc, jl asc) — the same
-    # order the ordered_recip folds and their SQL mirrors use
-    sde_sum = _seq_sum(cs / jl2) if ordered_recip else float((cs / jl2).sum())
-    sdhge_sum = (
-        _seq_sum(i2 * cs / jl2) if ordered_recip else float((i2 * cs / jl2).sum())
-    )
-    out = {
-        "short_runs_emphasis": sde_sum / n_s,
-        "long_runs_emphasis": float((cs * jl2).sum() / n_s),
-        "low_grey_level_run_emphasis": float((cs[nzi] / i2[nzi]).sum() / n_s),
-        "high_gr_lvl_emphasis": float((cs * i2).sum() / n_s),
-        "short_low_gr_lvl_emphasis": float((cs[nzi] / i2[nzi] / jl2[nzi]).sum() / n_s),
-        "short_high_gr_lvl_emphasis": sdhge_sum / n_s,
-        "long_low_gr_lvl_emphasis": float((cs[nzi] * jl2[nzi] / i2[nzi]).sum() / n_s),
-        "long_high_gr_lvl_emphasis": float((cs * jl2 * i2).sum() / n_s),
-        "non_uniformity": float((row2 * row2).sum() / n_s),
-        "norm_non_uniformity": float((row2 * row2).sum() / n_s**2),
-        "length_non_uniformity": float((col2 * col2).sum() / n_s),
-        "norm_length_non_uniformity": float((col2 * col2).sum() / n_s**2),
-        "percentage": float(n_s / voxel_count),
-        "gr_lvl_var": float(((i_f - mu_i) ** 2 * p).sum()),
-        "length_var": float(((j_f - mu_j) ** 2 * p).sum()),
-        "entropy": float(-(p * np.log2(p)).sum()),
-    }
-    if include_energy:
-        # exact form sum(c^2)/n^2: counts are integers, so the sum and the
-        # single division are bit-identical to the SQL SUM(c*c)/(n_s*n_s)
-        # — sum(p^2) rounds each c/n term and its sum order flips dyadic
-        # results (e.g. 0.1240625) across the 6dp rounding boundary
-        out["energy"] = float((cs * cs).sum()) / (n_s * n_s)
-    return out
+    nz = ii != 0
+    rm, _, row2 = _group(mid, ii, cs)
+    cm, _, col2 = _group(mid, jj, cs)
+    mu_i = _sum(mid, p * i_f, n)
+    mu_j = _sum(mid, p * j_f, n)
+    glnu = _sum(rm, row2 * row2, n)
+    rlnu = _sum(cm, col2 * col2, n)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        vals = [
+            _sum(mid, cs / jl2, n) / n_s,
+            _sum(mid, cs * jl2, n) / n_s,
+            _sum(mid[nz], cs[nz] / i2[nz], n) / n_s,
+            _sum(mid, cs * i2, n) / n_s,
+            _sum(mid[nz], cs[nz] / i2[nz] / jl2[nz], n) / n_s,
+            _sum(mid, i2 * cs / jl2, n) / n_s,
+            _sum(mid[nz], cs[nz] * jl2[nz] / i2[nz], n) / n_s,
+            _sum(mid, cs * jl2 * i2, n) / n_s,
+            glnu / n_s,
+            glnu / n_s**2,
+            rlnu / n_s,
+            rlnu / n_s**2,
+            n_s / C.vox,
+            _sum(mid, (i_f - mu_i[mid]) ** 2 * p, n),
+            _sum(mid, (j_f - mu_j[mid]) ** 2 * p, n),
+            -_sum(mid, p * np.log2(p), n),
+        ]
+        if include_energy:
+            # exact form sum(c^2)/n^2: counts are integers, so the sum and
+            # the single division are bit-identical to the SQL SUM(c*c)/(n_s*n_s)
+            # — sum(p^2) rounds each c/n term and its sum order flips dyadic
+            # results (e.g. 0.1240625) across the 6dp rounding boundary
+            vals.append(_sum(mid, cs * cs, n) / (n_s * n_s))
+    bad = (n_s == 0) | (C.vox == 0)
+    return [np.where(bad, np.nan, v) for v in vals]
 
 
 # --------------------------------------------------------------------------
@@ -385,7 +433,7 @@ def matrix_feature_values(
 
 def find_runs(g: np.ndarray, session: np.ndarray | None = None):
     """Runs of consecutive equal finite grey levels; NaN holes and session
-    borders (when ``session`` is given) break runs. Vectorized
+    or unit borders (changes of ``session`` when it is given) break runs. Vectorized
     change-point detection — the same diff/split algorithm as the
     reference's _rle_1d (zrad/radiomics/glrlm.py:82-102).
 
@@ -412,26 +460,20 @@ def find_runs(g: np.ndarray, session: np.ndarray | None = None):
     return levels, lengths.astype(np.int64), starts, ends
 
 
-def rlm_matrix(levels, lengths, lvl) -> np.ndarray:
-    w = int(lengths.max()) if lengths.size else 1
-    m = np.zeros((lvl, w), dtype=np.float64)
-    if levels.size:
-        np.add.at(m, (levels, lengths - 1), 1.0)
-    return m
+def _run_entries(u: Units, lags) -> Entries:
+    levels, lengths, starts, _ = find_runs(u.g, u.unit)
+    return Entries(u.unit[starts], None, levels, lengths - 1)
 
 
-def dzm_matrix(levels, starts, ends, dist, lvl) -> np.ndarray:
-    """GLDZM counts: zone -> (level, min border distance). In 1-D the min
-    distance over a contiguous run is min(dist[start], dist[end]) because
-    the in-segment distance profile is unimodal
-    (cf. zrad/radiomics/texture_base.py:329-364)."""
-    if levels.size == 0:
-        return np.zeros((lvl, 1), dtype=np.float64)
-    min_d = np.minimum(dist[starts], dist[ends]).astype(np.int64)
-    min_d = np.maximum(min_d, 1)
-    m = np.zeros((lvl, int(min_d.max())), dtype=np.float64)
-    np.add.at(m, (levels, min_d - 1), 1.0)
-    return m
+def _zone_distance_entries(u: Units, lags) -> Entries:
+    """GLDZM: zone -> (level, min border distance), the border being the
+    unit's (the per-slice image border). In 1-D the min distance over a
+    contiguous run is min(dist[start], dist[end]) because the in-unit
+    distance profile is unimodal (cf. zrad/radiomics/texture_base.py:329-364)."""
+    levels, _, starts, ends = find_runs(u.g, u.unit)
+    dist = border_distance(u.eligible, u.unit)
+    min_d = np.maximum(np.minimum(dist[starts], dist[ends]), 1)
+    return Entries(u.unit[starts], None, levels, min_d - 1)
 
 
 # --------------------------------------------------------------------------
@@ -439,75 +481,61 @@ def dzm_matrix(levels, starts, ends, dist, lvl) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def ngtdm_matrix(g: np.ndarray, lvl: int) -> np.ndarray:
-    """(lvl, 2) matrix of [n_i, s_i]: counts and summed |level - local mean|
-    with the 1-D neighbourhood {i-1, i+1} (reference 3x3(x3) kernel with
-    center zeroed: zrad/radiomics/ngtdm.py:63-122)."""
+def _ngtdm_entries(u: Units, lags) -> Entries:
+    """One [n_i, s_i] entry per finite turn with a finite neighbour:
+    |level - local mean| over the 1-D neighbourhood {p-1, p+1} inside the
+    unit (reference 3x3(x3) kernel with center zeroed:
+    zrad/radiomics/ngtdm.py:63-122). Neighbourless (single-turn)
+    sessions: the reference raises a DataStructureError
+    (ngtdm.py:133-134); at scale they are left out."""
+    g, unit = u.g, u.unit
     n = g.size
     valid = ~np.isnan(g)
     f = np.where(valid, g, 0.0)
     nb_sum = np.zeros(n)
     nb_cnt = np.zeros(n)
     if n > 1:
-        nb_sum[1:] += f[:-1]
-        nb_sum[:-1] += f[1:]
-        nb_cnt[1:] += valid[:-1]
-        nb_cnt[:-1] += valid[1:]
+        same = unit[1:] == unit[:-1]
+        nb_sum[1:] += np.where(same, f[:-1], 0.0)
+        nb_sum[:-1] += np.where(same, f[1:], 0.0)
+        nb_cnt[1:] += valid[:-1] & same
+        nb_cnt[:-1] += valid[1:] & same
     good = valid & (nb_cnt > 0)
-    m = np.zeros((lvl, 2), dtype=np.float64)
-    if good.any():
-        gi = g[good].astype(np.int64)
-        mean_nb = nb_sum[good] / nb_cnt[good]
-        m[:, 0] = np.bincount(gi, minlength=lvl)
-        m[:, 1] = np.bincount(gi, weights=np.abs(g[good] - mean_nb), minlength=lvl)
-    return m
+    gi = g[good].astype(np.int64)
+    w = np.abs(g[good] - nb_sum[good] / nb_cnt[good])
+    return Entries(unit[good], None, gi, np.zeros_like(gi), w)
 
 
-def ngtdm_feature_values(m: np.ndarray) -> dict:
-    """Vectorized NGTDM reductions (reference O(lvl^2) loops:
-    zrad/radiomics/ngtdm.py:124-188)."""
-    ncol = m[:, 0]
-    scol = m[:, 1]
-    n = float(ncol.sum())
-    if n == 0:
-        return {k: np.nan for k in NGTDM_NAMES}
-    lvl = m.shape[0]
-    i = np.arange(lvl, dtype=np.float64)
-    diff2 = np.subtract.outer(i, i) ** 2
-    nz = ncol != 0
-    n_g = float(nz.sum())
-
-    denum_coarse = float(np.sum(ncol * scol))
-    coarseness = SENTINEL if denum_coarse == 0 else n / denum_coarse
-
-    s1 = float(ncol @ diff2 @ ncol) / n**2
-    s2 = float(scol.sum())
-    denum_c = n_g * (n_g - 1) * n
-    contrast = 0.0 if denum_c == 0 else s1 * s2 / denum_c
-
-    num_busy = float(np.sum(ncol * scol)) / n
+def ngtdm_reduce(C: Cells) -> list:
+    """Vectorized NGTDM reductions of every matrix id over its levels
+    with n_i > 0 (reference O(lvl^2) loops: zrad/radiomics/ngtdm.py:124-188)."""
+    n_ids, mid = C.n, C.mid
+    ncol, scol = C.c, C.w
+    i = C.i.astype(np.float64)
+    n = _sum(mid, ncol, n_ids)
+    n_g = np.bincount(mid, minlength=n_ids).astype(np.float64)
+    ns = ncol * scol
+    denum_coarse = _sum(mid, ns, n_ids)
+    a, b = _outer_pairs(mid, n_ids)
+    pm = mid[a]
+    d = i[a] - i[b]
     ini = i * ncol
-    busy_mat = np.abs(np.subtract.outer(ini[nz], ini[nz]))
-    denum_b = float(busy_mat.sum()) / n
-    busyness = 0.0 if denum_b == 0 else num_busy / denum_b
-
-    ns_nz = (ncol * scol)[nz]
-    n_nz = ncol[nz]
-    i_nz = i[nz]
-    pair_num = (np.add.outer(ns_nz, ns_nz)) * np.abs(np.subtract.outer(i_nz, i_nz)) / n
-    pair_den = np.add.outer(n_nz, n_nz) / n
-    complexity = float(np.sum(pair_num / pair_den)) / n
-
-    num_str = float(np.sum(np.add.outer(n_nz, n_nz) * np.subtract.outer(i_nz, i_nz) ** 2)) / n
-    strength = 0.0 if s2 == 0 else num_str / s2
-
-    return {
-        "ngt_coarseness": coarseness,
-        "ngt_contrast": contrast,
-        "ngt_busyness": busyness,
-        "ngt_complexity": complexity,
-        "ngt_strength": strength,
-    }
+    s1 = _sum(pm, ncol[a] * d**2 * ncol[b], n_ids) / n**2
+    s2 = _sum(mid, scol, n_ids)
+    denum_c = n_g * (n_g - 1) * n
+    num_busy = denum_coarse / n
+    denum_b = _sum(pm, np.abs(ini[a] - ini[b]), n_ids) / n
+    pair_num = (ns[a] + ns[b]) * np.abs(d) / n[pm]
+    pair_den = (ncol[a] + ncol[b]) / n[pm]
+    num_str = _sum(pm, (ncol[a] + ncol[b]) * d**2, n_ids) / n
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return [
+            np.where(denum_coarse == 0, SENTINEL, n / denum_coarse),
+            np.where(denum_c == 0, 0.0, s1 * s2 / denum_c),
+            np.where(denum_b == 0, 0.0, num_busy / denum_b),
+            _sum(pm, pair_num / pair_den, n_ids) / n,
+            np.where(s2 == 0, 0.0, num_str / s2),
+        ]
 
 
 # --------------------------------------------------------------------------
@@ -515,21 +543,19 @@ def ngtdm_feature_values(m: np.ndarray) -> dict:
 # --------------------------------------------------------------------------
 
 
-def ngldm_matrix(g: np.ndarray, lvl: int) -> np.ndarray:
-    """(lvl, 3) dependence-count matrix: for each finite turn, the number of
-    {i-1, i+1} neighbours with an equal grey level (reference 3x3(x3)
-    equal-neighbour convolve: zrad/radiomics/ngldm.py:80-140)."""
+def _ngldm_entries(u: Units, lags) -> Entries:
+    """One (level, dependence) entry per finite turn: the number of
+    {p-1, p+1} neighbours inside the unit with an equal grey level
+    (reference 3x3(x3) equal-neighbour convolve: zrad/radiomics/ngldm.py:80-140)."""
+    g, unit = u.g, u.unit
     n = g.size
     valid = ~np.isnan(g)
     dep = np.zeros(n, dtype=np.int64)
     if n > 1:
-        eq = valid[1:] & valid[:-1] & (g[1:] == g[:-1])
+        eq = valid[1:] & valid[:-1] & (g[1:] == g[:-1]) & (unit[1:] == unit[:-1])
         dep[1:] += eq
         dep[:-1] += eq
-    m = np.zeros((lvl, 3), dtype=np.float64)
-    if valid.any():
-        np.add.at(m, (g[valid].astype(np.int64), dep[valid]), 1.0)
-    return m
+    return Entries(unit[valid], None, g[valid].astype(np.int64), dep[valid])
 
 
 # --------------------------------------------------------------------------
@@ -540,51 +566,21 @@ def ngldm_matrix(g: np.ndarray, lvl: int) -> np.ndarray:
 class Family(NamedTuple):
     names: tuple  # output names, in the order of the reducer's values
     suffix: str  # "cm": suffixed by dim + method (GLCM/GLRLM), "dim": by dim
-    # (grey, eligible, lags, lvl) -> count matrix of ONE segment
-    build: Callable
-    # (count matrix, n_voxels) -> dict whose values follow ``names``
-    reduce: Callable
-    # a matrix that carries no features: skipped when averaging, NaN alone
-    empty: Callable = lambda m: False
+    build: Callable  # (Units, lags) -> Entries
+    reduce: Callable  # Cells -> one value array per name
     # one matrix per lag unless the method merges them
     directional: bool = False
 
 
-def _run_matrix(g, eligible, lags, lvl):
-    levels, lengths, _, _ = find_runs(g)
-    return rlm_matrix(levels, lengths, lvl)
-
-
-def _zone_distance_matrix(g, eligible, lags, lvl):
-    # the segment border is the session border (the per-slice image border)
-    levels, _, starts, ends = find_runs(g)
-    return dzm_matrix(levels, starts, ends, border_distance(eligible), lvl)
-
-
 FAMILIES = {
-    "glcm": Family(
-        GLCM_NAMES, "cm", lambda g, e, lags, lvl: glcm_count_matrix(g, lags, lvl),
-        lambda m, n: glcm_feature_values(m),
-        empty=lambda m: m.sum() == 0, directional=True,
-    ),
+    "glcm": Family(GLCM_NAMES, "cm", _glcm_entries, glcm_reduce, directional=True),
     # 1-D zones are runs with the same voxel normalizer, so GLSZM shares
     # GLRLM's builder and reducer: one run decomposition serves both
-    "glrlm": Family(GLRLM_NAMES, "cm", _run_matrix, matrix_feature_values),
-    "glszm": Family(GLSZM_NAMES, "dim", _run_matrix, matrix_feature_values),
-    # see matrix_feature_values ordered_recip
-    "gldzm": Family(
-        GLDZM_NAMES, "dim", _zone_distance_matrix, partial(matrix_feature_values, ordered_recip=True)
-    ),
-    # neighbourless (single-turn) sessions: the reference raises a
-    # DataStructureError (ngtdm.py:133-134); at scale they are left out
-    "ngtdm": Family(
-        NGTDM_NAMES, "dim", lambda g, e, lags, lvl: ngtdm_matrix(g, lvl),
-        lambda m, n: ngtdm_feature_values(m), empty=lambda m: m[:, 0].sum() == 0,
-    ),
-    "ngldm": Family(
-        NGLDM_NAMES, "dim", lambda g, e, lags, lvl: ngldm_matrix(g, lvl),
-        partial(matrix_feature_values, include_energy=True),
-    ),
+    "glrlm": Family(GLRLM_NAMES, "cm", _run_entries, matrix_reduce),
+    "glszm": Family(GLSZM_NAMES, "dim", _run_entries, matrix_reduce),
+    "gldzm": Family(GLDZM_NAMES, "dim", _zone_distance_entries, matrix_reduce),
+    "ngtdm": Family(NGTDM_NAMES, "dim", _ngtdm_entries, ngtdm_reduce),
+    "ngldm": Family(NGLDM_NAMES, "dim", _ngldm_entries, partial(matrix_reduce, include_energy=True)),
 }
 
 
@@ -593,92 +589,149 @@ FAMILIES = {
 # --------------------------------------------------------------------------
 
 
-def texture_features(
-    families, g, eligible, session, lags, aggr_dim, aggr_method,
+def texture_batch(
+    families, g, eligible, session, seg, n, lags, aggr_dim, aggr_method,
     slice_weight=False, slice_median=False,
 ) -> dict:
-    """``{family: {name: value}}`` for every requested texture family of
-    one conversation: grey levels ``g`` (NaN holes), role ``eligible``
-    mask and ascending contiguous ``session`` ids (prep.sessionize).
+    """``{family: {name: values per segment}}`` for every requested
+    texture family of ``n`` segments laid end to end: grey levels ``g``
+    (NaN holes), role ``eligible`` mask, 0-based ``session`` ids within
+    each segment (prep.sessionize) and nondecreasing segment ids ``seg``.
 
-    3D = one whole-conversation segment (lags and zones cross session
-    borders, like 3-D directions cross slices); 2D/2.5D = one segment per
-    session slice holding a finite grey level, like all-NaN slices are
-    skipped (glcm.py:156-158). Reference dispatch: glcm.py:104-130. A
-    weighted median is rejected by FeatureConfig; here the median wins.
+    Reference dispatch: glcm.py:104-130. A weighted median is rejected
+    by FeatureConfig; here the median wins.
     """
-    finite = ~np.isnan(g)
-    if not finite.any():
-        return {f: dict.fromkeys(FAMILIES[f].names, np.nan) for f in families}
-    lvl = int(np.nanmax(g)) + 1
-    total = int(finite.sum())
+    fin = ~np.isnan(g)
+    total = np.bincount(seg[fin], minlength=n)
+    lvl = np.zeros(n, dtype=np.int64)
+    np.maximum.at(lvl, seg[fin], g[fin].astype(np.int64) + 1)
     if aggr_dim == "3D":
-        segs = [(slice(None), total)]
+        unit, unit_seg = seg, np.arange(n)
     else:
-        cut = np.flatnonzero(session[1:] != session[:-1]) + 1
-        starts, ends = np.concatenate(([0], cut)), np.concatenate((cut, [g.size]))
-        seen = np.concatenate(([0], np.cumsum(finite)))
-        segs = [
-            (slice(a, b), int(c)) for a, b, c in zip(starts, ends, seen[ends] - seen[starts]) if c
-        ]
+        brk = np.ones(g.size, dtype=bool)
+        brk[1:] = (session[1:] != session[:-1]) | (seg[1:] != seg[:-1])
+        unit, unit_seg = np.cumsum(brk) - 1, seg[brk]
+    ctx = (Units(g, eligible, unit), unit_seg, np.bincount(unit[fin], minlength=unit_seg.size),
+           total, lvl, n, tuple(lags), aggr_dim, aggr_method, slice_weight, slice_median)
     out, done = {}, {}
     for f in families:
         fam = FAMILIES[f]
         key = (fam.build, fam.reduce)  # GLSZM reuses GLRLM's values
         if key not in done:
-            done[key] = _aggregate(
-                fam, g, eligible, segs, lvl, total, lags, aggr_dim, aggr_method,
-                slice_weight, slice_median,
-            )
+            done[key] = _aggregate(fam, *ctx)
         out[f] = dict(zip(fam.names, done[key]))
     return out
 
 
-def _aggregate(fam, g, eligible, segs, lvl, total, lags, aggr_dim, aggr_method, sw, sm):
-    """One family's values, in ``fam.names`` order."""
-
-    def matrix(seg, lag_set):
-        return fam.build(g[seg], eligible[seg], lag_set, lvl)
-
-    nan = [np.nan] * len(fam.names)
-    if aggr_dim != "2D":
-        if fam.directional and aggr_method != "MERG":
-            # per lag: merge over sessions, reduce, then a plain mean
-            mats = [_summed([matrix(s, (lag,)) for s, _ in segs]) for lag in lags]
-            rows = [fam.reduce(m, total).values() for m in mats if not fam.empty(m)]
-            return _average(rows, None, False) if rows else nan
-        # one merged matrix: the reducer's values as-is (np.average would
-        # turn a -0.0 into 0.0)
-        m = _summed([matrix(s, lags) for s, _ in segs])
-        return nan if fam.empty(m) else list(fam.reduce(m, total).values())
-
-    # 2D: per-session (and, averaging, per-lag) matrices, weighted by the
-    # session's share of finite turns; SLICE_MERG merges a session's lags
-    lag_sets = [(lag,) for lag in lags] if fam.directional and aggr_method != "SLICE_MERG" else [lags]
-    rows, weights = [], []
-    for s, c in segs:
-        for lag_set in lag_sets:
-            m = matrix(s, lag_set)
-            if not fam.empty(m):
-                rows.append(fam.reduce(m, c).values())
-                weights.append(c / total if sw else 1.0)
-    return _average(rows, None if sm else weights, sm) if rows else nan
-
-
-def _summed(mats):
-    """Sum one family's segment matrices in session order, zero-padding
-    the run/zone widths."""
-    if len(mats) == 1:
-        return mats[0]
-    out = np.zeros((mats[0].shape[0], max(m.shape[1] for m in mats)))
-    for m in mats:
-        out[:, : m.shape[1]] += m
-    return out
+def _aggregate(fam, u, unit_seg, unit_vox, total, lvl, n, lags, aggr_dim, aggr_method, sw, sm):
+    """One family's value arrays over the segments, in ``fam.names`` order."""
+    per_lag = fam.directional and aggr_method != ("SLICE_MERG" if aggr_dim == "2D" else "MERG")
+    e = fam.build(u, lags)
+    owner = e.unit if aggr_dim == "2D" else unit_seg[e.unit]
+    key = owner * len(lags) + e.lag if per_lag else owner
+    mid, i, j, c, w, mkey = _to_cells(key, e)
+    if not mkey.size:
+        return [np.full(n, np.nan)] * len(fam.names)
+    owner = mkey // len(lags) if per_lag else mkey
+    mseg = unit_seg[owner] if aggr_dim == "2D" else owner
+    vox = unit_vox[owner] if aggr_dim == "2D" else total[mseg]
+    vals = fam.reduce(Cells(mid, i, j, c, w, mkey.size, lvl[mseg], vox.astype(np.float64)))
+    cnt = np.bincount(mseg, minlength=n)
+    if aggr_dim != "2D" and not per_lag:
+        # one merged matrix per segment: the reducer's values as-is (an
+        # average would turn a -0.0 into 0.0)
+        out = np.full((len(vals), n), np.nan)
+        out[:, mseg] = vals
+        return list(out)
+    # 3D/2.5D per lag: a plain mean; 2D: the median, or a mean weighted by
+    # the session's share of finite turns (reference: glcm.py:422-435,
+    # texture_base.py:70-78)
+    if aggr_dim == "2D" and sm:
+        return [_median(v, mseg, cnt) for v in vals]
+    wt = vox / total[mseg] if aggr_dim == "2D" and sw else np.ones(mseg.size)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        scl = np.bincount(mseg, weights=wt, minlength=n)
+        return [np.where(cnt > 0, np.bincount(mseg, weights=v * wt, minlength=n) / scl, np.nan) for v in vals]
 
 
-def _average(rows, weights, median):
-    """Per-name mean / median over feature rows (reference:
-    glcm.py:422-435, texture_base.py:70-78)."""
-    if median:
-        return [float(np.median(col)) for col in zip(*rows)]
-    return [float(np.average(col, weights=weights)) for col in zip(*rows)]
+def _median(v, mseg, cnt):
+    """np.median of each segment's values: the middle value, or the mean
+    of the middle pair (summed from 0 like np.mean); NaN if any value is
+    NaN or there is none."""
+    vs = v[np.lexsort((v, mseg))]
+    start = np.cumsum(cnt) - cnt
+    has = cnt > 0
+
+    def at(k):
+        return vs[np.where(has, start + k, 0)]
+
+    lo, hi = at((cnt - 1) // 2), at(cnt // 2)
+    med = np.where(cnt % 2 == 1, 0.0 + hi, (0.0 + lo + hi) / 2.0)
+    return np.where(has & ~np.isnan(at(cnt - 1)), med, np.nan)
+
+
+def texture_features(
+    families, g, eligible, session, lags, aggr_dim, aggr_method,
+    slice_weight=False, slice_median=False,
+) -> dict:
+    """texture_batch of one segment: ``{family: {name: value}}``."""
+    seg = np.zeros(g.size, dtype=np.int64)
+    out = texture_batch(families, g, eligible, session, seg, 1, lags, aggr_dim, aggr_method,
+                        slice_weight, slice_median)
+    return {f: {k: float(v[0]) for k, v in d.items()} for f, d in out.items()}
+
+
+# --------------------------------------------------------------------------
+# one matrix at a time (dense count matrices, e.g. for the oracle tests)
+# --------------------------------------------------------------------------
+
+
+def _one_unit(g: np.ndarray) -> Units:
+    return Units(g, ~np.isnan(g), np.zeros(g.size, dtype=np.int64))
+
+
+def _dense(e: Entries, shape) -> np.ndarray:
+    m = np.zeros(shape)
+    np.add.at(m, (e.i, e.j), 1.0)
+    return m
+
+
+def glcm_count_matrix(g: np.ndarray, lags, lvl: int) -> np.ndarray:
+    """Symmetrized co-occurrence counts of one sequence merged over ``lags``."""
+    return _dense(_glcm_entries(_one_unit(g), tuple(lags)), (lvl, lvl))
+
+
+def ngldm_matrix(g: np.ndarray, lvl: int) -> np.ndarray:
+    """(lvl, 3) dependence-count matrix of one sequence."""
+    return _dense(_ngldm_entries(_one_unit(g), ()), (lvl, 3))
+
+
+def ngtdm_matrix(g: np.ndarray, lvl: int) -> np.ndarray:
+    """(lvl, 2) matrix of [n_i, s_i] of one sequence."""
+    e = _ngtdm_entries(_one_unit(g), ())
+    return np.column_stack((np.bincount(e.i, minlength=lvl), np.bincount(e.i, weights=e.w, minlength=lvl)))
+
+
+def _reduce_dense(reduce, names, M, vox=0.0, w=None) -> dict:
+    ii, jj = np.nonzero(M if w is None else M[:, :1])
+    C = Cells(np.zeros(ii.size, dtype=np.int64), ii, jj, M[ii, jj], None if w is None else w[ii],
+              1, np.array([M.shape[0]]), np.array([float(vox)]))
+    if ii.size == 0:
+        return dict.fromkeys(names, np.nan)
+    return {k: float(v[0]) for k, v in zip(names, reduce(C))}
+
+
+def glcm_feature_values(M: np.ndarray) -> dict:
+    """glcm_reduce of one dense count matrix."""
+    return _reduce_dense(glcm_reduce, GLCM_NAMES, M)
+
+
+def matrix_feature_values(M: np.ndarray, voxel_count: float, include_energy: bool = False) -> dict:
+    """matrix_reduce of one dense [grey_level, length-1] count matrix."""
+    names = NGLDM_ATTRS if include_energy else TEXTURE_ATTRS
+    return _reduce_dense(partial(matrix_reduce, include_energy=include_energy), names, M, voxel_count)
+
+
+def ngtdm_feature_values(m: np.ndarray) -> dict:
+    """ngtdm_reduce of one dense (lvl, 2) [n_i, s_i] matrix."""
+    return _reduce_dense(ngtdm_reduce, NGTDM_NAMES, m, w=m[:, 1])

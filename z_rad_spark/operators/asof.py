@@ -25,6 +25,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .skew import conv_window
+
 
 def cutoff_grid(spark: SparkSession, cutoffs: Iterable[str]) -> DataFrame:
     """Tiny dimension of as-of cutoffs (always broadcast-joined)."""
@@ -418,7 +420,7 @@ def sessions_asof(
     grid = spark.createDataFrame(
         [(c,) for c in cutoffs], "as_of string"
     ).select(F.col("as_of").cast("timestamp").alias("as_of"))
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = conv_window()
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     marked = df.select(
         "conv_id",
@@ -565,7 +567,7 @@ def answer_rate_asof(
     grid = spark.createDataFrame(
         [(c,) for c in cutoffs], "as_of string"
     ).select(F.col("as_of").cast("timestamp").alias("as_of"))
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = conv_window()
     marked = df.select(
         "conv_id",
         F.col("ts").cast("timestamp").alias("ts"),

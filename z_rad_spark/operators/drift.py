@@ -31,7 +31,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_ORDER = ("ts", "turn_idx")
+from .skew import ORDER as _ORDER, conv_window
 
 
 def with_cusum(
@@ -669,7 +669,7 @@ def cuped_adjusted(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     """
     x = F.col(signal_col).cast("long")
     scored = df.where(x.isNotNull())
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     full = (
         Window.partitionBy("conv_id")
         .orderBy("ts", "turn_idx")
@@ -2149,7 +2149,7 @@ def wilcoxon_signed_rank(df: DataFrame, signal_col: str = "signal") -> DataFrame
         .withColumn(
             "_i0",
             F.row_number().over(
-                Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+                conv_window()
             ).cast("long")
             - F.lit(1),
         )
@@ -2568,7 +2568,7 @@ def sprt_bernoulli(
         .orderBy("ts", "turn_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     p = df.where(x.isNotNull()).select(
         "conv_id",
         F.row_number().over(ord_w).cast("long").alias("_t"),
@@ -2644,7 +2644,7 @@ def fleiss_kappa(
     pbar, pe, kappa doubles — NULL when M = 0 or Pe = 1).
     """
     x = F.col(signal_col).cast("long")
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     first_n = (
         df.where(x.isNotNull())
         .withColumn("_rn", F.row_number().over(ord_w))
@@ -2726,7 +2726,7 @@ def krippendorff_alpha(
     D_e = 0 or no unit has 2+ raters).
     """
     x = F.col(signal_col).cast("long")
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     vals = (
         df.where(x.isNotNull())
         .withColumn("_rn", F.row_number().over(ord_w))
@@ -2946,7 +2946,7 @@ def cohen_kappa(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     po, pe, kappa doubles — kappa NULL when p_e = 1 or n = 0).
     """
     x = F.col(signal_col).cast("long")
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     fn = (
         df.where(x.isNotNull())
         .withColumn("_rn", F.row_number().over(ord_w))
@@ -3103,7 +3103,7 @@ def kendall_w(df: DataFrame, signal_col: str = "signal", k: int = 3) -> DataFram
     is 0, i.e. every judge ties everything).
     """
     x = F.col(signal_col).cast("long")
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     fn = (
         df.where(x.isNotNull())
         .withColumn("_rn", F.row_number().over(ord_w))
@@ -3177,7 +3177,7 @@ def cronbach_alpha(df: DataFrame, signal_col: str = "signal", k: int = 3) -> Dat
     m < 2).
     """
     x = F.col(signal_col).cast("long")
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     fn = (
         df.where(x.isNotNull())
         .withColumn("_rn", F.row_number().over(ord_w))
@@ -3406,7 +3406,7 @@ def acf_profile(df: DataFrame, signal_col: str = "signal", max_lag: int = 3) -> 
     ascending.
     """
     x = F.col(signal_col).cast("long")
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = conv_window()
     base = df.where(x.isNotNull()).select("conv_id", "ts", "turn_idx", x.alias("_x"))
     lags = None
     for lag in range(1, int(max_lag) + 1):
@@ -3456,7 +3456,7 @@ def lin_ccc(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     variance is 0).
     """
     x = F.col(signal_col).cast("long")
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = conv_window()
     pairs = (
         df.where(x.isNotNull())
         .select("conv_id", "ts", "turn_idx", x.alias("_x"))
@@ -3510,7 +3510,7 @@ def page_trend(df: DataFrame, signal_col: str = "signal", k: int = 3) -> DataFra
     when ties exist or m = 0).
     """
     x = F.col(signal_col).cast("long")
-    ord_w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ord_w = conv_window()
     fn = (
         df.where(x.isNotNull())
         .withColumn("_rn", F.row_number().over(ord_w))
@@ -3585,7 +3585,7 @@ def bland_altman(
     NULL when n < 2).
     """
     x = F.col(signal_col).cast("long")
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = conv_window()
     seq = df.select(
         "conv_id",
         "ts",

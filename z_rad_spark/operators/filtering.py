@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.filters import gabor_taps, laws_taps, log_taps, wavelet_taps
-from .sessionize import _conv_window
+from .skew import conv_window
 
 
 
@@ -30,14 +30,14 @@ def with_mean_filter(
     df: DataFrame, support: int = 5, signal_col: str = "signal", out: str = "signal_filt"
 ) -> DataFrame:
     half = support // 2
-    w = _conv_window().rowsBetween(-half, support - 1 - half)
+    w = conv_window().rowsBetween(-half, support - 1 - half)
     return df.withColumn(out, F.sum(F.col(signal_col)).over(w) / support)
 
 
 def _tap_sum(signal_col: str, taps: np.ndarray) -> F.Column:
     """sum_j taps[j] * signal[i + j - lpad], zero-padded — the declarative
     twin of kernels.filters._conv_same_zero (correlation, 'same' size)."""
-    w = _conv_window()
+    w = conv_window()
     lpad = taps.size // 2
     expr = F.lit(0.0)
     for j, wgt in enumerate(taps):
@@ -73,7 +73,7 @@ def with_laws_filter(
     if not energy_support:
         return df.withColumn(out, resp)
     half = energy_support // 2
-    we = _conv_window().rowsBetween(-half, energy_support - 1 - half)
+    we = conv_window().rowsBetween(-half, energy_support - 1 - half)
     df = df.withColumn("_resp_abs", F.abs(resp))
     return df.withColumn(out, F.sum("_resp_abs").over(we) / energy_support).drop("_resp_abs")
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 # frames persisted here are released by session.unpersist_intermediates()
 from ..session import persist_intermediate
+from .skew import conv_window
 
 
 def pagerank_bipartite(
@@ -1040,7 +1041,7 @@ def role_reciprocity(df: DataFrame) -> DataFrame:
     row: (n_edges long, w_total long, w_recip long, reciprocity
     double — NULL when no off-diagonal transitions).
     """
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    w = conv_window()
     trans = (
         df.select("conv_id", "ts", "turn_idx", F.col("role").alias("_u"))
         .withColumn("_v", F.lead("_u", 1).over(w))

@@ -27,7 +27,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .sessionize import _ORDER, _conv_window
+from .skew import ORDER as _ORDER, conv_window
 
 
 def signal_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
@@ -55,7 +55,7 @@ def signal_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
 
     Output: (conv_id, n long, slope double, intercept double, r double).
     """
-    i = (F.row_number().over(_conv_window()) - F.lit(1)).cast("long")
+    i = (F.row_number().over(conv_window()) - F.lit(1)).cast("long")
     x = F.col(signal_col).cast("long")
     p = df.select("conv_id", i.alias("_i"), x.alias("_x"))
     scored = F.col("_x").isNotNull()
@@ -166,7 +166,7 @@ def response_latency(
     max_us long).
     """
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = _conv_window()
+    w = conv_window()
     p = df.select(
         "conv_id",
         F.col("role").alias("_to"),
@@ -622,7 +622,7 @@ def arrival_stats(df: DataFrame) -> DataFrame:
     cv_gap double, burstiness double, fano_hourly double).
     """
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = _conv_window()
+    w = conv_window()
     gaps = df.select(
         "conv_id",
         ts_us.alias("_ts"),
@@ -727,7 +727,7 @@ def pair_signal_correlation(
     Output: (conv_id, n_pairs long, mean_prompt double, mean_response
     double, r double).
     """
-    w = _conv_window()
+    w = conv_window()
     x = F.lag(F.col(signal_col).cast("long")).over(w)
     prev_role = F.lag("role").over(w)
     pairs = (
@@ -1034,7 +1034,7 @@ def time_weighted_mean(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     for the over-count diagnostic twm - plain_mean).
     """
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = _conv_window()
+    w = conv_window()
     hold = F.lead(ts_us).over(w) - ts_us
     x = F.col(signal_col).cast("long")
     p = df.select("conv_id", x.alias("_x"), hold.alias("_h")).where(
@@ -1077,7 +1077,7 @@ def oscillation_stats(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     Output: (conv_id, n_turns long, n_moves long, n_flips long,
     flip_rate double — NULL when fewer than 2 nonzero moves).
     """
-    w = _conv_window()
+    w = conv_window()
     x = F.col(signal_col).cast("long")
     d = x - F.lag(x).over(w)
     sgn = F.when(d > 0, F.lit(1)).when(d < 0, F.lit(-1))
@@ -1088,7 +1088,7 @@ def oscillation_stats(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         "ts",
         "turn_idx",
         "_s",
-        F.lag("_s").over(_conv_window()).alias("_prev"),
+        F.lag("_s").over(conv_window()).alias("_prev"),
     )
     g = moves.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_moves"),
@@ -1129,7 +1129,7 @@ def signal_transition_entropy(df: DataFrame, signal_col: str = "signal") -> Data
     prev_entropy double, cond_entropy double — NULL for conversations
     with no transition).
     """
-    w = _conv_window()
+    w = conv_window()
     x = F.col(signal_col).cast("long")
     p = df.select(
         "conv_id", x.alias("_cur"), F.lag(x).over(w).alias("_prev")
@@ -1241,7 +1241,7 @@ def max_drawdown(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     x = F.col(signal_col).cast("long")
-    ord_w = _conv_window()
+    ord_w = conv_window()
     p = df.select(
         "conv_id",
         x.alias("_x"),
@@ -1290,7 +1290,7 @@ def von_neumann_ratio(df: DataFrame, signal_col: str = "signal") -> DataFrame:
 
     Output: (conv_id, n long, mssd double, variance double, vn double).
     """
-    w = _conv_window()
+    w = conv_window()
     x = F.col(signal_col).cast("long")
     d = x - F.lag(x).over(w)
     p = df.select("conv_id", x.alias("_x"), d.alias("_d"))
@@ -1358,7 +1358,7 @@ def hurst_rs(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         .orderBy(*_ORDER)
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    ord_w = _conv_window()
+    ord_w = conv_window()
     p = scored.select(
         "conv_id",
         x.alias("_x"),
@@ -1432,7 +1432,7 @@ def sax_word(df: DataFrame, w: int = 4, signal_col: str = "signal") -> DataFrame
         .orderBy(*_ORDER)
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    ord_w = _conv_window()
+    ord_w = conv_window()
     p = scored.select(
         "conv_id",
         x.alias("_x"),
@@ -1820,7 +1820,7 @@ def log_rank(
     if group_expr is None:
         group_expr = F.dayofweek(F.col("ts").cast("timestamp")).isin(1, 7)
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = _conv_window()
+    w = conv_window()
     flagged = df.withColumn("_rn", F.row_number().over(w)).withColumn(
         "_g1", group_expr
     )
@@ -2639,7 +2639,7 @@ def permutation_entropy(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     long, h double, h_norm double — NULL when n_windows = 0).
     """
     x = F.col(signal_col).cast("long")
-    w = _conv_window()
+    w = conv_window()
     trip = (
         df.where(x.isNotNull())
         .select(
@@ -2704,7 +2704,7 @@ def turning_points(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     double, z double — NULL when n < 3).
     """
     x = F.col(signal_col).cast("long")
-    w = _conv_window()
+    w = conv_window()
     lagged = df.where(x.isNotNull()).select(
         "conv_id",
         x.alias("_x"),
@@ -2765,7 +2765,7 @@ def ljung_box(df: DataFrame, signal_col: str = "signal", lags: int = 5) -> DataF
     signal is constant).
     """
     x = F.col(signal_col).cast("long")
-    w = _conv_window()
+    w = conv_window()
     cols = [x.alias("_x0")]
     for k in range(1, lags + 1):
         cols.append(F.lag(x, k).over(w).alias(f"_l{k}"))
@@ -2846,7 +2846,7 @@ def seasonal_naive_mase(
     n <= season or the naive MAE is 0).
     """
     x = F.col(signal_col).cast("long")
-    w = _conv_window()
+    w = conv_window()
     lagged = df.where(x.isNotNull()).select(
         "conv_id",
         x.alias("_x"),
@@ -3014,7 +3014,7 @@ def sample_entropy(
     NULL when A = 0 or B = 0, where the estimator is undefined).
     """
     x = F.col(signal_col).cast("long")
-    w = _conv_window()
+    w = conv_window()
     tpl = (
         df.where(x.isNotNull())
         .select(
@@ -3239,7 +3239,7 @@ def handoff_latency_matrix(df: DataFrame) -> DataFrame:
     on the compacted histogram. Output: (from_role, to_role, n long,
     mean_sec, p50_sec, p90_sec doubles), pairs with n >= 1.
     """
-    w = _conv_window()
+    w = conv_window()
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     pairs = (
         df.select(
@@ -3315,14 +3315,14 @@ def tool_chains(df: DataFrame, k: int = 10) -> DataFrame:
     (from_tool, to_tool, n long, share double, rank long), rank
     1..k.
     """
-    w = _conv_window()
+    w = conv_window()
     t = df.where(F.col("tool").isNotNull()).select(
         "conv_id",
         "ts",
         "turn_idx",
         F.col("tool").alias("_to"),
         F.lag("tool", 1).over(
-            _conv_window()
+            conv_window()
         ).alias("_from"),
     )
     # note: the lag window above runs on the FILTERED frame, so _from
@@ -3742,7 +3742,7 @@ def position_profile(df: DataFrame, n_bins: int = 10) -> DataFrame:
     aggregate. Output: (bin long, n long, mean_signal double),
     bins ascending.
     """
-    w = _conv_window()
+    w = conv_window()
     w_len = Window.partitionBy("conv_id")
     x = F.col("signal").cast("long")
     pos = df.where(x.isNotNull()).select(
@@ -4002,7 +4002,7 @@ def stutter_rate(df: DataFrame) -> DataFrame:
     double, share_of_stutters double — NULL when the corpus has
     none), one row per role with pairs.
     """
-    w = _conv_window()
+    w = conv_window()
     pairs = (
         df.select(
             "conv_id",
@@ -4056,7 +4056,7 @@ def tool_error_rate(df: DataFrame) -> DataFrame:
     division. Output: (tool, n_calls long, n_errors long, error_rate
     double), one row per tool.
     """
-    w = _conv_window()
+    w = conv_window()
     seq = df.select(
         "conv_id",
         "ts",
@@ -4096,7 +4096,7 @@ def role_trigrams(df: DataFrame, k: int = 10) -> DataFrame:
     one division. Output: (pattern string, n long, share double,
     rank long), rank 1..k.
     """
-    w = _conv_window()
+    w = conv_window()
     tri = (
         df.select(
             "conv_id",

@@ -14,11 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import persist_intermediate
-from .skew import ORDER as _ORDER, map_conversations
-
-
-def _conv_window() -> Window:
-    return Window.partitionBy("conv_id").orderBy(*_ORDER)
+from .skew import ORDER as _ORDER, conv_window, map_conversations
 
 
 def with_sessions(df: DataFrame, gap_seconds: float) -> DataFrame:
@@ -29,12 +25,12 @@ def with_sessions(df: DataFrame, gap_seconds: float) -> DataFrame:
     engine's secondary-sort invariant (reference geometric slice sort:
     zrad/io/dicom.py:89-100).
     """
-    w = _conv_window()
+    w = conv_window()
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     gap_us = ts_us - F.lag(ts_us).over(w)
     df = df.withColumn("gap_sec", (gap_us / 1e6).cast("double"))
     new_sess = F.when(F.col("gap_sec") > F.lit(gap_seconds), 1).otherwise(0)
-    running = _conv_window().rowsBetween(Window.unboundedPreceding, 0)
+    running = conv_window().rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("session_id", F.sum(new_sess).over(running).cast("int"))
 
 
@@ -44,7 +40,7 @@ def with_lag_lead(df: DataFrame, cols: list[str], offsets: tuple = (1,)) -> Data
     The declarative counterpart of the kernel-side lag pairs (GLCM
     directions): ``<col>_lag<k>`` / ``<col>_lead<k>`` per offset.
     """
-    w = _conv_window()
+    w = conv_window()
     for c in cols:
         for k in offsets:
             df = df.withColumn(f"{c}_lag{k}", F.lag(F.col(c), k).over(w))
@@ -138,7 +134,7 @@ def turn_pairs(
     ordering — the same exchange every other per-conversation operator
     uses. Emits conv_id, the response's turn_idx and ts, and the pair.
     """
-    w = _conv_window()
+    w = conv_window()
     prev_role = F.lag("role").over(w)
     prev_text = F.lag("text").over(w)
     return (
@@ -280,7 +276,7 @@ def role_transitions(
     self_loop_ratio double, trans_entropy double, prev_entropy double,
     cond_entropy double — H(next|prev), the Markov predictability).
     """
-    prev = F.lag("role").over(_conv_window())
+    prev = F.lag("role").over(conv_window())
     pairs = df.select("conv_id", F.col("role").alias("_to"), prev.alias("_from"))
     aggs = [F.count("_from").alias("_n")]
     for a in roles:
@@ -407,7 +403,7 @@ def autocorr_features(
     xl = F.col(signal_col).cast("long")
     cols = [F.col("conv_id"), xl.alias("_x")]
     for k in lags:
-        cols.append(F.lag(xl, k).over(_conv_window()).alias(f"_l{k}"))
+        cols.append(F.lag(xl, k).over(conv_window()).alias(f"_l{k}"))
     p = df.select(*cols)
     aggs = [
         F.count("_x").alias("_n"),
@@ -461,7 +457,7 @@ def with_echo_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     turn of a conversation or when both token sets are empty).
     """
     toks = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-    w = _conv_window()
+    w = conv_window()
     with_t = df.withColumn("_tk", toks).withColumn(
         "_pk", F.lag("_tk").over(w)
     )
@@ -502,7 +498,7 @@ def role_run_stats(df: DataFrame) -> DataFrame:
     Output: (conv_id, n_turns long, n_runs long, max_run long,
     mean_run double).
     """
-    w = _conv_window()
+    w = conv_window()
     wr = Window.partitionBy("conv_id", "role").orderBy(*_ORDER)
     p = df.select(
         "conv_id",
@@ -585,7 +581,7 @@ def spearman_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         .orderBy(x.asc_nulls_last())
         .rangeBetween(Window.unboundedPreceding, 0)
     )
-    wo = _conv_window()
+    wo = conv_window()
     t = F.count(x).over(wv)
     upto = F.count(x).over(wc)
     two_r = (F.lit(2) * (upto - t) + t + F.lit(1)).cast("long")
@@ -772,7 +768,7 @@ def with_ewm_smooth(
     if lookback < 1:
         raise ValueError(f"lookback must be >= 1, got {lookback}")
     x = F.col(signal_col).cast("double")
-    w = _conv_window()
+    w = conv_window()
     lags = [x if j == 0 else F.lag(x, j).over(w) for j in range(lookback)]
     weights = [alpha ** j for j in range(lookback)]
     num = F.lit(0.0)
@@ -820,7 +816,7 @@ def with_topic_boundaries(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     )
     base = df.withColumn("_tk", toks)
-    w = _conv_window()
+    w = conv_window()
     left_f = w.rowsBetween(-(k - 1), 0)
     right_f = w.rowsBetween(1, k)
     left = F.array_distinct(F.flatten(F.collect_list("_tk").over(left_f)))
@@ -1098,7 +1094,7 @@ def with_edit_distance(df: DataFrame, text_col: str = "text") -> DataFrame:
     Adds: lev long, edit_sim double (both NULL on the first turn of a
     conversation; edit_sim NULL when both texts are empty).
     """
-    w = _conv_window()
+    w = conv_window()
     prev = F.lag(F.col(text_col)).over(w)
     with_p = df.withColumn("_prev", prev)
     lev = F.levenshtein(F.col("_prev"), F.col(text_col))
@@ -1144,7 +1140,7 @@ def funnel_steps(
     ordinal where each stage was reached, NULL once a stage is missed,
     reached int = number of stages reached).
     """
-    w = _conv_window()
+    w = conv_window()
     base = df.select(
         "conv_id",
         F.col(role_col).alias("_role"),
@@ -1216,7 +1212,7 @@ def ar2_yule_walker(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     forecast — all double).
     """
     xl = F.col(signal_col).cast("long")
-    w = _conv_window()
+    w = conv_window()
     p = df.select(
         F.col("conv_id"),
         xl.alias("_x"),
@@ -1595,7 +1591,7 @@ def entropy_rate(df: DataFrame) -> DataFrame:
     (n_trans long, h_rate, h_marg, gain doubles — NULL when no
     transitions).
     """
-    w = _conv_window()
+    w = conv_window()
     trans = (
         df.select("conv_id", "ts", "turn_idx", F.col("role").alias("_u"))
         .withColumn("_v", F.lead("_u", 1).over(w))
@@ -1786,7 +1782,7 @@ def markov_stationary(df: DataFrame, n_iter: int = 3) -> DataFrame:
     work is ONE counting pass. Output: (role, pi double, marginal
     double, gap double), one row per role.
     """
-    w = _conv_window()
+    w = conv_window()
     trans = (
         df.select("conv_id", "ts", "turn_idx", F.col("role").alias("_u"))
         .withColumn("_v", F.lead("_u", 1).over(w))

@@ -30,12 +30,17 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # the engine's stable within-conversation order (conv_id first)
 ORDER = ("ts", "turn_idx")
+
+
+def conv_window() -> WindowSpec:
+    """The one per-conversation window: partition by conv_id, ORDER."""
+    return Window.partitionBy("conv_id").orderBy(*ORDER)
 
 
 def conv_bucket(n_buckets: int) -> Column:
@@ -168,7 +173,7 @@ def with_salt_bucket(
     row_number window over bare conv_id and should be avoided for
     genuinely giant conversations."""
     if ordinal_col is None:
-        w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+        w = conv_window()
         df = df.withColumn("_rank", F.row_number().over(w) - 1)
     else:
         df = df.withColumn("_rank", F.col(ordinal_col).cast("long"))

@@ -11,8 +11,9 @@ the texture matrices DECLARATIVELY, one plan per family:
   (map-side partial counts make the shuffle tiny: <= lvl^2 rows per
   conversation per map task);
 * the final reduction runs on <= lvl^2 rows per conversation with the
-  kernel family table's reducer (kernels/texture.FAMILIES), inside the
-  engine's grouped-kernel primitive (skew.map_conversations).
+  kernel family table's batched reducer (kernels/texture.FAMILIES),
+  called once per bucket of the engine's grouped-kernel primitive
+  (skew.map_conversations), every conversation a matrix id.
 
 Every cell builder takes ``turns_per_bucket``. ``None`` gives the plain
 plan: one window per conversation. A number salts the same plan
@@ -32,9 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels.texture import FAMILIES
-from .sessionize import _conv_window
-from .skew import ORDER, map_conversations, skew_metrics, with_salt_bucket
+from ..kernels.texture import FAMILIES, Cells
+from .skew import ORDER, conv_window, map_conversations, skew_metrics, with_salt_bucket
 
 
 def _layout(df: DataFrame, signal_col: str, turns_per_bucket, overlap=0, overlap_before=0):
@@ -43,7 +43,7 @@ def _layout(df: DataFrame, signal_col: str, turns_per_bucket, overlap=0, overlap
     per salt bucket, where borrowed overlap rows carry own=false."""
     g = df.select("conv_id", "ts", "turn_idx", F.col(signal_col).cast("double").alias("g"))
     if turns_per_bucket is None:
-        return g.withColumn("own", F.lit(True)), _conv_window(), ["conv_id"]
+        return g.withColumn("own", F.lit(True)), conv_window(), ["conv_id"]
     rows = with_salt_bucket(
         g, turns_per_bucket=turns_per_bucket, overlap=overlap, overlap_before=overlap_before
     )
@@ -147,7 +147,7 @@ def gldzm_cells(
     """Distance-zone cells: runs keyed by min taxicab distance to the
     conversation border — min over the run's two endpoints, each scored
     min(position, n - position + 1) in 1-based positions (the declarative
-    twin of kernels/prep.border_distance + kernels/texture.dzm_matrix).
+    twin of kernels/prep.border_distance + kernels/texture._zone_distance_entries).
     Reference: zrad/radiomics/gldzm.py:28-159."""
     runs = _runs(df, signal_col, turns_per_bucket)
     n = df.groupBy("conv_id").agg(F.count("*").cast("long").alias("_n"))
@@ -225,8 +225,8 @@ def texture_features_distributed(
     """One row of ``family`` features per conversation, from its cell plan
     (plain, or salted with ``turns_per_bucket``; ``lags`` is GLCM's). The
     reduction sees <= lvl*width cells per conversation and uses the
-    kernel family table's reducer — the DZM ordered sde/sdhge folds that
-    match the q_gldzm* oracles ride along."""
+    kernel family table's batched reducer — the ordered sde/sdhge folds
+    that match the q_gldzm* oracles ride along."""
     build, axes = _plan(family)
     fam = FAMILIES[family]
     vox = df.groupBy("conv_id").agg(
@@ -238,20 +238,21 @@ def texture_features_distributed(
         + [T.StructField(n, T.DoubleType(), True) for n in fam.names]
     )
 
-    def kernel(cols: dict, starts, ends) -> list[dict]:
-        rows = []
-        for s, e in zip(starts, ends):
-            height = int(cols["gmax"][s]) + 1
-            if axes is None:
-                m = np.zeros((height, 2))
-                m[cols["lvl"][s:e]] = np.column_stack((cols["n_i"][s:e], cols["s_i"][s:e]))
-            else:
-                r, c = cols[axes[0]][s:e], cols[axes[1]][s:e] - axes[2]
-                m = np.zeros((height, int(c.max()) + 1))
-                m[r, c] = cols["c"][s:e]
-            vals = fam.reduce(m, float(cols["vc"][s])).values()
-            rows.append({"conv_id": cols["conv_id"][s], **dict(zip(fam.names, vals))})
-        return rows
+    def kernel(cols: dict, starts, ends) -> dict:
+        # one batched reducer call per bucket: conversation k is matrix id k
+        mid = np.repeat(np.arange(starts.size), ends - starts)
+        if axes is None:
+            i, j, c, w = cols["lvl"], np.zeros(mid.size, np.int64), cols["n_i"], cols["s_i"]
+        else:
+            i, j, c, w = cols[axes[0]], cols[axes[1]] - axes[2], cols["c"], None
+        order = np.lexsort((j, i, mid))
+        cells = Cells(
+            mid[order], i[order].astype(np.int64), j[order].astype(np.int64),
+            c[order].astype(np.float64), None if w is None else w[order].astype(np.float64),
+            starts.size, cols["gmax"][starts].astype(np.int64) + 1,
+            cols["vc"][starts].astype(np.float64),
+        )
+        return {"conv_id": cols["conv_id"][starts], **dict(zip(fam.names, fam.reduce(cells)))}
 
     return map_conversations(cells, kernel, schema, order=())
 
