@@ -20,6 +20,14 @@ from pyspark.sql import functions as F
 
 from z_rad_spark.config import FeatureConfig
 from z_rad_spark.extractor import extract_features
+from z_rad_spark.kernels.texture import (
+    GLCM_NAMES,
+    GLDZM_NAMES,
+    GLRLM_NAMES,
+    GLSZM_NAMES,
+    NGLDM_NAMES,
+    NGTDM_NAMES,
+)
 from z_rad_spark.operators import firstorder_sql
 from z_rad_spark.operators.asof import asof_state
 from z_rad_spark.operators.backfill import backfill
@@ -499,89 +507,28 @@ def _extract(spark, sf_dir, families, **kw):
 
 
 def q_glcm(spark, sf_dir):
-    cols = [
-        "cm_joint_max",
-        "cm_joint_avg",
-        "cm_joint_var",
-        "cm_joint_entr",
-        "cm_diff_avg",
-        "cm_diff_var",
-        "cm_diff_entr",
-        "cm_sum_avg",
-        "cm_sum_var",
-        "cm_sum_entr",
-        "cm_energy",
-        "cm_contrast",
-        "cm_dissimilarity",
-        "cm_inv_diff",
-        "cm_inv_diff_norm",
-        "cm_inv_diff_mom",
-        "cm_inv_diff_mom_norm",
-        "cm_inv_var",
-        "cm_corr",
-        "cm_auto_corr",
-        "cm_clust_tend",
-        "cm_clust_shade",
-        "cm_clust_prom",
-        "cm_info_corr1",
-        "cm_info_corr2",
-    ]
+    cols = GLCM_NAMES
     out = _extract(spark, sf_dir, ("glcm",), lags=(1,))
     sel = [F.col(f"{c}_3D_comb").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
 
 
 def q_glrlm(spark, sf_dir):
-    cols = [
-        "rlm_sre",
-        "rlm_lre",
-        "rlm_lgre",
-        "rlm_hgre",
-        "rlm_srlge",
-        "rlm_srhge",
-        "rlm_lrlge",
-        "rlm_lrhge",
-        "rlm_glnu",
-        "rlm_glnu_norm",
-        "rlm_rlnu",
-        "rlm_rlnu_norm",
-        "rlm_r_perc",
-        "rlm_gl_var",
-        "rlm_rl_var",
-        "rlm_rl_entr",
-    ]
+    cols = GLRLM_NAMES
     out = _extract(spark, sf_dir, ("glrlm",))
     sel = [F.col(f"{c}_3D_comb").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
 
 
 def q_ngldm(spark, sf_dir):
-    cols = [
-        "ngl_lde",
-        "ngl_hde",
-        "ngl_lgce",
-        "ngl_hgce",
-        "ngl_ldlge",
-        "ngl_ldhge",
-        "ngl_hdlge",
-        "ngl_hdhge",
-        "ngl_glnu",
-        "ngl_glnu_norm",
-        "ngl_dcnu",
-        "ngl_dcnu_norm",
-        "ngl_dc_perc",
-        "ngl_gl_var",
-        "ngl_dc_var",
-        "ngl_dc_entr",
-        "ngl_dc_energy",
-    ]
+    cols = NGLDM_NAMES
     out = _extract(spark, sf_dir, ("ngldm",))
     sel = [F.col(f"{c}_3D").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
 
 
 def q_ngtdm(spark, sf_dir):
-    cols = ["ngt_coarseness", "ngt_contrast", "ngt_busyness", "ngt_complexity", "ngt_strength"]
+    cols = NGTDM_NAMES
     out = _extract(spark, sf_dir, ("ngtdm",))
     sel = [F.col(f"{c}_3D").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
@@ -590,12 +537,7 @@ def q_ngtdm(spark, sf_dir):
 def q_ngldm_25d(spark, sf_dir):
     """NGLDM 2.5D: dependence counts within gap sessions, matrices summed
     across sessions before the formulas."""
-    cols = [
-        "ngl_lde", "ngl_hde", "ngl_lgce", "ngl_hgce", "ngl_ldlge",
-        "ngl_ldhge", "ngl_hdlge", "ngl_hdhge", "ngl_glnu", "ngl_glnu_norm",
-        "ngl_dcnu", "ngl_dcnu_norm", "ngl_dc_perc", "ngl_gl_var",
-        "ngl_dc_var", "ngl_dc_entr", "ngl_dc_energy",
-    ]
+    cols = NGLDM_NAMES
     cfg = FeatureConfig(
         families=("ngldm",), aggr_dim="2.5D", aggr_method="MERG",
         gap_seconds=GAP_SECONDS, min_turns=1,
@@ -608,12 +550,7 @@ def q_ngldm_25d(spark, sf_dir):
 def q_ngldm_2d_avg(spark, sf_dir):
     """NGLDM 2D AVER: the 17 formulas computed per session (voxel count =
     session size), plain-meaned across sessions."""
-    cols = [
-        "ngl_lde", "ngl_hde", "ngl_lgce", "ngl_hgce", "ngl_ldlge",
-        "ngl_ldhge", "ngl_hdlge", "ngl_hdhge", "ngl_glnu", "ngl_glnu_norm",
-        "ngl_dcnu", "ngl_dcnu_norm", "ngl_dc_perc", "ngl_gl_var",
-        "ngl_dc_var", "ngl_dc_entr", "ngl_dc_energy",
-    ]
+    cols = NGLDM_NAMES
     cfg = FeatureConfig(
         families=("ngldm",), aggr_dim="2D", aggr_method="AVER",
         gap_seconds=GAP_SECONDS, min_turns=1,
@@ -627,7 +564,7 @@ def q_ngtdm_2d_avg(spark, sf_dir):
     """NGTDM 2D AVER: the 5 formulas per session, plain-meaned across
     sessions; neighbourless (single-turn) sessions excluded like the
     reference's DataStructureError skip (ngtdm.py:133-134)."""
-    cols = ["ngt_coarseness", "ngt_contrast", "ngt_busyness", "ngt_complexity", "ngt_strength"]
+    cols = NGTDM_NAMES
     cfg = FeatureConfig(
         families=("ngtdm",), aggr_dim="2D", aggr_method="AVER",
         gap_seconds=GAP_SECONDS, min_turns=1,
@@ -640,7 +577,7 @@ def q_ngtdm_2d_avg(spark, sf_dir):
 def q_ngtdm_25d(spark, sf_dir):
     """NGTDM 2.5D: neighbourhoods bounded by gap sessions, [n_i, s_i]
     matrices summed across sessions."""
-    cols = ["ngt_coarseness", "ngt_contrast", "ngt_busyness", "ngt_complexity", "ngt_strength"]
+    cols = NGTDM_NAMES
     cfg = FeatureConfig(
         families=("ngtdm",), aggr_dim="2.5D", aggr_method="MERG",
         gap_seconds=GAP_SECONDS, min_turns=1,
@@ -667,35 +604,19 @@ def q_shape(spark, sf_dir):
     return _r6(out.select("conv_id", *_SHAPE_COLS), _SHAPE_COLS)
 
 
-_GLCM_COLS = [
-    "cm_joint_max", "cm_joint_avg", "cm_joint_var", "cm_joint_entr",
-    "cm_diff_avg", "cm_diff_var", "cm_diff_entr", "cm_sum_avg",
-    "cm_sum_var", "cm_sum_entr", "cm_energy", "cm_contrast",
-    "cm_dissimilarity", "cm_inv_diff", "cm_inv_diff_norm",
-    "cm_inv_diff_mom", "cm_inv_diff_mom_norm", "cm_inv_var", "cm_corr",
-    "cm_auto_corr", "cm_clust_tend", "cm_clust_shade", "cm_clust_prom",
-    "cm_info_corr1", "cm_info_corr2",
-]
-
-
 def q_glcm_dist(spark, sf_dir):
     """Distributed GLCM (window pairs + cell groupBy): the scale path for
     giant conversations — same values, same oracle as q_glcm."""
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     out = texture_features_distributed(_t(spark, sf_dir), "glcm")
-    return _r6(out.select("conv_id", *_GLCM_COLS), _GLCM_COLS)
+    return _r6(out.select("conv_id", *GLCM_NAMES), GLCM_NAMES)
 
 
 def q_glrlm_dist(spark, sf_dir):
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    cols = [
-        "rlm_sre", "rlm_lre", "rlm_lgre", "rlm_hgre", "rlm_srlge",
-        "rlm_srhge", "rlm_lrlge", "rlm_lrhge", "rlm_glnu", "rlm_glnu_norm",
-        "rlm_rlnu", "rlm_rlnu_norm", "rlm_r_perc", "rlm_gl_var",
-        "rlm_rl_var", "rlm_rl_entr",
-    ]
+    cols = GLRLM_NAMES
     out = texture_features_distributed(_t(spark, sf_dir), "glrlm")
     return _r6(out.select("conv_id", *cols), cols)
 
@@ -703,12 +624,7 @@ def q_glrlm_dist(spark, sf_dir):
 def q_ngldm_dist(spark, sf_dir):
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    cols = [
-        "ngl_lde", "ngl_hde", "ngl_lgce", "ngl_hgce", "ngl_ldlge",
-        "ngl_ldhge", "ngl_hdlge", "ngl_hdhge", "ngl_glnu", "ngl_glnu_norm",
-        "ngl_dcnu", "ngl_dcnu_norm", "ngl_dc_perc", "ngl_gl_var",
-        "ngl_dc_var", "ngl_dc_entr", "ngl_dc_energy",
-    ]
+    cols = NGLDM_NAMES
     out = texture_features_distributed(_t(spark, sf_dir), "ngldm")
     return _r6(out.select("conv_id", *cols), cols)
 
@@ -717,12 +633,7 @@ def q_glszm(spark, sf_dir):
     """GLSZM: in 1-D, zones == runs (26-connectivity degenerates to run
     adjacency), so values coincide with GLRLM under different names —
     an honest structural property, verified by its own oracle."""
-    cols = [
-        "szm_sze", "szm_lze", "szm_lgze", "szm_hgze", "szm_szlge",
-        "szm_szhge", "szm_lzlge", "szm_lzhge", "szm_glnu", "szm_glnu_norm",
-        "szm_zsnu", "szm_zsnu_norm", "szm_z_perc", "szm_gl_var",
-        "szm_zs_var", "szm_zs_entr",
-    ]
+    cols = GLSZM_NAMES
     out = _extract(spark, sf_dir, ("glszm",))
     sel = [F.col(f"{c}_3D").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
@@ -730,12 +641,7 @@ def q_glszm(spark, sf_dir):
 
 def q_gldzm(spark, sf_dir):
     """GLDZM: zones keyed by min distance to the conversation border."""
-    cols = [
-        "dzm_sde", "dzm_lde", "dzm_lgze", "dzm_hgze", "dzm_sdlge",
-        "dzm_sdhge", "dzm_ldlge", "dzm_ldhge", "dzm_glnu", "dzm_glnu_norm",
-        "dzm_zdnu", "dzm_zdnu_norm", "dzm_z_perc", "dzm_gl_var",
-        "dzm_zd_var", "dzm_zd_entr",
-    ]
+    cols = GLDZM_NAMES
     out = _extract(spark, sf_dir, ("gldzm",))
     sel = [F.col(f"{c}_3D").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
@@ -750,8 +656,8 @@ def q_glcm_2d_avg(spark, sf_dir):
         gap_seconds=GAP_SECONDS, min_turns=1,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    sel = [F.col(f"{c}_2D_avg").alias(c) for c in _GLCM_COLS]
-    return _r6(out.select("conv_id", *sel), _GLCM_COLS)
+    sel = [F.col(f"{c}_2D_avg").alias(c) for c in GLCM_NAMES]
+    return _r6(out.select("conv_id", *sel), GLCM_NAMES)
 
 
 def q_glcm_2d_wavg(spark, sf_dir):
@@ -762,8 +668,8 @@ def q_glcm_2d_wavg(spark, sf_dir):
         slice_weight=True, gap_seconds=GAP_SECONDS, min_turns=1,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    sel = [F.col(f"{c}_2D_avg").alias(c) for c in _GLCM_COLS]
-    return _r6(out.select("conv_id", *sel), _GLCM_COLS)
+    sel = [F.col(f"{c}_2D_avg").alias(c) for c in GLCM_NAMES]
+    return _r6(out.select("conv_id", *sel), GLCM_NAMES)
 
 
 def q_glcm_25d_merg(spark, sf_dir):
@@ -775,8 +681,8 @@ def q_glcm_25d_merg(spark, sf_dir):
         gap_seconds=GAP_SECONDS, min_turns=1,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    sel = [F.col(f"{c}_2_5D_comb").alias(c) for c in _GLCM_COLS]
-    return _r6(out.select("conv_id", *sel), _GLCM_COLS)
+    sel = [F.col(f"{c}_2_5D_comb").alias(c) for c in GLCM_NAMES]
+    return _r6(out.select("conv_id", *sel), GLCM_NAMES)
 
 
 def _q_glcm_variant(spark, sf_dir, aggr_dim, aggr_method, lags, suffix, **kw):
@@ -785,8 +691,8 @@ def _q_glcm_variant(spark, sf_dir, aggr_dim, aggr_method, lags, suffix, **kw):
         gap_seconds=GAP_SECONDS, min_turns=1, **kw,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    sel = [F.col(f"{c}_{suffix}").alias(c) for c in _GLCM_COLS]
-    return _r6(out.select("conv_id", *sel), _GLCM_COLS)
+    sel = [F.col(f"{c}_{suffix}").alias(c) for c in GLCM_NAMES]
+    return _r6(out.select("conv_id", *sel), GLCM_NAMES)
 
 
 def q_glcm_3d_aver(spark, sf_dir):
@@ -815,14 +721,7 @@ def q_glcm_salted(spark, sf_dir):
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     out = texture_features_distributed(_t(spark, sf_dir), "glcm", turns_per_bucket=16)
-    return _r6(out.select("conv_id", *_GLCM_COLS), _GLCM_COLS)
-
-
-_RLM_COLS = [
-    "rlm_sre", "rlm_lre", "rlm_lgre", "rlm_hgre", "rlm_srlge", "rlm_srhge",
-    "rlm_lrlge", "rlm_lrhge", "rlm_glnu", "rlm_glnu_norm", "rlm_rlnu",
-    "rlm_rlnu_norm", "rlm_r_perc", "rlm_gl_var", "rlm_rl_var", "rlm_rl_entr",
-]
+    return _r6(out.select("conv_id", *GLCM_NAMES), GLCM_NAMES)
 
 
 def q_glrlm_25d(spark, sf_dir):
@@ -833,8 +732,8 @@ def q_glrlm_25d(spark, sf_dir):
         gap_seconds=GAP_SECONDS, min_turns=1,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    sel = [F.col(f"{c}_2_5D_comb").alias(c) for c in _RLM_COLS]
-    return _r6(out.select("conv_id", *sel), _RLM_COLS)
+    sel = [F.col(f"{c}_2_5D_comb").alias(c) for c in GLRLM_NAMES]
+    return _r6(out.select("conv_id", *sel), GLRLM_NAMES)
 
 
 def q_glrlm_2d_avg(spark, sf_dir):
@@ -845,8 +744,8 @@ def q_glrlm_2d_avg(spark, sf_dir):
         gap_seconds=GAP_SECONDS, min_turns=1,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    sel = [F.col(f"{c}_2D_avg").alias(c) for c in _RLM_COLS]
-    return _r6(out.select("conv_id", *sel), _RLM_COLS)
+    sel = [F.col(f"{c}_2D_avg").alias(c) for c in GLRLM_NAMES]
+    return _r6(out.select("conv_id", *sel), GLRLM_NAMES)
 
 
 def q_glrlm_salted(spark, sf_dir):
@@ -855,12 +754,7 @@ def q_glrlm_salted(spark, sf_dir):
     runs to straddle bucket borders at test scale."""
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    cols = [
-        "rlm_sre", "rlm_lre", "rlm_lgre", "rlm_hgre", "rlm_srlge",
-        "rlm_srhge", "rlm_lrlge", "rlm_lrhge", "rlm_glnu", "rlm_glnu_norm",
-        "rlm_rlnu", "rlm_rlnu_norm", "rlm_r_perc", "rlm_gl_var",
-        "rlm_rl_var", "rlm_rl_entr",
-    ]
+    cols = GLRLM_NAMES
     out = texture_features_distributed(_t(spark, sf_dir), "glrlm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *cols), cols)
 
@@ -870,12 +764,7 @@ def q_ngldm_salted(spark, sf_dir):
     every bucket border — exact (same oracle as q_ngldm)."""
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    cols = [
-        "ngl_lde", "ngl_hde", "ngl_lgce", "ngl_hgce", "ngl_ldlge",
-        "ngl_ldhge", "ngl_hdlge", "ngl_hdhge", "ngl_glnu", "ngl_glnu_norm",
-        "ngl_dcnu", "ngl_dcnu_norm", "ngl_dc_perc", "ngl_gl_var",
-        "ngl_dc_var", "ngl_dc_entr", "ngl_dc_energy",
-    ]
+    cols = NGLDM_NAMES
     out = texture_features_distributed(_t(spark, sf_dir), "ngldm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *cols), cols)
 
@@ -994,17 +883,9 @@ def q_gldzm_dist(spark, sf_dir):
     positions (same oracle as q_gldzm)."""
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    cols = [
-        "dzm_sde", "dzm_lde", "dzm_lgze", "dzm_hgze", "dzm_sdlge",
-        "dzm_sdhge", "dzm_ldlge", "dzm_ldhge", "dzm_glnu", "dzm_glnu_norm",
-        "dzm_zdnu", "dzm_zdnu_norm", "dzm_z_perc", "dzm_gl_var",
-        "dzm_zd_var", "dzm_zd_entr",
-    ]
+    cols = GLDZM_NAMES
     out = texture_features_distributed(_t(spark, sf_dir), "gldzm")
     return _r6(out.select("conv_id", *cols), cols)
-
-
-_NGT_COLS = ["ngt_coarseness", "ngt_contrast", "ngt_busyness", "ngt_complexity", "ngt_strength"]
 
 
 def q_ngtdm_dist(spark, sf_dir):
@@ -1012,7 +893,7 @@ def q_ngtdm_dist(spark, sf_dir):
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     out = texture_features_distributed(_t(spark, sf_dir), "ngtdm")
-    return _r6(out.select("conv_id", *_NGT_COLS), _NGT_COLS)
+    return _r6(out.select("conv_id", *NGTDM_NAMES), NGTDM_NAMES)
 
 
 def q_ngtdm_salted(spark, sf_dir):
@@ -1020,7 +901,7 @@ def q_ngtdm_salted(spark, sf_dir):
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
     out = texture_features_distributed(_t(spark, sf_dir), "ngtdm", turns_per_bucket=16)
-    return _r6(out.select("conv_id", *_NGT_COLS), _NGT_COLS)
+    return _r6(out.select("conv_id", *NGTDM_NAMES), NGTDM_NAMES)
 
 
 def q_filter_mean(spark, sf_dir):
@@ -2187,12 +2068,7 @@ def q_gldzm_salted(spark, sf_dir):
     straddle borders at test scale."""
     from z_rad_spark.operators.texture_sql import texture_features_distributed
 
-    cols = [
-        "dzm_sde", "dzm_lde", "dzm_lgze", "dzm_hgze", "dzm_sdlge",
-        "dzm_sdhge", "dzm_ldlge", "dzm_ldhge", "dzm_glnu", "dzm_glnu_norm",
-        "dzm_zdnu", "dzm_zdnu_norm", "dzm_z_perc", "dzm_gl_var",
-        "dzm_zd_var", "dzm_zd_entr",
-    ]
+    cols = GLDZM_NAMES
     out = texture_features_distributed(_t(spark, sf_dir), "gldzm", turns_per_bucket=16)
     return _r6(out.select("conv_id", *cols), cols)
 
@@ -2200,14 +2076,12 @@ def q_gldzm_salted(spark, sf_dir):
 def q_glszm_25d(spark, sf_dir):
     """GLSZM 2.5D: zones bounded by session borders, matrices pooled
     across sessions before the 16 formulas (1-D zones ≡ runs)."""
-    from z_rad_spark.kernels.texture import GLSZM_NAMES
-
     cfg = FeatureConfig(
         families=("glszm",), aggr_dim="2.5D", aggr_method="MERG",
         gap_seconds=GAP_SECONDS, min_turns=1,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    cols = list(GLSZM_NAMES)
+    cols = GLSZM_NAMES
     sel = [F.col(f"{c}_2_5D").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
 
@@ -2216,14 +2090,12 @@ def q_gldzm_25d(spark, sf_dir):
     """GLDZM 2.5D: zones keyed by min taxicab distance to their SESSION
     border (border_distance with session boundaries), matrices pooled
     across sessions (zrad/radiomics/gldzm.py:28-159 per-slice path)."""
-    from z_rad_spark.kernels.texture import GLDZM_NAMES
-
     cfg = FeatureConfig(
         families=("gldzm",), aggr_dim="2.5D", aggr_method="MERG",
         gap_seconds=GAP_SECONDS, min_turns=1,
     )
     out = extract_features(_t(spark, sf_dir), cfg, [END])
-    cols = list(GLDZM_NAMES)
+    cols = GLDZM_NAMES
     sel = [F.col(f"{c}_2_5D").alias(c) for c in cols]
     return _r6(out.select("conv_id", *sel), cols)
 

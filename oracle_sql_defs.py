@@ -1,10 +1,11 @@
 """DuckDB oracle SQL for every SQL-expressible query in __spark_entry__.
 
 Each oracle embeds the SAME deterministic events->transcripts derivation
-the Spark engine uses (z_rad_spark/transcripts.py DERIVE_TRANSCRIPTS_SQL),
-so both engines compute over identical rows. Output conventions mirror
-the Spark side exactly: ROUND(x, 6) + 0 for doubles (the +0 normalizes
--0.0), BIGINT epoch micros for timestamps, explicit casts for counts.
+the Spark engine uses (z_rad_spark/transcripts.py from_events; ``T``
+below, the same SQL as __spark_entry__.DUCK_T), so both engines compute
+over identical rows. Output conventions mirror the Spark side exactly:
+ROUND(x, 6) + 0 for doubles (the +0 normalizes -0.0), BIGINT epoch
+micros for timestamps, explicit casts for counts.
 
 Dialect notes vs Spark SQL (why these strings differ from the engine's
 expressions): DuckDB needs the 'g' flag on regexp_replace, CAST rounds

@@ -604,20 +604,68 @@ def _roled_turns_df(spark, n=64):
     return spark.createDataFrame(pdf)
 
 
-def test_ks_and_mw_drift_preaggregate_before_window(spark):
-    """Both rank tests must collapse to |groups| x |values| rows BEFORE
-    any window runs (the whole point of the shape at 10^12 turns): one
-    Window node, at least two aggregates (the per-value pre-agg and the
-    final per-group agg), no join of any kind."""
-    from z_rad_spark.operators.drift import ks_drift, mw_drift
+_SPLIT_OPS = ("ks_drift", "kuiper_drift", "cvm_drift", "w1_drift", "mw_drift",
+              "ad_drift", "ansari_bradley", "energy_drift")
 
-    for op in (ks_drift, mw_drift):
-        plan = _plan(op(_roled_turns_df(spark), split_ts="2024-01-01 00:30:00"))
-        # ks_drift stacks two frame specs (running + full-partition) on
-        # ONE role sort; both must sit above the per-value pre-agg
-        assert 1 <= plan.count("Window") <= 2
-        assert plan.count("HashAggregate") >= 2
-        assert "Join" not in plan
+
+def _two_class_op_frame(spark, name):
+    from z_rad_spark.operators import drift, encoding
+
+    if name in _SPLIT_OPS:
+        return getattr(drift, name)(_roled_turns_df(spark), split_ts="2024-01-01 00:30:00")
+    scored = _roled_turns_df(spark).select(
+        "role",
+        (F.col("signal") / 10).alias("prob"),
+        (F.col("turn_idx") % 3 == 0).alias("label_true"),
+    )
+    if name == "auc_binary":
+        return drift.auc_binary(scored, "prob", "label_true", group_col="role")
+    if name == "cliffs_delta":
+        return drift.cliffs_delta(scored, flag_col="label_true", value_col="prob")
+    return encoding.score_ks(scored)
+
+
+@pytest.mark.parametrize(
+    "name", _SPLIT_OPS + ("auc_binary", "cliffs_delta", "score_ks")
+)
+def test_two_class_ecdf_preaggregates_before_window(spark, name):
+    """Every rank/ECDF test reads the compacted two-class histogram: it
+    must collapse to |groups| x |values| rows BEFORE any window runs
+    (the whole point of the shape at 10^12 turns) — the lowest Window
+    node sits above a HashAggregate — and join nothing. energy_drift
+    runs no window at all; its pair grid is the one join."""
+    lines = _plan(_two_class_op_frame(spark, name)).splitlines()
+    wins = [i for i, ln in enumerate(lines) if "Window" in ln]
+    aggs = [i for i, ln in enumerate(lines) if "HashAggregate" in ln]
+    joins = [ln for ln in lines if "Join" in ln]
+    if name == "energy_drift":
+        assert wins == [] and joins
+        return
+    assert wins and aggs and max(aggs) > max(wins), "\n".join(lines)
+    assert joins == []
+
+
+def test_split_predicate_lives_only_in_is_ref():
+    """The reference/monitoring split is ONE predicate, drift._is_ref:
+    no other code in operators/ builds the split literal itself."""
+    import ast
+
+    root = pathlib.Path(z_rad_spark.__file__).parent / "operators"
+    hits = []
+    for p in sorted(root.glob("*.py")):
+        tree = ast.parse(p.read_text())
+        for top in tree.body:
+            if isinstance(top, ast.FunctionDef) and (p.name, top.name) == ("drift.py", "_is_ref"):
+                continue
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "lit"
+                    and any(isinstance(a, ast.Name) and a.id == "split_ts" for a in node.args)
+                ):
+                    hits.append(f"{p.name}:{node.lineno}")
+    assert hits == []
 
 
 def test_mi_and_woe_are_single_pass_aggregates(spark):

@@ -231,6 +231,32 @@ def test_ks_drift_matches_manual(spark):
         assert abs(got.loc[role, "ks"] - ks) < 1e-12
 
 
+def test_two_class_ecdf_hand_computed(spark):
+    """The shared histogram: per-(key, value) class counts, running sums
+    in value order, per-key totals and the next value, with a NULL flag
+    counted in neither class and a NULL value kept as its own (first)
+    row."""
+    from z_rad_spark.operators.drift import two_class_ecdf
+
+    rows = [("x", 2.0, True), ("x", 1.0, False), ("x", 2.0, False), ("x", 2.0, None),
+            ("x", 5.0, True), ("x", None, True), ("y", 3.0, False)]
+    df = spark.createDataFrame(rows, "k string, v double, f boolean")
+    got = [
+        tuple(r)
+        for r in two_class_ecdf(df, F.col("v"), F.col("f"), ["k"]).orderBy("k", "_val").collect()
+    ]
+    # (k, _val, _a, _b, _ca, _cb, _na, _nb, _next)
+    assert got == [
+        ("x", None, 1, 0, 1, 0, 3, 2, 1.0),
+        ("x", 1.0, 0, 1, 1, 1, 3, 2, 2.0),
+        ("x", 2.0, 1, 1, 2, 2, 3, 2, 5.0),
+        ("x", 5.0, 1, 0, 3, 2, 3, 2, None),
+        ("y", 3.0, 0, 1, 0, 1, 0, 1, None),
+    ]
+    keyless = two_class_ecdf(df.where("k = 'x'"), F.col("v"), F.col("f"))
+    assert [tuple(r) for r in keyless.orderBy("_val").collect()] == [g[1:] for g in got[:4]]
+
+
 def test_ks_drift_empty_side_is_null(spark):
     from z_rad_spark.operators.drift import ks_drift
 

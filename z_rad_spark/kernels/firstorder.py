@@ -406,13 +406,3 @@ def hist_features(grey: np.ndarray) -> dict:
 def ivh_features(ivh_arr: np.ndarray, lo: float, hi: float, step: float) -> dict:
     """ivh_batch of one segment."""
     return _single(IVH_NAMES, ivh_arr, lambda S: ivh_batch(S, np.array([lo]), np.array([hi]), step))
-
-
-def local_features(full: np.ndarray, masked: np.ndarray, radius: int) -> dict:
-    """local_batch of one segment."""
-    if np.isnan(masked).all():
-        return dict.fromkeys(LOCAL_NAMES, np.nan)
-    n = full.size
-    out = local_batch(full, masked, np.zeros(n, dtype=np.int64), np.zeros(1, np.int64),
-                      np.array([n]), np.array([np.nanmax(masked)]), radius)
-    return {k: float(v[0]) for k, v in out.items()}

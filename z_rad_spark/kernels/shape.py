@@ -92,15 +92,6 @@ def shape_batch(ts_us, eligible, session, role_codes, tool_mask, masked_signal, 
         }
 
 
-def shape_features(ts_us, eligible, session, role_codes, tool_mask, masked_signal) -> dict:
-    """shape_batch of one segment."""
-    if ts_us.size == 0:
-        return {k: np.nan for k in SHAPE_NAMES}
-    seg = np.zeros(ts_us.size, dtype=np.int64)
-    out = shape_batch(ts_us, eligible, session, role_codes, tool_mask, masked_signal, seg, 1)
-    return {k: float(v[0]) for k, v in out.items()}
-
-
 def moran_geary(ts_us, masked_signal, max_n: int = 2000) -> dict:
     """Moran's I and Geary's C with 1/|dt| weights over all finite pairs.
 

@@ -236,11 +236,9 @@ def horizon_features(
     (conversation, cutoff) with at least one pre-cutoff turn.
     """
     h1, h6, h24 = (int(h) for h in horizons)
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
+    grid = cutoff_grid(spark, cutoffs)
     x = F.col(signal_col).cast("long")
-    j = df.crossJoin(F.broadcast(grid)).where(
+    j = expand_cutoffs(df, grid).where(
         F.col("ts").cast("timestamp") <= F.col("as_of")
     )
     # exact integer microsecond age — no truncating seconds cast
@@ -293,10 +291,8 @@ def recency_features(
     Output: (conv_id, as_of, sec_since_any double, sec_since_<role>
     double ...), one row per (conversation, cutoff) with history.
     """
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
-    j = df.crossJoin(F.broadcast(grid)).where(
+    grid = cutoff_grid(spark, cutoffs)
+    j = expand_cutoffs(df, grid).where(
         F.col("ts").cast("timestamp") <= F.col("as_of")
     )
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -348,15 +344,11 @@ def trend_asof(
     intercept, r2 doubles — NULL when n < 2 or variance degenerates).
     """
     d19 = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
+    grid = cutoff_grid(spark, cutoffs)
     x = F.col("turn_idx").cast("long")
     y = F.col(signal_col).cast("long")
-    j = (
-        df.where(y.isNotNull())
-        .crossJoin(F.broadcast(grid))
-        .where(F.col("ts").cast("timestamp") <= F.col("as_of"))
+    j = expand_cutoffs(df.where(y.isNotNull()), grid).where(
+        F.col("ts").cast("timestamp") <= F.col("as_of")
     )
     g = j.groupBy("conv_id", "as_of").agg(
         F.count("*").cast("long").alias("n"),
@@ -417,9 +409,7 @@ def sessions_asof(
     sec_in_session double), one row per (conversation, cutoff) with
     history.
     """
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
+    grid = cutoff_grid(spark, cutoffs)
     w = conv_window()
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     marked = df.select(
@@ -436,7 +426,7 @@ def sessions_asof(
             | ((F.col("_us") - F.col("_prev")) > int(gap_seconds) * 1_000_000)
         ).alias("_boundary"),
     )
-    j = marked.crossJoin(F.broadcast(grid)).where(F.col("ts") <= F.col("as_of"))
+    j = expand_cutoffs(marked, grid).where(F.col("ts") <= F.col("as_of"))
     g = j.groupBy("conv_id", "as_of").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum(F.when(F.col("_boundary"), 1).otherwise(0))
@@ -479,10 +469,8 @@ def state_matrix(
     Output: (conv_id, as_of, last_sig_<role> double ...), one row per
     (conversation, cutoff) with history.
     """
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
-    j = df.crossJoin(F.broadcast(grid)).where(
+    grid = cutoff_grid(spark, cutoffs)
+    j = expand_cutoffs(df, grid).where(
         F.col("ts").cast("timestamp") <= F.col("as_of")
     )
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -529,10 +517,8 @@ def distinct_asof(
     here). Output: (conv_id, as_of, n_turns long, n_roles long,
     n_tools long).
     """
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
-    j = df.crossJoin(F.broadcast(grid)).where(
+    grid = cutoff_grid(spark, cutoffs)
+    j = expand_cutoffs(df, grid).where(
         F.col("ts").cast("timestamp") <= F.col("as_of")
     )
     return j.groupBy("conv_id", "as_of").agg(
@@ -564,9 +550,7 @@ def answer_rate_asof(
     answer_rate double — NULL when no user turns yet), one row per
     (conversation, cutoff) with history.
     """
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
+    grid = cutoff_grid(spark, cutoffs)
     w = conv_window()
     marked = df.select(
         "conv_id",
@@ -575,7 +559,7 @@ def answer_rate_asof(
         F.lead("role", 1).over(w).alias("_nrole"),
         F.lead(F.col("ts").cast("timestamp"), 1).over(w).alias("_nts"),
     )
-    j = marked.crossJoin(F.broadcast(grid)).where(F.col("ts") <= F.col("as_of"))
+    j = expand_cutoffs(marked, grid).where(F.col("ts") <= F.col("as_of"))
     is_user = F.col("role") == "user"
     answered = (
         is_user
@@ -620,14 +604,10 @@ def quantile_state_asof(
     compacted frame. Output: (conv_id, as_of, n long, p25, p50, p75
     doubles), one row per (conversation, cutoff) with history.
     """
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
+    grid = cutoff_grid(spark, cutoffs)
     x = F.col(signal_col).cast("double")
-    j = (
-        df.where(x.isNotNull())
-        .crossJoin(F.broadcast(grid))
-        .where(F.col("ts").cast("timestamp") <= F.col("as_of"))
+    j = expand_cutoffs(df.where(x.isNotNull()), grid).where(
+        F.col("ts").cast("timestamp") <= F.col("as_of")
     )
     hist = j.groupBy("conv_id", "as_of", x.alias("_v")).agg(
         F.count("*").cast("long").alias("_m")
@@ -674,10 +654,8 @@ def role_mix_asof(
     Determinism: exact conditional counts, one division per share.
     Output: (conv_id, as_of, n long, share_<role> double ...).
     """
-    grid = spark.createDataFrame(
-        [(c,) for c in cutoffs], "as_of string"
-    ).select(F.col("as_of").cast("timestamp").alias("as_of"))
-    j = df.crossJoin(F.broadcast(grid)).where(
+    grid = cutoff_grid(spark, cutoffs)
+    j = expand_cutoffs(df, grid).where(
         F.col("ts").cast("timestamp") <= F.col("as_of")
     )
     aggs = [F.count("*").cast("long").alias("n")]

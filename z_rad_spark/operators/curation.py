@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .drift import _is_ref
+
 
 def _toks(text_col: str) -> F.Column:
     """Whitespace tokens of the lowercased, trimmed text (the same
@@ -1070,16 +1072,19 @@ def temporal_split(
 
     Output: input columns + fold string.
     """
-    split = F.lit(split_ts).cast("timestamp")
-    ts = F.col("ts").cast("timestamp")
     h_us = int(horizon_seconds * 1_000_000)
     e_us = int(embargo_seconds * 1_000_000)
-    ts_us = F.unix_micros(ts)
-    split_us = F.unix_micros(split)
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+
+    def reaches_test(lead_us: int):
+        # ts + lead > split_ts in integer micros, i.e. NOT (ts + lead - 1us
+        # < split_ts): the complement of the drift battery's split predicate
+        return ~_is_ref(split_ts, F.timestamp_micros(ts_us + F.lit(lead_us - 1)))
+
     fold = (
-        F.when(ts >= split, "test")
-        .when(ts_us + F.lit(h_us) > split_us, "purged")
-        .when(ts_us + F.lit(h_us + e_us) > split_us, "embargo")
+        F.when(~_is_ref(split_ts), "test")
+        .when(reaches_test(h_us), "purged")
+        .when(reaches_test(h_us + e_us), "embargo")
         .otherwise("train")
     )
     return df.withColumn("fold", fold)

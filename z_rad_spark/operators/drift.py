@@ -22,16 +22,152 @@ other per-conversation operator in the engine rides.
 For integer-valued signals and a dyadic-rational target+slack every
 intermediate is exact in binary floating point, so the SQL oracle
 replays alarms bit-for-bit.
+
+The distribution-shift battery splits rows into a reference and a
+monitoring window with ONE predicate, :func:`_is_ref` (``ts <
+split_ts``), and its rank and ECDF tests (KS, Kuiper, CvM, W1,
+Mann-Whitney, Anderson-Darling, Ansari-Bradley, energy, ROC AUC,
+Cliff's delta, score KS) all read ONE compacted two-class value
+histogram, :func:`two_class_ecdf`: a map-side-combined groupBy on
+(keys, value) with the per-class counts, their running sums in value
+order, their per-partition totals and the next value. Its contract is exactness —
+every count, count-below (running sum minus the row's own count) and
+pooled count (the two classes added) is an integer expression of those
+columns, so each test's only float work is its own fixed chain of
+single IEEE operations and the DuckDB oracles replay it bit-for-bit.
+The binned scores (PSI, JS, and streaming PSI) share one add-one
+smoothed bin-count aggregate and per-bin term in the same way.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .skew import ORDER as _ORDER, conv_window
+
+
+def _is_ref(split_ts: str, ts: Column | None = None) -> Column:
+    """The reference-window predicate ``ts < split_ts`` every split test
+    shares (``ts`` defaults to the turn timestamp). NULL for a NULL ts,
+    so such a row counts in neither window."""
+    if ts is None:
+        ts = F.col("ts")
+    return ts.cast("timestamp") < F.lit(split_ts).cast("timestamp")
+
+
+def two_class_ecdf(df: DataFrame, value: Column, is_a: Column, keys=()) -> DataFrame:
+    """The compacted two-class value histogram: one map-side-combined
+    ``groupBy(*keys, value)`` with the class counts ``_a`` (``is_a``
+    true) and ``_b`` (false; a NULL ``is_a`` counts in neither), their
+    running sums ``_ca``/``_cb`` (value ascending, ROWS UNBOUNDED
+    PRECEDING to CURRENT ROW) and their whole-partition sums
+    ``_na``/``_nb`` — all exact longs — plus ``_next``, the next larger
+    value (NULL on the last), the width of each ECDF step. It filters
+    nothing: each caller drops its own NULL values or flags first.
+    Windows whose outputs a caller never reads are pruned from the plan.
+
+    Output: (*keys, _val, _a, _b, _ca, _cb, _na, _nb, _next).
+    """
+    keys = list(keys)
+    order = Window.partitionBy(*keys).orderBy("_val")
+    run = order.rowsBetween(Window.unboundedPreceding, 0)
+    # keyed totals take the bare partition; a keyless frame is one sorted
+    # partition already, so its totals share the running sort's window
+    whole = (
+        Window.partitionBy(*keys)
+        if keys
+        else order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    hist = df.groupBy(*keys, value.alias("_val")).agg(
+        F.count(F.when(is_a, 1)).alias("_a"),
+        F.count(F.when(~is_a, 1)).alias("_b"),
+    )
+    return hist.select(
+        *keys,
+        "_val",
+        "_a",
+        "_b",
+        F.sum("_a").over(run).alias("_ca"),
+        F.sum("_b").over(run).alias("_cb"),
+        F.sum("_a").over(whole).alias("_na"),
+        F.sum("_b").over(whole).alias("_nb"),
+        F.lead("_val").over(order).alias("_next"),
+    )
+
+
+def _ecdf_gap() -> Column:
+    """F_a(v) - F_b(v) on a two_class_ecdf frame: two divisions and one
+    subtraction of exact counts."""
+    return F.col("_ca").cast("double") / F.col("_na").cast("double") - F.col(
+        "_cb"
+    ).cast("double") / F.col("_nb").cast("double")
+
+
+def _mann_whitney(h: DataFrame, keys, n_a: str, n_b: str) -> DataFrame:
+    """Mann-Whitney U of class a over a two_class_ecdf frame, with AUC =
+    U / (n_a n_b). The midrank sum is kept as the exact long 2R: a tie
+    block of t = _a + _b values above cb pooled ranks holds midrank
+    cb + (t+1)/2, so class a's doubled share is _a (2 cb + t + 1). U is
+    then a multiple of 0.5 and AUC one division — no float summation.
+
+    Output: (*keys, n_a, n_b, u, auc); u and auc NULL when a class is
+    empty."""
+    t = F.col("_a") + F.col("_b")
+    below = F.col("_ca") + F.col("_cb") - t
+    g = h.groupBy(*keys).agg(
+        F.sum("_a").cast("long").alias(n_a),
+        F.sum("_b").cast("long").alias(n_b),
+        F.sum(F.col("_a") * (F.lit(2) * below + t + F.lit(1))).cast("long").alias("_two_r"),
+    )
+    na, nb = F.col(n_a).cast("double"), F.col(n_b).cast("double")
+    u = (F.col("_two_r").cast("double") - na * (na + F.lit(1.0))) / F.lit(2.0)
+    both = (F.col(n_a) > 0) & (F.col(n_b) > 0)
+    return g.select(
+        *keys, n_a, n_b, F.when(both, u).alias("u"), F.when(both, u / (na * nb)).alias("auc")
+    )
+
+
+def psi_term(p: Column, q: Column) -> Column:
+    """One bin's Population Stability Index term, (p - q) ln(p / q)."""
+    return (p - q) * F.log(p / q)
+
+
+def _js_term(p: Column, q: Column) -> Column:
+    m = (p + q) / F.lit(2.0)
+    return F.lit(0.5) * p * F.log(p / m) + F.lit(0.5) * q * F.log(q / m)
+
+
+def _binned_drift(df, split_ts, signal_col, n_bins, group_col, term, name) -> DataFrame:
+    """The binned-score aggregate psi_drift and js_drift share: ONE
+    map-side partial aggregation of the per-window counts and all
+    2*n_bins conditional counts over the integer bins 1..n_bins (no bin
+    explode, no window), add-one (Laplace) smoothed so every bin mass is
+    positive, and ``name`` = the FIXED-ORDER chain term_1 + ... + term_B
+    of ``term(p_b, q_b)``.
+
+    Output: (group_col, n_ref long, n_cur long, the other counts, name).
+    """
+    x = F.col(signal_col).cast("int")
+    is_ref = _is_ref(split_ts)
+    aggs = [
+        F.count(F.when(is_ref, 1)).alias("n_ref"),
+        F.count(F.when(~is_ref, 1)).alias("n_cur"),
+    ]
+    for b in range(1, n_bins + 1):
+        aggs.append(F.count(F.when(is_ref & (x == b), 1)).alias(f"_r{b}"))
+        aggs.append(F.count(F.when(~is_ref & (x == b), 1)).alias(f"_c{b}"))
+    g = df.groupBy(group_col).agg(*aggs)
+    nr = (F.col("n_ref") + F.lit(n_bins)).cast("double")
+    nc = (F.col("n_cur") + F.lit(n_bins)).cast("double")
+    score = None
+    for b in range(1, n_bins + 1):
+        p = (F.col(f"_r{b}") + F.lit(1)).cast("double") / nr
+        q = (F.col(f"_c{b}") + F.lit(1)).cast("double") / nc
+        score = term(p, q) if score is None else score + term(p, q)
+    return g.withColumn(name, score)
 
 
 def with_cusum(
@@ -111,31 +247,13 @@ def psi_drift(
     Output: (group_col, n_ref long, n_cur long, psi double, drift_band
     string).
     """
-    x = F.col(signal_col).cast("int")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    aggs = [
-        F.count(F.when(is_ref, 1)).alias("n_ref"),
-        F.count(F.when(~is_ref, 1)).alias("n_cur"),
-    ]
-    for b in range(1, n_bins + 1):
-        aggs.append(F.count(F.when(is_ref & (x == b), 1)).alias(f"_r{b}"))
-        aggs.append(F.count(F.when(~is_ref & (x == b), 1)).alias(f"_c{b}"))
-    g = df.groupBy(group_col).agg(*aggs)
-    nr = (F.col("n_ref") + F.lit(n_bins)).cast("double")
-    nc = (F.col("n_cur") + F.lit(n_bins)).cast("double")
-    psi = None
-    for b in range(1, n_bins + 1):
-        p = (F.col(f"_r{b}") + F.lit(1)).cast("double") / nr
-        q = (F.col(f"_c{b}") + F.lit(1)).cast("double") / nc
-        term = (p - q) * F.log(p / q)
-        psi = term if psi is None else psi + term
     band = (
         F.when(F.col("psi") < 0.1, "stable")
         .when(F.col("psi") < 0.25, "drifting")
         .otherwise("shifted")
     )
     return (
-        g.withColumn("psi", psi)
+        _binned_drift(df, split_ts, signal_col, n_bins, group_col, psi_term, "psi")
         .withColumn("drift_band", band)
         .select(group_col, "n_ref", "n_cur", "psi", "drift_band")
     )
@@ -169,36 +287,11 @@ def ks_drift(
     Output: (group_col, n_ref long, n_cur long, ks double).
     """
     x = F.col(signal_col).cast("double")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    per_val = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col), x.alias("_val"))
-        .agg(
-            F.count(F.when(is_ref, 1)).alias("_r"),
-            F.count(F.when(~is_ref, 1)).alias("_c"),
-        )
-    )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(group_col)
-    cum = per_val.select(
-        group_col,
-        F.sum("_r").over(w_cum).alias("_cr"),
-        F.sum("_c").over(w_cum).alias("_cc"),
-        F.sum("_r").over(w_all).alias("_nr"),
-        F.sum("_c").over(w_all).alias("_nc"),
-    )
-    d = F.abs(
-        F.col("_cr").cast("double") / F.col("_nr").cast("double")
-        - F.col("_cc").cast("double") / F.col("_nc").cast("double")
-    )
+    cum = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
     return cum.groupBy(group_col).agg(
-        F.max("_nr").cast("long").alias("n_ref"),
-        F.max("_nc").cast("long").alias("n_cur"),
-        F.max(F.when((F.col("_nr") > 0) & (F.col("_nc") > 0), d)).alias("ks"),
+        F.max("_na").cast("long").alias("n_ref"),
+        F.max("_nb").cast("long").alias("n_cur"),
+        F.max(F.when((F.col("_na") > 0) & (F.col("_nb") > 0), F.abs(_ecdf_gap()))).alias("ks"),
     )
 
 
@@ -232,10 +325,7 @@ def mi_association(
     Output: (win string 'ref'|'cur', n long, mi double, chi2 double).
     """
     x = F.col(signal_col).cast("int")
-    win = F.when(
-        F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp"),
-        F.lit("ref"),
-    ).otherwise(F.lit("cur"))
+    win = F.when(_is_ref(split_ts), F.lit("ref")).otherwise(F.lit("cur"))
     aggs = []
     for r in groups:
         for b in range(1, n_bins + 1):
@@ -293,14 +383,10 @@ def mw_drift(
         U   = R_ref - n_ref (n_ref + 1) / 2,  R_ref = midrank sum (ref)
         auc = U / (n_ref * n_cur)             (P(ref > cur) + P(=)/2)
 
-    Scale + determinism shape: identical to ks_drift — one map-side
-    partially-aggregated groupBy on (group, value) bounds every window
-    by the value cardinality, not the turn count; the midrank sum is
-    kept as the INTEGER 2*R (for a tie block of size t starting above
-    cb ranks, each member's midrank is cb + (t+1)/2, so r * (2*cb + t
-    + 1) is the block's exact doubled contribution), summed exactly in
-    long. U is then a multiple of 0.5 and auc a single division — no
-    float summation anywhere, so the SQL oracle replays both
+    Scale + determinism shape: identical to ks_drift — the
+    two_class_ecdf histogram bounds every window by the value
+    cardinality, not the turn count; the midrank sum is the exact long
+    2R of :func:`_mann_whitney`, so the SQL oracle replays both
     bit-for-bit. Long bound: 2R <= n(2n+1), exact for n < 2^31 per
     group; beyond that cast the doubled-rank term to decimal(38,0).
 
@@ -310,42 +396,8 @@ def mw_drift(
     Output: (group_col, n_ref long, n_cur long, u double, auc double).
     """
     x = F.col(signal_col).cast("double")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    per_val = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col), x.alias("_val"))
-        .agg(
-            F.count(F.when(is_ref, 1)).alias("_r"),
-            F.count(F.when(~is_ref, 1)).alias("_c"),
-        )
-        .withColumn("_t", F.col("_r") + F.col("_c"))
-    )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cb = (F.sum("_t").over(w_cum) - F.col("_t")).alias("_cb")
-    g = per_val.select(group_col, "_r", "_c", "_t", cb).groupBy(group_col).agg(
-        F.sum("_r").cast("long").alias("n_ref"),
-        F.sum("_c").cast("long").alias("n_cur"),
-        F.sum(F.col("_r") * (F.lit(2) * F.col("_cb") + F.col("_t") + F.lit(1)))
-        .cast("long")
-        .alias("_two_r"),
-    )
-    nr = F.col("n_ref").cast("double")
-    nc = F.col("n_cur").cast("double")
-    u = (
-        F.col("_two_r").cast("double") - nr * (nr + F.lit(1.0))
-    ) / F.lit(2.0)
-    both = (F.col("n_ref") > 0) & (F.col("n_cur") > 0)
-    return g.select(
-        group_col,
-        "n_ref",
-        "n_cur",
-        F.when(both, u).alias("u"),
-        F.when(both, u / (nr * nc)).alias("auc"),
-    )
+    h = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
+    return _mann_whitney(h, [group_col], "n_ref", "n_cur")
 
 
 def welch_drift(
@@ -382,7 +434,7 @@ def welch_drift(
     mean_cur double, t double, d double).
     """
     x = F.col(signal_col).cast("long")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
+    is_ref = _is_ref(split_ts)
     g = df.where(x.isNotNull()).groupBy(group_col).agg(
         F.count(F.when(is_ref, 1)).alias("_nr"),
         F.sum(F.when(is_ref, x)).alias("_sr"),
@@ -459,26 +511,7 @@ def js_drift(
     Output: (group_col, n_ref long, n_cur long, jsd double, js_dist
     double).
     """
-    x = F.col(signal_col).cast("int")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    aggs = [
-        F.count(F.when(is_ref, 1)).alias("n_ref"),
-        F.count(F.when(~is_ref, 1)).alias("n_cur"),
-    ]
-    for b in range(1, n_bins + 1):
-        aggs.append(F.count(F.when(is_ref & (x == b), 1)).alias(f"_r{b}"))
-        aggs.append(F.count(F.when(~is_ref & (x == b), 1)).alias(f"_c{b}"))
-    g = df.groupBy(group_col).agg(*aggs)
-    nr = (F.col("n_ref") + F.lit(n_bins)).cast("double")
-    nc = (F.col("n_cur") + F.lit(n_bins)).cast("double")
-    jsd = None
-    for b in range(1, n_bins + 1):
-        p = (F.col(f"_r{b}") + F.lit(1)).cast("double") / nr
-        q = (F.col(f"_c{b}") + F.lit(1)).cast("double") / nc
-        m = (p + q) / F.lit(2.0)
-        term = F.lit(0.5) * p * F.log(p / m) + F.lit(0.5) * q * F.log(q / m)
-        jsd = term if jsd is None else jsd + term
-    out = g.withColumn("jsd", jsd)
+    out = _binned_drift(df, split_ts, signal_col, n_bins, group_col, _js_term, "jsd")
     return out.select(
         group_col,
         "n_ref",
@@ -523,46 +556,22 @@ def w1_drift(
     Output: (group_col, n_ref long, n_cur long, w1 double).
     """
     x = F.col(signal_col).cast("long")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    per_val = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col), x.alias("_val"))
-        .agg(
-            F.count(F.when(is_ref, 1)).alias("_r"),
-            F.count(F.when(~is_ref, 1)).alias("_c"),
-        )
-    )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(group_col)
-    w_seq = Window.partitionBy(group_col).orderBy("_val")
-    cum = per_val.select(
-        group_col,
-        F.col("_val"),
-        F.sum("_r").over(w_cum).alias("_cr"),
-        F.sum("_c").over(w_cum).alias("_cc"),
-        F.sum("_r").over(w_all).alias("_nr"),
-        F.sum("_c").over(w_all).alias("_nc"),
-        (F.lead("_val").over(w_seq) - F.col("_val")).alias("_gap"),
-    )
+    cum = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
     # decimal sizing: counts as DECIMAL(14,0) and gaps as DECIMAL(4,0)
     # keep every product within Spark's exact 38-digit cap
     # (14+14+1 = 29-digit cross products, +4+1 = 34 after the gap) —
     # exact for window counts up to 1e14 per side, vs ~3e9 for int64
     num = F.abs(
-        F.col("_cr").cast("decimal(14,0)") * F.col("_nc").cast("decimal(14,0)")
-        - F.col("_cc").cast("decimal(14,0)") * F.col("_nr").cast("decimal(14,0)")
-    ) * F.col("_gap").cast("decimal(4,0)")
+        F.col("_ca").cast("decimal(14,0)") * F.col("_nb").cast("decimal(14,0)")
+        - F.col("_cb").cast("decimal(14,0)") * F.col("_na").cast("decimal(14,0)")
+    ) * (F.col("_next") - F.col("_val")).cast("decimal(4,0)")
     return cum.groupBy(group_col).agg(
-        F.max("_nr").cast("long").alias("n_ref"),
-        F.max("_nc").cast("long").alias("n_cur"),
+        F.max("_na").cast("long").alias("n_ref"),
+        F.max("_nb").cast("long").alias("n_cur"),
         F.when(
-            (F.max("_nr") > 0) & (F.max("_nc") > 0),
+            (F.max("_na") > 0) & (F.max("_nb") > 0),
             F.sum(num).cast("double")
-            / (F.max("_nr").cast("double") * F.max("_nc").cast("double")),
+            / (F.max("_na").cast("double") * F.max("_nb").cast("double")),
         ).alias("w1"),
     )
 
@@ -741,14 +750,11 @@ def auc_binary(
     rule). The classifier-eval twin of [[mw_drift]]: identical doubled-
     midrank long algebra, label-keyed instead of time-window-keyed.
 
-    Scale + determinism: one map-side partially-aggregated groupBy on
-    (group, score) compacts every group to its distinct score values
-    before any window — the rank cumsum runs over score CARDINALITY,
-    not row count (the compacted-histogram pattern; a naive per-row
-    global rank would single-partition the corpus). The midrank sum is
-    the exact long 2R (tie block of size t above cb ranks contributes
-    r*(2*cb + t + 1)); AUC is one division of exact operands — no float
-    summation, SQL-replayable bit-for-bit.
+    Scale + determinism: the two_class_ecdf histogram on (group,
+    score) compacts every group to its distinct score values before any
+    window — the rank cumsum runs over score CARDINALITY, not row count
+    (a naive per-row global rank would single-partition the corpus) —
+    and :func:`_mann_whitney` reduces it exactly, as for mw_drift.
 
     Groups with no positives or no negatives emit auc = NULL.
 
@@ -756,30 +762,8 @@ def auc_binary(
     keys = [group_col] if group_col else []
     s = F.col(score_col).cast("double")
     is_pos = F.col(label_col).cast("int") == 1
-    per_val = (
-        df.where(s.isNotNull())
-        .groupBy(*keys, s.alias("_val"))
-        .agg(
-            F.count(F.when(is_pos, 1)).alias("_p"),
-            F.count(F.when(~is_pos, 1)).alias("_n"),
-        )
-        .withColumn("_t", F.col("_p") + F.col("_n"))
-    )
-    w_cum = (
-        Window.partitionBy(*keys).orderBy("_val").rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cb = (F.sum("_t").over(w_cum) - F.col("_t")).alias("_cb")
-    g = per_val.select(*keys, "_p", "_n", "_t", cb).groupBy(*keys).agg(
-        F.sum("_p").cast("long").alias("n_pos"),
-        F.sum("_n").cast("long").alias("n_neg"),
-        F.sum(F.col("_p") * (F.lit(2) * F.col("_cb") + F.col("_t") + F.lit(1)))
-        .cast("long")
-        .alias("_two_r"),
-    )
-    np_, nn = F.col("n_pos").cast("double"), F.col("n_neg").cast("double")
-    u = (F.col("_two_r").cast("double") - np_ * (np_ + F.lit(1.0))) / F.lit(2.0)
-    auc = F.when((F.col("n_pos") > 0) & (F.col("n_neg") > 0), u / (np_ * nn))
-    return g.select(*keys, "n_pos", "n_neg", auc.alias("auc"))
+    h = two_class_ecdf(df.where(s.isNotNull()), s, is_pos, keys)
+    return _mann_whitney(h, keys, "n_pos", "n_neg").drop("u")
 
 
 def kruskal_wallis(
@@ -1182,37 +1166,21 @@ def ad_drift(
     or every value ties).
     """
     x = F.col(signal_col).cast("double")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    per_val = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col), x.alias("_val"))
-        .agg(
-            F.count(F.when(is_ref, 1)).cast("long").alias("_r"),
-            F.count(F.when(~is_ref, 1)).cast("long").alias("_c"),
-        )
-        .withColumn("_l", F.col("_r") + F.col("_c"))
-    )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    lv = per_val.select(
-        group_col,
+    h = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
+    l = F.col("_a") + F.col("_b")
+    block = F.struct(
         "_val",
-        "_r",
-        "_c",
-        "_l",
-        (F.sum("_l").over(w_cum) - F.col("_l")).cast("long").alias("_lb"),
-        (F.sum("_r").over(w_cum) - F.col("_r")).cast("long").alias("_rb"),
+        "_a",
+        "_b",
+        l.alias("_l"),
+        (F.col("_ca") + F.col("_cb") - l).alias("_lb"),
+        (F.col("_ca") - F.col("_a")).alias("_rb"),
     )
-    g = lv.groupBy(group_col).agg(
-        F.sum("_r").cast("long").alias("n_ref"),
-        F.sum("_c").cast("long").alias("n_cur"),
+    g = h.groupBy(group_col).agg(
+        F.sum("_a").cast("long").alias("n_ref"),
+        F.sum("_b").cast("long").alias("n_cur"),
         F.count("*").cast("long").alias("n_blocks"),
-        F.sort_array(
-            F.collect_list(F.struct("_val", "_r", "_c", "_l", "_lb", "_rb"))
-        ).alias("_bs"),
+        F.sort_array(F.collect_list(block)).alias("_bs"),
     )
     n1, n2 = F.col("n_ref").cast("double"), F.col("n_cur").cast("double")
     nd = n1 + n2
@@ -1231,11 +1199,11 @@ def ad_drift(
         return F.aggregate(F.col("_bs"), F.lit(0.0), term)
 
     inner1 = _inner(
-        lambda e: e["_rb"].cast("double") + e["_r"].cast("double") / F.lit(2.0), n1
+        lambda e: e["_rb"].cast("double") + e["_a"].cast("double") / F.lit(2.0), n1
     )
     inner2 = _inner(
         lambda e: (e["_lb"] - e["_rb"]).cast("double")
-        + (e["_l"] - e["_r"]).cast("double") / F.lit(2.0),
+        + (e["_l"] - e["_a"]).cast("double") / F.lit(2.0),
         n2,
     )
     ok = (F.col("n_ref") > 0) & (F.col("n_cur") > 0) & (F.col("n_blocks") > 1)
@@ -1341,7 +1309,7 @@ def mcnemar(
     n_pre_only long, n_post_only long, n_neither long, chi2 double —
     NULL when no discordant entities).
     """
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
+    is_ref = _is_ref(split_ts)
     hit = F.col(type_col) == F.lit(event_filter)
     per_e = df.groupBy(entity_col).agg(
         (F.count(F.when(is_ref & hit, 1)) > 0).alias("_pre"),
@@ -1469,7 +1437,7 @@ def corr_drift(
     x = F.col(signal_col).cast("long")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     y = F.pmod(F.floor(us.cast("double") / F.lit(1000000.0)).cast("long"), F.lit(86400))
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
+    is_ref = _is_ref(split_ts)
     base = df.where(x.isNotNull()).select(
         F.col(group_col).alias("_g"), x.alias("_x"), y.alias("_y"), is_ref.alias("_r")
     )
@@ -1562,13 +1530,13 @@ def energy_drift(
     when either window is empty).
     """
     x = F.col(signal_col).cast("long")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
     pv = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col).alias("_g"), x.alias("_v"))
-        .agg(
-            F.count(F.when(is_ref, 1)).cast("long").alias("_r"),
-            F.count(F.when(~is_ref, 1)).cast("long").alias("_c"),
+        two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
+        .select(
+            F.col(group_col).alias("_g"),
+            F.col("_val").alias("_v"),
+            F.col("_a").alias("_r"),
+            F.col("_b").alias("_c"),
         )
         # the compacted histogram feeds BOTH sides of the pair grid and
         # the totals — truncate lineage so the full-data aggregate runs
@@ -1650,11 +1618,10 @@ def conformal_interval(
     either window is empty).
     """
     x = F.col(signal_col).cast("long")
-    split = F.lit(split_ts).cast("timestamp")
     base = df.where(F.col(signal_col).isNotNull()).select(
         F.col(group_col).alias("_g"),
         x.alias("_x"),
-        (F.col("ts").cast("timestamp") < split).alias("_ref"),
+        _is_ref(split_ts).alias("_ref"),
     )
     ref_stats = (
         base.where("_ref")
@@ -1771,30 +1738,12 @@ def cliffs_delta(
     """
     v = F.col(value_col).cast("long")
     is_a = F.col(flag_col).cast("boolean")
-    per_val = (
-        df.where(v.isNotNull() & is_a.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            F.count(F.when(is_a, 1)).cast("long").alias("_a"),
-            F.count(F.when(~is_a, 1)).cast("long").alias("_b"),
-        )
-    )
-    w_cum = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    c = per_val.select(
-        "_a",
-        "_b",
-        (F.sum("_b").over(w_cum) - F.col("_b")).cast("long").alias("_blo"),
-        F.sum("_b").over(w_cum).cast("long").alias("_ble"),
-        F.sum("_b").over(w_all).cast("long").alias("_nb"),
-    )
+    c = two_class_ecdf(df.where(v.isNotNull() & is_a.isNotNull()), v, is_a)
     g = c.groupBy().agg(
         F.sum("_a").cast("long").alias("n_a"),
         F.max("_nb").cast("long").alias("n_b"),
-        F.sum(F.col("_a") * F.col("_blo")).cast("long").alias("gt"),
-        F.sum(F.col("_a") * (F.col("_nb") - F.col("_ble"))).cast("long").alias("lt"),
+        F.sum(F.col("_a") * (F.col("_cb") - F.col("_b"))).cast("long").alias("gt"),
+        F.sum(F.col("_a") * (F.col("_nb") - F.col("_cb"))).cast("long").alias("lt"),
         F.sum(F.col("_a") * F.col("_b")).cast("long").alias("tie"),
     )
     na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
@@ -3652,35 +3601,12 @@ def kuiper_drift(
     v doubles).
     """
     x = F.col(signal_col).cast("double")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    per_val = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col), x.alias("_val"))
-        .agg(
-            F.count(F.when(is_ref, 1)).alias("_r"),
-            F.count(F.when(~is_ref, 1)).alias("_c"),
-        )
-    )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(group_col)
-    cum = per_val.select(
-        group_col,
-        F.sum("_r").over(w_cum).alias("_cr"),
-        F.sum("_c").over(w_cum).alias("_cc"),
-        F.sum("_r").over(w_all).alias("_nr"),
-        F.sum("_c").over(w_all).alias("_nc"),
-    )
-    ok = (F.col("_nr") > 0) & (F.col("_nc") > 0)
-    gap = F.col("_cr").cast("double") / F.col("_nr").cast("double") - F.col(
-        "_cc"
-    ).cast("double") / F.col("_nc").cast("double")
+    cum = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
+    ok = (F.col("_na") > 0) & (F.col("_nb") > 0)
+    gap = _ecdf_gap()
     agg = cum.groupBy(group_col).agg(
-        F.max("_nr").cast("long").alias("n_ref"),
-        F.max("_nc").cast("long").alias("n_cur"),
+        F.max("_na").cast("long").alias("n_ref"),
+        F.max("_nb").cast("long").alias("n_cur"),
         F.max(F.when(ok, gap)).alias("_dp"),
         F.max(F.when(ok, -gap)).alias("_dm"),
     )
@@ -3725,42 +3651,17 @@ def cvm_drift(
     (group_col, n_ref long, n_cur long, t double).
     """
     x = F.col(signal_col).cast("double")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    per_val = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col), x.alias("_val"))
-        .agg(
-            F.count(F.when(is_ref, 1)).alias("_r"),
-            F.count(F.when(~is_ref, 1)).alias("_c"),
-        )
-    )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(group_col)
-    cum = per_val.select(
-        group_col,
-        "_val",
-        (F.col("_r") + F.col("_c")).cast("long").alias("_w"),
-        F.sum("_r").over(w_cum).alias("_cr"),
-        F.sum("_c").over(w_cum).alias("_cc"),
-        F.sum("_r").over(w_all).alias("_nr"),
-        F.sum("_c").over(w_all).alias("_nc"),
-    )
-    gap = F.col("_cr").cast("double") / F.col("_nr").cast("double") - F.col(
-        "_cc"
-    ).cast("double") / F.col("_nc").cast("double")
-    term = F.col("_w").cast("double") * gap * gap
+    cum = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
+    gap = _ecdf_gap()
+    term = (F.col("_a") + F.col("_b")).cast("double") * gap * gap
     per = cum.select(
         group_col,
-        "_nr",
-        "_nc",
+        "_na",
+        "_nb",
         F.struct("_val", term.alias("_t")).alias("_e"),
     ).groupBy(group_col).agg(
-        F.max("_nr").cast("long").alias("n_ref"),
-        F.max("_nc").cast("long").alias("n_cur"),
+        F.max("_na").cast("long").alias("n_ref"),
+        F.max("_nb").cast("long").alias("n_cur"),
         F.sort_array(F.collect_list("_e")).alias("_es"),
     )
     s = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])
@@ -3885,60 +3786,39 @@ def ansari_bradley(
     """
     d19 = lambda c: c.cast("decimal(19,0)")  # noqa: E731
     x = F.col(signal_col).cast("double")
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
-    per_val = (
-        df.where(x.isNotNull())
-        .groupBy(F.col(group_col), x.alias("_val"))
-        .agg(
-            F.count(F.when(is_ref, 1)).cast("long").alias("_r"),
-            F.count(F.when(~is_ref, 1)).cast("long").alias("_c"),
-        )
-    )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(group_col)
-    cum = per_val.select(
-        group_col,
-        "_val",
-        (F.col("_r") + F.col("_c")).cast("long").alias("_w"),
-        "_r",
-        F.sum(F.col("_r") + F.col("_c")).over(w_cum).cast("long").alias("_b"),
-        F.sum("_r").over(w_all).cast("long").alias("_m"),
-        F.sum("_c").over(w_all).cast("long").alias("_nc"),
-    )
-    n_tot = F.col("_m") + F.col("_nc")
-    a = F.col("_b") - F.col("_w") + 1
+    cum = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
+    n_tot = F.col("_na") + F.col("_nb")
+    w = F.col("_a") + F.col("_b")
+    b = F.col("_ca") + F.col("_cb")  # the tie block holds the pooled ranks [a..b]
+    a = b - w + 1
     h = F.floor((n_tot + 1) / 2).cast("long")
-    lo = F.least(F.col("_b"), h)
+    lo = F.least(b, h)
     q = F.greatest(a, h + 1)
     p1 = F.when(
         a <= lo, d19(lo) * d19(lo + 1) - d19(a - 1) * d19(a)
     ).otherwise(F.lit(0).cast("decimal(38,0)"))
     p2 = F.when(
-        q <= F.col("_b"),
-        F.lit(2) * d19(n_tot + 1) * d19(F.col("_b") - q + 1)
-        - (d19(F.col("_b")) * d19(F.col("_b") + 1) - d19(q - 1) * d19(q)),
+        q <= b,
+        F.lit(2) * d19(n_tot + 1) * d19(b - q + 1)
+        - (d19(b) * d19(b + 1) - d19(q - 1) * d19(q)),
     ).otherwise(F.lit(0).cast("decimal(38,0)"))
     t2 = (p1 + p2).cast("decimal(38,0)")  # = 2 * sum of scores in block
     td = t2.cast("double") / F.lit(2.0)
-    wd = F.col("_w").cast("double")
+    wd = w.cast("double")
     per = cum.select(
         group_col,
-        "_m",
-        "_nc",
+        "_na",
+        "_nb",
         n_tot.alias("_n"),
         F.struct(
             "_val",
-            (F.col("_r").cast("double") * (td / wd)).alias("_ab"),
+            (F.col("_a").cast("double") * (td / wd)).alias("_ab"),
             td.alias("_sa"),
             ((td / wd) * (td / wd) * wd).alias("_sa2"),
         ).alias("_e"),
     ).groupBy(group_col).agg(
-        F.max("_m").alias("m"),
-        F.max("_nc").alias("nc"),
+        F.max("_na").alias("m"),
+        F.max("_nb").alias("nc"),
         F.max("_n").alias("nn"),
         F.sort_array(F.collect_list("_e")).alias("_es"),
     )
@@ -4398,7 +4278,7 @@ def token_js_drift(
     Output one row: (n_ref long, n_cur long, js double, js_norm
     double — JS / ln 2, in [0, 1] — NULL when a window is empty).
     """
-    is_ref = F.col("ts").cast("timestamp") < F.lit(split_ts).cast("timestamp")
+    is_ref = _is_ref(split_ts)
     tok = df.select(
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("_t"),
         is_ref.alias("_r"),

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .drift import two_class_ecdf
+
 
 def with_loo_target_encoding(
     df: DataFrame,
@@ -754,52 +756,35 @@ def gini_stump(
     n1_left, n_right, n1_right long, gini_root, gini_split, gain
     double).
     """
-    from pyspark.sql import Window
-
     x = F.col(feature_col).cast("long")
     y = F.col(label_col).cast("boolean")
-    hist = (
-        df.where(x.isNotNull() & y.isNotNull())
-        .groupBy(x.alias("_x"))
-        .agg(
-            F.count("*").cast("long").alias("_n"),
-            F.sum(F.when(y, 1).otherwise(0)).cast("long").alias("_n1"),
-        )
-    )
-    w = Window.orderBy("_x").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy("_x").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    c = hist.select(
-        "_x",
-        F.sum("_n").over(w).cast("long").alias("_nl"),
-        F.sum("_n1").over(w).cast("long").alias("_n1l"),
-        F.sum("_n").over(w_all).cast("long").alias("_nt"),
-        F.sum("_n1").over(w_all).cast("long").alias("_n1t"),
-        F.max("_x").over(w_all).alias("_xmax"),
-    ).where(F.col("_x") < F.col("_xmax"))
+    h = two_class_ecdf(df.where(x.isNotNull() & y.isNotNull()), x, y)
+    nl, n1l = F.col("_ca") + F.col("_cb"), F.col("_ca")
+    nt, n1t = F.col("_na") + F.col("_nb"), F.col("_na")
+    # every histogram row holds at least one row, so a value is below the
+    # largest exactly when the pooled running count is short of the total
+    c = h.where(nl < nt)
 
     def _gini(n1: F.Column, n: F.Column) -> F.Column:
         p1 = n1.cast("double") / n.cast("double")
         p0 = (n - n1).cast("double") / n.cast("double")
         return F.lit(1.0) - p1 * p1 - p0 * p0
 
-    nl, n1l = F.col("_nl"), F.col("_n1l")
-    nr = F.col("_nt") - nl
-    n1r = F.col("_n1t") - n1l
+    nr = nt - nl
+    n1r = n1t - n1l
     split = (
-        nl.cast("double") / F.col("_nt").cast("double") * _gini(n1l, nl)
-        + nr.cast("double") / F.col("_nt").cast("double") * _gini(n1r, nr)
+        nl.cast("double") / nt.cast("double") * _gini(n1l, nl)
+        + nr.cast("double") / nt.cast("double") * _gini(n1r, nr)
     )
     cand = c.select(
-        F.col("_x").alias("threshold"),
-        F.col("_nt").alias("n"),
-        F.col("_n1t").alias("n_pos"),
+        F.col("_val").alias("threshold"),
+        nt.alias("n"),
+        n1t.alias("n_pos"),
         nl.alias("n_left"),
         n1l.alias("n1_left"),
         nr.cast("long").alias("n_right"),
         n1r.cast("long").alias("n1_right"),
-        _gini(F.col("_n1t"), F.col("_nt")).alias("gini_root"),
+        _gini(n1t, nt).alias("gini_root"),
         split.alias("gini_split"),
     )
     best = cand.orderBy(F.col("gini_split").asc(), F.col("threshold").asc()).limit(1)
@@ -1093,32 +1078,17 @@ def score_ks(
     at_score double — NULL when either class is empty).
     """
     p6 = F.round(F.col(prob_col).cast("double"), 6)
-    y = F.col(label_col).cast("boolean")
-    hist = df.groupBy(p6.alias("_s")).agg(
-        F.sum(F.when(y, 1).otherwise(0)).cast("long").alias("_p"),
-        F.sum(F.when(~y, 1).otherwise(0)).cast("long").alias("_n"),
-    )
-    w_cum = Window.orderBy("_s").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy("_s").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "_s",
-        F.sum("_p").over(w_cum).cast("long").alias("_cp"),
-        F.sum("_n").over(w_cum).cast("long").alias("_cn"),
-        F.sum("_p").over(w_all).cast("long").alias("_P"),
-        F.sum("_n").over(w_all).cast("long").alias("_N"),
-    )
-    key = F.abs(F.col("_cp") * F.col("_N") - F.col("_cn") * F.col("_P"))
-    w_pick = Window.orderBy(key.desc(), F.asc("_s"))
+    cum = two_class_ecdf(df, p6, F.col(label_col).cast("boolean"))
+    key = F.abs(F.col("_ca") * F.col("_nb") - F.col("_cb") * F.col("_na"))
+    w_pick = Window.orderBy(key.desc(), F.asc("_val"))
     top = cum.withColumn("_rk", F.row_number().over(w_pick)).where(F.col("_rk") == 1)
-    ks = key.cast("double") / (F.col("_P").cast("double") * F.col("_N").cast("double"))
-    ok = (F.col("_P") > 0) & (F.col("_N") > 0)
+    ks = key.cast("double") / (F.col("_na").cast("double") * F.col("_nb").cast("double"))
+    ok = (F.col("_na") > 0) & (F.col("_nb") > 0)
     return top.select(
-        F.col("_P").alias("n_pos"),
-        F.col("_N").alias("n_neg"),
+        F.col("_na").alias("n_pos"),
+        F.col("_nb").alias("n_neg"),
         F.when(ok, ks).alias("ks"),
-        F.when(ok, F.col("_s")).alias("at_score"),
+        F.when(ok, F.col("_val")).alias("at_score"),
     )
 
 

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .operators.drift import psi_term
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -410,8 +412,7 @@ def streaming_psi(
     for b in range(1, n_bins + 1):
         p = F.lit(float(int(ref_counts[b - 1]) + 1)) / F.lit(ref_total)
         q = (F.col(f"_c{b}") + F.lit(1)).cast("double") / nc
-        term = (p - q) * F.log(p / q)
-        psi = term if psi is None else psi + term
+        psi = psi_term(p, q) if psi is None else psi + psi_term(p, q)
     band = (
         F.when(F.col("psi") < 0.1, "stable")
         .when(F.col("psi") < 0.25, "drifting")

@@ -7,10 +7,10 @@ Canonical input schema (BASELINE.json ``input_hint``)::
 
 Three sources are provided:
 
-* :func:`from_events` / :data:`DERIVE_TRANSCRIPTS_SQL` — a deterministic,
-  dialect-portable derivation of a transcripts table from the driver's
-  ``events`` test table, so the Spark engine and the DuckDB oracle compute
-  over byte-identical inputs.
+* :func:`from_events` — a deterministic, dialect-portable derivation of a
+  transcripts table from the driver's ``events`` test table, mirrored in
+  SQL by ``__spark_entry__.DUCK_T``, so the Spark engine and the DuckDB
+  oracle compute over byte-identical inputs.
 * :func:`synth_transcripts` — a seed-deterministic generator with
   Zipf-skewed conversation lengths (exercises salting), irregular ts gaps
   (exercises sessionization), and duplicate-ts ties (exercises the
@@ -42,34 +42,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), False),
     ]
 )
-
-# Deterministic events -> transcripts derivation. Written in the common
-# SQL subset of Spark SQL and DuckDB so both engines derive identical rows:
-# - CAST(x AS STRING), ||, REPEAT, TRIM, ABS, FLOOR, %, CASE, ROW_NUMBER
-#   behave identically in both dialects for these inputs.
-# - text token multiplicity = 1 + ABS(FLOOR(value)) % 9, so the default
-#   token-count signal is integer 1..9 and varied.
-DERIVE_TRANSCRIPTS_SQL = """
-SELECT
-  'c' || CAST(user_id AS STRING) AS conv_id,
-  CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-  CASE WHEN event_type = 'click' THEN 'user'
-       WHEN event_type = 'view' THEN 'user'
-       WHEN event_type = 'error' THEN 'system'
-       WHEN event_type = 'purchase' THEN 'tool'
-       ELSE 'assistant' END AS role,
-  TRIM(REPEAT(event_type || ' ', CAST(1 + ABS(CAST(FLOOR(value) AS INT)) % 9 AS INT))) AS text,
-  CASE WHEN event_type = 'purchase' THEN 'checkout'
-       WHEN event_type = 'signup' THEN 'register'
-       ELSE CAST(NULL AS STRING) END AS tool,
-  ts
-FROM events
-"""
-
-# Signal expression used by DuckDB oracles: provably equal to the engine's
-# token count (size(split(text,' '))) because text is built by REPEAT above.
-ORACLE_SIGNAL_SQL = "CAST(1 + ABS(CAST(FLOOR(value) AS INT)) % 9 AS DOUBLE)"
-
 
 def from_events(
     spark: SparkSession, events: DataFrame, token_signal: bool = False
