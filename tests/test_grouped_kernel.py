@@ -4,16 +4,22 @@ partitions: every conversation must reach ONE kernel call, whole, in the
 stable (ts, turn_idx) order — equal timestamps broken by turn_idx."""
 
 import datetime as dt
+import re
 import uuid
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import InheritableThread, TaskContext
 from pyspark.sql import types as T
 
+from z_rad_spark.config import FeatureConfig
+from z_rad_spark.extractor import extract_features
+from z_rad_spark.operators.dedup import dup_clusters
 from z_rad_spark.operators.encoding import isotonic_fit
 from z_rad_spark.operators.sessionize import with_time_decay_sum
-from z_rad_spark.operators.skew import bucket_count, map_conversations
+from z_rad_spark.operators.skew import bucket_count, conv_bucket, map_conversations
+from z_rad_spark.transcripts import synth_transcripts
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -41,30 +47,120 @@ def _frame(spark, pdf):
     return df.repartition(5)
 
 
-def test_every_conversation_reaches_one_kernel_call_sorted(spark):
-    pdf = _turns()
+def _calls(df):
+    """map_conversations with a kernel that reports, per conversation,
+    its call id, its task's partition id, its size and whether it came
+    whole in the stable order."""
     schema = T.StructType([
         T.StructField("conv_id", T.StringType()),
         T.StructField("call", T.StringType()),
+        T.StructField("task", T.IntegerType()),
         T.StructField("n", T.LongType()),
         T.StructField("ordered", T.BooleanType()),
     ])
 
     def kernel(cols, starts, ends):
-        call = uuid.uuid4().hex
+        call, task = uuid.uuid4().hex, TaskContext.get().partitionId()
         rows = []
         for s, e in zip(starts, ends):
             d_ts, d_idx = np.diff(cols["ts"][s:e]), np.diff(cols["turn_idx"][s:e])
-            rows.append({"conv_id": cols["conv_id"][s], "call": call, "n": int(e - s),
+            rows.append({"conv_id": cols["conv_id"][s], "call": call, "task": task,
+                         "n": int(e - s),
                          "ordered": bool(np.all((d_ts > 0) | ((d_ts == 0) & (d_idx > 0))))})
         return rows
 
-    out = map_conversations(_frame(spark, pdf), kernel, schema).toPandas()
+    return map_conversations(df, kernel, schema)
+
+
+def _buckets(spark, out):
+    """conv_id -> its hash bucket, from the engine's bucket expression."""
+    ids = spark.createDataFrame(pd.DataFrame({"conv_id": sorted(set(out["conv_id"]))}))
+    rows = ids.select("conv_id", conv_bucket(bucket_count(spark)).alias("b")).collect()
+    return {r["conv_id"]: r["b"] for r in rows}
+
+
+def test_one_exchange_onto_one_task_per_core_slot(spark):
+    """The buckets are packed onto min(bucket_count, defaultParallelism)
+    tasks by ONE exchange; no grouped map runs per bucket."""
+    df = spark.createDataFrame(_turns(), "conv_id string, turn_idx int, ts timestamp, signal double")
+    plan = _calls(df)._jdf.queryExecution().executedPlan().toString()
+    tasks = min(bucket_count(spark), spark.sparkContext.defaultParallelism)
+    assert plan.count("Exchange") == 1
+    assert re.search(r"Exchange \S+\(direct_shuffle_partition_id\(bucket#\d+\), (\d+)\)",
+                     plan).group(1) == str(tasks)
+    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" in plan
+
+
+def test_every_conversation_reaches_one_kernel_call_sorted(spark):
+    """With 7-row Arrow batches a bucket spans many batches: each
+    conversation still reaches one call, whole and sorted, and each
+    non-empty bucket is exactly one call."""
+    pdf = _turns()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        out = _calls(_frame(spark, pdf)).toPandas()
+    finally:
+        spark.conf.set(key, old)
     # one row per conversation: a split conversation would appear twice
     assert sorted(out["conv_id"]) == sorted(pdf["conv_id"].unique())
     assert dict(zip(out["conv_id"], out["n"])) == pdf.groupby("conv_id").size().to_dict()
     assert out["ordered"].all()
-    assert out["call"].nunique() <= bucket_count(spark)
+    bucket = out["conv_id"].map(_buckets(spark, out))
+    assert out["call"].nunique() == bucket.nunique()
+    assert (bucket.groupby(out["call"]).nunique() == 1).all()
+
+
+def test_buckets_spread_evenly_over_tasks(spark):
+    """Bucket b runs in task b mod tasks, so the bucket counts of any two
+    tasks differ by at most one."""
+    pdf = _turns(seed=11, n_convs=200)  # every one of the buckets non-empty
+    out = _calls(_frame(spark, pdf)).toPandas()
+    tasks = min(bucket_count(spark), spark.sparkContext.defaultParallelism)
+    out["bucket"] = out["conv_id"].map(_buckets(spark, out))
+    assert out["bucket"].nunique() == bucket_count(spark)
+    assert (out["task"] == out["bucket"] % tasks).all()
+    per_task = out.groupby("task")["bucket"].nunique()
+    assert len(per_task) == tasks and per_task.max() - per_task.min() <= 1
+
+
+def test_extract_beside_dup_clusters_on_one_session(spark):
+    """Connected components on one thread and the extractor on another,
+    one session: the extract output equals a solo run, and its kernel
+    stage still runs one task per core slot."""
+    sc = spark.sparkContext
+    turns = synth_transcripts(spark, n_convs=12, mean_turns=20, seed=5)
+    cfg = FeatureConfig(eligible_roles=("user", "assistant", "tool"))
+    docs = spark.createDataFrame(
+        [(i, f"tok{i % 7} tok{i % 3} tok{i % 5} the and of common words here") for i in range(120)],
+        "doc_id long, text string",
+    )
+    results = {}
+
+    def run(name, f):
+        sc.setJobGroup(name, name)
+        results[name] = f()
+
+    def extract():
+        out = extract_features(turns, cfg, ["2024-01-01T12:00:00", "2024-01-20T00:00:00"])
+        return out.toPandas().sort_values(["conv_id", "as_of"]).reset_index(drop=True)
+
+    threads = [
+        InheritableThread(target=run, args=("cc", lambda: dup_clusters(docs).count())),
+        InheritableThread(target=run, args=("extract", extract)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert results["cc"] == dup_clusters(docs).count() > 0
+    pd.testing.assert_frame_equal(results["extract"], extract())
+    # the kernel stage is the result stage of the group's last job
+    tracker = sc.statusTracker()
+    last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup("extract")))
+    kernel_stage = tracker.getStageInfo(max(last_job.stageIds))
+    assert kernel_stage.numTasks == min(bucket_count(spark), sc.defaultParallelism)
 
 
 def _decay_reference(pdf, tau):

@@ -274,6 +274,50 @@ def test_ks_drift_empty_side_is_null(spark):
     assert pd.isna(got["ks"].iloc[0])
 
 
+def test_cvm_drift_empty_side_is_null(spark):
+    """A reference-only group gets t NULL instead of a division by zero;
+    a group with both windows keeps its score."""
+    from z_rad_spark.operators.drift import cvm_drift
+
+    pdf = pd.DataFrame(
+        {
+            "conv_id": "c0",
+            "turn_idx": range(6),
+            "ts": pd.to_datetime(["2024-01-01"] * 2 + ["2024-01-02"] * 2 + ["2024-01-01"] * 2),
+            "signal": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],
+            "role": ["user"] * 4 + ["tool"] * 2,
+        }
+    )
+    got = (
+        cvm_drift(spark.createDataFrame(pdf), split_ts="2024-01-01 12:00:00")
+        .toPandas()
+        .set_index("role")
+    )
+    assert (got.loc["tool", "n_ref"], got.loc["tool", "n_cur"]) == (2, 0)
+    assert pd.isna(got.loc["tool", "t"])
+    assert got.loc["user", "t"] > 0
+
+
+def test_mi_association_empty_window_and_null_ts(spark):
+    """A window with no row of ``groups`` gets n = 0 and NULL scores; a
+    NULL-ts row counts in neither window."""
+    from z_rad_spark.operators.drift import mi_association
+
+    pdf = pd.DataFrame(
+        {
+            "ts": pd.to_datetime(["2024-01-01"] * 3 + ["2024-01-02", "2024-01-02", None]),
+            "signal": [1.0, 2.0, 2.0, 3.0, 4.0, 5.0],
+            "role": ["user", "tool", "user", "bot", "bot", "user"],
+        }
+    )
+    df = spark.createDataFrame(pdf, "ts timestamp, signal double, role string")
+    got = mi_association(df, split_ts="2024-01-01 12:00:00").toPandas().set_index("win")
+    assert sorted(got.index) == ["cur", "ref"]
+    assert got.loc["ref", "n"] == 3 and got.loc["ref", "mi"] > 0
+    assert got.loc["cur", "n"] == 0
+    assert pd.isna(got.loc["cur", "mi"]) and pd.isna(got.loc["cur", "chi2"])
+
+
 def test_mi_association_matches_manual(spark):
     import math
 

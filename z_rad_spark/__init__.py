@@ -8,7 +8,9 @@ ts timestamp)``.
 
 Spark-first design: declarative DataFrame plans for everything relational
 (as-of joins, sessionization, lag/lead, backfill, dedup, similarity), and
-Arrow-vectorized ``applyInPandas`` kernels — never per-row Python UDFs —
+Arrow-vectorized NumPy kernels — never per-row Python UDFs — called
+once per hash bucket of conversations, the buckets packed onto one
+``mapInPandas`` task per core slot (operators/skew.map_conversations),
 for the per-entity feature families (first-order statistics, histogram,
 IVH, and GLCM/GLRLM/GLSZM/GLDZM/NGTDM/NGLDM texture analogues over the
 temporal axis).

@@ -5,8 +5,9 @@ Logical plan (all declarative until the single grouped-map kernel)::
     transcripts scan
       -> ts <= max(cutoffs) filter            (predicate pushdown to scan)
       -> signal + eligibility columns          (whole-stage codegen)
-      -> skew.map_conversations(kernel)        (hash buckets of conv_id: one
-                                               Arrow batch per bucket, each
+      -> skew.map_conversations(kernel)        (hash buckets of conv_id packed
+                                               onto one task per core slot:
+                                               one call per bucket, each
                                                conversation a sorted slice)
       -> wide feature row per (conv_id, as_of)
 
@@ -15,6 +16,10 @@ Scale notes
 * The shuffle key is a hash bucket of ``conv_id``, the one layout every
   grouped kernel in the engine shares (operators/skew.map_conversations):
   a conversation is never split, and one kernel call covers a bucket.
+  The buckets run on min(buckets, defaultParallelism) tasks, one per
+  core slot, so a Python task's fixed setup cost is paid per slot, not
+  per bucket; a task carries ceil(buckets / tasks) buckets one after
+  another, and the bucket still bounds the memory of one call.
 * One batched call per bucket: every (conversation, cutoff) prefix of
   the bucket is a segment (the cutoffs are nested prefixes of one sort),
   laid end to end, and each step — masking, resegmentation,

@@ -1,4 +1,6 @@
-"""Vectorized NumPy kernels executed inside applyInPandas (Arrow-batched).
+"""Vectorized NumPy kernels, called once per hash bucket of conversations
+by the grouped-kernel primitive operators/skew.map_conversations (one
+``mapInPandas`` task per core slot, Arrow-batched).
 
 These are the 1-D temporal analogues of Z-Rad's 3-D voxel kernels. Each
 module cites the reference formula it re-expresses. All kernels take the

@@ -321,11 +321,15 @@ def mi_association(
     (group, bin) grid with zero-count terms contributing exactly 0 — so
     the SQL oracle replays both scores bit-for-bit (same contract as
     psi_drift). Cells whose expected count is 0 contribute 0 to chi2.
+    Rows with a NULL ts count in neither window; a window that holds no
+    row of ``groups`` in the bins has n = 0 and mi = chi2 = NULL.
 
     Output: (win string 'ref'|'cur', n long, mi double, chi2 double).
     """
     x = F.col(signal_col).cast("int")
-    win = F.when(_is_ref(split_ts), F.lit("ref")).otherwise(F.lit("cur"))
+    is_ref = _is_ref(split_ts)
+    df = df.where(is_ref.isNotNull())
+    win = F.when(is_ref, F.lit("ref")).otherwise(F.lit("cur"))
     aggs = []
     for r in groups:
         for b in range(1, n_bins + 1):
@@ -345,7 +349,9 @@ def mi_association(
     n_tot = _chain([F.col(f"_n_{r}_{b}") for r in groups for b in range(1, n_bins + 1)])
     marg_r = {r: _chain([F.col(f"_n_{r}_{b}") for b in range(1, n_bins + 1)]) for r in groups}
     marg_b = {b: _chain([F.col(f"_n_{r}_{b}") for r in groups]) for b in range(1, n_bins + 1)}
-    N = n_tot.cast("double")
+    # an empty window (every count 0) divides by 1, never 0; its scores
+    # are nulled below
+    N = F.greatest(n_tot, F.lit(1)).cast("double")
     mi_terms, chi_terms = [], []
     for r in groups:
         for b in range(1, n_bins + 1):
@@ -359,12 +365,17 @@ def mi_association(
             chi_terms.append(
                 F.when(e > 0, (c - e) * (c - e) / e).otherwise(F.lit(0.0))
             )
-    return g.select(
+    out = g.select(
         "win",
         n_tot.cast("long").alias("n"),
         _chain(mi_terms).alias("mi"),
         _chain(chi_terms).alias("chi2"),
     )
+    # a separate projection: guarding the chains in place would keep their
+    # shared marginals out of subexpression elimination (codegen > 64 KB)
+    ok = F.col("n") > 0
+    return out.select("win", "n", F.when(ok, F.col("mi")).alias("mi"),
+                      F.when(ok, F.col("chi2")).alias("chi2"))
 
 
 def mw_drift(
@@ -3653,7 +3664,8 @@ def cvm_drift(
     x = F.col(signal_col).cast("double")
     cum = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
     gap = _ecdf_gap()
-    term = (F.col("_a") + F.col("_b")).cast("double") * gap * gap
+    ok = (F.col("_na") > 0) & (F.col("_nb") > 0)
+    term = F.when(ok, (F.col("_a") + F.col("_b")).cast("double") * gap * gap)
     per = cum.select(
         group_col,
         "_na",

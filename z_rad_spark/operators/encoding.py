@@ -554,7 +554,7 @@ def isotonic_fit(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     Algorithm: pool-adjacent-violators (PAVA), run per conversation
     inside the engine's one grouped-kernel primitive
     (skew.map_conversations: conversations are hash-bucketed so one
-    Arrow crossing serves many, never one window per conv). Each pooled
+    kernel call serves many, never one window per conv). Each pooled
     block keeps EXACT integer (sum, count) moments; violator comparisons use
     integer cross-multiplication (sum_a * cnt_b vs sum_b * cnt_a), so
     no float enters until each block's single final division.

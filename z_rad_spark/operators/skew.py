@@ -5,13 +5,13 @@ task, in the stable (ts, turn_idx) order. This module decides how that
 happens, once:
 
 1. ``map_conversations`` — the one grouped-kernel primitive. Rows go to
-   ``conv_bucket(n)`` hash buckets (``bucket_count`` sets n), each bucket
-   crosses the Arrow boundary ONCE, and the kernel gets the bucket's
-   columns sorted by (conv_id, ts, turn_idx) plus each conversation's
-   slice bounds. The flagship extractor, the decay-sum and isotonic
-   kernels and the distributed texture reducers all run on it, and
-   resumable runs (checkpoint.bucket_filter) split work by the same
-   bucket expression.
+   ``conv_bucket(n)`` hash buckets (``bucket_count`` sets n), the buckets
+   are packed onto one Python task per core slot, each bucket is ONE
+   kernel call, and the kernel gets the bucket's columns sorted by
+   (conv_id, ts, turn_idx) plus each conversation's slice bounds. The
+   flagship extractor, the decay-sum and isotonic kernels and the
+   distributed texture reducers all run on it, and resumable runs
+   (checkpoint.bucket_filter) split work by the same bucket expression.
 2. ``with_salt_bucket`` — for conversations too large for one task:
    split each conversation into ordinal buckets with a k-row overlap
    so lag-k pairs and runs spanning bucket borders are still observed
@@ -27,6 +27,8 @@ happens, once:
 """
 
 from __future__ import annotations
+
+import itertools
 
 import numpy as np
 import pandas as pd
@@ -50,9 +52,11 @@ def conv_bucket(n_buckets: int) -> Column:
 
 def bucket_count(spark: SparkSession) -> int:
     """Hash buckets for a grouped kernel: ``spark.z_rad_spark.extract.buckets``
-    when set, else 4x parallelism (at least 8) — enough granularity for
-    load balance without AQE, coarse enough that per-call overhead stays
-    amortized. On a real cluster, set the conf from the DATASET size, not
+    when set, else 4x parallelism (at least 8). The bucket is the unit of
+    one kernel call, so the count bounds the memory of a call; tasks are
+    a separate count (map_conversations packs the buckets onto one task
+    per core slot, which pays the per-task setup once per slot, not per
+    bucket). On a real cluster, set the conf from the DATASET size, not
     from whichever cluster runs the job: a fixed count across N and 4N
     executors keeps scaling comparisons and reruns apples-to-apples. The
     key keeps its extractor-era name because the bench and perfbench set it."""
@@ -68,11 +72,23 @@ def map_conversations(
     conversations; it returns the output columns (a dict of arrays or a
     list of row dicts) for ``schema``.
 
-    One Arrow crossing per bucket, not per conversation: at 10^8+
+    One kernel call per bucket, not per conversation: at 10^8+
     conversations a per-conversation grouped map is boundary-bound. The
-    bucket repartition has an explicit count (AQE never coalesces it, so
-    this CPU-bound stage is not serialized onto a few tasks), and hash
-    partitioning on ``bucket`` satisfies the groupBy: one exchange.
+    buckets are packed onto ``tasks = min(n, defaultParallelism)`` tasks,
+    one per core slot: ``repartitionById`` sends bucket b to task
+    b mod tasks (the bucket counts of two tasks differ by at most one),
+    ``sortWithinPartitions`` makes each bucket contiguous, and the
+    ``mapInPandas`` generator collects one bucket's Arrow batches (a
+    bucket may span several ``maxRecordsPerBatch`` batches) before its
+    call. A Python task has a fixed setup cost larger than a bucket's
+    math (the worker's per-task spark-files setup invalidates the import
+    caches, and on CPython 3.11 every zipimporter on the path then
+    re-reads its archive; the JVM side adds a Python runner and a
+    shuffle fetch per task), so it is paid once per slot. Scale
+    trade-off: a task carries ceil(n / tasks) buckets one after another,
+    and the memory bound per call — one bucket — does not change. The
+    count is explicit, so AQE never coalesces this CPU-bound stage onto
+    fewer tasks; the plan has one exchange.
 
     ``cols`` maps every input column to a NumPy array in the stable
     (conv_id, *order) order, ``ts`` as int64 epoch microseconds. conv_id
@@ -80,9 +96,10 @@ def map_conversations(
     cost), and np.lexsort is stable, so ties keep input order.
     Conversation ``i`` is rows ``starts[i]:ends[i]``."""
     n = bucket_count(df.sparkSession)
+    tasks = min(n, df.sparkSession.sparkContext.defaultParallelism)
     names = [f.name for f in schema.fields]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def call(pdf: pd.DataFrame) -> pd.DataFrame:
         cols = {c: pdf[c].to_numpy() for c in pdf.columns if c != "bucket"}
         if "ts" in cols:
             cols["ts"] = cols["ts"].astype("datetime64[us]").astype(np.int64)
@@ -95,8 +112,20 @@ def map_conversations(
         ends = np.concatenate((brk, [codes.size]))
         return pd.DataFrame(fn(cols, starts, ends), columns=names)
 
-    bucketed = df.withColumn("bucket", conv_bucket(n)).repartition(n, "bucket")
-    return bucketed.groupBy("bucket").applyInPandas(kernel, schema=schema)
+    def pieces(batches):
+        """Each Arrow batch cut where the (sorted) bucket changes."""
+        for pdf in batches:
+            b = pdf["bucket"].to_numpy()
+            cut = np.flatnonzero(np.diff(b, prepend=-1, append=-1))  # buckets are >= 0
+            for lo, hi in zip(cut[:-1], cut[1:]):
+                yield pdf.iloc[lo:hi]
+
+    def task(batches):
+        for _, same in itertools.groupby(pieces(batches), key=lambda p: p["bucket"].iat[0]):
+            yield call(pd.concat(list(same)))
+
+    bucketed = df.withColumn("bucket", conv_bucket(n)).repartitionById(tasks, "bucket")
+    return bucketed.sortWithinPartitions("bucket").mapInPandas(task, schema=schema)
 
 
 def conv_sizes(df: DataFrame) -> DataFrame:
