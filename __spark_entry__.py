@@ -5563,7 +5563,7 @@ def q_mahalanobis(spark, sf_dir):
     dim-ordered score folds — oracle-replayable."""
     from z_rad_spark.operators.similarity import mahalanobis_diag
 
-    out = mahalanobis_diag(_emb(spark, sf_dir))
+    out = mahalanobis_diag(_emb(spark, sf_dir, spread=False))
     return _r6(
         out.select(F.col("vec_id").cast("long"), "score", "max_dim_z"),
         ["score", "max_dim_z"],

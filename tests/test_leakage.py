@@ -142,3 +142,88 @@ def test_declarative_paths_zero_leakage(spark, pdf):
     got = run_all(poisoned)
     for k in base:
         pd.testing.assert_frame_equal(base[k], got[k], check_exact=True)
+
+
+# The declarative as-of paths take cutoffs as strings. The grid index of a
+# cutoff must follow its instant, not its text, and a repeated instant must
+# count once: "2024-01-10T00:00:00" sorts after "2024-01-10 12:00:00" as
+# text, and "2024-01-9" after "2024-01-10".
+_SPELLINGS = [
+    ["2024-01-10 12:00:00", "2024-01-10T00:00:00"],
+    ["2024-01-9 00:00:00", "2024-01-10 00:00:00"],
+]
+
+
+@pytest.fixture(scope="module")
+def synth(spark):
+    from z_rad_spark.transcripts import synth_transcripts, with_signal
+
+    return with_signal(synth_transcripts(spark)).cache()
+
+
+def _asof_frame(df, sort=("conv_id", "as_of")) -> pd.DataFrame:
+    return df.toPandas().sort_values(list(sort)).reset_index(drop=True)
+
+
+def _declarative(name, spark, df, cutoffs):
+    from z_rad_spark.operators import firstorder_sql
+    from z_rad_spark.operators.asof import asof_state
+
+    if name == "stats_asof":
+        return firstorder_sql.stats_asof(df, spark, cutoffs)
+    if name == "hist_asof":
+        return firstorder_sql.hist_asof(df, spark, cutoffs, 6)
+    return asof_state(df, spark, cutoffs, ["signal", "turn_idx"])
+
+
+def test_cutoff_grid_ranks_listed_instants(spark):
+    """gi = rank() - 1 over the listed instants, one row per instant."""
+    from pyspark.sql import functions as F
+
+    from z_rad_spark.operators.asof import cutoff_grid
+
+    got = cutoff_grid(
+        spark, ["2024-01-10 12:00:00", "2024-01-10T00:00:00", "2024-01-9", "2024-01-10 00:00:00"]
+    ).orderBy("as_of").select("gi", F.date_format("as_of", "yyyy-MM-dd HH:mm")).collect()
+    assert [tuple(r) for r in got] == [
+        (0, "2024-01-09 00:00"), (1, "2024-01-10 00:00"), (3, "2024-01-10 12:00")]
+
+
+@pytest.mark.parametrize("cutoffs", _SPELLINGS)
+def test_stats_asof_counts_only_turns_up_to_each_cutoff(spark, synth, cutoffs):
+    from pyspark.sql import functions as F
+
+    from z_rad_spark.operators import firstorder_sql
+
+    got = (
+        firstorder_sql.stats_asof(synth, spark, cutoffs)
+        .groupBy("as_of").agg(F.sum("n_turns").alias("n")).collect()
+    )
+    assert len(got) == len(cutoffs)
+    for r in got:
+        assert r.n == synth.where(F.col("ts") <= F.lit(r.as_of)).count(), r
+
+
+@pytest.mark.parametrize("name", ["stats_asof", "hist_asof"])
+@pytest.mark.parametrize("cutoffs", _SPELLINGS)
+def test_declarative_grid_follows_instants_not_text(spark, synth, name, cutoffs):
+    """Each cutoff's rows equal a run on that cutoff alone."""
+    both = _asof_frame(_declarative(name, spark, synth, cutoffs))
+    for c in cutoffs:
+        alone = _asof_frame(_declarative(name, spark, synth, [c]))
+        part = both[both["as_of"] == alone["as_of"].iloc[0]].reset_index(drop=True)
+        pd.testing.assert_frame_equal(part, alone, check_exact=True)
+
+
+@pytest.mark.parametrize("name", ["stats_asof", "hist_asof", "asof_state", "extract_features"])
+def test_repeated_cutoff_counts_once(spark, synth, name):
+    cut = "2024-01-10T00:00:00"
+    if name == "extract_features":
+        def run(cutoffs):
+            return _asof_frame(extract_features(synth, CFG, cutoffs))
+    else:
+        def run(cutoffs):
+            return _asof_frame(_declarative(name, spark, synth, cutoffs))
+    once = run([cut])
+    assert len(once) > 0
+    pd.testing.assert_frame_equal(run([cut, "2024-01-10 00:00:00", cut]), once, check_exact=True)

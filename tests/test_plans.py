@@ -1302,3 +1302,109 @@ def test_query_and_oracle_registries_have_no_shadowed_definition():
                 shadowed.append(f"{k} (line {n.lineno})")
             seen.add(k)
     assert shadowed == []
+
+
+# ---------------------------------------------------------------------------
+# JVM-only point-in-time plans: the small constant frames (cutoff grid,
+# query tokens, k / budget lists) are literals in the plan, never a pickled
+# Python list read back through Python workers.
+
+_PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+_CUTS = ["2024-01-01 12:00:00", "2024-01-02T00:00:00", "2024-01-02 00:00:00"]
+
+
+def _jvm_turns(spark, n=120):
+    """Transcript turns derived from ``range`` alone, so any Python node or
+    RDD scan in a plan over them comes from the operator under test."""
+    i = F.col("id")
+    roles = F.array(*[F.lit(r) for r in ("user", "assistant", "tool")])
+    return spark.range(n).select(
+        F.concat(F.lit("c"), (i % 4).cast("string")).alias("conv_id"),
+        i.cast("int").alias("turn_idx"),
+        F.element_at(roles, (i % 3 + 1).cast("int")).alias("role"),
+        F.concat_ws(" ", F.lit("tok"), (i % 7).cast("string"), F.lit("common words")).alias("text"),
+        F.timestamp_seconds(F.lit(1704067200) + i * 1800).alias("ts"),
+        ((i * 7) % 23).cast("double").alias("signal"),
+    )
+
+
+def _pit_ops():
+    from z_rad_spark.operators import asof, backfill, firstorder_sql, sessionize
+
+    return {
+        "asof_state": lambda s, t, c: asof.asof_state(t, s, c, ["turn_idx"]),
+        "asof_join": lambda s, t, c: asof.asof_join(
+            t, t.select("conv_id", (F.col("ts") + F.expr("INTERVAL 1 SECOND")).alias("as_of")),
+            ["signal"]),
+        "sessions_lag_lead": lambda s, t, c: sessionize.with_lag_lead(
+            sessionize.with_sessions(t, 3600), ["signal"]),
+        "backfill_linear": lambda s, t, c: backfill.backfill(t, 3600, method="linear"),
+        "stats_asof": lambda s, t, c: firstorder_sql.stats_asof(t, s, c),
+        "hist_asof": lambda s, t, c: firstorder_sql.hist_asof(t, s, c, 6),
+        "horizon_features": lambda s, t, c: asof.horizon_features(t, s, c),
+        "fbn_hist_asof": lambda s, t, c: firstorder_sql.fbn_hist_asof(t, s, c, 6),
+        "fbn_grey_asof": lambda s, t, c: firstorder_sql.fbn_grey_asof(t, s, c, 6),
+    }
+
+
+@pytest.mark.parametrize("name", list(_pit_ops()))
+def test_pit_plans_run_in_the_jvm_alone(spark, name):
+    """The point-in-time suite (perfbench ``pit_ops`` plus the other
+    grid consumers) plans no RDD scan and no Python evaluation: the
+    cutoff grid is a literal ``Generate``, not ``Scan ExistingRDD``."""
+    plan = _plan(_pit_ops()[name](spark, _jvm_turns(spark), _CUTS))
+    assert "ExistingRDD" not in plan, plan
+    assert not [n for n in _PY_NODES if n in plan], plan
+
+
+def test_lookup_frames_are_literals(spark):
+    """The list-built lookup frames of BM25 (query tokens), the coverage
+    curve (ks), rich-club (ks) and context overflow (budgets) are
+    literals too; only BM25 keeps a Python node, its own idf pandas UDF."""
+    from z_rad_spark.operators.graph import rich_club
+    from z_rad_spark.operators.profile import context_overflow
+    from z_rad_spark.operators.text import bm25_topk, coverage_curve
+
+    turns = _jvm_turns(spark)
+    docs = turns.select(F.col("turn_idx").cast("long").alias("doc_id"), "text")
+    edges = spark.range(30).select(
+        (F.col("id") % 7).alias("id_a"), ((F.col("id") * 3 + 1) % 11).alias("id_b"))
+    plans = {
+        "bm25_topk": _plan(bm25_topk(docs, [(0, ["tok", "3"]), (1, ["words"])])),
+        "coverage_curve": _plan(coverage_curve(docs)),
+        "rich_club": _plan(rich_club(edges)),
+        "context_overflow": _plan(context_overflow(turns)),
+    }
+    for name, plan in plans.items():
+        assert "ExistingRDD" not in plan, (name, plan)
+        py = [n for n in _PY_NODES if n in plan]
+        assert py == (["ArrowEvalPython"] if name == "bm25_topk" else []), (name, py)
+
+
+def test_literal_frame_matches_create_dataframe(spark):
+    """Same rows and schema as ``createDataFrame`` of the list: nulls,
+    quotes, escapes, non-ASCII text, exact doubles; no rows gives an
+    empty frame of that schema."""
+    from z_rad_spark.operators.exprs import literal_frame
+
+    cases = [
+        ("k long, q string", [(1, "a"), (2, None), (None, "it's \\ 'q'\n é `x`")]),
+        ("k long, q string", []),
+        ("`d x` double, b boolean", [(0.1, True), (-2.5e-300, None), (None, False)]),
+    ]
+    for schema, rows in cases:
+        got = literal_frame(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert "ExistingRDD" not in _plan(got)
+
+
+@pytest.mark.parametrize("name", ["asof_state", "stats_asof", "hist_asof",
+                                  "horizon_features", "fbn_hist_asof", "fbn_grey_asof"])
+def test_empty_cutoff_list_gives_empty_frame_same_schema(spark, name):
+    op = _pit_ops()[name]
+    turns = _jvm_turns(spark)
+    empty = op(spark, turns, [])
+    assert empty.schema.simpleString() == op(spark, turns, _CUTS[:1]).schema.simpleString()
+    assert empty.count() == 0

@@ -333,7 +333,7 @@ def extract_features(df: DataFrame, cfg: FeatureConfig, cutoffs: Iterable) -> Da
     ``cutoffs`` — iterable of timestamps (str / datetime / np.datetime64).
     Returns one wide row per (conv_id, as_of).
     """
-    cutoffs_us = sorted(int(np.datetime64(c, "us").astype(np.int64)) for c in cutoffs)
+    cutoffs_us = sorted({int(np.datetime64(c, "us").astype(np.int64)) for c in cutoffs})
     max_cut = np.datetime64(max(cutoffs_us), "us")
 
     prepared = prepare_input(df, cfg)

@@ -25,19 +25,40 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .exprs import literal_rows
 from .skew import conv_window
 
 
 def cutoff_grid(spark: SparkSession, cutoffs: Iterable[str]) -> DataFrame:
-    """Tiny dimension of as-of cutoffs (always broadcast-joined)."""
-    return spark.createDataFrame([(c,) for c in cutoffs], "as_of_str string").select(
-        F.to_timestamp("as_of_str").alias("as_of")
+    """Tiny dimension of as-of cutoffs (always broadcast-joined): one row
+    ``(gi int, as_of timestamp)`` per distinct instant.
+
+    ``as_of`` is the cutoff string cast to timestamp in the session time
+    zone, as ``to_timestamp`` without a format parses it. ``gi`` is
+    ``rank() - 1`` of the instant among the LISTED cutoffs (repeats
+    counted, so it is the number of listed cutoffs strictly before it),
+    in time order whatever the spelling or order of the strings. A turn whose ``ts`` has ``iv`` listed cutoffs strictly
+    before it therefore satisfies ``iv <= gi`` exactly when
+    ``ts <= as_of`` — the contract the compacted-histogram path of
+    ``firstorder_sql.value_histogram_asof`` joins on. Repeated instants
+    give one row, so no operator doubles its rows or counts.
+
+    The grid is built from literals (``exprs.literal_rows``), never from
+    a pickled RDD: the point-in-time plans that broadcast it then run in
+    the JVM alone, with no Python worker for the grid stage, and Catalyst
+    folds it to one constant array exploded over a one-row ``range``."""
+    listed = F.sort_array(literal_rows([(c,) for c in cutoffs], "as_of timestamp")["as_of"])
+    return (
+        spark.range(1, numPartitions=1)
+        .select(F.explode(F.array_distinct(listed)).alias("as_of"))
+        .select((F.array_position(listed, F.col("as_of")) - 1).cast("int").alias("gi"), "as_of")
     )
 
 
 def expand_cutoffs(entities: DataFrame, grid: DataFrame) -> DataFrame:
-    """entity x cutoff probe frame via broadcast cross join (grid is tiny)."""
-    return entities.crossJoin(F.broadcast(grid))
+    """entity x cutoff probe frame via broadcast cross join (grid is tiny);
+    adds the grid's ``as_of`` column only."""
+    return entities.crossJoin(F.broadcast(grid.select("as_of")))
 
 
 def asof_join(

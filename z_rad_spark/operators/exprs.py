@@ -3,11 +3,69 @@
 Centralizing these matters beyond tidiness: the DuckDB oracles replay
 each helper's exact element-pick / fold convention, so a drift between
 two copies would silently fork the engine's determinism contract.
+``literal_rows`` / ``literal_frame`` are the one way the operators build
+small constant data (cutoff grids, query tokens, k / budget lists).
 """
 
 from __future__ import annotations
 
+import numbers
+from typing import Iterable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+
+def _sql_literal(v, sql_type: str) -> str:
+    if v is None:
+        text = "NULL"
+    elif isinstance(v, bool):
+        text = "TRUE" if v else "FALSE"
+    elif isinstance(v, numbers.Integral):
+        text = str(int(v))  # out-of-range values fail the cast
+    elif isinstance(v, numbers.Real):
+        text = f"'{float(v)!r}'"  # repr round-trips exactly; 'nan' / 'inf' cast too
+    elif isinstance(v, str):
+        # UTF-8 bytes as a binary literal: no quoting or escape rules to
+        # get wrong, whatever the parser's string-literal settings; then
+        # the field type's string cast (a timestamp field parses as
+        # to_timestamp does)
+        text = f"CAST(X'{v.encode().hex()}' AS STRING)"
+    else:
+        raise TypeError(f"literal_rows: unsupported value {v!r}")
+    return f"CAST({text} AS {sql_type})"
+
+
+def literal_rows(rows: Iterable[tuple], schema: str) -> Column:
+    """``rows`` as ONE constant ``array<struct<schema>>`` column, parsed
+    from SQL text in a single call (a Column-API literal costs several
+    py4j round-trips per value). ``schema`` is a DDL string
+    (``"k long, q string"``); values are None, bool, numbers or str,
+    each cast to its field's type; every field is nullable, as from
+    ``createDataFrame``. Catalyst folds the expression to one literal."""
+    fields = DataType.fromDDL(schema).fields
+    types = [f.dataType.simpleString() for f in fields]
+    structs = [
+        "struct(" + ", ".join(_sql_literal(v, t) for v, t in zip(r, types)) + ")" for r in rows
+    ]
+    elem = ", ".join("`" + f.name.replace("`", "``") + "`:" + t for f, t in zip(fields, types))
+    return F.expr(f"CAST(array({', '.join(structs)}) AS array<struct<{elem}>>)")
+
+
+def literal_frame(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFrame:
+    """A small constant frame: ``inline`` of :func:`literal_rows` on a
+    single-partition ``range(1)``.
+
+    ``spark.createDataFrame`` of a Python list plans as ``Scan
+    ExistingRDD`` over a pickled RDD: every job that reads it starts
+    Python workers to unpickle a handful of rows, whatever the session's
+    Arrow setting. Here the rows live in the plan itself, so the frame
+    is a ``Generate`` that runs in the JVM alone, with the same schema
+    as ``createDataFrame(rows, schema)``; no rows gives an empty frame.
+    Meant for tiny dimensions that are broadcast-joined — the literals
+    are part of every plan that reads the frame."""
+    return spark.range(1, numPartitions=1).select(F.inline(literal_rows(rows, schema)))
 
 
 def sorted_median(arr):

@@ -2,7 +2,9 @@
 
 The same 18 statistics / histogram formulas as kernels/firstorder.py
 (reference: zrad/radiomics/intensity.py:218-324), expressed entirely with
-groupBy/window/built-in aggregates — zero Python in the execution path.
+groupBy/window/built-in aggregates — zero Python in the execution path,
+the cutoff grid included (``asof.cutoff_grid`` is built from literals,
+not from a pickled Python list).
 This is the scale fast-path when only first-order families are requested:
 partial aggregation (map-side combine) applies, and Catalyst prunes
 columns down to (conv_id, ts, signal).
@@ -43,7 +45,7 @@ _QFRACS = (("10", 0.1), ("25", 0.25), ("50", 0.5), ("75", 0.75), ("90", 0.9))
 
 
 def _expand(df: DataFrame, spark: SparkSession, cutoffs: Iterable[str]) -> DataFrame:
-    grid = cutoff_grid(spark, cutoffs)
+    grid = cutoff_grid(spark, cutoffs).select("as_of")
     return df.join(F.broadcast(grid), F.col("ts") <= F.col("as_of"))
 
 
@@ -65,29 +67,28 @@ def value_histogram_asof(
 ) -> DataFrame:
     """Per-(conv_id, as_of) value histogram WITHOUT expanding turns:
 
-    1. interval index = number of cutoffs strictly before ts (a literal
-       comparison chain — constant-folded, no join); rows past the last
-       cutoff are dropped at the scan.
+    1. interval index = number of listed cutoffs strictly before ts (a
+       literal comparison chain — constant-folded, no join); rows past
+       the last cutoff are dropped at the scan.
     2. ONE full-data shuffle: groupBy (conv_id, x, interval) with
        map-side combine collapses 10^12 turns to
        distinct-values x intervals per conversation.
     3. The compacted histogram is broadcast-joined to the cutoff grid
        (interval <= grid index) and re-aggregated — amplification is
-       bounded by the grid size on ALREADY-compacted rows.
+       bounded by the grid size on ALREADY-compacted rows. The grid's
+       ``gi`` counts the same listed cutoffs (``asof.cutoff_grid``), so
+       ``iv <= gi`` holds exactly when ``ts <= as_of``.
 
     Output: (conv_id, as_of, x, c).
     """
-    cuts = sorted(cutoffs)
-    k = len(cuts)
+    cuts = list(cutoffs)
     x = F.col(signal_col).cast("double")
     iv = F.lit(0)
     for c in cuts:
         iv = iv + F.when(F.col("ts") > F.to_timestamp(F.lit(c)), 1).otherwise(0)
-    base = df.select("conv_id", x.alias("x"), iv.alias("iv")).where(F.col("iv") < k)
+    base = df.select("conv_id", x.alias("x"), iv.alias("iv")).where(F.col("iv") < len(cuts))
     h0 = base.groupBy("conv_id", "x", "iv").agg(F.count("*").cast("long").alias("c"))
-    grid = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cuts)], "gi int, as_of_str string"
-    ).select("gi", F.to_timestamp("as_of_str").alias("as_of"))
+    grid = cutoff_grid(spark, cuts)
     return (
         h0.join(F.broadcast(grid), F.col("iv") <= F.col("gi"))
         .groupBy("conv_id", "as_of", "x")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 # frames persisted here are released by session.unpersist_intermediates()
 from ..session import persist_intermediate
+from .exprs import literal_frame
 from .skew import conv_window
 
 
@@ -911,9 +912,7 @@ def rich_club(
         .groupBy("_n")
         .agg(F.count("*").cast("long").alias("_d"))
     )
-    ks = edges.sparkSession.createDataFrame(
-        [(int(k),) for k in sorted(k_list)], "k long"
-    )
+    ks = literal_frame(edges.sparkSession, [(int(k),) for k in sorted(k_list)], "k long")
     nk = (
         deg.crossJoin(F.broadcast(ks))
         .where(F.col("_d") > F.col("k"))

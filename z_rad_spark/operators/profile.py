@@ -27,6 +27,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .exprs import literal_frame
 from .skew import ORDER as _ORDER, conv_window
 
 
@@ -3697,9 +3698,7 @@ def context_overflow(
     per = df.groupBy("conv_id").agg(
         F.sum(F.col("signal").cast("long")).alias("_t")
     )
-    bdf = df.sparkSession.createDataFrame(
-        [(int(b),) for b in sorted(budgets)], "budget long"
-    )
+    bdf = literal_frame(df.sparkSession, [(int(b),) for b in sorted(budgets)], "budget long")
     j = per.crossJoin(F.broadcast(bdf))
     g = j.groupBy("budget").agg(
         F.count("*").cast("long").alias("_nc"),

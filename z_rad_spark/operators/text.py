@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import normalize_text
+from .exprs import literal_frame
 
 
 def with_json_field(
@@ -354,7 +355,8 @@ def bm25_topk(
 
         return pd.Series(np.log(x.to_numpy()))
 
-    qexp = spark.createDataFrame(
+    qexp = literal_frame(
+        spark,
         [(qid, t) for qid, ts in queries for t in sorted(set(ts))],
         "query_id long, token string",
     )
@@ -1971,9 +1973,7 @@ def coverage_curve(
         "_v",
         F.sum("_c").over(w_cum).cast("long").alias("_cov"),
     )
-    kdf = df.sparkSession.createDataFrame(
-        [(int(k),) for k in sorted(ks)], "k long"
-    )
+    kdf = literal_frame(df.sparkSession, [(int(k),) for k in sorted(ks)], "k long")
     # coverage at k = cumulative mass at rank min(k, vocab)
     j = kdf.crossJoin(F.broadcast(cum.where(F.col("_rk") == 1).select("_nn", "_v"))).join(
         cum.select(F.col("_rk"), F.col("_cov")),
