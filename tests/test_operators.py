@@ -155,6 +155,9 @@ def test_sessionize_matches_pandas(spark, tdf):
 
 def test_backfill_nn_carries_forward(spark, tdf):
     df, pdf = tdf
+    # reversed input order: tied turns reach the scan latest-first, so only
+    # the turn_idx tie-break picks the right one
+    df = df.orderBy(F.col("turn_idx").desc(), "conv_id")
     out = backfill(df, 3600, "signal", method="nn").toPandas()
     pdf = pdf.copy()
     pdf["signal"] = pdf["text"].map(lambda t: float(len(t.split(" "))))
@@ -168,6 +171,112 @@ def test_backfill_nn_carries_forward(spark, tdf):
                 assert pd.isna(r["signal"])
             else:
                 assert r["signal"] == sel.iloc[-1]["signal"]
+
+
+def _backfill_ref(pdf, step_seconds, method):
+    """backfill built the oracles' way, in pandas: among turns with a
+    non-NULL signal, previous = greatest (ts, turn_idx) <= grid point, next
+    = smallest (ts, turn_idx) > it, second bracketing turns one further out;
+    the grid spans every turn. Returns (conv_id, grid_ts, signal)."""
+    out = []
+    for conv, cp in pdf.groupby("conv_id"):
+        grid = pd.date_range(cp["ts"].min().floor("min"), cp["ts"].max(),
+                             freq=f"{step_seconds}s")
+        c = cp.dropna(subset=["signal"]).sort_values(["ts", "turn_idx"], kind="mergesort")
+        ts = c["ts"].to_numpy("datetime64[us]").astype(np.int64).astype(float)
+        v = c["signal"].to_numpy(float)
+        g = grid.to_numpy("datetime64[us]").astype(np.int64).astype(float)
+        i = np.searchsorted(ts, g, side="right") - 1
+
+        def at(k, arr):
+            ok = (k >= 0) & (k < len(arr))
+            r = np.full(len(k), np.nan)
+            r[ok] = arr[k[ok]]
+            return r
+
+        (v0, t0), (v1, t1), (v2, t2), (v3, t3) = (
+            (at(i + d, v), at(i + d, ts)) for d in (-1, 0, 1, 2))
+        if method == "nn":
+            val = v1
+        else:
+            with np.errstate(divide="ignore", invalid="ignore"):
+                if method == "linear":  # exact epoch-us offsets, as the SQL
+                    inner = v1 + (v2 - v1) * ((g - t1) / (t2 - t1))
+                else:  # seconds, as the SQL
+                    t0, t1, t2, t3, tg = t0 / 1e6, t1 / 1e6, t2 / 1e6, t3 / 1e6, g / 1e6
+                    h = t2 - t1
+                    sec = (v2 - v1) / h
+                    m1 = np.where(~np.isnan(v0) & (t2 != t0), (v2 - v0) / (t2 - t0), sec)
+                    m2 = np.where(~np.isnan(v3) & (t3 != t1), (v3 - v1) / (t3 - t1), sec)
+                    s = (tg - t1) / h
+                    inner = ((2 * s**3 - 3 * s**2 + 1) * v1 + (s**3 - 2 * s**2 + s) * h * m1
+                             + (-2 * s**3 + 3 * s**2) * v2 + (s**3 - s**2) * h * m2)
+            val = np.where(np.isnan(v1), v2, np.where(np.isnan(v2), v1, inner))
+        out.append(pd.DataFrame({"conv_id": conv, "grid_ts": grid, "signal": val}))
+    return pd.concat(out).sort_values(["conv_id", "grid_ts"]).reset_index(drop=True)
+
+
+def _backfill_pdf(df, step_seconds, method):
+    got = backfill(df, step_seconds, "signal", method=method).toPandas()
+    return got.sort_values(["conv_id", "grid_ts"]).reset_index(drop=True)
+
+
+def _assert_same_values(got, want, what):
+    assert len(got) == len(want), what
+    assert (got["conv_id"] == want["conv_id"]).all(), what
+    assert (got["grid_ts"] == want["grid_ts"]).all(), what
+    g, w = got["signal"].to_numpy(float), want["signal"].to_numpy(float)
+    bad = ~(np.isclose(g, w, rtol=1e-12, atol=1e-9) | (np.isnan(g) & np.isnan(w)))
+    assert not bad.any(), (what, int(bad.sum()), got[bad].head(), want[bad].head())
+
+
+@pytest.mark.parametrize("method", ["nn", "linear", "cubic"])
+def test_backfill_breaks_ts_ties_by_turn_idx(spark, method):
+    """Input with duplicate timestamps, in three partitionings: backfill
+    matches the pandas reference and gives the same rows every time."""
+    pdf = synth_transcripts_pdf(n_convs=6, mean_turns=30, seed=7)
+    assert pdf.duplicated(["conv_id", "ts"]).sum() > 50
+    df = with_signal(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA))
+    pdf = pdf.assign(signal=pdf["text"].map(lambda t: float(len(t.split(" ")))))
+    want = _backfill_ref(pdf, 300, method)
+    outs = [
+        _backfill_pdf(d, 300, method)
+        for d in (
+            df.repartition(1),
+            df.repartition(3, "turn_idx"),
+            df.orderBy(F.col("turn_idx").desc(), "conv_id"),
+        )
+    ]
+    for k, got in enumerate(outs):
+        _assert_same_values(got, want, (method, k))
+        assert got.equals(outs[0]), (method, k)
+
+
+@pytest.mark.parametrize("method", ["nn", "linear", "cubic"])
+def test_backfill_value_and_ts_come_from_one_turn(spark, method):
+    """A NULL-valued turn neither supplies a value nor lends its ts to the
+    carried value of an older (backward) or newer (forward) turn: each
+    side is one non-NULL turn, asof_join's per-column rule."""
+    pts = [
+        ("2024-01-01T00:00:00", 1.0),
+        ("2024-01-01T00:50:00", None),
+        ("2024-01-01T03:00:00", 5.0),
+        ("2024-01-01T04:00:00", 2.0),
+        ("2024-01-01T04:20:00", None),
+        ("2024-01-01T06:10:00", None),
+        ("2024-01-01T06:40:00", 8.0),
+        ("2024-01-01T07:00:00", None),
+        ("2024-01-01T08:00:00", 4.0),
+    ]
+    pdf = pd.DataFrame({
+        "conv_id": "c",
+        "turn_idx": np.arange(len(pts), dtype="int32"),
+        "ts": [np.datetime64(t, "us") for t, _ in pts],
+        "signal": [v for _, v in pts],
+    })
+    df = spark.createDataFrame(pdf, "conv_id string, turn_idx int, ts timestamp, signal double")
+    want = _backfill_ref(pdf, 3600, method)
+    _assert_same_values(_backfill_pdf(df.repartition(2, "turn_idx"), 3600, method), want, method)
 
 
 def test_backfill_linear_between_points(spark):

@@ -137,10 +137,11 @@ def test_hist_asof_never_expands_turns_across_the_grid(spark):
 
 
 def test_fbn_grey_asof_refuses_dense_grids(spark):
-    """fbn_grey_asof is the engine's only O(turns x cutoffs) expansion and
-    must refuse dense grids (the compacted fbn_hist_asof path serves
-    those); a small grid still works, and `_expand` has no other engine
-    call site (source-asserted so a new consumer cannot sneak in)."""
+    """fbn_grey_asof keeps every turn row of its O(turns x cutoffs)
+    expansion and must refuse dense grids (the compacted fbn_hist_asof
+    path serves those); a small grid still works, and the expansion's
+    ``ts <= as_of`` filter is spelled only in asof.py (source-asserted, so
+    every point-in-time read keeps one definition)."""
     import pathlib
 
     import pytest
@@ -154,15 +155,15 @@ def test_fbn_grey_asof_refuses_dense_grids(spark):
         _turns(spark), spark, ["2024-01-15 00:00:00"], 6
     )
     assert small.where(F.col("grey").isNotNull()).count() > 0
-    # no other engine code may reach the _expand join
+    # no engine code outside asof.py compares a column against as_of
     pkg = pathlib.Path(firstorder_sql.__file__).parent.parent
-    hits = [
-        p
+    hits = {
+        p.name
         for p in pkg.rglob("*.py")
         for line in p.read_text().splitlines()
-        if "_expand(" in line and "def _expand" not in line
-    ]
-    assert hits == [pathlib.Path(firstorder_sql.__file__)], hits
+        if '<= F.col("as_of")' in line
+    }
+    assert hits == {"asof.py"}, hits
 
 
 def test_kmeans_assignment_is_shuffle_free(spark):
@@ -507,6 +508,21 @@ def test_asof_backward_path_plans_no_extra_nodes(spark):
         assert plan.count("+- Sort ") <= max_sorts, (direction, plan)
         assert plan.count("Window") <= max_windows * 2, (direction, plan)
         assert "Join" not in plan, (direction, plan)
+
+
+@pytest.mark.parametrize("method, most", [("linear", (2, 2, 2)), ("cubic", (2, 3, 3))])
+def test_backfill_rides_the_asof_carry(spark, method, most):
+    """backfill plans asof's carry: one exchange for the grid span, one for
+    the union (cubic's lag/lead window shares it), one Sort + Window per
+    scan direction plus cubic's lag/lead pair. The copy it replaced
+    planned linear at (Exchange, Sort, Window) = (2, 2, 4), cubic at
+    (2, 5, 9)."""
+    from z_rad_spark.operators.backfill import backfill
+
+    plan = _plan(backfill(_jvm_turns(spark), 3600, method=method))
+    nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
+    got = tuple(nodes.count(n) for n in ("Exchange", "Sort", "Window"))
+    assert all(g <= m for g, m in zip(got, most)), (got, plan)
 
 
 def _turns_df(spark, n=64):
@@ -1400,10 +1416,18 @@ def test_literal_frame_matches_create_dataframe(spark):
         assert "ExistingRDD" not in _plan(got)
 
 
+def _extract(spark, turns, cutoffs):
+    from z_rad_spark import FeatureConfig, extract_features
+
+    return extract_features(
+        turns.withColumn("tool", F.lit(None).cast("string")), FeatureConfig(), cutoffs)
+
+
 @pytest.mark.parametrize("name", ["asof_state", "stats_asof", "hist_asof",
-                                  "horizon_features", "fbn_hist_asof", "fbn_grey_asof"])
+                                  "horizon_features", "fbn_hist_asof", "fbn_grey_asof",
+                                  "extract_features"])
 def test_empty_cutoff_list_gives_empty_frame_same_schema(spark, name):
-    op = _pit_ops()[name]
+    op = {**_pit_ops(), "extract_features": _extract}[name]
     turns = _jvm_turns(spark)
     empty = op(spark, turns, [])
     assert empty.schema.simpleString() == op(spark, turns, _CUTS[:1]).schema.simpleString()

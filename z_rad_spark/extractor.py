@@ -331,9 +331,12 @@ def extract_features(df: DataFrame, cfg: FeatureConfig, cutoffs: Iterable) -> Da
     """Point-in-time feature vectors for every conversation at every cutoff.
 
     ``cutoffs`` — iterable of timestamps (str / datetime / np.datetime64).
-    Returns one wide row per (conv_id, as_of).
+    Returns one wide row per (conv_id, as_of); no cutoffs give an empty
+    frame of the same schema.
     """
     cutoffs_us = sorted({int(np.datetime64(c, "us").astype(np.int64)) for c in cutoffs})
+    if not cutoffs_us:
+        return df.sparkSession.createDataFrame([], output_schema(cfg))
     max_cut = np.datetime64(max(cutoffs_us), "us")
 
     prepared = prepare_input(df, cfg)

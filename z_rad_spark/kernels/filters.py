@@ -113,13 +113,6 @@ def mean_filter(x: np.ndarray, support: int = 5) -> np.ndarray:
     return _conv_same_zero(x, k)
 
 
-def _gauss_taps(sigma: float, cutoff: float = 4.0) -> np.ndarray:
-    r = int(np.ceil(cutoff * sigma))
-    t = np.arange(-r, r + 1, dtype=float)
-    g = np.exp(-(t**2) / (2 * sigma**2))
-    return g / g.sum()
-
-
 def log_taps(sigma: float = 1.5, cutoff: float = 4.0) -> np.ndarray:
     """LoG kernel taps — exported so the declarative window-expression path
     (operators/filtering.py) and the DuckDB oracles share the exact

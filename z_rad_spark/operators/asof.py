@@ -16,6 +16,11 @@ At 10^12-turn scale this is shuffle-optimal: a single exchange keyed by
 conv_id, no join explosion, skew handled by AQE skew-split plus
 operators/skew.py salting. Reference analogue: the implicit "whole image
 at scan time" snapshot (SURVEY.md §0) made explicit.
+
+This module is the one place that knows how a point-in-time read is
+done: ``_carry`` is the as-of scan that ``asof_join`` and
+``backfill.backfill`` select their matches from, and ``cutoff_history``
+the ``ts <= as_of`` expansion every as-of aggregate reads.
 """
 
 from __future__ import annotations
@@ -61,6 +66,86 @@ def expand_cutoffs(entities: DataFrame, grid: DataFrame) -> DataFrame:
     return entities.crossJoin(F.broadcast(grid.select("as_of")))
 
 
+def cutoff_history(df: DataFrame, spark: SparkSession, cutoffs: Iterable[str]) -> DataFrame:
+    """Every row of ``df`` once per cutoff at or after its ``ts``, that
+    cutoff in ``as_of``: the broadcast grid join filtered to
+    ``ts <= as_of`` — the history each as-of aggregate reads, and the only
+    place that predicate is spelled. O(rows x cutoffs) rows before the
+    aggregate; the compacted-histogram paths of ``firstorder_sql`` avoid
+    the expansion."""
+    return expand_cutoffs(df, cutoff_grid(spark, cutoffs)).where(
+        F.col("ts").cast("timestamp") <= F.col("as_of")
+    )
+
+
+def _carry(
+    turns: DataFrame,
+    probes: DataFrame,
+    value_cols: list[str],
+    key: str = "conv_id",
+    turns_ts: str = "ts",
+    probe_ts: str = "as_of",
+    tie_break: str = "turn_idx",
+) -> DataFrame:
+    """The sort-merge as-of scan under every point-in-time match.
+
+    Returns the probe rows (key, probe_ts, other probe columns) with four
+    columns per value column ``c``, each judged against the turns where
+    THAT column is non-null (running ``last(ignorenulls)`` fills a column
+    past turns whose value is NULL, and the matched ts rides the same
+    scan, so a value and its ts always come from one turn):
+
+    * ``_vb_c`` / ``_mtb_c`` — the value and epoch-µs ts of the turn with
+      the greatest (ts, tie_break) such that ts <= probe_ts;
+    * ``_vf_c`` / ``_mtf_c`` — the same for the SMALLEST (ts, tie_break)
+      such that ts >= probe_ts.
+
+    Backward scan: ascending (t, src, tie) — build rows sort before probe
+    rows at equal t (inclusive). Forward scan: the mirror — DESCENDING t
+    with build still before probe at equal t and tie DESCENDING, so the
+    most recently scanned build row when a probe is reached is the
+    earliest turn at-or-after it. Both windows share the partitioning:
+    ONE hash exchange, a second Sort at most. Catalyst drops every column
+    no caller reads, and a window none of whose columns is read."""
+    probe_extra = [c for c in probes.columns if c not in (key, probe_ts)]
+    t = turns.select(
+        F.col(key),
+        F.col(turns_ts).alias("_t"),
+        F.lit(0).alias("_src"),
+        F.col(tie_break).cast("long").alias("_tie"),
+        *[F.col(c) for c in value_cols],
+        *[F.lit(None).cast(probes.schema[c].dataType).alias(c) for c in probe_extra],
+    )
+    p = probes.select(
+        F.col(key),
+        F.col(probe_ts).alias("_t"),
+        F.lit(1).alias("_src"),
+        F.lit(2**62).cast("long").alias("_tie"),
+        *[F.lit(None).cast(turns.schema[c].dataType).alias(c) for c in value_cols],
+        *[F.col(c) for c in probe_extra],
+    )
+    t_us = F.unix_micros(F.col("_t").cast("timestamp"))
+    scans = {
+        "b": Window.partitionBy(key).orderBy("_t", "_src", "_tie"),
+        "f": Window.partitionBy(key).orderBy(
+            F.col("_t").desc(), F.col("_src").asc(), F.col("_tie").desc()
+        ),
+    }
+    carried = []
+    for c in value_cols:
+        matched_us = F.when((F.col("_src") == 0) & F.col(c).isNotNull(), t_us)
+        for side, w in scans.items():
+            w = w.rowsBetween(Window.unboundedPreceding, 0)
+            carried.append(F.last(F.col(c), ignorenulls=True).over(w).alias(f"_v{side}_{c}"))
+            carried.append(F.last(matched_us, ignorenulls=True).over(w).alias(f"_mt{side}_{c}"))
+    return (
+        t.unionByName(p)
+        .select(F.col(key), F.col("_t").alias(probe_ts), "_src", *probe_extra, *carried)
+        .where(F.col("_src") == 1)
+        .drop("_src")
+    )
+
+
 def asof_join(
     turns: DataFrame,
     probes: DataFrame,
@@ -81,12 +166,8 @@ def asof_join(
       (ts, tie_break) such that ts <= probe_ts; the running-last pass
       described above.
     * ``'forward'`` — the turn with the SMALLEST (ts, tie_break) such
-      that ts >= probe_ts: the mirrored pass — same union frame, same
-      single hash exchange on the key, a second sort DESCENDING on
-      (t, tie) with build rows still scanning before probe rows at
-      equal t (inclusive), and the identical running
-      last(ignorenulls); "the most recently scanned build value" in a
-      descending scan IS the earliest turn at-or-after the probe.
+      that ts >= probe_ts: the mirrored pass over the same union frame
+      and the same single hash exchange (see :func:`_carry`).
     * ``'nearest'`` — both passes over the ONE exchange (Catalyst
       plans Window/Sort/Window/Sort on the same HashPartitioning — no
       second shuffle), then per value column the closer of the two
@@ -108,99 +189,32 @@ def asof_join(
 
     Returns the probe rows + value columns (null when no prior turn).
     """
-    probe_extra = [c for c in probes.columns if c not in (key, probe_ts)]
-    t = turns.select(
-        F.col(key),
-        F.col(turns_ts).alias("_t"),
-        F.lit(0).alias("_src"),
-        F.col(tie_break).cast("long").alias("_tie"),
-        *[F.col(c) for c in value_cols],
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(c) for c in probe_extra],
-    )
-    p = probes.select(
-        F.col(key),
-        F.col(probe_ts).alias("_t"),
-        F.lit(1).alias("_src"),
-        F.lit(2**62).cast("long").alias("_tie"),
-        *[F.lit(None).cast(turns.schema[c].dataType).alias(c) for c in value_cols],
-        *[F.col(c) for c in probe_extra],
-    )
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
-    u = t.unionByName(p)
-    t_us = F.unix_micros(F.col("_t").cast("timestamp"))
+    m = _carry(turns, probes, value_cols, key, turns_ts, probe_ts, tie_break)
+    p_us = F.unix_micros(F.col(probe_ts).cast("timestamp"))
     tol_us = (
         int(tolerance_seconds * 1_000_000) if tolerance_seconds is not None else None
     )
-    # Backward scan: ascending (t, src, tie) — build rows sort before
-    # probe rows at equal t (inclusive match), running last(ignorenulls)
-    # carries the greatest (t, tie) build value seen so far.
-    w_b = (
-        Window.partitionBy(key)
-        .orderBy("_t", "_src", "_tie")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # Forward scan: the mirror — DESCENDING t with build still scanning
-    # before probe at equal t (src ascending) and tie DESCENDING, so the
-    # most recently scanned build row when a probe is reached is the
-    # SMALLEST (t, tie) at-or-after it. Same partitioning as w_b: one
-    # hash exchange serves both passes (the second pass adds a Sort,
-    # never an Exchange).
-    w_f = (
-        Window.partitionBy(key)
-        .orderBy(F.col("_t").desc(), F.col("_src").asc(), F.col("_tie").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    need_b = direction in ("backward", "nearest")
-    need_f = direction in ("forward", "nearest")
-    need_mt = tol_us is not None or direction == "nearest"
-
-    def _match(c, w, side):
-        """Per-column matched value (+ matched ts when needed): judged
-        against the nearest turn where THAT column is non-null — the
-        matched ts is captured from the same scan BEFORE the fill (last
-        ignorenulls can carry a value past adjacent turns whose column
-        is NULL; judging against the newest scanned turn's ts would
-        mislabel that carried value)."""
-        nonlocal u
-        if need_mt:
-            u = u.withColumn(
-                f"_mt{side}_{c}",
-                F.last(
-                    F.when((F.col("_src") == 0) & F.col(c).isNotNull(), t_us),
-                    ignorenulls=True,
-                ).over(w),
-            )
-        u = u.withColumn(f"_v{side}_{c}", F.last(F.col(c), ignorenulls=True).over(w))
-
-    for c in value_cols:
-        if need_b:
-            _match(c, w_b, "b")
-        if need_f:
-            _match(c, w_f, "f")
     out_vals = []
     for c in value_cols:
+        d_b = p_us - F.col(f"_mtb_{c}")
+        d_f = F.col(f"_mtf_{c}") - p_us
         if direction == "backward":
-            v = F.col(f"_vb_{c}")
-            if tol_us is not None:
-                v = F.when((t_us - F.col(f"_mtb_{c}")) <= F.lit(tol_us), v)
+            v, d = F.col(f"_vb_{c}"), d_b
         elif direction == "forward":
-            v = F.col(f"_vf_{c}")
-            if tol_us is not None:
-                v = F.when((F.col(f"_mtf_{c}") - t_us) <= F.lit(tol_us), v)
+            v, d = F.col(f"_vf_{c}"), d_f
         else:  # nearest: closer of the two matches, ties to backward
-            d_b = t_us - F.col(f"_mtb_{c}")
-            d_f = F.col(f"_mtf_{c}") - t_us
             use_b = F.col(f"_mtb_{c}").isNotNull() & (
                 F.col(f"_mtf_{c}").isNull() | (d_b <= d_f)
             )
             v = F.when(use_b, F.col(f"_vb_{c}")).otherwise(F.col(f"_vf_{c}"))
-            if tol_us is not None:
-                v = F.when(F.when(use_b, d_b).otherwise(d_f) <= F.lit(tol_us), v)
+            d = F.when(use_b, d_b).otherwise(d_f)
+        if tol_us is not None:
+            v = F.when(d <= F.lit(tol_us), v)
         out_vals.append(v.alias(c))
-    return u.filter(F.col("_src") == 1).select(
-        F.col(key), F.col("_t").alias(probe_ts), *probe_extra, *out_vals
-    )
+    probe_extra = [c for c in probes.columns if c not in (key, probe_ts)]
+    return m.select(F.col(key), F.col(probe_ts), *probe_extra, *out_vals)
 
 
 def asof_state(
@@ -216,8 +230,7 @@ def asof_state(
 
     Entities are enumerated from the turns themselves (distinct keys reuse
     the same hash partitioning)."""
-    grid = cutoff_grid(spark, cutoffs)
-    probes = expand_cutoffs(turns.select(key).distinct(), grid)
+    probes = expand_cutoffs(turns.select(key).distinct(), cutoff_grid(spark, cutoffs))
     return asof_join(
         turns,
         probes,
@@ -257,11 +270,8 @@ def horizon_features(
     (conversation, cutoff) with at least one pre-cutoff turn.
     """
     h1, h6, h24 = (int(h) for h in horizons)
-    grid = cutoff_grid(spark, cutoffs)
     x = F.col(signal_col).cast("long")
-    j = expand_cutoffs(df, grid).where(
-        F.col("ts").cast("timestamp") <= F.col("as_of")
-    )
+    j = cutoff_history(df, spark, cutoffs)
     # exact integer microsecond age — no truncating seconds cast
     age = F.unix_micros(F.col("as_of")) - F.unix_micros(
         F.col("ts").cast("timestamp")
@@ -312,10 +322,7 @@ def recency_features(
     Output: (conv_id, as_of, sec_since_any double, sec_since_<role>
     double ...), one row per (conversation, cutoff) with history.
     """
-    grid = cutoff_grid(spark, cutoffs)
-    j = expand_cutoffs(df, grid).where(
-        F.col("ts").cast("timestamp") <= F.col("as_of")
-    )
+    j = cutoff_history(df, spark, cutoffs)
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     aggs = [F.max(ts_us).alias("_any")]
     for r in roles:
@@ -365,12 +372,9 @@ def trend_asof(
     intercept, r2 doubles — NULL when n < 2 or variance degenerates).
     """
     d19 = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-    grid = cutoff_grid(spark, cutoffs)
     x = F.col("turn_idx").cast("long")
     y = F.col(signal_col).cast("long")
-    j = expand_cutoffs(df.where(y.isNotNull()), grid).where(
-        F.col("ts").cast("timestamp") <= F.col("as_of")
-    )
+    j = cutoff_history(df.where(y.isNotNull()), spark, cutoffs)
     g = j.groupBy("conv_id", "as_of").agg(
         F.count("*").cast("long").alias("n"),
         F.sum(d19(x)).alias("_sx"),
@@ -430,7 +434,6 @@ def sessions_asof(
     sec_in_session double), one row per (conversation, cutoff) with
     history.
     """
-    grid = cutoff_grid(spark, cutoffs)
     w = conv_window()
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     marked = df.select(
@@ -447,7 +450,7 @@ def sessions_asof(
             | ((F.col("_us") - F.col("_prev")) > int(gap_seconds) * 1_000_000)
         ).alias("_boundary"),
     )
-    j = expand_cutoffs(marked, grid).where(F.col("ts") <= F.col("as_of"))
+    j = cutoff_history(marked, spark, cutoffs)
     g = j.groupBy("conv_id", "as_of").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum(F.when(F.col("_boundary"), 1).otherwise(0))
@@ -490,10 +493,7 @@ def state_matrix(
     Output: (conv_id, as_of, last_sig_<role> double ...), one row per
     (conversation, cutoff) with history.
     """
-    grid = cutoff_grid(spark, cutoffs)
-    j = expand_cutoffs(df, grid).where(
-        F.col("ts").cast("timestamp") <= F.col("as_of")
-    )
+    j = cutoff_history(df, spark, cutoffs)
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     aggs = []
     for r in roles:
@@ -538,10 +538,7 @@ def distinct_asof(
     here). Output: (conv_id, as_of, n_turns long, n_roles long,
     n_tools long).
     """
-    grid = cutoff_grid(spark, cutoffs)
-    j = expand_cutoffs(df, grid).where(
-        F.col("ts").cast("timestamp") <= F.col("as_of")
-    )
+    j = cutoff_history(df, spark, cutoffs)
     return j.groupBy("conv_id", "as_of").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.count_distinct(F.col("role")).cast("long").alias("n_roles"),
@@ -571,7 +568,6 @@ def answer_rate_asof(
     answer_rate double — NULL when no user turns yet), one row per
     (conversation, cutoff) with history.
     """
-    grid = cutoff_grid(spark, cutoffs)
     w = conv_window()
     marked = df.select(
         "conv_id",
@@ -580,7 +576,7 @@ def answer_rate_asof(
         F.lead("role", 1).over(w).alias("_nrole"),
         F.lead(F.col("ts").cast("timestamp"), 1).over(w).alias("_nts"),
     )
-    j = expand_cutoffs(marked, grid).where(F.col("ts") <= F.col("as_of"))
+    j = cutoff_history(marked, spark, cutoffs)
     is_user = F.col("role") == "user"
     answered = (
         is_user
@@ -625,11 +621,8 @@ def quantile_state_asof(
     compacted frame. Output: (conv_id, as_of, n long, p25, p50, p75
     doubles), one row per (conversation, cutoff) with history.
     """
-    grid = cutoff_grid(spark, cutoffs)
     x = F.col(signal_col).cast("double")
-    j = expand_cutoffs(df.where(x.isNotNull()), grid).where(
-        F.col("ts").cast("timestamp") <= F.col("as_of")
-    )
+    j = cutoff_history(df.where(x.isNotNull()), spark, cutoffs)
     hist = j.groupBy("conv_id", "as_of", x.alias("_v")).agg(
         F.count("*").cast("long").alias("_m")
     )
@@ -675,10 +668,7 @@ def role_mix_asof(
     Determinism: exact conditional counts, one division per share.
     Output: (conv_id, as_of, n long, share_<role> double ...).
     """
-    grid = cutoff_grid(spark, cutoffs)
-    j = expand_cutoffs(df, grid).where(
-        F.col("ts").cast("timestamp") <= F.col("as_of")
-    )
+    j = cutoff_history(df, spark, cutoffs)
     aggs = [F.count("*").cast("long").alias("n")]
     for r in roles:
         aggs.append(

@@ -12,12 +12,13 @@ sitkGaussian analogue). Mask resampling's partial-volume threshold
 grid step.
 
 Declarative shape: per-conversation grid via sequence()+explode (no
-driver-side loops), then the union-tag as-of pattern for the backward
-(locf) and forward (nocb) carries — one exchange, two window passes over
-the same sort order (cubic rides the SAME two passes: the second-
-bracketing values are lag/lead columns precomputed on the turns side, so
-they are carried by additional running-lasts over the existing sorts, no
-extra shuffle). The gaussian path is scatter-shaped instead: each turn
+driver-side loops), then the grid points probe ``asof``'s sort-merge
+carry (``asof._carry``) for the backward (locf) and forward (nocb)
+matches — the same scan, (ts, turn_idx) tie-break and per-column NULL
+rule as ``asof_join``: one exchange, two window passes (cubic rides the
+SAME two passes: the second-bracketing values are lag/lead columns
+precomputed on the turns side and carried beside the value, no extra
+shuffle). The gaussian path is scatter-shaped instead: each turn
 emits its (bounded) set of covered grid cells, one groupBy(key, cell)
 sums the kernel-weighted contributions with map-side combine, and a left
 join onto the grid restores empty cells as NULL — no per-cell window over
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .asof import _carry
 
 
 def regular_grid(turns: DataFrame, step_seconds: int, key: str = "conv_id") -> DataFrame:
@@ -66,97 +69,58 @@ def backfill(
                       analogue, interpolation.py:24-54). Missing outer
                       neighbours degrade the tangent to the secant;
                       missing bracketing values fall back like 'linear'.
+
+    The bracketing turns are those of ``asof_join`` backward / forward:
+    among turns with a non-NULL value, the greatest (ts, turn_idx) with
+    ts <= grid_ts and the smallest with ts >= grid_ts (an exact hit
+    brackets itself and returns its own value).
     """
     if method not in ("nn", "linear", "cubic"):
         raise ValueError(f"bad backfill method {method}")
     grid = regular_grid(turns, step_seconds, key)
-    w_t = Window.partitionBy(key).orderBy("ts", "turn_idx") if "turn_idx" in turns.columns \
-        else Window.partitionBy(key).orderBy("ts")
+    # turns with a NULL value carry nothing; dropping them first keeps
+    # cubic's lag/lead on the turns the carry matches
     tv = turns.select(
-        F.col(key),
-        F.col("ts"),
-        F.col(value_col).cast("double").alias("_v0"),
-        *([F.col("turn_idx")] if "turn_idx" in turns.columns else []),
-    )
+        key, "ts", "turn_idx", F.col(value_col).cast("double").alias("v")
+    ).where(F.col("v").isNotNull())
+    carried = ["v"]
     if method == "cubic":
-        tv = tv.withColumn("_pv2", F.lag("_v0").over(w_t)).withColumn(
-            "_pt2", F.lag("ts").over(w_t)
-        ).withColumn("_nv2", F.lead("_v0").over(w_t)).withColumn(
-            "_nt2", F.lead("ts").over(w_t)
+        # second bracketing turn per side: the matched turn carries its own
+        # lag (backward) / lead (forward) as extra carried columns
+        w_t = Window.partitionBy(key).orderBy("ts", "turn_idx")
+        ts = F.col("ts").cast("timestamp")
+        tv = tv.select(
+            "*",
+            F.lag("v").over(w_t).alias("pv2"),
+            F.lag(ts).over(w_t).alias("pt2"),
+            F.lead("v").over(w_t).alias("nv2"),
+            F.lead(ts).over(w_t).alias("nt2"),
         )
-    extra = ["_pv2", "_pt2", "_nv2", "_nt2"] if method == "cubic" else []
-    t = tv.select(
-        F.col(key),
-        F.col("ts").alias("_t"),
-        F.lit(0).alias("_src"),
-        F.col("_v0").alias("_v"),
-        *[F.col(c) for c in extra],
-    )
-    g = grid.select(
-        F.col(key),
-        F.col("grid_ts").alias("_t"),
-        F.lit(1).alias("_src"),
-        F.lit(None).cast("double").alias("_v"),
-        *[
-            F.lit(None).cast("double" if c.endswith("v2") else "timestamp").alias(c)
-            for c in extra
-        ],
-    )
-    u = t.unionByName(g)
-    wb = Window.partitionBy(key).orderBy("_t", "_src").rowsBetween(Window.unboundedPreceding, 0)
-    u = u.withColumn("prev_v", F.last("_v", ignorenulls=True).over(wb))
-    u = u.withColumn(
-        "prev_t", F.last(F.when(F.col("_src") == 0, F.col("_t")), ignorenulls=True).over(wb)
-    )
+        carried += ["pv2", "pt2", "nv2", "nt2"]
+    m = _carry(tv, grid, carried, key=key, probe_ts="grid_ts")
     if method == "nn":
-        out = u.filter(F.col("_src") == 1).select(
-            key, F.col("_t").alias("grid_ts"), F.col("prev_v").alias(value_col)
-        )
-        return out
-    # forward pass: first build value at or after the grid point. Grid rows
-    # sort AFTER turn rows at equal _t (src 1 > 0), so an exact-ts turn is
-    # picked up by the backward pass; the forward pass orders src DESC to
-    # keep the symmetric inclusive behavior.
-    wf = (
-        Window.partitionBy(key)
-        .orderBy(F.col("_t").desc(), F.col("_src").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    u = u.withColumn("next_v", F.last("_v", ignorenulls=True).over(wf))
-    u = u.withColumn(
-        "next_t", F.last(F.when(F.col("_src") == 0, F.col("_t")), ignorenulls=True).over(wf)
-    )
-    if method == "cubic":
-        # second bracketing turn per side: the latest turn <= grid carries
-        # its own lag (= second-latest turn's value/ts) — a running last
-        # over the SAME sort, no extra shuffle; symmetric with lead
-        u = u.withColumn(
-            "prev2_v", F.last(F.when(F.col("_src") == 0, F.col("_pv2")), ignorenulls=True).over(wb)
-        ).withColumn(
-            "prev2_t", F.last(F.when(F.col("_src") == 0, F.col("_pt2")), ignorenulls=True).over(wb)
-        ).withColumn(
-            "next2_v", F.last(F.when(F.col("_src") == 0, F.col("_nv2")), ignorenulls=True).over(wf)
-        ).withColumn(
-            "next2_t", F.last(F.when(F.col("_src") == 0, F.col("_nt2")), ignorenulls=True).over(wf)
-        )
-    gsel = u.filter(F.col("_src") == 1)
+        return m.select(key, "grid_ts", F.col("_vb_v").alias(value_col))
 
-    def sec(c):
-        return F.unix_micros(F.col(c)).cast("double") / F.lit(1e6)
+    def sec(us):
+        return us.cast("double") / F.lit(1e6)
 
-    t0, t1, t2, t3 = sec("prev2_t"), sec("prev_t"), sec("next_t"), sec("next2_t")
-    tg = F.unix_micros(F.col("_t")).cast("double") / F.lit(1e6)
-    v0, v1, v2, v3 = F.col("prev2_v"), F.col("prev_v"), F.col("next_v"), F.col("next2_v")
-    dt_us = F.unix_micros(F.col("next_t")) - F.unix_micros(F.col("prev_t"))
+    g_us = F.unix_micros(F.col("grid_ts"))
+    prev_us, next_us = F.col("_mtb_v"), F.col("_mtf_v")
+    dt_us = next_us - prev_us
+    v1, v2 = F.col("_vb_v"), F.col("_vf_v")
     if method == "linear":
-        frac = (F.unix_micros(F.col("_t")) - F.unix_micros(F.col("prev_t"))) / dt_us
+        frac = (g_us - prev_us) / dt_us
         interp = (
             F.when(v1.isNull(), v2)
             .when(v2.isNull(), v1)
             .when(dt_us == 0, v1)
             .otherwise(v1 + (v2 - v1) * frac)
         )
-        return gsel.select(key, F.col("_t").alias("grid_ts"), interp.alias(value_col))
+        return m.select(key, "grid_ts", interp.alias(value_col))
+    t0, t1 = sec(F.unix_micros(F.col("_vb_pt2"))), sec(prev_us)
+    t2, t3 = sec(next_us), sec(F.unix_micros(F.col("_vf_nt2")))
+    tg = sec(g_us)
+    v0, v3 = F.col("_vb_pv2"), F.col("_vf_nv2")
     # cubic Hermite on the irregular axis (CASE guards keep the divisions
     # lazy — ANSI mode throws on x/0): finite-difference tangents, secant
     # fallback when the outer neighbour is missing or time-coincident
@@ -177,7 +141,7 @@ def backfill(
         .when(dt_us == 0, v1)
         .otherwise(h00 * v1 + h10 * h * m1 + h01 * v2 + h11 * h * m2)
     )
-    return gsel.select(key, F.col("_t").alias("grid_ts"), interp.alias(value_col))
+    return m.select(key, "grid_ts", interp.alias(value_col))
 
 
 def backfill_gaussian(

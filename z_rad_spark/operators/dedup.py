@@ -99,35 +99,6 @@ def minhash_perm_constants(n_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(shingles: DataFrame, n_hashes: int = 16, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, perm, minhash) — min over universal-hash permutations of
-    ONE md5 per shingle (folded to a 60-bit integer via the first 15 hex
-    chars, then reduced mod P). One hash invocation per shingle instead
-    of n_hashes salted md5s, and the 16x-amplified shuffle rows are
-    LONGs, not 32-char strings; map-side MIN combine collapses them to
-    n_hashes rows per doc per map task. Byte-identical in the DuckDB
-    oracle (CAST('0x'||substr AS BIGINT) == conv(substr, 16, 10))."""
-    ab = minhash_perm_constants(n_hashes)
-    h = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
-        .cast("long") % F.lit(MINHASH_P)
-    ).alias("h")
-    base = shingles.select(id_col, h)
-    perms = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("perm")
-    a_arr = F.array(*[F.lit(a) for a, _ in ab])
-    b_arr = F.array(*[F.lit(b) for _, b in ab])
-    expanded = base.select(id_col, "h", perms)
-    val = (
-        F.element_at(a_arr, F.col("perm") + 1) * F.col("h")
-        + F.element_at(b_arr, F.col("perm") + 1)
-    ) % F.lit(MINHASH_P)
-    return (
-        expanded.select(id_col, "perm", val.alias("hv"))
-        .groupBy(id_col, "perm")
-        .agg(F.min("hv").alias("minhash"))
-    )
-
-
 def _band_keys(
     docs: DataFrame,
     n: int = 3,

@@ -35,18 +35,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import memo_plan
-from .asof import cutoff_grid
+from .asof import cutoff_grid, cutoff_history
 
 SENTINEL = 1_000_000.0
 
 KEYS = ["conv_id", "as_of"]
 
 _QFRACS = (("10", 0.1), ("25", 0.25), ("50", 0.5), ("75", 0.75), ("90", 0.9))
-
-
-def _expand(df: DataFrame, spark: SparkSession, cutoffs: Iterable[str]) -> DataFrame:
-    grid = cutoff_grid(spark, cutoffs).select("as_of")
-    return df.join(F.broadcast(grid), F.col("ts") <= F.col("as_of"))
 
 
 def _lerp(nm: str, qf: float) -> Column:
@@ -248,14 +243,16 @@ def fbn_grey_asof(
     signal_col: str = "signal", max_cutoffs: int = FBN_GREY_MAX_CUTOFFS,
 ) -> DataFrame:
     """PER-ROW FBN discretization per (conv_id, as_of) — for consumers
-    that need turn-level grey values. This is the engine's ONLY remaining
-    O(turns x cutoffs) expansion and has no internal consumers (every
-    histogram / distribution path rides :func:`fbn_hist_asof`, which bins
-    the COMPACTED value histogram and is grid-size safe) — it exists for
-    callers who genuinely need per-turn grey values at a handful of
-    cutoffs. To keep the footgun out of dense-grid plans it REFUSES grids
-    larger than ``max_cutoffs`` (raise the bound explicitly only if you
-    accept replicating every turn once per cutoff)."""
+    that need turn-level grey values. It replicates every turn once per
+    cutoff (``asof.cutoff_history``, O(turns x cutoffs) rows, as the
+    as-of aggregates of ``asof`` do before they aggregate) and has no
+    internal consumers (every histogram / distribution path rides
+    :func:`fbn_hist_asof`, which bins the COMPACTED value histogram and
+    is grid-size safe) — it exists for callers who genuinely need
+    per-turn grey values at a handful of cutoffs, and keeps every turn
+    row in its output. To keep the footgun out of dense-grid plans it
+    REFUSES grids larger than ``max_cutoffs`` (raise the bound explicitly
+    only if you accept replicating every turn once per cutoff)."""
     cutoffs = list(cutoffs)
     if len(cutoffs) > max_cutoffs:
         raise ValueError(
@@ -266,7 +263,7 @@ def fbn_grey_asof(
             f"explicitly only if you accept the expansion."
         )
     x = F.col(signal_col)
-    rows = _expand(df.select("conv_id", "ts", "turn_idx", signal_col), spark, cutoffs)
+    rows = cutoff_history(df.select("conv_id", "ts", "turn_idx", signal_col), spark, cutoffs)
     w = Window.partitionBy(*KEYS)
     grey = _fbn_grey(x, F.min(x).over(w), F.max(x).over(w), n_bins)
     return rows.withColumn("grey", grey.cast("double"))

@@ -388,15 +388,3 @@ def _decode_one(payload) -> tuple:
     except ValueError:
         pass
     return (None,) * 7
-
-
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plan: explode sampled frame indices JVM-side;
-    the (stubbed) per-frame decode then rides the same mapInPandas path."""
-    vids = media.where(F.col("kind") == "video")
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"),
-    )

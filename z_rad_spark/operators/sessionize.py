@@ -104,22 +104,6 @@ def with_time_decay_sum(
     return map_conversations(df.select("conv_id", "turn_idx", "ts", signal_col), kernel, schema)
 
 
-def session_stats(df: DataFrame, gap_seconds: float) -> DataFrame:
-    """Per-session aggregate block: bounds, turn count, mean signal.
-
-    groupBy (conv_id, session_id) reuses the conv_id exchange produced by
-    with_sessions (Catalyst recognises the co-partitioning).
-    """
-    s = with_sessions(df, gap_seconds)
-    return s.groupBy("conv_id", "session_id").agg(
-        F.count("*").cast("long").alias("n_turns"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.sum(F.col("signal")).alias("signal_sum"),
-        F.avg(F.col("signal")).alias("signal_mean"),
-    )
-
-
 def turn_pairs(
     df: DataFrame,
     prompt_role: str = "user",

@@ -47,11 +47,6 @@ def _cosine(a, b):
     return _safe_div(_dot(a, b), _norm(a) * _norm(b))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    sim = _cosine(F.col(a), F.col(b))
-    return df.withColumn(out, sim.cast("double"))
-
-
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
