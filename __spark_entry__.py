@@ -1678,13 +1678,13 @@ def q_markup_density(spark, sf_dir):
 
 def q_bucketed_join(spark, sf_dir):
     """Shuffle-free co-located join via bucketed tables
-    (layout.write_bucketed + colocated_join): both sides persisted
+    (layout.write_bucketed + a plain join): both sides persisted
     bucketed on conv_id (one file per bucket, sorted), then joined with
     zero Exchange (plan pinned in tests/test_plans.py). The value gate
     proves result parity with the plain join the oracle replays.
     FIXED paths + overwrite mode: repeated sweeps/bench runs reuse the
     same /tmp footprint instead of accumulating orphaned dirs."""
-    from z_rad_spark.layout import colocated_join, write_bucketed
+    from z_rad_spark.layout import write_bucketed
 
     t = _t(spark, sf_dir).select(
         "conv_id",
@@ -1701,7 +1701,7 @@ def q_bucketed_join(spark, sf_dir):
                    sort_cols=("conv_id", "ts_us", "turn_idx"))
     write_bucketed(dim, f"{base}/dim", "zrs_gate_dim", "conv_id", 8,
                    sort_cols=("conv_id",))
-    out = colocated_join(spark, "zrs_gate_facts", "zrs_gate_dim", "conv_id")
+    out = spark.table("zrs_gate_facts").join(spark.table("zrs_gate_dim"), "conv_id")
     out = out.select(
         "conv_id", "turn_idx", "ts_us", "signal", "n_turns", "sum_signal"
     )
@@ -3546,8 +3546,8 @@ def q_trending_tokens(spark, sf_dir):
 def q_conv_features(spark, sf_dir):
     """The composed per-conversation feature table
     (profile.conversation_features): eleven conversation-level operators
-    equi-joined on conv_id — 38 features, one row per conversation. The
-    oracle composes the SAME component oracles (each already hash-green
+    — one convstats.build over their table rows, joined to Spearman on
+    conv_id — 38 features, one row per conversation. The oracle composes the SAME component oracles (each already hash-green
     standalone) with the same joins; the latency mean is rescaled to
     seconds like q_latency (r6 precision zone)."""
     from z_rad_spark.operators.profile import conversation_features

@@ -764,6 +764,32 @@ def test_profile_operators_single_exchange(spark):
     assert "Join" not in plan
 
 
+def test_conversation_stats_table_one_exchange_per_build(spark):
+    """A tabled member is one window projection + one groupBy(conv_id):
+    one hash exchange and no join (changepoint used to join a size
+    aggregate back). The fused conversation_features adds only the
+    Spearman frame's exchange."""
+    from z_rad_spark.operators import profile
+
+    plan = _plan(profile.changepoint(_roled_turns_df(spark)))
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Join" not in plan
+    plan = _plan(profile.theil_sen_trend(_roled_turns_df(spark)))
+    assert plan.count("Exchange hashpartitioning") == 1
+    plan = _plan(profile.conversation_features(_roled_turns_df(spark)))
+    assert plan.count("Exchange hashpartitioning") == 2
+
+
+def test_conversation_stats_shared_turn_column_must_match():
+    """Two rows may share a turn-level column only with the same SQL
+    text: a trend on one signal and an autocorrelation on another would
+    silently read one of them."""
+    from z_rad_spark.operators import convstats
+
+    with pytest.raises(ValueError, match="_x"):
+        convstats.build(None, convstats.trend("signal"), convstats.autocorr("score"))
+
+
 def test_equal_frequency_bins_document_pass_is_broadcast_map(spark):
     """The document-side pass must be a broadcast join (the bins frame
     is |distinct values| rows); the only SinglePartition exchange allowed
@@ -1071,7 +1097,7 @@ def test_bucketed_join_has_zero_exchange(spark):
     import tempfile
     import uuid
 
-    from z_rad_spark.layout import colocated_join, write_bucketed
+    from z_rad_spark.layout import write_bucketed
 
     t = _turns_df(spark)
     dim = t.groupBy("conv_id").agg(F.count("*").alias("n_turns"))
@@ -1084,7 +1110,7 @@ def test_bucketed_join_has_zero_exchange(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = colocated_join(spark, f"zrs_facts_{sfx}", f"zrs_dim_{sfx}", "conv_id")
+        j = spark.table(f"zrs_facts_{sfx}").join(spark.table(f"zrs_dim_{sfx}"), "conv_id")
         n = j.count()
         assert n == t.count()
         plan = _plan(j)

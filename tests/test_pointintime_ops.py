@@ -909,32 +909,109 @@ def test_vocab_growth_matches_manual(spark):
 
 
 def test_conversation_features_composition_consistency(spark):
-    from z_rad_spark.operators.profile import (
-        conversation_features,
-        signal_trend,
-    )
-    from z_rad_spark.operators.sessionize import role_transitions
+    """Every one of the 38 columns equals its standalone operator's,
+    bit for bit (NULL and NaN count as equal; a member with no row for
+    a conversation counts as NULL). Besides four cycling-role
+    conversations with NULL signals, the frame has a one-turn
+    conversation (no changepoint, no Theil-Sen fit) and an all-tool one
+    (no user->assistant pair, so no latency or pair-coupling row)."""
+    from z_rad_spark.operators import profile, sessionize
 
     df, pdf = _turns(spark, n_conv=4, n_turns=30, seed=131)
     pdf["role"] = ["user", "assistant", "tool", "system"] * (len(pdf) // 4)
-    base = spark.createDataFrame(
-        pdf[["conv_id", "turn_idx", "ts", "signal", "role"]]
+    t0 = pd.Timestamp("2024-01-03")
+    extra = pd.DataFrame(
+        [("solo", 0, t0, 3.0, "user")]
+        + [("tools", i, t0 + pd.Timedelta(minutes=7 * i), float(i % 4), "tool") for i in range(5)],
+        columns=["conv_id", "turn_idx", "ts", "signal", "role"],
     )
-    wide = conversation_features(base).toPandas().set_index("conv_id")
-    assert len(wide) == 4 and len(wide.columns) == 38
-    # composed columns equal the standalone operators'
-    st = signal_trend(base).toPandas().set_index("conv_id")
-    rt = role_transitions(base).toPandas().set_index("conv_id")
-    assert np.allclose(wide["slope"], st.loc[wide.index, "slope"], atol=0)
-    assert (wide["n_trans"] == rt.loc[wide.index, "n_trans"]).all()
-    # session-9 columns equal their standalone operators too
-    from z_rad_spark.operators.profile import arrival_stats, changepoint
+    pdf = pd.concat([pdf[extra.columns], extra], ignore_index=True)
+    base = spark.createDataFrame(pdf).withColumn(
+        "signal",
+        F.when((F.col("conv_id") == "c1") & (F.col("turn_idx") % 7 == 3), None).otherwise(
+            F.col("signal")
+        ),
+    )
+    wide = profile.conversation_features(base).toPandas().set_index("conv_id")
+    assert len(wide) == 6 and len(wide.columns) == 38
 
-    ar = arrival_stats(base).toPandas().set_index("conv_id")
-    cp = changepoint(base).toPandas().set_index("conv_id")
-    assert np.allclose(wide["burstiness"], ar.loc[wide.index, "burstiness"], atol=0)
-    assert (wide["cp_turn"] == cp.loc[wide.index, "cp_turn"]).all()
-    assert np.allclose(wide["cp_gap"], cp.loc[wide.index, "mean_gap"], atol=0)
+    members = [
+        (profile.signal_trend, {"n": "n", "slope": "slope", "intercept": "intercept", "r": "r"}),
+        (sessionize.role_transitions, {c: c for c in (
+            "n_trans", "n_distinct_trans", "self_loop_ratio", "trans_entropy",
+            "prev_entropy", "cond_entropy")}),
+        (sessionize.role_run_stats, {c: c for c in ("n_runs", "max_run", "mean_run")}),
+        (sessionize.autocorr_features, {c: c for c in ("ac_1", "ac_2", "ac_3")}),
+        (sessionize.spearman_trend, {"rho": "rho"}),
+        (profile.temporal_profile, {c: c for c in (
+            "peak_hour", "peak_frac", "hour_entropy", "night_frac", "weekend_frac")}),
+        (profile.arrival_stats, {c: c for c in (
+            "span_s", "mean_gap_s", "cv_gap", "burstiness", "fano_hourly")}),
+        (profile.changepoint, {"cp_turn": "cp_turn", "mean_gap": "cp_gap", "g_stat": "cp_stat"}),
+        (profile.theil_sen_trend, {"sen_slope": "sen_slope", "sen_intercept": "sen_intercept"}),
+        (profile.pair_signal_correlation, {"n_pairs": "n_pairs", "r": "pair_r"}),
+        (profile.response_latency, {
+            "n_resp": "n_responses", "mean_us": "mean_us", "min_us": "min_us",
+            "max_us": "max_us"}),
+    ]
+
+    def same(a, b):
+        na, nb = pd.isna(a), pd.isna(b)
+        if na or nb:
+            return na and nb
+        if isinstance(a, float) or isinstance(b, float):
+            return np.float64(a).tobytes() == np.float64(b).tobytes()
+        return a == b
+
+    seen = []
+    for op, cols in members:
+        got = op(base).toPandas().set_index("conv_id").reindex(wide.index)
+        for src, dst in cols.items():
+            seen.append(dst)
+            bad = [
+                c for c in wide.index if not same(wide.at[c, dst], got.at[c, src])
+            ]
+            assert bad == [], (op.__name__, src, bad)
+    assert sorted(seen) == sorted(wide.columns)
+    # the edge conversations exercise the NULL paths
+    assert pd.isna(wide.at["solo", "cp_turn"]) and pd.isna(wide.at["solo", "sen_slope"])
+    assert pd.isna(wide.at["tools", "n_responses"]) and pd.isna(wide.at["tools", "n_pairs"])
+
+
+def test_role_names_with_quotes(spark):
+    """A caller-supplied role name is data, never SQL: with a quote in
+    a role name, role_transitions and response_latency give exactly
+    the values they give when that role has a plain name."""
+    from z_rad_spark.operators.profile import response_latency
+    from z_rad_spark.operators.sessionize import role_transitions
+
+    odd = "o'brien \\' x"
+    seq = {"c0": [odd, "assistant", odd, odd, odd, "assistant", odd],
+           "c1": ["tool", odd, "tool"]}
+    rows = [
+        (c, i, pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=37 * i * i + 5 * i), r)
+        for c, roles in seq.items()
+        for i, r in enumerate(roles)
+    ]
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts", "role"])
+    quoted = spark.createDataFrame(pdf)
+    plain = spark.createDataFrame(pdf.replace({"role": {odd: "obrien"}}))
+
+    def run(op, df, **kw):
+        return op(df, **kw).toPandas().sort_values("conv_id").reset_index(drop=True)
+
+    got = run(role_transitions, quoted, roles=("assistant", odd, "tool", "user"))
+    want = run(role_transitions, plain, roles=("assistant", "obrien", "tool", "user"))
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert list(got["n_trans"]) == [6, 2]
+    assert list(got["n_distinct_trans"]) == [3, 2]
+
+    got = run(response_latency, quoted, from_role=odd, to_role="assistant")
+    want = run(response_latency, plain, from_role="obrien", to_role="assistant")
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    # c0: odd->assistant at turns 1 and 5; c1 has no such pair (no row)
+    assert list(got["conv_id"]) == ["c0"] and list(got["n_resp"]) == [2]
+    assert list(got["min_us"]) == [42_000_000]
 
 
 def test_role_transitions_conditional_entropy(spark):

@@ -924,6 +924,27 @@ def test_sessions_asof_hand_computed(spark):
     assert r2["sec_in_session"] == pytest.approx(3600.0, rel=1e-12)
 
 
+def test_sessions_asof_fractional_gap_matches_with_sessions(spark):
+    """A fractional gap threshold is not truncated: turns 1800.2 s apart
+    with gap_seconds=1800.5 form ONE session, as with_sessions says."""
+    from z_rad_spark.operators.asof import sessions_asof
+    import datetime
+
+    from z_rad_spark.operators.sessionize import with_sessions
+
+    t0 = datetime.datetime(2024, 1, 1, 10)
+    df = spark.createDataFrame(
+        [("c1", i, "user", t0 + datetime.timedelta(seconds=1800.2 * i), 1.0) for i in range(3)],
+        "conv_id string, turn_idx int, role string, ts timestamp, signal double",
+    )
+    ids = [r["session_id"] for r in with_sessions(df, 1800.5).orderBy("turn_idx").collect()]
+    assert ids == [0, 0, 0]
+    (r,) = sessions_asof(df, spark, ["2024-01-01 12:00:00"], gap_seconds=1800.5).collect()
+    assert r["n_turns"] == 3 and r["n_sessions"] == 1
+    (r,) = sessions_asof(df, spark, ["2024-01-01 12:00:00"], gap_seconds=1800.1).collect()
+    assert r["n_sessions"] == 3
+
+
 def test_length_gini_uniform_is_zero(spark):
     from z_rad_spark.operators.curation import length_gini
 

@@ -19,7 +19,9 @@ the two details that make it actually work:
 
 Bucket counts must MATCH across tables that join together (pick the
 cluster-wide constant once — e.g. 2-4x the executor count — and reuse
-it; two tables bucketed 512 and 1024 shuffle one side again).
+it; two tables bucketed 512 and 1024 shuffle one side again). The join
+itself is a plain ``spark.table(l).join(spark.table(r), key)``: the
+layout does the work.
 
 These are external parquet tables (explicit ``path``): the metastore
 entry carries only schema + bucketing spec, so the same layout works on
@@ -28,7 +30,7 @@ any catalog (Hive metastore, Glue, Unity) a real deployment points at.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -56,21 +58,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    key: str = "conv_id",
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucket-count tables on their bucket key.
-
-    With both sides bucketed on ``key`` with equal bucket counts this
-    plans as a sort-merge join with ZERO Exchange (the bucketed scans
-    already satisfy the join's required distribution) — the plan shape
-    tests/test_plans.py pins. The function is a plain ``join``; the
-    layout does the work, which is the point: declare the layout once,
-    and every downstream join on the key is shuffle-free.
-    """
-    return spark.table(left_table).join(spark.table(right_table), key, how)

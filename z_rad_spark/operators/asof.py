@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .exprs import literal_rows
+from .sessionize import opens_session
 from .skew import conv_window
 
 
@@ -410,11 +411,12 @@ def sessions_asof(
     df: DataFrame,
     spark,
     cutoffs,
-    gap_seconds: int = 1800,
+    gap_seconds: float = 1800,
 ) -> DataFrame:
     """Session-count state at each as-of cutoff: how many gap-based
-    sessions (gap > ``gap_seconds``) the conversation has accumulated
-    using only ts <= cutoff, plus seconds since the current session
+    sessions (gap > ``gap_seconds``, the sessionize.opens_session rule)
+    the conversation has accumulated using only ts <= cutoff, plus
+    seconds since the current session
     started — the point-in-time view of [[q_sessionize]]'s full-table
     segmentation (a feature store can't run the full sessionizer per
     cutoff; this derives the same counts from ONE lag pass reused by
@@ -447,7 +449,7 @@ def sessions_asof(
         "_us",
         (
             F.col("_prev").isNull()
-            | ((F.col("_us") - F.col("_prev")) > int(gap_seconds) * 1_000_000)
+            | opens_session(((F.col("_us") - F.col("_prev")) / 1e6).cast("double"), gap_seconds)
         ).alias("_boundary"),
     )
     j = cutoff_history(marked, spark, cutoffs)

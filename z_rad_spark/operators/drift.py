@@ -46,6 +46,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .exprs import chain
 from .skew import ORDER as _ORDER, conv_window
 
 
@@ -340,15 +341,9 @@ def mi_association(
             )
     g = df.groupBy(win.alias("win")).agg(*aggs)
 
-    def _chain(terms):
-        acc = None
-        for t in terms:
-            acc = t if acc is None else acc + t
-        return acc
-
-    n_tot = _chain([F.col(f"_n_{r}_{b}") for r in groups for b in range(1, n_bins + 1)])
-    marg_r = {r: _chain([F.col(f"_n_{r}_{b}") for b in range(1, n_bins + 1)]) for r in groups}
-    marg_b = {b: _chain([F.col(f"_n_{r}_{b}") for r in groups]) for b in range(1, n_bins + 1)}
+    n_tot = chain([F.col(f"_n_{r}_{b}") for r in groups for b in range(1, n_bins + 1)])
+    marg_r = {r: chain([F.col(f"_n_{r}_{b}") for b in range(1, n_bins + 1)]) for r in groups}
+    marg_b = {b: chain([F.col(f"_n_{r}_{b}") for r in groups]) for b in range(1, n_bins + 1)}
     # an empty window (every count 0) divides by 1, never 0; its scores
     # are nulled below
     N = F.greatest(n_tot, F.lit(1)).cast("double")
@@ -368,8 +363,8 @@ def mi_association(
     out = g.select(
         "win",
         n_tot.cast("long").alias("n"),
-        _chain(mi_terms).alias("mi"),
-        _chain(chi_terms).alias("chi2"),
+        chain(mi_terms).alias("mi"),
+        chain(chi_terms).alias("chi2"),
     )
     # a separate projection: guarding the chains in place would keep their
     # shared marginals out of subexpression elimination (codegen > 64 KB)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .drift import two_class_ecdf
+from .exprs import chain
 
 
 def with_loo_target_encoding(
@@ -136,14 +137,8 @@ def woe_iv(
         aggs.append(F.count(F.when(is_k & ~good, 1)).alias(f"_b_{k}"))
     g = df.where(x.isNotNull()).agg(*aggs)
 
-    def _chain(terms):
-        acc = None
-        for t in terms:
-            acc = t if acc is None else acc + t
-        return acc
-
-    G = _chain([F.col(f"_g_{k}") for k in keys]).cast("double")
-    B = _chain([F.col(f"_b_{k}") for k in keys]).cast("double")
+    G = chain([F.col(f"_g_{k}") for k in keys]).cast("double")
+    B = chain([F.col(f"_b_{k}") for k in keys]).cast("double")
     woe_exprs, iv_terms = {}, []
     for k in keys:
         gk = F.col(f"_g_{k}").cast("double")
@@ -154,7 +149,7 @@ def woe_iv(
         iv_terms.append(
             F.when(both, (gk / G - bk / B) * woe).otherwise(F.lit(0.0))
         )
-    iv = _chain(iv_terms)
+    iv = chain(iv_terms)
     rows = F.array(
         *[
             F.struct(

@@ -12,9 +12,12 @@ from __future__ import annotations
 import numbers
 from typing import Iterable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DataType, DoubleType
 
 
 def _sql_literal(v, sql_type: str) -> str:
@@ -79,3 +82,30 @@ def sorted_median(arr):
     return F.when(m % 2 == 1, F.get(arr, mid)).otherwise(
         (F.get(arr, mid - 1) + F.get(arr, mid)) / F.lit(2.0)
     )
+
+
+def sorted_median_sql(arr: str) -> str:
+    """:func:`sorted_median` as SQL text over the array expression
+    ``arr`` — the same expression tree, for SQL-built plans."""
+    m = f"size({arr})"
+    mid = f"CAST(FLOOR({m} / 2) AS INT)"
+    return (
+        f"CASE WHEN {m} % 2 = 1 THEN get({arr}, {mid}) "
+        f"ELSE (get({arr}, {mid} - 1) + get({arr}, {mid})) / 2.0D END"
+    )
+
+
+def chain(terms):
+    """Left fold ``((t0 + t1) + t2) + ...`` of Columns: the fixed
+    left-to-right summation order the oracles replay."""
+    acc = None
+    for t in terms:
+        acc = t if acc is None else acc + t
+    return acc
+
+
+@pandas_udf(DoubleType())  # a type object: no DDL parse, so no session at import
+def np_log(x):
+    """Natural log through NumPy (glibc ``log``, the oracles' ``ln``)
+    over one Arrow batch."""
+    return pd.Series(np.log(x.to_numpy()))

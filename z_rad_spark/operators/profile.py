@@ -27,7 +27,9 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import convstats
 from .exprs import literal_frame
+from .sessionize import spearman_trend
 from .skew import ORDER as _ORDER, conv_window
 
 
@@ -55,37 +57,11 @@ def signal_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     fits (fewer than 2 scored turns or a constant regressor/signal).
 
     Output: (conv_id, n long, slope double, intercept double, r double).
+
+    Formula: the ``convstats.trend`` table row, shared with
+    conversation_features.
     """
-    i = (F.row_number().over(conv_window()) - F.lit(1)).cast("long")
-    x = F.col(signal_col).cast("long")
-    p = df.select("conv_id", i.alias("_i"), x.alias("_x"))
-    scored = F.col("_x").isNotNull()
-    g = p.groupBy("conv_id").agg(
-        F.count("_x").alias("_n"),
-        F.sum(F.when(scored, F.col("_i"))).alias("_si"),
-        F.sum(F.when(scored, F.col("_i") * F.col("_i"))).alias("_sii"),
-        F.sum("_x").alias("_sx"),
-        F.sum(F.col("_x") * F.col("_x")).alias("_sxx"),
-        F.sum(F.col("_i") * F.col("_x")).alias("_six"),
-    )
-    n = F.col("_n").cast("double")
-    si = F.col("_si").cast("double")
-    sii = F.col("_sii").cast("double")
-    sx = F.col("_sx").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    six = F.col("_six").cast("double")
-    num = n * six - si * sx
-    den = n * sii - si * si
-    varx = n * sxx - sx * sx
-    slope = num / den
-    ok = (F.col("_n") > 1) & (den != F.lit(0.0))
-    return g.select(
-        "conv_id",
-        F.col("_n").cast("long").alias("n"),
-        F.when(ok, slope).alias("slope"),
-        F.when(ok, (sx - slope * si) / n).alias("intercept"),
-        F.when(ok & (varx > 0), num / (F.sqrt(den) * F.sqrt(varx))).alias("r"),
-    )
+    return convstats.build(df, convstats.trend(signal_col))
 
 
 def temporal_profile(df: DataFrame) -> DataFrame:
@@ -106,43 +82,11 @@ def temporal_profile(df: DataFrame) -> DataFrame:
 
     Output: (conv_id, n long, peak_hour int, peak_frac double,
     hour_entropy double, night_frac double, weekend_frac double).
+
+    Formula: the ``convstats.hours`` table row, shared with
+    conversation_features.
     """
-    hour = F.hour(F.col("ts").cast("timestamp"))
-    dow = F.dayofweek(F.col("ts").cast("timestamp"))  # 1=Sun .. 7=Sat
-    aggs = [
-        F.count(F.lit(1)).alias("_n"),
-        F.count(F.when(hour <= 5, 1)).alias("_night"),
-        F.count(F.when(dow.isin(1, 7), 1)).alias("_wkend"),
-    ]
-    for h in range(24):
-        aggs.append(F.count(F.when(hour == h, 1)).alias(f"_h{h}"))
-    g = df.groupBy("conv_id").agg(*aggs)
-
-    def _chain(terms):
-        acc = None
-        for t in terms:
-            acc = t if acc is None else acc + t
-        return acc
-
-    n = F.col("_n").cast("double")
-    peak_c = F.greatest(*[F.col(f"_h{h}") for h in range(24)])
-    peak_h = F.coalesce(
-        *[F.when(F.col(f"_h{h}") == peak_c, F.lit(h)) for h in range(24)]
-    )
-    ent_terms = []
-    for h in range(24):
-        c = F.col(f"_h{h}").cast("double")
-        p = c / n
-        ent_terms.append(F.when(c > 0, -p * F.log2(p)).otherwise(F.lit(0.0)))
-    return g.select(
-        "conv_id",
-        F.col("_n").cast("long").alias("n"),
-        peak_h.cast("int").alias("peak_hour"),
-        (peak_c.cast("double") / n).alias("peak_frac"),
-        _chain(ent_terms).alias("hour_entropy"),
-        (F.col("_night").cast("double") / n).alias("night_frac"),
-        (F.col("_wkend").cast("double") / n).alias("weekend_frac"),
-    )
+    return convstats.build(df, convstats.hours())
 
 
 def response_latency(
@@ -165,217 +109,45 @@ def response_latency(
 
     Output: (conv_id, n_resp long, mean_us double, min_us long,
     max_us long).
+
+    Formula: the ``convstats.latency`` table row, shared with
+    conversation_features.
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = conv_window()
-    p = df.select(
-        "conv_id",
-        F.col("role").alias("_to"),
-        ts_us.alias("_ts"),
-        F.lag("role").over(w).alias("_from"),
-        F.lag(ts_us).over(w).alias("_prev_ts"),
-    )
-    pairs = p.where(
-        (F.col("_to") == to_role) & (F.col("_from") == from_role)
-    ).withColumn("_gap", F.col("_ts") - F.col("_prev_ts"))
-    return pairs.groupBy("conv_id").agg(
-        F.count("_gap").cast("long").alias("n_resp"),
-        (F.sum("_gap").cast("double") / F.count("_gap").cast("double")).alias(
-            "mean_us"
-        ),
-        F.min("_gap").cast("long").alias("min_us"),
-        F.max("_gap").cast("long").alias("max_us"),
-    )
+    row = convstats.latency(from_role, to_role)
+    return convstats.build(df, row).where("n_resp IS NOT NULL")  # no pair, no row
 
 
 def conversation_features(df: DataFrame) -> DataFrame:
     """One wide per-conversation feature frame composing the
-    conversation-level operators: role-transition Markov structure (incl. the conditional-entropy
-    predictability),
-    same-role run lengths, lag-1..3 signal autocorrelation, signal
+    conversation-level operators: role-transition Markov structure
+    (incl. the conditional-entropy predictability), same-role run
+    lengths, lag-1..3 signal autocorrelation, signal
     trend (OLS + Pearson r), Theil-Sen robust trend, Spearman rank
     trend, temporal activity profile, arrival-process burstiness/Fano,
     the most-likely mean changepoint, prompt→response signal coupling,
     and user→assistant response latency — the single table a curation
     pipeline filters/stratifies conversations on.
 
-    Every input operator groups on conv_id with the same exchange
-    discipline, so the composition is |conversations|-sized frames
-    equi-joined on conv_id (Catalyst broadcasts or co-partitions;
-    nothing here re-touches the turn-level data). Latency and
+    The tabled members (convstats: trend, transitions, autocorr, hours,
+    gaps, changepoint, theil_sen, coupling, latency) are ONE
+    convstats.build — one window projection, one groupBy(conv_id), one
+    output projection, so one hash exchange — with each member's outputs
+    picked and renamed, never restated. Spearman's midrank windows order
+    by value, so its frame is equi-joined on conv_id. Latency and
     pair-coupling columns are NULL for conversations with no
-    user→assistant pair (left joins — the absence is the feature).
+    user→assistant pair (the absence is the feature); the changepoint
+    and Theil-Sen columns are NULL for a one-turn conversation.
 
     Output: conv_id + 38 feature columns, one row per conversation.
     """
-    # r6 fused shape: the previous implementation equi-joined eleven
-    # standalone frames, each re-deriving the turn table (26 scans, 72
-    # exchanges, 46 window nodes). Nine of the eleven share the SAME
-    # stable (ts, turn_idx) conv window and aggregate only order-free
-    # exact-integer sufficient statistics (or sort-normalized arrays),
-    # so they fuse into ONE window projection + ONE groupBy(conv_id)
-    # with bit-identical outputs: every float chain below is copied
-    # verbatim from its member operator, fed by the same exact-long
-    # inputs, and longs/counts/min/max/struct-max/sorted-collect are
-    # aggregation-order-insensitive (guide 2.3/2.4: fewer passes, one
-    # exchange). The remaining joins are the genuinely different-shaped
-    # members: role_run_stats (per-island sub-aggregate), spearman
-    # (midrank windows over a value ordering), and arrival_stats' hourly
-    # Fano side (per-hour-bucket pre-aggregate). Members absent for a
-    # conversation (no user->assistant pair) keep their NULL-not-zero
-    # left-join semantics via count-guarded aggregates.
-    from .sessionize import spearman_trend as _spearman
-
-    roles = ("assistant", "system", "tool", "user")
-    from_role, to_role = "user", "assistant"
-
-    # All expressions below are SQL strings parsed once in the JVM: the
-    # Column-API construction of this frame cost ~3.7 s of driver time in
-    # py4j round-trips (~20k socket calls, profiled r6); the parsed trees
-    # are identical, so values are unchanged.
-    ORD = "PARTITION BY conv_id ORDER BY ts, turn_idx"
-    CUM = f"{ORD} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-    XL = "CAST(signal AS BIGINT)"
-    TSU = "unix_micros(CAST(ts AS TIMESTAMP))"
-    p = df.selectExpr(
-        "conv_id",
-        f"{XL} AS _x",
-        f"CAST(row_number() OVER ({ORD}) - 1 AS BIGINT) AS _i",
-        "role AS _to",
-        f"lag(role) OVER ({ORD}) AS _from",
-        f"lag({XL}, 1) OVER ({ORD}) AS _l1",
-        f"lag({XL}, 2) OVER ({ORD}) AS _l2",
-        f"lag({XL}, 3) OVER ({ORD}) AS _l3",
-        f"{TSU} AS _ts",
-        f"lag({TSU}) OVER ({ORD}) AS _prev",
-        f"sum({XL}) OVER ({CUM}) AS _cs",
-        f"count(*) OVER ({CUM}) AS _ct",
-        f"sum({XL}) OVER (PARTITION BY conv_id) AS _ts_sn",
-        "count(*) OVER (PARTITION BY conv_id) AS _ts_n",
-        "hour(CAST(ts AS TIMESTAMP)) AS _hr",
-        "dayofweek(CAST(ts AS TIMESTAMP)) AS _dw",
-        "ts",
-        "turn_idx",
-        "CAST(signal AS DOUBLE) AS _y",
-        "(signal IS NOT NULL) AS _sig_nn",
-        "role AS _r",
-        f"CAST(({TSU} - {TSU} % 3600000000) / 3600000000 AS BIGINT) AS _hb",
-    )
-    gap = "(_ts - _prev)"
-    p = p.withColumn(
-        "_gap_s",
-        F.expr(
-            "CAST(CASE WHEN _prev IS NOT NULL THEN "
-            f"(({gap} - {gap} % 1000000) / 1000000) END AS BIGINT)"
-        ),
-    )
-
-    cp_struct = (
-        "named_struct("
-        "'g', abs(_ts_n * _cs - _ct * _ts_sn), "
-        "'negt', -_ct, 't', _ct, 'ts', _ts, 'st', _cs, "
-        "'sn', _ts_sn, 'n', _ts_n)"
-    )
-    pcc = f"(_to = '{to_role}' AND _from = '{from_role}' AND _l1 IS NOT NULL AND _sig_nn)"
-    rlc = f"(_to = '{to_role}' AND _from = '{from_role}')"
-    aggs = [
-        # signal_trend sufficient statistics
-        "count(_x) AS _st_n",
-        "sum(CASE WHEN _x IS NOT NULL THEN _i END) AS _st_si",
-        "sum(CASE WHEN _x IS NOT NULL THEN _i * _i END) AS _st_sii",
-        "sum(_x) AS _st_sx",
-        "sum(_x * _x) AS _st_sxx",
-        "sum(_i * _x) AS _st_six",
-        # role_transitions counts
-        "count(_from) AS _rt_n",
-    ]
-    for a in roles:
-        for b in roles:
-            aggs.append(
-                f"count(CASE WHEN (_from = '{a}' AND _to = '{b}') THEN 1 END)"
-                f" AS _c_{a}_{b}"
-            )
-    for k in (1, 2, 3):
-        both = f"(_x IS NOT NULL AND _l{k} IS NOT NULL)"
-        aggs += [
-            f"count(CASE WHEN {both} THEN 1 END) AS _m{k}",
-            f"sum(_x * _l{k}) AS _p{k}",
-            f"sum(CASE WHEN {both} THEN _x END) AS _a{k}",
-            f"sum(CASE WHEN {both} THEN _l{k} END) AS _b{k}",
-        ]
-    aggs += [
-        # temporal_profile counts
-        "count(1) AS _tp_n",
-        "count(CASE WHEN _hr <= 5 THEN 1 END) AS _night",
-        "count(CASE WHEN _dw IN (1, 7) THEN 1 END) AS _wkend",
-    ]
-    for h in range(24):
-        aggs.append(f"count(CASE WHEN _hr = {h} THEN 1 END) AS _h{h}")
-    aggs += [
-        # arrival_stats gap-side statistics
-        "min(_ts) AS _ar_first",
-        "max(_ts) AS _ar_last",
-        "CAST(count(_gap_s) AS BIGINT) AS _ar_ng",
-        "coalesce(sum(_gap_s), 0) AS _ar_sg",
-        "coalesce(sum(_gap_s * _gap_s), 0) AS _ar_sgg",
-        # changepoint argmax (NULL when no t < n candidate, matching the
-        # previous left join against the candidate aggregate)
-        f"max(CASE WHEN _ct < _ts_n THEN {cp_struct} END) AS _b",
-        # theil_sen collected series (sort_array normalizes collect order)
-        "sort_array(collect_list(named_struct('ts', ts, 'turn_idx', turn_idx, '_y', _y, '_r', _r, '_hb', _hb))) AS _a",
-        # pair_signal_correlation sufficient statistics
-        f"CAST(count(CASE WHEN {pcc} THEN 1 END) AS BIGINT) AS _pc_n",
-        f"sum(CASE WHEN {pcc} THEN _l1 END) AS _pc_sx",
-        f"sum(CASE WHEN {pcc} THEN _x END) AS _pc_sy",
-        f"sum(CASE WHEN {pcc} THEN _l1 * _x END) AS _pc_sxy",
-        f"sum(CASE WHEN {pcc} THEN _l1 * _l1 END) AS _pc_sxx",
-        f"sum(CASE WHEN {pcc} THEN _x * _x END) AS _pc_syy",
-        # response_latency statistics
-        f"CAST(count(CASE WHEN {rlc} THEN {gap} END) AS BIGINT) AS _rl_n",
-        f"sum(CASE WHEN {rlc} THEN {gap} END) AS _rl_sum",
-        f"min(CASE WHEN {rlc} THEN {gap} END) AS _rl_min",
-        f"max(CASE WHEN {rlc} THEN {gap} END) AS _rl_max",
-    ]
-    g = p.groupBy("conv_id").agg(*[F.expr(s) for s in aggs])
-
-    # --- theil_sen post-aggregation (computed columns referenced by
-    # --- later expressions, so they stay withColumn steps) ---
-    g = g.withColumn("_ys", F.expr("transform(_a, s -> s._y)"))
-    N = "size(_ys)"
-    slopes = (
-        f"array_sort(flatten(transform(sequence(0, {N} - 2), "
-        f"i -> transform(sequence(i + 1, {N} - 1), "
-        f"j -> (get(_ys, j) - get(_ys, i)) / CAST(j - i AS DOUBLE)))))"
-    )
-    g = g.withColumn("_s", F.expr(f"CASE WHEN {N} >= 2 THEN {slopes} END"))
-
-    def med(arr):
-        m = f"size({arr})"
-        mid = f"CAST(FLOOR({m} / 2) AS INT)"
-        return (
-            f"CASE WHEN {m} % 2 = 1 THEN get({arr}, {mid}) "
-            f"ELSE (get({arr}, {mid} - 1) + get({arr}, {mid})) / 2.0D END"
-        )
-
-    g = g.withColumn(
-        "sen_slope", F.expr(f"CASE WHEN {N} >= 2 THEN {med('_s')} END")
-    )
-    resid = (
-        f"array_sort(transform(sequence(0, {N} - 1), "
-        "i -> get(_ys, i) - sen_slope * CAST(i AS DOUBLE)))"
-    )
-    inner = f"CASE WHEN {N} >= 2 THEN {resid} END"
-    g = g.withColumn(
-        "sen_intercept",
-        F.expr(f"CASE WHEN {N} >= 2 THEN {med(f'({inner})')} END"),
-    )
-
-    # --- role_run_stats over the collected (ts, turn_idx)-sorted roles:
-    # --- a run boundary is a role change in the stable order, identical to
-    # --- the two-row_number island construction; counts are exact longs
+    sig = "signal"
+    # one sorted collect serves Theil-Sen and the two folds below
+    seq = convstats.theil_sen(sig, carry=(("_r", "role"), ("_hb", convstats.HOUR_BUCKET)))
     L0 = "CAST(0 AS BIGINT)"
-    runs_fold = (
-        "aggregate(transform(_a, s -> s._r), "
+    # a run boundary is a role change in the stable order (the islands of
+    # role_run_stats); exact long counts
+    runs = (
+        "aggregate(transform(_sen_a, s -> s._r), "
         f"named_struct('prev', CAST(NULL AS STRING), 'cur', {L0}, 'mx', {L0}, 'cnt', {L0}), "
         "(acc, r) -> CASE WHEN acc.prev IS NULL OR NOT (r <=> acc.prev) "
         "THEN named_struct('prev', r, 'cur', CAST(1 AS BIGINT), "
@@ -383,159 +155,52 @@ def conversation_features(df: DataFrame) -> DataFrame:
         "ELSE named_struct('prev', r, 'cur', acc.cur + 1, "
         "'mx', greatest(acc.mx, acc.cur + 1), 'cnt', acc.cnt) END)"
     )
-    g = g.withColumn("_runs", F.expr(runs_fold))
-    # --- arrival_stats hourly-Fano side over the same array: hour buckets
-    # --- are monotone in ts, so same-bucket runs are contiguous and one
-    # --- fold accumulates the exact per-bucket counts' sum of squares
-    scc_fold = (
-        "aggregate(transform(_a, s -> s._hb), "
+    # hour buckets are monotone in ts, so same-bucket runs are contiguous:
+    # one fold gives arrival_stats' exact per-bucket sum of squares
+    scc = (
+        "aggregate(transform(_sen_a, s -> s._hb), "
         f"named_struct('prev', CAST(NULL AS BIGINT), 'c', {L0}, 'scc', {L0}), "
         "(acc, b) -> CASE WHEN acc.prev IS NULL OR b != acc.prev "
         "THEN named_struct('prev', b, 'c', CAST(1 AS BIGINT), 'scc', acc.scc + acc.c * acc.c) "
         "ELSE named_struct('prev', b, 'c', acc.c + 1, 'scc', acc.scc) END, "
         "acc -> acc.scc + acc.c * acc.c)"
     )
-    g = (
-        g.withColumn("_scc", F.expr(scc_fold))
-        .withColumn("_hb0", F.expr("element_at(transform(_a, s -> s._hb), 1)"))
-        .withColumn("_hb1", F.expr("element_at(transform(_a, s -> s._hb), -1)"))
-    )
-
-    # --- per-member output expressions (verbatim float chains from the
-    # --- standalone operators, over the shared sufficient statistics) ---
-    stN, stSI, stSII = "CAST(_st_n AS DOUBLE)", "CAST(_st_si AS DOUBLE)", "CAST(_st_sii AS DOUBLE)"
-    stSX, stSXX, stSIX = "CAST(_st_sx AS DOUBLE)", "CAST(_st_sxx AS DOUBLE)", "CAST(_st_six AS DOUBLE)"
-    st_num = f"({stN} * {stSIX} - {stSI} * {stSX})"
-    st_den = f"({stN} * {stSII} - {stSI} * {stSI})"
-    st_varx = f"({stN} * {stSXX} - {stSX} * {stSX})"
-    st_slope = f"({st_num} / {st_den})"
-    st_ok = f"(_st_n > 1 AND {st_den} != 0.0D)"
-
-    rtN = "CAST(_rt_n AS DOUBLE)"
-
-    def ent_term(cnt):
-        c = f"CAST({cnt} AS DOUBLE)"
-        pr = f"({c} / {rtN})"
-        return f"CASE WHEN {c} > 0 THEN (-({pr})) * LOG2({pr}) ELSE 0.0D END"
-
-    ent_chain = " + ".join(ent_term(f"_c_{a}_{b}") for a in roles for b in roles)
-    nz_chain = " + ".join(
-        f"CASE WHEN _c_{a}_{b} > 0 THEN 1 ELSE 0 END" for a in roles for b in roles
-    )
-    self_chain = " + ".join(f"_c_{a}_{a}" for a in roles)
-    marg_terms = []
-    for a in roles:
-        ra = f"CAST(({' + '.join(f'_c_{a}_{b}' for b in roles)}) AS DOUBLE)"
-        pa = f"({ra} / {rtN})"
-        marg_terms.append(
-            f"CASE WHEN {ra} > 0 THEN (-({pa})) * LOG2({pa}) ELSE 0.0D END"
-        )
-    prev_ent = " + ".join(marg_terms)
-    rt_has = "_rt_n > 0"
-
-    ac_mean = f"({stSX} / {stN})"
-    ac_den = f"({stSXX} - {stN} * {ac_mean} * {ac_mean})"
-    ac_exprs = {}
-    for k in (1, 2, 3):
-        pk, ak, bk, mk = (
-            f"CAST(_p{k} AS DOUBLE)",
-            f"CAST(_a{k} AS DOUBLE)",
-            f"CAST(_b{k} AS DOUBLE)",
-            f"CAST(_m{k} AS DOUBLE)",
-        )
-        num = f"({pk} - {ac_mean} * {ak} - {ac_mean} * {bk} + {mk} * {ac_mean} * {ac_mean})"
-        ac_exprs[k] = (
-            f"CASE WHEN (_m{k} > 0 AND {ac_den} != 0.0D) THEN {num} / {ac_den} END"
-        )
-
-    tpN = "CAST(_tp_n AS DOUBLE)"
-    peak_c = "greatest(" + ", ".join(f"_h{h}" for h in range(24)) + ")"
-    peak_h = (
-        "coalesce("
-        + ", ".join(f"CASE WHEN _h{h} = {peak_c} THEN {h} END" for h in range(24))
-        + ")"
-    )
-
-    def tp_term(h):
-        c = f"CAST(_h{h} AS DOUBLE)"
-        pr = f"({c} / {tpN})"
-        return f"CASE WHEN {c} > 0 THEN (-({pr})) * LOG2({pr}) ELSE 0.0D END"
-
-    tp_ent = " + ".join(tp_term(h) for h in range(24))
-
-    arNG = "CAST(_ar_ng AS DOUBLE)"
-    ar_mu = f"(CAST(_ar_sg AS DOUBLE) / CASE WHEN {arNG} > 0 THEN {arNG} END)"
-    ar_var = (
-        f"(({arNG} * CAST(_ar_sgg AS DOUBLE) - CAST(_ar_sg AS DOUBLE) * CAST(_ar_sg AS DOUBLE))"
-        f" / CASE WHEN {arNG} > 0 THEN {arNG} * {arNG} END)"
-    )
-    ar_sd = f"SQRT({ar_var})"
-    span = "(_ar_last - _ar_first)"
-
-    cp_t, cp_n = "CAST(_b.t AS DOUBLE)", "CAST(_b.n AS DOUBLE)"
-    cp_ml = f"(CAST(_b.st AS DOUBLE) / {cp_t})"
-    cp_mr = f"(CAST((_b.sn - _b.st) AS DOUBLE) / ({cp_n} - {cp_t}))"
-
-    pcN = "CAST(_pc_n AS DOUBLE)"
-    pc_num = f"({pcN} * CAST(_pc_sxy AS DOUBLE) - CAST(_pc_sx AS DOUBLE) * CAST(_pc_sy AS DOUBLE))"
-    pc_vx = f"({pcN} * CAST(_pc_sxx AS DOUBLE) - CAST(_pc_sx AS DOUBLE) * CAST(_pc_sx AS DOUBLE))"
-    pc_vy = f"({pcN} * CAST(_pc_syy AS DOUBLE) - CAST(_pc_sy AS DOUBLE) * CAST(_pc_sy AS DOUBLE))"
-
-    fused = g.selectExpr(
-        "conv_id",
-        "CAST(_st_n AS BIGINT) AS n",
-        f"CASE WHEN {st_ok} THEN {st_slope} END AS slope",
-        f"CASE WHEN {st_ok} THEN ({stSX} - {st_slope} * {stSI}) / {stN} END AS intercept",
-        f"CASE WHEN ({st_ok} AND {st_varx} > 0) THEN {st_num} / (SQRT({st_den}) * SQRT({st_varx})) END AS r",
-        "CAST(_rt_n AS BIGINT) AS n_trans",
-        f"CAST(CASE WHEN {rt_has} THEN {nz_chain} END AS BIGINT) AS n_distinct_trans",
-        f"CASE WHEN {rt_has} THEN CAST(({self_chain}) AS DOUBLE) / {rtN} END AS self_loop_ratio",
-        f"CASE WHEN {rt_has} THEN {ent_chain} END AS trans_entropy",
-        f"CASE WHEN {rt_has} THEN {prev_ent} END AS prev_entropy",
-        f"CASE WHEN {rt_has} THEN ({ent_chain}) - ({prev_ent}) END AS cond_entropy",
-        f"{ac_exprs[1]} AS ac_1",
-        f"{ac_exprs[2]} AS ac_2",
-        f"{ac_exprs[3]} AS ac_3",
-        f"CAST({peak_h} AS INT) AS peak_hour",
-        f"CAST({peak_c} AS DOUBLE) / {tpN} AS peak_frac",
-        f"{tp_ent} AS hour_entropy",
-        f"CAST(_night AS DOUBLE) / {tpN} AS night_frac",
-        f"CAST(_wkend AS DOUBLE) / {tpN} AS weekend_frac",
-        f"CAST(({span} - {span} % 1000000) / 1000000 AS BIGINT) AS span_s",
-        f"CASE WHEN _ar_ng > 0 THEN {ar_mu} END AS mean_gap_s",
-        f"CASE WHEN (_ar_ng > 0 AND {ar_mu} > 0) THEN {ar_sd} / {ar_mu} END AS cv_gap",
-        f"CASE WHEN (_ar_ng > 0 AND ({ar_sd} + {ar_mu}) > 0) THEN ({ar_sd} - {ar_mu}) / ({ar_sd} + {ar_mu}) END AS burstiness",
-        "CAST(_b.t - 1 AS BIGINT) AS cp_turn",
-        f"({cp_mr}) - ({cp_ml}) AS cp_gap",
-        f"CAST(_b.g AS DOUBLE) / ({cp_n} * {cp_n}) AS cp_stat",
-        "sen_slope",
-        "sen_intercept",
-        "CASE WHEN _pc_n > 0 THEN _pc_n END AS n_pairs",
-        f"CASE WHEN (_pc_n > 1 AND {pc_vx} > 0 AND {pc_vy} > 0) THEN {pc_num} / SQRT({pc_vx} * {pc_vy}) END AS pair_r",
-        "_runs.cnt AS n_runs",
-        "_runs.mx AS max_run",
-        "CAST(_tp_n AS DOUBLE) / CAST(_runs.cnt AS DOUBLE) AS mean_run",
-        "CAST((_hb1 - _hb0 + 1) AS BIGINT) AS _nb",
-        "_scc",
-        "CAST(_tp_n AS BIGINT) AS _nh",
-        "CASE WHEN _rl_n > 0 THEN _rl_n END AS n_responses",
-        "CASE WHEN _rl_n > 0 THEN CAST(_rl_sum AS DOUBLE) / CAST(_rl_n AS DOUBLE) END AS mean_us",
-        "_rl_min AS min_us",
-        "_rl_max AS max_us",
-    )
-    # fano from the fold outputs: nh = the group row count, so the chain is
-    # the identical exact-integer expression arrival_stats used
-    fused = fused.withColumn(
-        "fano_hourly",
-        F.expr(
-            "CAST((_nb * _scc - _nh * _nh) AS DOUBLE) / CAST((_nb * _nh) AS DOUBLE)"
+    hb = "transform(_sen_a, s -> s._hb)"
+    # Fused-only shapes: role_run_stats and arrival_stats' Fano side use
+    # islands and an hour pre-aggregate, which keep a giant conversation
+    # out of one array row; here the array is collected anyway.
+    folds = convstats.Member(
+        turn=(),
+        aggs=(),
+        post=(
+            ("_runs", runs),
+            ("_scc", scc),
+            ("_nb", f"CAST((element_at({hb}, -1) - element_at({hb}, 1) + 1) AS BIGINT)"),
         ),
-    ).drop("_nb", "_scc", "_nh")
-
-    sp = _spearman(df).drop("n")
-
-    out = fused.join(sp, "conv_id")
-    # restore the exact column order of the pre-fusion join composition
+        out=(
+            ("n_runs", "_runs.cnt"),
+            ("max_run", "_runs.mx"),
+            ("mean_run", "CAST(_sen_n AS DOUBLE) / CAST(_runs.cnt AS DOUBLE)"),
+            ("fano_hourly",
+             "CAST((_nb * _scc - _sen_n * _sen_n) AS DOUBLE) / CAST((_nb * _sen_n) AS DOUBLE)"),
+        ),
+    )
+    fused = convstats.build(
+        df,
+        convstats.trend(sig),
+        convstats.transitions(),
+        convstats.autocorr(sig).pick("ac_1", "ac_2", "ac_3"),
+        convstats.hours().pick("peak_hour", "peak_frac", "hour_entropy", "night_frac",
+                               "weekend_frac"),
+        convstats.gaps().pick("span_s", "mean_gap_s", "cv_gap", "burstiness"),
+        convstats.changepoint(sig).pick("cp_turn", mean_gap="cp_gap", g_stat="cp_stat"),
+        seq.pick("sen_slope", "sen_intercept"),
+        folds,
+        convstats.coupling().pick("n_pairs", r="pair_r"),
+        convstats.latency().pick("mean_us", "min_us", "max_us", n_resp="n_responses"),
+    )
+    # Spearman ranks over a value ordering, not the turn window: a join
+    out = fused.join(spearman_trend(df).drop("n"), "conv_id")
     return out.select(
         "conv_id", "n", "slope", "intercept", "r",
         "n_trans", "n_distinct_trans", "self_loop_ratio", "trans_entropy",
@@ -621,38 +286,13 @@ def arrival_stats(df: DataFrame) -> DataFrame:
 
     Output: (conv_id, n_turns long, span_s long, mean_gap_s double,
     cv_gap double, burstiness double, fano_hourly double).
+
+    Formula: the gap side is the ``convstats.gaps`` table row, shared
+    with conversation_features.
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = conv_window()
-    gaps = df.select(
-        "conv_id",
-        ts_us.alias("_ts"),
-        F.lag(ts_us).over(w).alias("_prev"),
-    ).withColumn(
-        "_gap_s",
-        F.when(
-            F.col("_prev").isNotNull(),
-            ((F.col("_ts") - F.col("_prev")) - (F.col("_ts") - F.col("_prev")) % 1000000)
-            / F.lit(1000000),
-        ).cast("long"),
-    )
-    g = gaps.groupBy("conv_id").agg(
-        F.count("*").cast("long").alias("_n"),
-        F.min("_ts").alias("_first"),
-        F.max("_ts").alias("_last"),
-        F.count("_gap_s").cast("long").alias("_ng"),
-        F.coalesce(F.sum("_gap_s"), F.lit(0)).alias("_sg"),
-        F.coalesce(F.sum(F.col("_gap_s") * F.col("_gap_s")), F.lit(0)).alias("_sgg"),
-    )
-    ng = F.col("_ng").cast("double")
-    mu = F.col("_sg").cast("double") / F.when(ng > 0, ng)
-    var = (
-        ng * F.col("_sgg").cast("double")
-        - F.col("_sg").cast("double") * F.col("_sg").cast("double")
-    ) / F.when(ng > 0, ng * ng)
-    sd = F.sqrt(var)
     # hourly Fano over the full span: counts per hour bucket, then the
     # exact-integer fold (empty buckets contribute 0 to both sums)
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     hb = (ts_us - ts_us % 3600000000) / F.lit(3600000000)
     per_h = df.groupBy("conv_id", hb.cast("long").alias("_hb")).agg(
         F.count("*").cast("long").alias("_c")
@@ -668,34 +308,8 @@ def arrival_stats(df: DataFrame) -> DataFrame:
         (nb * F.col("_scc") - F.col("_nh") * F.col("_nh")).cast("double")
         / (nb * F.col("_nh")).cast("double")
     )
-    return (
-        g.join(h.select("conv_id", "_hb0", "_hb1", "_scc", "_nh"), "conv_id")
-        .select(
-            "conv_id",
-            F.col("_n").alias("n_turns"),
-            (
-                (F.col("_last") - F.col("_first"))
-                - (F.col("_last") - F.col("_first")) % 1000000
-            ).cast("long")
-            .alias("_span_us"),
-            F.when(F.col("_ng") > 0, mu).alias("mean_gap_s"),
-            F.when((F.col("_ng") > 0) & (mu > 0), sd / mu).alias("cv_gap"),
-            F.when((F.col("_ng") > 0) & ((sd + mu) > 0), (sd - mu) / (sd + mu)).alias(
-                "burstiness"
-            ),
-            fano.alias("fano_hourly"),
-        )
-        .withColumn("span_s", (F.col("_span_us") / F.lit(1000000)).cast("long"))
-        .drop("_span_us")
-        .select(
-            "conv_id",
-            "n_turns",
-            "span_s",
-            "mean_gap_s",
-            "cv_gap",
-            "burstiness",
-            "fano_hourly",
-        )
+    return convstats.build(df, convstats.gaps()).join(
+        h.select("conv_id", fano.alias("fano_hourly")), "conv_id"
     )
 
 
@@ -727,48 +341,12 @@ def pair_signal_correlation(
 
     Output: (conv_id, n_pairs long, mean_prompt double, mean_response
     double, r double).
+
+    Formula: the ``convstats.coupling`` table row, shared with
+    conversation_features.
     """
-    w = conv_window()
-    x = F.lag(F.col(signal_col).cast("long")).over(w)
-    prev_role = F.lag("role").over(w)
-    pairs = (
-        df.withColumn("_x", x)
-        .withColumn("_pr", prev_role)
-        .where(
-            (F.col("role") == response_role)
-            & (F.col("_pr") == prompt_role)
-            & F.col("_x").isNotNull()
-            & F.col(signal_col).isNotNull()
-        )
-        .select("conv_id", "_x", F.col(signal_col).cast("long").alias("_y"))
-    )
-    g = pairs.groupBy("conv_id").agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.sum("_x").alias("_sx"),
-        F.sum("_y").alias("_sy"),
-        F.sum(F.col("_x") * F.col("_y")).alias("_sxy"),
-        F.sum(F.col("_x") * F.col("_x")).alias("_sxx"),
-        F.sum(F.col("_y") * F.col("_y")).alias("_syy"),
-    )
-    n = F.col("n_pairs").cast("double")
-    num = n * F.col("_sxy").cast("double") - F.col("_sx").cast("double") * F.col(
-        "_sy"
-    ).cast("double")
-    vx = n * F.col("_sxx").cast("double") - F.col("_sx").cast("double") * F.col(
-        "_sx"
-    ).cast("double")
-    vy = n * F.col("_syy").cast("double") - F.col("_sy").cast("double") * F.col(
-        "_sy"
-    ).cast("double")
-    return g.select(
-        "conv_id",
-        "n_pairs",
-        (F.col("_sx").cast("double") / n).alias("mean_prompt"),
-        (F.col("_sy").cast("double") / n).alias("mean_response"),
-        F.when(
-            (F.col("n_pairs") > 1) & (vx > 0) & (vy > 0), num / F.sqrt(vx * vy)
-        ).alias("r"),
-    )
+    row = convstats.coupling(prompt_role, response_role, signal_col)
+    return convstats.build(df, row).where("n_pairs IS NOT NULL")  # no pair, no row
 
 
 def theil_sen_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
@@ -792,48 +370,11 @@ def theil_sen_trend(df: DataFrame, signal_col: str = "signal") -> DataFrame:
 
     Output: (conv_id, n_turns long, sen_slope double, sen_intercept
     double).
+
+    Formula: the ``convstats.theil_sen`` table row, shared with
+    conversation_features.
     """
-    g = df.groupBy("conv_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("ts"),
-                    F.col("turn_idx"),
-                    F.col(signal_col).cast("double").alias("_y"),
-                )
-            )
-        ).alias("_a"),
-        F.count("*").cast("long").alias("n_turns"),
-    )
-    g = g.withColumn("_ys", F.transform(F.col("_a"), lambda s: s["_y"]))
-    n = F.size("_ys")
-    slopes = F.array_sort(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), n - F.lit(2)),
-                lambda i: F.transform(
-                    F.sequence(i + F.lit(1), n - F.lit(1)),
-                    lambda j: (F.get("_ys", j) - F.get("_ys", i))
-                    / (j - i).cast("double"),
-                ),
-            )
-        )
-    )
-    g = g.withColumn("_s", F.when(n >= 2, slopes))
-
-    from .exprs import sorted_median as _median
-
-    g = g.withColumn("sen_slope", F.when(n >= 2, _median(F.col("_s"))))
-    resid = F.array_sort(
-        F.transform(
-            F.sequence(F.lit(0), n - F.lit(1)),
-            lambda i: F.get("_ys", i) - F.col("sen_slope") * i.cast("double"),
-        )
-    )
-    g = g.withColumn(
-        "sen_intercept", F.when(n >= 2, _median(F.when(n >= 2, resid)))
-    )
-    return g.select("conv_id", "n_turns", "sen_slope", "sen_intercept")
+    return convstats.build(df, convstats.theil_sen(signal_col))
 
 
 def changepoint(df: DataFrame, signal_col: str = "signal") -> DataFrame:
@@ -859,52 +400,11 @@ def changepoint(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     mean_left double, mean_right double, mean_gap double, g_stat
     double = G / n^2, the scale-free score). Conversations with n < 2
     emit NULLs for the changepoint fields.
+
+    Formula: the ``convstats.changepoint`` table row, shared with
+    conversation_features.
     """
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy(*(("ts", "turn_idx")))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    x = F.col(signal_col).cast("long")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    p = df.select(
-        "conv_id",
-        ts_us.alias("_ts"),
-        F.sum(x).over(w).alias("_st"),
-        F.count("*").over(w).alias("_t"),
-        F.sum(x).over(Window.partitionBy("conv_id")).alias("_sn"),
-        F.count("*").over(Window.partitionBy("conv_id")).alias("_n"),
-    )
-    g = F.abs(F.col("_n") * F.col("_st") - F.col("_t") * F.col("_sn"))
-    cand = p.where(F.col("_t") < F.col("_n")).select(
-        "conv_id",
-        F.struct(
-            g.alias("g"),
-            (-F.col("_t")).alias("negt"),
-            F.col("_t").alias("t"),
-            F.col("_ts").alias("ts"),
-            F.col("_st").alias("st"),
-            F.col("_sn").alias("sn"),
-            F.col("_n").alias("n"),
-        ).alias("_c"),
-    )
-    best = cand.groupBy("conv_id").agg(F.max("_c").alias("_b"))
-    sizes = df.groupBy("conv_id").agg(F.count("*").cast("long").alias("n_turns"))
-    b = F.col("_b")
-    t = b["t"].cast("double")
-    n = b["n"].cast("double")
-    ml = b["st"].cast("double") / t
-    mr = (b["sn"] - b["st"]).cast("double") / (n - t)
-    return sizes.join(best, "conv_id", "left").select(
-        "conv_id",
-        "n_turns",
-        (b["t"] - F.lit(1)).cast("long").alias("cp_turn"),
-        b["ts"].cast("long").alias("cp_ts_us"),
-        ml.alias("mean_left"),
-        mr.alias("mean_right"),
-        (mr - ml).alias("mean_gap"),
-        (b["g"].cast("double") / (n * n)).alias("g_stat"),
-    )
+    return convstats.build(df, convstats.changepoint(signal_col))
 
 
 def volume_anomaly(df: DataFrame, group_col: str = "role") -> DataFrame:

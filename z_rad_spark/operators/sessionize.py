@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import persist_intermediate
+from . import convstats
 from .skew import ORDER as _ORDER, conv_window, map_conversations
 
 
@@ -29,9 +30,16 @@ def with_sessions(df: DataFrame, gap_seconds: float) -> DataFrame:
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     gap_us = ts_us - F.lag(ts_us).over(w)
     df = df.withColumn("gap_sec", (gap_us / 1e6).cast("double"))
-    new_sess = F.when(F.col("gap_sec") > F.lit(gap_seconds), 1).otherwise(0)
+    new_sess = F.when(opens_session(F.col("gap_sec"), gap_seconds), 1).otherwise(0)
     running = conv_window().rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("session_id", F.sum(new_sess).over(running).cast("int"))
+
+
+def opens_session(gap_sec, gap_seconds: float):
+    """The one session-gap rule: a turn opens a new session when its gap
+    from the previous turn, ``gap_sec`` = the microsecond gap / 1e6 as a
+    double, exceeds ``gap_seconds`` (fractional thresholds included)."""
+    return gap_sec > F.lit(gap_seconds)
 
 
 def with_lag_lead(df: DataFrame, cols: list[str], offsets: tuple = (1,)) -> DataFrame:
@@ -259,54 +267,11 @@ def role_transitions(
     Output: (conv_id, n_trans long, n_distinct_trans long,
     self_loop_ratio double, trans_entropy double, prev_entropy double,
     cond_entropy double — H(next|prev), the Markov predictability).
+
+    Formula: the ``convstats.transitions`` table row, shared with
+    profile.conversation_features.
     """
-    prev = F.lag("role").over(conv_window())
-    pairs = df.select("conv_id", F.col("role").alias("_to"), prev.alias("_from"))
-    aggs = [F.count("_from").alias("_n")]
-    for a in roles:
-        for b in roles:
-            aggs.append(
-                F.count(
-                    F.when((F.col("_from") == a) & (F.col("_to") == b), 1)
-                ).alias(f"_c_{a}_{b}")
-            )
-    g = pairs.groupBy("conv_id").agg(*aggs)
-
-    def _chain(terms):
-        acc = None
-        for t in terms:
-            acc = t if acc is None else acc + t
-        return acc
-
-    n = F.col("_n").cast("double")
-    ent_terms, nz_terms = [], []
-    for a in roles:
-        for b in roles:
-            c = F.col(f"_c_{a}_{b}").cast("double")
-            p = c / n
-            ent_terms.append(F.when(c > 0, -p * F.log2(p)).otherwise(F.lit(0.0)))
-            nz_terms.append(F.when(c > 0, 1).otherwise(0))
-    self_loops = _chain([F.col(f"_c_{a}_{a}") for a in roles])
-    # marginal (prev-role) entropy from the exact row sums, and the
-    # conditional entropy H(next | prev) = H(pair) - H(prev) — the
-    # Markov PREDICTABILITY of the dialog (0 = next role fully
-    # determined by the previous one; log2(|roles|) = uniform)
-    marg_terms = []
-    for a in roles:
-        ra = _chain([F.col(f"_c_{a}_{b}") for b in roles]).cast("double")
-        pa = ra / n
-        marg_terms.append(F.when(ra > 0, -pa * F.log2(pa)).otherwise(F.lit(0.0)))
-    prev_entropy = _chain(marg_terms)
-    has = F.col("_n") > 0
-    return g.select(
-        "conv_id",
-        F.col("_n").cast("long").alias("n_trans"),
-        F.when(has, _chain(nz_terms)).cast("long").alias("n_distinct_trans"),
-        F.when(has, self_loops.cast("double") / n).alias("self_loop_ratio"),
-        F.when(has, _chain(ent_terms)).alias("trans_entropy"),
-        F.when(has, prev_entropy).alias("prev_entropy"),
-        F.when(has, _chain(ent_terms) - prev_entropy).alias("cond_entropy"),
-    )
+    return convstats.build(df, convstats.transitions(tuple(roles)))
 
 
 def with_expanding_target_encoding(
@@ -383,43 +348,11 @@ def autocorr_features(
     conversation is constant (den = 0) or has no lag-k pair.
 
     Output: (conv_id, n long, ac_1 .. ac_K double).
+
+    Formula: the ``convstats.autocorr`` table row, shared with
+    profile.conversation_features.
     """
-    xl = F.col(signal_col).cast("long")
-    cols = [F.col("conv_id"), xl.alias("_x")]
-    for k in lags:
-        cols.append(F.lag(xl, k).over(conv_window()).alias(f"_l{k}"))
-    p = df.select(*cols)
-    aggs = [
-        F.count("_x").alias("_n"),
-        F.sum("_x").alias("_s1"),
-        F.sum(F.col("_x") * F.col("_x")).alias("_s2"),
-    ]
-    for k in lags:
-        lk = F.col(f"_l{k}")
-        both = F.col("_x").isNotNull() & lk.isNotNull()
-        aggs += [
-            F.count(F.when(both, 1)).alias(f"_m{k}"),
-            F.sum(F.col("_x") * lk).alias(f"_p{k}"),
-            F.sum(F.when(both, F.col("_x"))).alias(f"_a{k}"),
-            F.sum(F.when(both, lk)).alias(f"_b{k}"),
-        ]
-    g = p.groupBy("conv_id").agg(*aggs)
-    mean = F.col("_s1").cast("double") / F.col("_n").cast("double")
-    den = (
-        F.col("_s2").cast("double")
-        - F.col("_n").cast("double") * mean * mean
-    )
-    out_cols = [F.col("conv_id"), F.col("_n").cast("long").alias("n")]
-    for k in lags:
-        num = (
-            F.col(f"_p{k}").cast("double")
-            - mean * F.col(f"_a{k}").cast("double")
-            - mean * F.col(f"_b{k}").cast("double")
-            + F.col(f"_m{k}").cast("double") * mean * mean
-        )
-        ok = (F.col(f"_m{k}") > 0) & (den != F.lit(0.0))
-        out_cols.append(F.when(ok, num / den).alias(f"ac_{k}"))
-    return g.select(*out_cols)
+    return convstats.build(df, convstats.autocorr(signal_col, tuple(lags)))
 
 
 def with_echo_score(df: DataFrame, text_col: str = "text") -> DataFrame:

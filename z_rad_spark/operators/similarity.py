@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .exprs import chain
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -1604,12 +1606,6 @@ def ndcg_at_k(
         tru.withColumn("_hit", F.lit(1)), [query_id, item_col], "left"
     )
 
-    def _chain(terms):
-        acc = None
-        for t in terms:
-            acc = t if acc is None else acc + t
-        return acc
-
     dcg_terms = [
         F.max(
             F.when((F.col("_rr") == i + 1) & (F.col("_hit") == 1), F.lit(w[i]))
@@ -1617,8 +1613,8 @@ def ndcg_at_k(
         for i in range(k)
     ]
     g = hits.groupBy(query_id).agg(*dcg_terms).join(n_tru, query_id)
-    dcg = _chain([F.coalesce(F.col(f"_d{i}"), F.lit(0.0)) for i in range(k)])
-    idcg = _chain(
+    dcg = chain([F.coalesce(F.col(f"_d{i}"), F.lit(0.0)) for i in range(k)])
+    idcg = chain(
         [
             F.when(F.col("n_truth") >= i + 1, F.lit(w[i])).otherwise(F.lit(0.0))
             for i in range(k)

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import normalize_text
-from .exprs import literal_frame
+from .exprs import chain, literal_frame, np_log
 
 
 def with_json_field(
@@ -139,9 +139,6 @@ def tfidf_topk(
     Ranking is on the 6dp-rounded score (ties broken by token asc), so
     the ordering is reproducible across engines by construction.
     """
-    import pandas as pd  # noqa: F401 — pandas_udf return type
-    from pyspark.sql.functions import pandas_udf
-
     n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
     toks = docs.repartition(n_parts, id_col).select(
         F.col(id_col), F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("token")
@@ -150,14 +147,8 @@ def tfidf_topk(
     dfreq = tf.groupBy("token").agg(F.count("*").cast("double").alias("df_t"))
     n_docs = docs.select(F.count("*").cast("double").alias("n_docs"))
 
-    @pandas_udf("double")
-    def _ln(x):  # glibc log over the vocab-sized Arrow batch
-        import numpy as np
-
-        return pd.Series(np.log(x.to_numpy()))
-
     idf = dfreq.crossJoin(F.broadcast(n_docs)).withColumn(
-        "idf", _ln((F.col("n_docs") + 1.0) / (F.col("df_t") + 1.0)) + 1.0
+        "idf", np_log((F.col("n_docs") + 1.0) / (F.col("df_t") + 1.0)) + 1.0
     )
     scored = tf.join(idf.select("token", "idf"), "token").withColumn(
         "tfidf", F.round(F.col("tf") * F.col("idf"), 6)
@@ -321,9 +312,6 @@ def bm25_topk(
 
     Output: (query_id, doc_id, score double 6dp, rank).
     """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     terms = sorted({t for _, ts in queries for t in ts})
     spark = docs.sparkSession
 
@@ -349,12 +337,6 @@ def bm25_topk(
         "_df", F.count("*").over(Window.partitionBy("token")).cast("double")
     )
 
-    @pandas_udf("double")
-    def _ln(x):  # glibc log over the postings-sized Arrow batch
-        import numpy as np
-
-        return pd.Series(np.log(x.to_numpy()))
-
     qexp = literal_frame(
         spark,
         [(qid, t) for qid, ts in queries for t in sorted(set(ts))],
@@ -365,7 +347,7 @@ def bm25_topk(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "_idf",
-            _ln(
+            np_log(
                 1.0 + (F.col("_n_docs") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
             ),
         )
@@ -1015,17 +997,11 @@ def role_style_distance(
     )
     pairs = a.join(F.broadcast(b), F.col("role_a") < F.col("role_b"))
 
-    def _chain(terms):
-        acc = None
-        for t in terms:
-            acc = t if acc is None else acc + t
-        return acc
-
-    dot = _chain(
+    dot = chain(
         [F.col(f"_a{d}").cast("double") * F.col(f"_b{d}").cast("double") for d in range(dims)]
     )
-    na = F.sqrt(_chain([F.col(f"_a{d}").cast("double") * F.col(f"_a{d}").cast("double") for d in range(dims)]))
-    nb = F.sqrt(_chain([F.col(f"_b{d}").cast("double") * F.col(f"_b{d}").cast("double") for d in range(dims)]))
+    na = F.sqrt(chain([F.col(f"_a{d}").cast("double") * F.col(f"_a{d}").cast("double") for d in range(dims)]))
+    nb = F.sqrt(chain([F.col(f"_b{d}").cast("double") * F.col(f"_b{d}").cast("double") for d in range(dims)]))
     cos = F.when((na > 0) & (nb > 0), dot / (na * nb))
     return pairs.select(
         "role_a",
