@@ -12,6 +12,7 @@ bounded) so they survive Spark version cosmetics.
 
 import logging
 import pathlib
+import re
 import sys
 import threading
 from types import SimpleNamespace
@@ -1458,3 +1459,72 @@ def test_empty_cutoff_list_gives_empty_frame_same_schema(spark, name):
     empty = op(spark, turns, [])
     assert empty.schema.simpleString() == op(spark, turns, _CUTS[:1]).schema.simpleString()
     assert empty.count() == 0
+
+
+_ORDER_SENSITIVE = [1e16, 1.0, -1e16, 3.0, 0.1]
+
+
+def _left_fold(xs):
+    acc = 0.0
+    for x in xs:
+        acc = acc + x
+    return acc
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_ordered_sums_is_a_left_fold_in_key_order(spark, parts):
+    """Each term folds left over its group's rows in ascending key order,
+    bit for bit, whatever the partitioning and the input row order: the
+    values are order-sensitive (a key-order fold gives 3.1, a value-order
+    fold 4.1), so any other summation order shows."""
+    import struct
+
+    from z_rad_spark.operators.exprs import ordered_sums
+
+    rows = [(g, k, x) for g in ("a", "b") for k, x in enumerate(_ORDER_SENSITIVE)]
+    rows = [(g, k, x * (2.0 if g == "b" else 1.0)) for g, k, x in reversed(rows)]
+    df = spark.createDataFrame(rows, "g string, k long, x double").repartition(parts)
+    got = {
+        r["g"]: r
+        for r in df.groupBy("g")
+        .agg(*ordered_sums(["k"], s=F.col("x"), s3=F.col("x") * F.lit(3.0)))
+        .collect()
+    }
+    bits = lambda v: struct.pack("<d", v)  # noqa: E731
+    for g, scale in (("a", 1.0), ("b", 2.0)):
+        xs = [x * scale for x in _ORDER_SENSITIVE]
+        assert bits(got[g]["s"]) == bits(_left_fold(xs))
+        assert bits(got[g]["s3"]) == bits(_left_fold([x * 3.0 for x in xs]))
+    assert _left_fold(_ORDER_SENSITIVE) != _left_fold(sorted(_ORDER_SENSITIVE))
+
+
+def test_ordered_sums_share_one_collect_list(spark):
+    """Terms over one order share the collected array: two terms plan as
+    many collect_list calls as one term."""
+    from z_rad_spark.operators.exprs import ordered_sums
+
+    df = spark.createDataFrame(
+        [("a", k, x) for k, x in enumerate(_ORDER_SENSITIVE)], "g string, k long, x double"
+    )
+    one = _plan(df.groupBy("g").agg(*ordered_sums(["k"], s=F.col("x"))))
+    two = _plan(df.groupBy("g").agg(*ordered_sums(["k"], s=F.col("x"), q=F.col("x") * 2)))
+    aggs = [line for line in two.splitlines() if "collect_list(" in line]
+    assert aggs and all(line.count("collect_list(") == 1 for line in aggs)
+    assert two.count("collect_list(") == one.count("collect_list(") == len(aggs)
+
+
+def test_chain_sql_parses_to_the_chain_tree(spark):
+    """The SQL-text left fold parses to the same expression tree as the
+    Column fold."""
+    from z_rad_spark.operators.exprs import chain, chain_sql
+
+    df = spark.range(1).select(*[F.lit(float(i)).alias(f"t{i}") for i in range(4)])
+    names = [f"t{i}" for i in range(4)]
+    assert chain_sql(names) == "(((t0 + t1) + t2) + t3)"
+    sql = df.select(F.expr(chain_sql(names)).alias("s"))
+    col = df.select(chain([F.col(n) for n in names]).alias("s"))
+
+    def tree(d):
+        return re.sub(r"#\d+", "", d._jdf.queryExecution().analyzed().toString())
+
+    assert tree(sql) == tree(col)

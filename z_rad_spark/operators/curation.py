@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .drift import _is_ref
+from .exprs import ordered_sums
 
 
 def _toks(text_col: str) -> F.Column:
@@ -226,7 +227,7 @@ def unigram_logprob(
         ``nll = -(1/n) * sum_i ln p(token_i)``,   ``ppl = exp(nll)``.
 
     Cross-engine value contract: the per-document sum of logs is an
-    ORDERED left fold over token position (collect_list(pos, lp) ->
+    ``exprs.ordered_sums`` over token position (collect_list(pos, lp) ->
     array_sort -> aggregate), matched in the DuckDB oracle by
     ``list(lp ORDER BY pos)`` || ``list_reduce`` — the same fixed-order
     float summation the GLCM reciprocal-square features use, so the
@@ -256,15 +257,10 @@ def unigram_logprob(
         .groupBy(id_col)
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
-            F.array_sort(F.collect_list(F.struct("pos", "_lp"))).alias("_arr"),
+            *ordered_sums(["pos"], _s=F.col("_lp")),
         )
     )
-    s = F.aggregate(
-        F.transform(F.col("_arr"), lambda r: r["_lp"]),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nll = -s / F.col("n_tokens").cast("double")
+    nll = -F.col("_s") / F.col("n_tokens").cast("double")
     return per_doc.select(
         id_col,
         "n_tokens",
@@ -338,15 +334,10 @@ def bigram_logprob(
         .groupBy(id_col)
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
-            F.array_sort(F.collect_list(F.struct("pos", "_lp"))).alias("_arr"),
+            *ordered_sums(["pos"], _s=F.col("_lp")),
         )
     )
-    s = F.aggregate(
-        F.transform(F.col("_arr"), lambda r: r["_lp"]),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nll = -s / F.col("n_tokens").cast("double")
+    nll = -F.col("_s") / F.col("n_tokens").cast("double")
     return per_doc.select(
         id_col,
         "n_tokens",
@@ -441,15 +432,10 @@ def kneser_ney_logprob(
         .groupBy(id_col)
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
-            F.array_sort(F.collect_list(F.struct("pos", "_lp"))).alias("_arr"),
+            *ordered_sums(["pos"], _s=F.col("_lp")),
         )
     )
-    s = F.aggregate(
-        F.transform(F.col("_arr"), lambda r: r["_lp"]),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nll = -s / F.col("n_tokens").cast("double")
+    nll = -F.col("_s") / F.col("n_tokens").cast("double")
     return per_doc.select(
         id_col,
         "n_tokens",
@@ -770,13 +756,10 @@ def dsir_weights(
         .groupBy(id_col)
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
-            F.array_sort(F.collect_list(F.struct("pos", "lr"))).alias("_arr"),
+            *ordered_sums(["pos"], logw=F.col("lr")),
         )
     )
-    s = F.aggregate(
-        F.transform(F.col("_arr"), lambda r: r["lr"]), F.lit(0.0), lambda acc, v: acc + v
-    )
-    return per_doc.select(id_col, "n_tokens", s.alias("logw"))
+    return per_doc.select(id_col, "n_tokens", "logw")
 
 
 def domain_mix_sample(
@@ -1587,7 +1570,7 @@ def t_closeness(
     Determinism: per-level cumulative counts are exact longs (window
     cumsums over the dense class x level grid); each level's term is
     a fixed divide/subtract/abs chain and the per-class reduction
-    folds ordered by level — the SQL oracle replays it bit-for-bit.
+    is ``exprs.ordered_sums`` by level — the SQL oracle replays it bit-for-bit.
 
     Scale: one (quasi, level) map-side-combined groupBy; the global
     level table (k rows, k = sensitive cardinality — bucket first if
@@ -1628,18 +1611,14 @@ def t_closeness(
         cumc.cast("double") / F.col("n_rows").cast("double")
         - F.col("_cumg").cast("double") / F.col("_N").cast("double")
     )
-    terms = dense.select(
-        *quasi_cols,
-        "n_rows",
-        "_k",
-        F.struct("_sv", term.alias("_t")).alias("_e"),
-    )
+    # the term reads a window, so it is projected before the aggregate
+    terms = dense.select(*quasi_cols, "n_rows", "_k", "_sv", term.alias("_t"))
     per = terms.groupBy(*quasi_cols).agg(
         F.max("n_rows").alias("n_rows"),
         F.max("_k").alias("_k"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_sv"], _t=F.col("_t")),
     )
-    tsum = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])
+    tsum = F.col("_t")
     return per.select(
         *quasi_cols,
         "n_rows",
@@ -1724,7 +1703,7 @@ def source_kl(
 
     Determinism: bucket membership is an integer rank cut (count desc,
     token asc); all counts are exact longs; each term is a fixed chain
-    and the per-source reduction folds ordered by bucket token.
+    and the per-source reduction is ``exprs.ordered_sums`` by bucket token.
     Bit-replayable.
 
     Scale: one token groupBy for the corpus ranking, one (source,
@@ -1758,13 +1737,10 @@ def source_kl(
     ps = F.col("_cs").cast("double") / F.col("_ns").cast("double")
     pc = F.col("_cc").cast("double") / F.col("_nc").cast("double")
     term = ps * F.log(ps / pc)
-    per = joined.select(
-        "_s", "_ns", F.struct("_b", term.alias("_k")).alias("_e")
-    ).groupBy("_s").agg(
-        F.max("_ns").alias("n_tokens"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+    per = joined.groupBy("_s").agg(
+        F.max("_ns").alias("n_tokens"), *ordered_sums(["_b"], _k=term)
     )
-    kl = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_k"])
+    kl = F.col("_k")
     return per.select(
         F.col("_s").alias("source"),
         F.col("n_tokens").cast("long"),
@@ -1843,8 +1819,8 @@ def source_temperature(
     [[dup_weights]]), boost < 1 = downsampled.
 
     Determinism: token counts are exact longs (the q_vocab whitespace
-    tokenization); the p^alpha terms and the normalizer fold ordered
-    by source; fixed chains after. Bit-replayable.
+    tokenization); the p^alpha terms and the normalizer are
+    ``exprs.ordered_sums`` by source; fixed chains after. Bit-replayable.
 
     Scale: one map-side-combined per-source aggregate (|sources|
     rows); the fold state is source-cardinality bounded. Output:
@@ -1864,13 +1840,7 @@ def source_temperature(
     terms = withn.select(
         "_s", "n_tokens", "_nn", p.alias("_p"), pa.alias("_pa")
     )
-    norm = terms.select(
-        F.struct("_s", F.col("_pa").alias("_t")).alias("_e")
-    ).agg(F.sort_array(F.collect_list("_e")).alias("_es")).select(
-        F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"]).alias(
-            "_z"
-        )
-    )
+    norm = terms.agg(*ordered_sums(["_s"], _z=F.col("_pa")))
     j = terms.crossJoin(F.broadcast(norm))
     w = F.col("_pa") / F.col("_z")
     ok = (F.col("n_tokens") > 0) & (F.col("_z") > 0)
@@ -2151,7 +2121,7 @@ def mix_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     effective count collapsed from 20 to 3 after filtering lost its
     diversity even if all 20 sources still appear).
 
-    Determinism: counts exact; entropies fold ordered by source;
+    Determinism: counts exact; entropies are ``exprs.ordered_sums`` by source;
     exp is one fixed op. Bit-replayable.
 
     Output one row: (n_sources long, h_docs, eff_docs, h_tokens,
@@ -2174,18 +2144,15 @@ def mix_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     pd_ = F.col("_d").cast("double") / F.col("_nd").cast("double")
     pt_ = F.col("_t").cast("double") / F.col("_nt").cast("double")
-    g = withn.select(
-        F.struct(
-            "_s",
-            F.when(pd_ > 0, pd_ * F.log(pd_)).otherwise(F.lit(0.0)).alias("_hd"),
-            F.when(pt_ > 0, pt_ * F.log(pt_)).otherwise(F.lit(0.0)).alias("_ht"),
-        ).alias("_e")
-    ).agg(
+    g = withn.agg(
         F.count("*").cast("long").alias("n_sources"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(
+            ["_s"],
+            _hd=F.when(pd_ > 0, pd_ * F.log(pd_)).otherwise(F.lit(0.0)),
+            _ht=F.when(pt_ > 0, pt_ * F.log(pt_)).otherwise(F.lit(0.0)),
+        ),
     )
-    hd = -F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_hd"])
-    ht = -F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_ht"])
+    hd, ht = -F.col("_hd"), -F.col("_ht")
     return g.select(
         "n_sources",
         hd.alias("h_docs"),

@@ -1453,15 +1453,18 @@ def dup_threshold_sweep(
     ]
     doc_counts = per_id.agg(*doc_aggs)
     wide = pair_counts.crossJoin(F.broadcast(doc_counts))
-    out = None
-    for i, t in enumerate(ths):
-        g = wide.select(
-            F.lit(t).alias("threshold"),
-            F.col(f"_p{i}").alias("n_pairs"),
-            F.col(f"_d{i}").alias("n_docs"),
-        )
-        out = g if out is None else out.unionByName(g)
-    out = out.crossJoin(F.broadcast(tot))
+    # one output row per threshold, unpacked from the one-row wide frame
+    per_t = F.array(
+        *[
+            F.struct(
+                F.lit(t).alias("threshold"),
+                F.col(f"_p{i}").alias("n_pairs"),
+                F.col(f"_d{i}").alias("n_docs"),
+            )
+            for i, t in enumerate(ths)
+        ]
+    )
+    out = wide.select(F.inline(per_t)).crossJoin(F.broadcast(tot))
     return out.select(
         "threshold",
         "n_pairs",

@@ -46,7 +46,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .exprs import chain
+from .exprs import chain, ordered_sums
 from .skew import ORDER as _ORDER, conv_window
 
 
@@ -793,8 +793,8 @@ def kruskal_wallis(
     ride the COMPACTED (value -> per-group count) histogram, the
     midrank-sum per group is the exact long 2R_g = sum_v c_gv (2 cb_v +
     t_v + 1), and the k per-group terms (R_g^2 / n_g, one squaring +
-    one division each) are combined by an ordered left fold over groups
-    sorted by name — so the SQL oracle replays H bit-for-bit. Long
+    one division each) are summed by ``exprs.ordered_sums`` in group
+    order — so the SQL oracle replays H bit-for-bit. Long
     bounds: 2R <= N (2N + 1) (exact for N < 2^31); the tie term
     sum(t^3) and N^3 stay in long for N < 2 * 10^6 — beyond that cast
     both to decimal(38,0).
@@ -856,18 +856,15 @@ def kruskal_wallis(
         F.sum("_n").cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
         F.sum("_tie_part").cast("long").alias("_tie"),
-        F.sort_array(F.collect_list(F.struct("_g", "_two_r", "_n"))).alias("_gs"),
+        *ordered_sums(
+            ["_g"],
+            _sum_terms=(F.col("_two_r").cast("double") / F.lit(2.0))
+            * (F.col("_two_r").cast("double") / F.lit(2.0))
+            / F.col("_n").cast("double"),
+        ),
     )
     nd = F.col("n").cast("double")
-    term = lambda e: (  # noqa: E731 — shared with the oracle's lambda
-        (e["_two_r"].cast("double") / F.lit(2.0))
-        * (e["_two_r"].cast("double") / F.lit(2.0))
-        / e["_n"].cast("double")
-    )
-    sum_terms = F.aggregate(
-        F.col("_gs"), F.lit(0.0), lambda acc, e: acc + term(e)
-    )
-    h = F.lit(12.0) / (nd * (nd + F.lit(1.0))) * sum_terms - F.lit(3.0) * (
+    h = F.lit(12.0) / (nd * (nd + F.lit(1.0))) * F.col("_sum_terms") - F.lit(3.0) * (
         nd + F.lit(1.0)
     )
     c = F.lit(1.0) - F.col("_tie").cast("double") / (
@@ -946,6 +943,8 @@ def brown_forsythe(
     gmean = lambda e: e["_sz2"].cast("double") / (  # noqa: E731
         F.lit(2.0) * e["_n"].cast("double")
     )
+    # kept as folds: each ssb term reads the grand mean zbar, known only
+    # after the collect, and ssw shares its array
     ssb = F.aggregate(
         F.col("_gs"),
         F.lit(0.0),
@@ -1000,9 +999,9 @@ def average_precision(
     Determinism + scale: identical shape to auc_binary — one map-side
     combined groupBy on (group, score) bounds all state by the score
     cardinality; cumP/cumN are one window over the compacted levels;
-    the per-level terms (two divisions + one product each) combine in
-    an ordered left fold by score descending, so the SQL oracle replays
-    AP bit-for-bit. No per-row float math.
+    the per-level terms (two divisions + one product each) are summed
+    by ``exprs.ordered_sums`` by score descending, so the SQL oracle
+    replays AP bit-for-bit. No per-row float math.
 
     Output: (group_col, n_pos long, n_neg long, ap double — NULL when
     the group has no positives).
@@ -1022,27 +1021,31 @@ def average_precision(
         .orderBy(F.col("_s").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
+    # the group's positive total rides an unordered window on the same
+    # partitioning, so each level's term is known before the collect; a
+    # group without positives gets NULL terms (and a NULL ap) instead of
+    # a division by zero
     lv = pv.select(
         group_col,
         "_s",
         "_p",
         F.sum("_p").over(w_desc).cast("long").alias("_cp"),
         F.sum("_t").over(w_desc).cast("long").alias("_cn"),
+        F.sum("_p").over(Window.partitionBy(group_col)).cast("long").alias("_np"),
     )
     g = lv.groupBy(group_col).agg(
         F.sum("_p").cast("long").alias("n_pos"),
         F.max("_cn").cast("long").alias("_n"),
-        F.sort_array(
-            F.collect_list(F.struct((-F.col("_s")).alias("_k"), "_p", "_cp", "_cn"))
-        ).alias("_lv"),
+        *ordered_sums(
+            [(-F.col("_s")).alias("_k")],
+            _ap=F.when(
+                F.col("_np") > 0,
+                (F.col("_p").cast("double") / F.col("_np").cast("double"))
+                * (F.col("_cp").cast("double") / F.col("_cn").cast("double")),
+            ),
+        ),
     )
-    pd_ = F.col("n_pos").cast("double")
-    ap = F.aggregate(
-        F.col("_lv"),
-        F.lit(0.0),
-        lambda acc, e: acc
-        + (e["_p"].cast("double") / pd_) * (e["_cp"].cast("double") / e["_cn"].cast("double")),
-    )
+    ap = F.col("_ap")
     return g.select(
         group_col,
         "n_pos",
@@ -1104,6 +1107,8 @@ def cramers_v(
         ),
     )
     nd = F.col("n").cast("double")
+    # kept as a fold: each cell's term reads the total n, known only after
+    # the collect
     chi2 = (
         F.aggregate(
             F.col("_cells"),
@@ -1164,8 +1169,8 @@ def ad_drift(
     the midblock values are exact halves; each block term is a fixed
     IEEE chain guarded CASE denom > 0 (zero only for a single
     all-value block — where the statistic is undefined anyway) and the
-    two per-sample sums run as value-ordered left folds — so the SQL
-    oracle replays A2 bit-for-bit.
+    two per-sample sums are ``exprs.ordered_sums`` in value order — so
+    the SQL oracle replays A2 bit-for-bit.
 
     NULL signals are excluded. Output: (group_col, n_ref long, n_cur
     long, n_blocks long, a2 double — NULL when either window is empty
@@ -1173,47 +1178,42 @@ def ad_drift(
     """
     x = F.col(signal_col).cast("double")
     h = two_class_ecdf(df.where(x.isNotNull()), x, _is_ref(split_ts), [group_col])
+    # per block: l_j, pooled count below, sample-a count below; the
+    # sample sizes are the partition totals _na / _nb (= n_ref / n_cur)
     l = F.col("_a") + F.col("_b")
-    block = F.struct(
-        "_val",
-        "_a",
-        "_b",
-        l.alias("_l"),
-        (F.col("_ca") + F.col("_cb") - l).alias("_lb"),
-        (F.col("_ca") - F.col("_a")).alias("_rb"),
-    )
+    lb = F.col("_ca") + F.col("_cb") - l
+    rb = F.col("_ca") - F.col("_a")
+    ld = l.cast("double")
+    bj = lb.cast("double") + ld / F.lit(2.0)
+
+    def inner(baj, sample_n, nd):
+        # baj -> B_aj (midblock cumulative of the sample), sample_n ->
+        # n_a; one guarded fixed chain per block
+        num = (nd * baj - sample_n * bj) * (nd * baj - sample_n * bj)
+        den = bj * (nd - bj) - nd * ld / F.lit(4.0)
+        return F.when(den > 0, (ld / nd) * num / den).otherwise(F.lit(0.0))
+
+    na, nb = F.col("_na").cast("double"), F.col("_nb").cast("double")
     g = h.groupBy(group_col).agg(
         F.sum("_a").cast("long").alias("n_ref"),
         F.sum("_b").cast("long").alias("n_cur"),
         F.count("*").cast("long").alias("n_blocks"),
-        F.sort_array(F.collect_list(block)).alias("_bs"),
+        *ordered_sums(
+            ["_val"],
+            _inner1=inner(
+                rb.cast("double") + F.col("_a").cast("double") / F.lit(2.0), na, na + nb
+            ),
+            _inner2=inner(
+                (lb - rb).cast("double") + (l - F.col("_a")).cast("double") / F.lit(2.0),
+                nb,
+                na + nb,
+            ),
+        ),
     )
     n1, n2 = F.col("n_ref").cast("double"), F.col("n_cur").cast("double")
     nd = n1 + n2
-
-    def _inner(sample_cum, sample_n):
-        # sample_cum(e) -> B_aj (midblock cumulative of the sample),
-        # sample_n -> n_a; one guarded fixed chain per block
-        def term(acc, e):
-            ld = e["_l"].cast("double")
-            bj = e["_lb"].cast("double") + ld / F.lit(2.0)
-            baj = sample_cum(e)
-            num = (nd * baj - sample_n * bj) * (nd * baj - sample_n * bj)
-            den = bj * (nd - bj) - nd * ld / F.lit(4.0)
-            return acc + F.when(den > 0, (ld / nd) * num / den).otherwise(F.lit(0.0))
-
-        return F.aggregate(F.col("_bs"), F.lit(0.0), term)
-
-    inner1 = _inner(
-        lambda e: e["_rb"].cast("double") + e["_a"].cast("double") / F.lit(2.0), n1
-    )
-    inner2 = _inner(
-        lambda e: (e["_lb"] - e["_rb"]).cast("double")
-        + (e["_l"] - e["_a"]).cast("double") / F.lit(2.0),
-        n2,
-    )
     ok = (F.col("n_ref") > 0) & (F.col("n_cur") > 0) & (F.col("n_blocks") > 1)
-    a2 = F.when(ok, (nd - F.lit(1.0)) / nd * (inner1 / n1 + inner2 / n2))
+    a2 = F.when(ok, (nd - F.lit(1.0)) / nd * (F.col("_inner1") / n1 + F.col("_inner2") / n2))
     return g.select(group_col, "n_ref", "n_cur", "n_blocks", a2.alias("a2"))
 
 
@@ -1261,6 +1261,8 @@ def f_oneway(
     )
     nd, kd = F.col("n").cast("double"), F.col("k").cast("double")
     gmean = F.col("_sxt").cast("double") / nd
+    # kept as folds: each ssb term reads the grand mean, known only after
+    # the collect, and ssw shares its array
     ssb = F.aggregate(
         F.col("_gs"),
         F.lit(0.0),
@@ -2007,8 +2009,8 @@ def bartlett_test(
     SS_i = sum x^2) are exact longs (integer signal contract); s_i^2 =
     (n_i*SS_i - S_i^2) / (n_i*(n_i-1)) is one exact-long numerator and
     one division. The three k-term reductions (pooled SS numerator,
-    sum (n_i-1) ln s_i^2, sum 1/(n_i-1)) run as ordered left folds over
-    groups sorted by name, so the SQL oracle replays T bit-for-bit.
+    sum (n_i-1) ln s_i^2, sum 1/(n_i-1)) are ``exprs.ordered_sums`` in
+    group order, so the SQL oracle replays T bit-for-bit.
     Long bound: S_i^2 <= (9 n_i)^2 — exact for groups under ~3.4e8
     rows (cast the numerator to decimal(38,0) beyond).
 
@@ -2028,30 +2030,25 @@ def bartlett_test(
         )
         .where(F.col("_n") >= 2)
     )
+    var_i = (F.col("_n") * F.col("_ss") - F.col("_s") * F.col("_s")).cast("double") / (
+        F.col("_n") * (F.col("_n") - F.lit(1))
+    ).cast("double")
+    nm1 = (F.col("_n") - F.lit(1)).cast("double")
     g = per.agg(
         F.sum("_n").cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
-        F.sort_array(F.collect_list(F.struct("_g", "_n", "_s", "_ss"))).alias("_gs"),
+        *ordered_sums(
+            ["_g"],
+            _pooled_num=nm1 * var_i,
+            _sum_ln=nm1 * F.log(var_i),
+            _sum_inv=F.lit(1.0) / nm1,
+        ),
+        F.min(var_i).alias("_min_var"),
     )
     nd = F.col("n").cast("double")
     kd = F.col("k").cast("double")
-    var_i = lambda e: (  # noqa: E731 — shared shape with the oracle
-        (e["_n"] * e["_ss"] - e["_s"] * e["_s"]).cast("double")
-        / (e["_n"] * (e["_n"] - F.lit(1))).cast("double")
-    )
-    nm1 = lambda e: (e["_n"] - F.lit(1)).cast("double")  # noqa: E731
-    pooled_num = F.aggregate(
-        F.col("_gs"), F.lit(0.0), lambda acc, e: acc + nm1(e) * var_i(e)
-    )
-    sum_ln = F.aggregate(
-        F.col("_gs"), F.lit(0.0), lambda acc, e: acc + nm1(e) * F.log(var_i(e))
-    )
-    sum_inv = F.aggregate(
-        F.col("_gs"), F.lit(0.0), lambda acc, e: acc + F.lit(1.0) / nm1(e)
-    )
-    min_var = F.aggregate(
-        F.col("_gs"), F.lit(float("inf")), lambda acc, e: F.least(acc, var_i(e))
-    )
+    pooled_num, sum_ln, sum_inv = F.col("_pooled_num"), F.col("_sum_ln"), F.col("_sum_inv")
+    min_var = F.col("_min_var")
     sp2 = pooled_num / (nd - kd)
     c = F.lit(1.0) + (sum_inv - F.lit(1.0) / (nd - kd)) / (
         F.lit(3.0) * (kd - F.lit(1.0))
@@ -2264,7 +2261,7 @@ def icc_oneway(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     Determinism: per-conversation sufficient statistics (n_i, S_i) and
     the global (N, S, SS, sum n_i^2) are exact longs; the one float
     reduction sum_i S_i^2/n_i (one squaring + one division per group)
-    runs as an ordered left fold over conv_id, so the SQL oracle
+    is ``exprs.ordered_sums`` in conv_id order, so the SQL oracle
     replays MSB/MSW/icc bit-for-bit. Long bound: S_i^2 <= (9 n_i)^2 —
     exact to ~3e8-turn conversations.
 
@@ -2288,19 +2285,17 @@ def icc_oneway(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         F.sum("_n").cast("long").alias("n"),
         F.sum("_s").cast("long").alias("_sg"),
         F.sum(F.col("_n") * F.col("_n")).cast("long").alias("_n2"),
-        F.sort_array(F.collect_list(F.struct("conv_id", "_n", "_s"))).alias("_gs"),
+        *ordered_sums(
+            ["conv_id"],
+            _sum_s2n=(F.col("_s") * F.col("_s")).cast("double") / F.col("_n").cast("double"),
+        ),
     )
     from pyspark.sql.functions import broadcast
 
     g = g0.crossJoin(broadcast(ss))
     nd = F.col("n").cast("double")
     kd = F.col("k").cast("double")
-    sum_s2n = F.aggregate(
-        F.col("_gs"),
-        F.lit(0.0),
-        lambda acc, e: acc
-        + (e["_s"] * e["_s"]).cast("double") / e["_n"].cast("double"),
-    )
+    sum_s2n = F.col("_sum_s2n")
     # S is squared in DOUBLE (not long): the corpus-total signal mass
     # passes sqrt(2^63) ~ 3e9 at 10^12 turns and a long square would
     # silently wrap — one double square loses no replayability (the
@@ -2669,8 +2664,8 @@ def krippendorff_alpha(
 
     Determinism: n_ic, m_i, n_c, n are exact longs; each unit's
     disagreement term is an exact-long numerator over (m_i - 1) — ONE
-    division — and the cross-unit reduction folds ordered by conv_id
-    (the [[icc_oneway]] convention); D_e is a category-marginal fold
+    division — and the cross-unit reduction is ``exprs.ordered_sums``
+    by conv_id (the [[icc_oneway]] convention); D_e is a category-marginal fold
     ordered by category over exact longs. The SQL oracle replays both
     folds bit-for-bit.
 
@@ -2711,9 +2706,9 @@ def krippendorff_alpha(
     gu = units.agg(
         F.count("*").cast("long").alias("n_units"),
         F.sum("_m").cast("long").alias("_n"),
-        F.sort_array(F.collect_list(F.struct("conv_id", "_d_i"))).alias("_ds"),
+        *ordered_sums(["conv_id"], _d_o_sum=F.col("_d_i")),
     )
-    d_o_sum = F.aggregate(F.col("_ds"), F.lit(0.0), lambda a, e: a + e["_d_i"])
+    d_o_sum = F.col("_d_o_sum")
     # category marginals over the SAME filtered panel rows
     marg = (
         vals.join(per_unit.select("conv_id"), "conv_id")
@@ -2729,6 +2724,8 @@ def krippendorff_alpha(
     g = gu.crossJoin(broadcast(gm))
     nd = F.col("_n").cast("double")
     d_o = d_o_sum / nd
+    # kept as a fold: each term reads the panel total _n, known only
+    # after the crossJoin
     d_e = F.aggregate(
         F.col("_ms"),
         F.lit(0.0),
@@ -2956,7 +2953,7 @@ def theil_u(df: DataFrame, x_col: str = "role", y_col: str = "tool") -> DataFram
         H(y|x) = -sum_{x,c} p_xc ln(p_xc / p_x)
 
     Determinism: all counts are exact longs; each entropy is an
-    ORDERED fold (categories asc for H(y), (x, y) asc for H(y|x)) of
+    ``exprs.ordered_sums`` (categories asc for H(y), (x, y) for H(y|x)) of
     per-cell terms that are fixed divide/ln/multiply chains — the SQL
     oracle replays the folds bit-for-bit.
 
@@ -2974,18 +2971,14 @@ def theil_u(df: DataFrame, x_col: str = "role", y_col: str = "tool") -> DataFram
         broadcast(tot)
     )
     py = F.col("_cy").cast("double") / F.col("_n").cast("double")
-    gy = ym.select(
-        "_n", F.struct("_y", (py * F.log(py)).alias("_t")).alias("_e")
-    ).groupBy("_n").agg(F.sort_array(F.collect_list("_e")).alias("_ys"))
-    h_y = -F.aggregate(F.col("_ys"), F.lit(0.0), lambda a, e: a + e["_t"])
+    gy = ym.groupBy("_n").agg(*ordered_sums(["_y"], _hy=py * F.log(py)))
+    h_y = -F.col("_hy")
     xm = cell.groupBy("_x").agg(F.sum("_c").cast("long").alias("_cx"))
     jj = cell.join(xm, "_x").crossJoin(broadcast(tot))
     pxy = F.col("_c").cast("double") / F.col("_n").cast("double")
     ratio = F.col("_c").cast("double") / F.col("_cx").cast("double")
-    gxy = jj.select(
-        F.struct("_x", "_y", (pxy * F.log(ratio)).alias("_t")).alias("_e")
-    ).agg(F.sort_array(F.collect_list("_e")).alias("_xs"))
-    h_yx = -F.aggregate(F.col("_xs"), F.lit(0.0), lambda a, e: a + e["_t"])
+    gxy = jj.agg(*ordered_sums(["_x", "_y"], _hyx=pxy * F.log(ratio)))
+    h_yx = -F.col("_hyx")
     g = gy.crossJoin(broadcast(gxy))
     ok = h_y > 0
     return g.select(
@@ -3036,6 +3029,51 @@ def gk_lambda(df: DataFrame, x_col: str = "role", y_col: str = "tool") -> DataFr
     )
 
 
+def _first_k_panel(df: DataFrame, signal_col: str, k: int, name: str) -> DataFrame:
+    """The fixed first-k panel: each conversation's first ``k`` scored
+    turns in the engine order, kept only for conversations with exactly
+    ``k`` of them — (conv_id, _j = position 1..k, ``name`` = the signal
+    as long, _m = k)."""
+    x = F.col(signal_col).cast("long")
+    fn = (
+        df.where(x.isNotNull())
+        .withColumn("_rn", F.row_number().over(conv_window()))
+        .where(F.col("_rn") <= k)
+        .select("conv_id", F.col("_rn").alias("_j"), x.alias(name))
+    )
+    cnt_w = Window.partitionBy("conv_id")
+    return fn.withColumn("_m", F.count("*").over(cnt_w)).where(F.col("_m") == k)
+
+
+def _ranked_panel(df: DataFrame, signal_col: str, k: int):
+    """The first-k panel ranked within each judge (conversation):
+    ``ranked`` (conv_id, _j, _cat, _r2 = the integer doubled average
+    rank 2*lo + c - 1), ``m_df`` (one row, _m = the judge count) and
+    ``ties`` (one row, tie_sum = sum over tie groups of t^3 - t)."""
+    panel = _first_k_panel(df, signal_col, k, "_cat")
+    rank_w = Window.partitionBy("conv_id").orderBy("_cat")
+    tie_w = Window.partitionBy("conv_id", "_cat")
+    ranked = panel.select(
+        "conv_id",
+        "_j",
+        "_cat",
+        (F.lit(2) * F.rank().over(rank_w) + F.count("*").over(tie_w) - F.lit(1))
+        .cast("long")
+        .alias("_r2"),
+    )
+    m_df = ranked.groupBy().agg((F.count("*") / F.lit(k)).cast("long").alias("_m"))
+    ties = (
+        ranked.groupBy("conv_id", "_cat")
+        .agg(F.count("*").cast("long").alias("_c"))
+        .agg(
+            F.sum(F.col("_c") * F.col("_c") * F.col("_c") - F.col("_c"))
+            .cast("long")
+            .alias("tie_sum")
+        )
+    )
+    return ranked, m_df, ties
+
+
 def kendall_w(df: DataFrame, signal_col: str = "signal", k: int = 3) -> DataFrame:
     """Kendall's coefficient of concordance W over the fixed first-k
     panels (conversations with exactly ``k`` scored opening turns act
@@ -3057,44 +3095,13 @@ def kendall_w(df: DataFrame, signal_col: str = "signal", k: int = 3) -> DataFram
     (m, k, s_num, tie_sum longs; w double — NULL when the denominator
     is 0, i.e. every judge ties everything).
     """
-    x = F.col(signal_col).cast("long")
-    ord_w = conv_window()
-    fn = (
-        df.where(x.isNotNull())
-        .withColumn("_rn", F.row_number().over(ord_w))
-        .where(F.col("_rn") <= k)
-        .select("conv_id", F.col("_rn").alias("_j"), x.alias("_cat"))
-    )
-    cnt_w = Window.partitionBy("conv_id")
-    panel = fn.withColumn("_m", F.count("*").over(cnt_w)).where(F.col("_m") == k)
-    rank_w = Window.partitionBy("conv_id").orderBy("_cat")
-    tie_w = Window.partitionBy("conv_id", "_cat")
-    ranked = panel.select(
-        "conv_id",
-        "_j",
-        "_cat",
-        (F.lit(2) * F.rank().over(rank_w) + F.count("*").over(tie_w) - F.lit(1))
-        .cast("long")
-        .alias("_r2"),
-    )
-    m_df = ranked.groupBy().agg(
-        (F.count("*") / F.lit(k)).cast("long").alias("_m")
-    )
+    ranked, m_df, ties = _ranked_panel(df, signal_col, k)
     cols = ranked.groupBy("_j").agg(F.sum("_r2").cast("long").alias("_R2"))
     from pyspark.sql.functions import broadcast
 
     cb = cols.crossJoin(broadcast(m_df))
     dev = F.col("_R2") - F.col("_m") * F.lit(k + 1)
     s_num = cb.agg(F.sum(dev * dev).cast("long").alias("s_num"))
-    ties = (
-        ranked.groupBy("conv_id", "_cat")
-        .agg(F.count("*").cast("long").alias("_c"))
-        .agg(
-            F.sum(F.col("_c") * F.col("_c") * F.col("_c") - F.col("_c"))
-            .cast("long")
-            .alias("tie_sum")
-        )
-    )
     g = m_df.crossJoin(broadcast(s_num)).crossJoin(broadcast(ties))
     denom = F.col("_m") * F.col("_m") * F.lit(k * k * k - k) - F.col("_m") * F.col(
         "tie_sum"
@@ -3123,24 +3130,15 @@ def cronbach_alpha(df: DataFrame, signal_col: str = "signal", k: int = 3) -> Dat
 
     Determinism: per-item and total-score moments (n, S, SS) are exact
     longs; each variance is ONE division of exact-integer numerator
-    over denominator; the item-variance sum folds ordered by item
-    index. Bit-replayable.
+    over denominator; the item-variance sum is ``exprs.ordered_sums``
+    by item index. Bit-replayable.
 
     Scale: one windowed rank, one k-row aggregate, one per-conv total
     aggregate on the same exchange. Output one row: (m, k longs;
     sum_item_var, var_total, alpha doubles — NULL when var_T = 0 or
     m < 2).
     """
-    x = F.col(signal_col).cast("long")
-    ord_w = conv_window()
-    fn = (
-        df.where(x.isNotNull())
-        .withColumn("_rn", F.row_number().over(ord_w))
-        .where(F.col("_rn") <= k)
-        .select("conv_id", F.col("_rn").alias("_j"), x.alias("_x"))
-    )
-    cnt_w = Window.partitionBy("conv_id")
-    panel = fn.withColumn("_m", F.count("*").over(cnt_w)).where(F.col("_m") == k)
+    panel = _first_k_panel(df, signal_col, k, "_x")
     items = panel.groupBy("_j").agg(
         F.count("*").cast("long").alias("_n"),
         F.sum("_x").cast("long").alias("_s"),
@@ -3149,10 +3147,8 @@ def cronbach_alpha(df: DataFrame, signal_col: str = "signal", k: int = 3) -> Dat
     var_j = (F.col("_n") * F.col("_ss") - F.col("_s") * F.col("_s")).cast(
         "double"
     ) / (F.col("_n") * (F.col("_n") - F.lit(1))).cast("double")
-    gi = items.select(F.struct("_j", var_j.alias("_v")).alias("_e")).agg(
-        F.sort_array(F.collect_list("_e")).alias("_vs")
-    )
-    sum_var = F.aggregate(F.col("_vs"), F.lit(0.0), lambda a, e: a + e["_v"])
+    gi = items.agg(*ordered_sums(["_j"], _v=var_j))
+    sum_var = F.col("_v")
     tot = panel.groupBy("conv_id").agg(F.sum("_x").cast("long").alias("_t"))
     gt = tot.agg(
         F.count("*").cast("long").alias("m"),
@@ -3192,8 +3188,8 @@ def mood_median(
     Determinism: the grand median is picked by INTEGER rank
     (smallest value whose cumulative count reaches floor((n+1)/2)) on
     the compacted value histogram; cell counts are exact longs; each
-    group's term is a fixed chain and the reduction folds ordered by
-    group. Bit-replayable.
+    group's term is a fixed chain and the reduction is
+    ``exprs.ordered_sums`` by group. Bit-replayable.
 
     Scale: one (group, value) map-side-combined groupBy; the median
     scalar broadcasts back; the chi-square runs over group
@@ -3256,18 +3252,10 @@ def mood_median(
     ) / ea + (F.col("_l").cast("double") - el) * (
         F.col("_l").cast("double") - el
     ) / el
-    rows = pg.select(
-        "_n",
-        "_med",
-        "n_groups",
-        "_ta",
-        "_tl",
-        F.struct("_g", term.alias("_t")).alias("_e"),
+    g = pg.groupBy("_n", "_med", "n_groups", "_ta", "_tl").agg(
+        *ordered_sums(["_g"], _t=term)
     )
-    g = rows.groupBy("_n", "_med", "n_groups", "_ta", "_tl").agg(
-        F.sort_array(F.collect_list("_e")).alias("_es")
-    )
-    chi2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])
+    chi2 = F.col("_t")
     ok = (F.col("_ta") > 0) & (F.col("_tl") > 0) & (F.col("n_groups") >= 2)
     return g.select(
         F.col("_n").alias("n"),
@@ -3290,7 +3278,7 @@ def benford_test(df: DataFrame, value_col: str = "n_chars") -> DataFrame:
     character of the decimal rendering (both engines print integers
     identically); the nine Benford probabilities enter BOTH the engine
     and the oracle as the same repr'd literals, so every term is a
-    fixed chain and the reduction folds ordered by digit.
+    fixed chain and the reduction is ``exprs.ordered_sums`` by digit.
     Bit-replayable.
 
     Scale: one 9-bucket map-side-combined groupBy, dense 9-row grid.
@@ -3327,14 +3315,9 @@ def benford_test(df: DataFrame, value_col: str = "n_chars") -> DataFrame:
     e = nd * F.col("_p")
     term = (F.col("_c0").cast("double") - e) * (F.col("_c0").cast("double") - e) / e
     dev = F.abs(F.col("_c0").cast("double") / nd - F.col("_p"))
-    g = dn.select(
-        "_n", F.struct("_d", term.alias("_t"), dev.alias("_a")).alias("_e")
-    ).groupBy("_n").agg(F.sort_array(F.collect_list("_e")).alias("_es"))
-    chi2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, x: a + x["_t"])
-    mad = (
-        F.aggregate(F.col("_es"), F.lit(0.0), lambda a, x: a + x["_a"])
-        / F.lit(9.0)
-    )
+    g = dn.groupBy("_n").agg(*ordered_sums(["_d"], _t=term, _a=dev))
+    chi2 = F.col("_t")
+    mad = F.col("_a") / F.lit(9.0)
     return g.select(
         F.col("_n").alias("n"),
         F.when(F.col("_n") > 0, chi2).alias("chi2"),
@@ -3464,40 +3447,9 @@ def page_trend(df: DataFrame, signal_col: str = "signal", k: int = 3) -> DataFra
     (m, k, l2, tie_sum longs; l_stat, e_l doubles; z double — NULL
     when ties exist or m = 0).
     """
-    x = F.col(signal_col).cast("long")
-    ord_w = conv_window()
-    fn = (
-        df.where(x.isNotNull())
-        .withColumn("_rn", F.row_number().over(ord_w))
-        .where(F.col("_rn") <= k)
-        .select("conv_id", F.col("_rn").alias("_j"), x.alias("_cat"))
-    )
-    cnt_w = Window.partitionBy("conv_id")
-    panel = fn.withColumn("_m", F.count("*").over(cnt_w)).where(F.col("_m") == k)
-    rank_w = Window.partitionBy("conv_id").orderBy("_cat")
-    tie_w = Window.partitionBy("conv_id", "_cat")
-    ranked = panel.select(
-        "conv_id",
-        "_j",
-        "_cat",
-        (F.lit(2) * F.rank().over(rank_w) + F.count("*").over(tie_w) - F.lit(1))
-        .cast("long")
-        .alias("_r2"),
-    )
-    m_df = ranked.groupBy().agg(
-        (F.count("*") / F.lit(k)).cast("long").alias("_m")
-    )
+    ranked, m_df, ties = _ranked_panel(df, signal_col, k)
     l2 = ranked.agg(
         F.sum(F.col("_j").cast("long") * F.col("_r2")).cast("long").alias("l2")
-    )
-    ties = (
-        ranked.groupBy("conv_id", "_cat")
-        .agg(F.count("*").cast("long").alias("_c"))
-        .agg(
-            F.sum(F.col("_c") * F.col("_c") * F.col("_c") - F.col("_c"))
-            .cast("long")
-            .alias("tie_sum")
-        )
     )
     from pyspark.sql.functions import broadcast
 
@@ -3646,8 +3598,8 @@ def cvm_drift(
     that never opens a single big gap still scores.
 
     Determinism: exact integer counts on the compacted (group, value)
-    frame; the squared-gap terms are fixed chains, summed by an
-    ordered fold (value asc) so the oracle replays the identical IEEE
+    frame; the squared-gap terms are fixed chains, summed by
+    ``exprs.ordered_sums`` (value asc) so the oracle replays the identical IEEE
     sequence; the leading factor is one fixed double chain (n*m can
     pass 2^63 at corpus scale, so it multiplies in double space
     deliberately). NULL signals excluded; empty windows -> NULL.
@@ -3661,17 +3613,12 @@ def cvm_drift(
     gap = _ecdf_gap()
     ok = (F.col("_na") > 0) & (F.col("_nb") > 0)
     term = F.when(ok, (F.col("_a") + F.col("_b")).cast("double") * gap * gap)
-    per = cum.select(
-        group_col,
-        "_na",
-        "_nb",
-        F.struct("_val", term.alias("_t")).alias("_e"),
-    ).groupBy(group_col).agg(
+    per = cum.groupBy(group_col).agg(
         F.max("_na").cast("long").alias("n_ref"),
         F.max("_nb").cast("long").alias("n_cur"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_val"], _t=term),
     )
-    s = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])
+    s = F.col("_t")
     nr = F.col("n_ref").cast("double")
     nc = F.col("n_cur").cast("double")
     t = nr * nc / ((nr + nc) * (nr + nc)) * s
@@ -3701,7 +3648,7 @@ def hist_distance(
     stay in [0,1] — the numbers a mix-rebalancing loop can threshold).
 
     Determinism: counts are exact longs; per-value terms are fixed
-    chains folded ordered by value asc; BC's 1-BC is clamped at 0
+    chains summed by ``exprs.ordered_sums`` by value; BC's 1-BC is clamped at 0
     before the final sqrt (float residue can land at -1ulp when the
     distributions coincide). Bit-replayable.
 
@@ -3733,19 +3680,11 @@ def hist_distance(
     q = F.col("_m").cast("double") / F.col("_nn").cast("double")
     tvd_term = F.abs(p - q)
     bc_term = F.sqrt(p * q)
-    per = j.select(
-        group_col,
-        "_ng",
-        F.struct(
-            "_val", tvd_term.alias("_tv"), bc_term.alias("_bc"), q.alias("_q")
-        ).alias("_e"),
-    ).groupBy(group_col).agg(
+    per = j.groupBy(group_col).agg(
         F.max("_ng").cast("long").alias("n"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_val"], _tv=tvd_term, _bc=bc_term, _q=q),
     )
-    tvd_seen = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_tv"])
-    bc = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_bc"])
-    q_cov = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_q"])
+    tvd_seen, bc, q_cov = F.col("_tv"), F.col("_bc"), F.col("_q")
     tvd = (tvd_seen + (F.lit(1.0) - q_cov)) / F.lit(2.0)
     hel = F.sqrt(F.greatest(F.lit(1.0) - bc, F.lit(0.0)))
     return per.select(
@@ -3786,7 +3725,7 @@ def ansari_bradley(
 
     Determinism: block boundaries and 2T ride DECIMAL(38,0) (rank
     products pass 2^63 at N ~ 3e9); AB and the moments are
-    value-ordered folds of fixed double chains. Bit-replayable.
+    ``exprs.ordered_sums`` of fixed double chains by value. Bit-replayable.
 
     Output: (group_col, n_ref long, n_cur long, ab, z doubles —
     NULL when a window is empty or the variance degenerates).
@@ -3812,26 +3751,18 @@ def ansari_bradley(
     t2 = (p1 + p2).cast("decimal(38,0)")  # = 2 * sum of scores in block
     td = t2.cast("double") / F.lit(2.0)
     wd = w.cast("double")
-    per = cum.select(
-        group_col,
-        "_na",
-        "_nb",
-        n_tot.alias("_n"),
-        F.struct(
-            "_val",
-            (F.col("_a").cast("double") * (td / wd)).alias("_ab"),
-            td.alias("_sa"),
-            ((td / wd) * (td / wd) * wd).alias("_sa2"),
-        ).alias("_e"),
-    ).groupBy(group_col).agg(
+    per = cum.groupBy(group_col).agg(
         F.max("_na").alias("m"),
         F.max("_nb").alias("nc"),
-        F.max("_n").alias("nn"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        F.max(n_tot).alias("nn"),
+        *ordered_sums(
+            ["_val"],
+            _ab=F.col("_a").cast("double") * (td / wd),
+            _sa=td,
+            _sa2=(td / wd) * (td / wd) * wd,
+        ),
     )
-    ab = F.aggregate(F.col("_es"), F.lit(0.0), lambda acc, e: acc + e["_ab"])
-    sa = F.aggregate(F.col("_es"), F.lit(0.0), lambda acc, e: acc + e["_sa"])
-    sa2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda acc, e: acc + e["_sa2"])
+    ab, sa, sa2 = F.col("_ab"), F.col("_sa"), F.col("_sa2")
     md = F.col("m").cast("double")
     ncd = F.col("nc").cast("double")
     nd = F.col("nn").cast("double")
@@ -3963,8 +3894,8 @@ def durbin_watson(df: DataFrame, bucket: str = "hour") -> DataFrame:
     Determinism: the OLS fit is a fixed chain on EXACT integer sums
     (sum t, sum t^2, sum c, sum t c ride DECIMAL(38,0) — t^2 passes
     2^63 at ~9 years of seconds-resolution buckets, counts at 10^12
-    turns); both quadratic forms fold in t order. NULL when n < 3 or
-    the residuals are identically 0. Bit-replayable.
+    turns); both quadratic forms are ``exprs.ordered_sums`` in t order.
+    NULL when n < 3 or the residuals are identically 0. Bit-replayable.
 
     Scale: calendar-bounded series (see spectral_profile). Output one
     row: (n long, slope, intercept, dw doubles).
@@ -4005,22 +3936,14 @@ def durbin_watson(df: DataFrame, bucket: str = "hour") -> DataFrame:
     ep = F.col("_cp").cast("double") - (
         F.col("intercept") + F.col("slope") * F.col("_tp").cast("double")
     )
-    per = withfit.select(
-        "n",
-        "slope",
-        "intercept",
-        F.struct(
-            "_t",
-            (e * e).alias("_e2"),
-            F.when(F.col("_cp").isNotNull(), (e - ep) * (e - ep))
-            .otherwise(F.lit(0.0))
-            .alias("_d2"),
-        ).alias("_e"),
-    ).groupBy("n", "slope", "intercept").agg(
-        F.sort_array(F.collect_list("_e")).alias("_es")
+    per = withfit.groupBy("n", "slope", "intercept").agg(
+        *ordered_sums(
+            ["_t"],
+            _e2=e * e,
+            _d2=F.when(F.col("_cp").isNotNull(), (e - ep) * (e - ep)).otherwise(F.lit(0.0)),
+        )
     )
-    se2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, x: a + x["_e2"])
-    sd2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, x: a + x["_d2"])
+    se2, sd2 = F.col("_e2"), F.col("_d2")
     ok = (F.col("n") >= 3) & (se2 > 0)
     return per.select(
         "n",
@@ -4278,9 +4201,10 @@ def token_js_drift(
         JS = (1/2) KL(P || M) + (1/2) KL(Q || M),  M = (P + Q)/2
 
     Determinism: bucket membership is the integer rank cut on the
-    POOLED counts; window counts exact; both KL halves fold ordered
-    by bucket token; fixed chains. Zero-count buckets contribute 0
-    to their own KL half (0 ln 0 = 0). Bit-replayable.
+    POOLED counts; window counts exact; both KL halves are
+    ``exprs.ordered_sums`` by bucket token; fixed chains. Zero-count
+    buckets contribute 0 to their own KL half (0 ln 0 = 0).
+    Bit-replayable.
 
     Output one row: (n_ref long, n_cur long, js double, js_norm
     double — JS / ln 2, in [0, 1] — NULL when a window is empty).
@@ -4317,17 +4241,12 @@ def token_js_drift(
     m = (p + q) / F.lit(2.0)
     t1 = F.when(F.col("_p") > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
     t2 = F.when(F.col("_q") > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
-    per = withn.select(
-        "_np",
-        "_nq",
-        F.struct("_b", t1.alias("_t1"), t2.alias("_t2")).alias("_e"),
-    ).agg(
+    per = withn.agg(
         F.max("_np").alias("n_ref"),
         F.max("_nq").alias("n_cur"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_b"], _t1=t1, _t2=t2),
     )
-    kl1 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t1"])
-    kl2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t2"])
+    kl1, kl2 = F.col("_t1"), F.col("_t2")
     js = (kl1 + kl2) / F.lit(2.0)
     ok = (F.col("n_ref") > 0) & (F.col("n_cur") > 0)
     import math

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .drift import two_class_ecdf
-from .exprs import chain
+from .exprs import chain, ordered_sums
 
 
 def with_loo_target_encoding(
@@ -368,7 +368,7 @@ def calibration_bins(
     Determinism shape: the bin index floors the 6dp-ROUNDED probability
     (both engines agree on the rounded value by the engine-wide r6
     convention); per-bin counts and positives are exact integers; the
-    mean confidence folds c * prob6 over the SORTED compacted
+    mean confidence sums c * prob6 (``exprs.ordered_sums``) over the compacted
     (bin, prob6) histogram — the ordered-fold parity idiom, bounded by
     distinct 6dp scores, never a raw-row float sum. ECE is a fixed
     n_bins-term chain. All bit-replayable.
@@ -389,19 +389,14 @@ def calibration_bins(
     per_bin = hist.groupBy("bin").agg(
         F.sum("_c").cast("long").alias("n"),
         F.sum("_pos").cast("long").alias("n_pos"),
-        F.sort_array(F.collect_list(F.struct("_p6", "_c"))).alias("_arr"),
-    )
-    conf_sum = F.aggregate(
-        F.col("_arr"),
-        F.lit(0.0),
-        lambda a, s: a + s["_c"].cast("double") * s["_p6"],
+        *ordered_sums(["_p6"], _conf_sum=F.col("_c").cast("double") * F.col("_p6")),
     )
     per_bin = per_bin.select(
         "bin",
         "n",
         "n_pos",
         (F.col("n_pos").cast("double") / F.col("n").cast("double")).alias("acc"),
-        (conf_sum / F.col("n").cast("double")).alias("conf"),
+        (F.col("_conf_sum") / F.col("n").cast("double")).alias("conf"),
     ).withColumn("gap", F.abs(F.col("acc") - F.col("conf")))
     # ECE: ordered fold over the bin-sorted (n, gap) list on the
     # <= n_bins-row frame — one single-row aggregate, N an exact integer
@@ -409,6 +404,8 @@ def calibration_bins(
         F.sum("n").cast("long").alias("_N"),
         F.sort_array(F.collect_list(F.struct("bin", "n", "gap"))).alias("_bins"),
     )
+    # kept as a fold: each term reads the total _N, known only after the
+    # collect
     ece_val = F.aggregate(
         F.col("_bins"),
         F.lit(0.0),
@@ -645,7 +642,7 @@ def confident_learning_noise(
     not classified). The p1 >= 0.5 tie-break is the argmax rule with
     ties to the positive class, fixed so both engines agree.
 
-    Determinism: thresholds fold score * count over the SORTED
+    Determinism: thresholds sum score * count (``exprs.ordered_sums``) over the
     compacted (label, prob6) histogram (the [[calibration_bins]]
     ordered-fold idiom — bounded by distinct 6dp scores); all joint
     counts are exact longs; the only other floats are two threshold
@@ -663,11 +660,9 @@ def confident_learning_noise(
     score = F.when(F.col("_y"), F.col("_p")).otherwise(F.lit(1.0) - F.col("_p"))
     th = hist.select("_y", score.alias("_s"), "_c").groupBy("_y").agg(
         F.sum("_c").cast("long").alias("_n"),
-        F.sort_array(F.collect_list(F.struct("_s", "_c"))).alias("_arr"),
+        *ordered_sums(["_s", "_c"], _cs=F.col("_c").cast("double") * F.col("_s")),
     )
-    tmean = F.aggregate(
-        F.col("_arr"), F.lit(0.0), lambda a, s: a + s["_c"].cast("double") * s["_s"]
-    ) / F.col("_n").cast("double")
+    tmean = F.col("_cs") / F.col("_n").cast("double")
     th = th.select("_y", tmean.alias("_t"))
     trow = (
         th.groupBy()
@@ -814,7 +809,8 @@ def brier_decomposition(
     rounded probability is the binning AND value key, per-(bin, p6)
     counts are exact longs, and every float reduction (sum p6^2,
     sum_{y=1} p6, per-bin conf, REL, RES) is an ordered fold over the
-    sorted compacted histogram — bit-replayable in SQL.
+    sorted compacted histogram (all but REL and RES
+    ``exprs.ordered_sums``) — bit-replayable in SQL.
 
     Output one row: (n, n_pos longs; brier, rel, res, unc,
     brier_binned = rel - res + unc doubles — NULL when N = 0).
@@ -832,29 +828,21 @@ def brier_decomposition(
     per_bin = hist.groupBy("_bin").agg(
         F.sum("_c").cast("long").alias("_n"),
         F.sum("_pos").cast("long").alias("_npos"),
-        F.sort_array(F.collect_list(F.struct("_p6", "_c", "_pos"))).alias("_arr"),
-    )
-    conf_sum = F.aggregate(
-        F.col("_arr"),
-        F.lit(0.0),
-        lambda a, s: a + s["_c"].cast("double") * s["_p6"],
+        *ordered_sums(
+            ["_p6"],
+            _conf_sum=F.col("_c").cast("double") * F.col("_p6"),
+            _sum_p2=F.col("_c").cast("double") * (F.col("_p6") * F.col("_p6")),
+            _sum_py=F.col("_pos").cast("double") * F.col("_p6"),
+        ),
     )
     binned = per_bin.select(
         "_bin",
         "_n",
         "_npos",
-        (conf_sum / F.col("_n").cast("double")).alias("_conf"),
+        (F.col("_conf_sum") / F.col("_n").cast("double")).alias("_conf"),
         (F.col("_npos").cast("double") / F.col("_n").cast("double")).alias("_acc"),
-        F.aggregate(
-            F.col("_arr"),
-            F.lit(0.0),
-            lambda a, s: a + s["_c"].cast("double") * (s["_p6"] * s["_p6"]),
-        ).alias("_sum_p2"),
-        F.aggregate(
-            F.col("_arr"),
-            F.lit(0.0),
-            lambda a, s: a + s["_pos"].cast("double") * s["_p6"],
-        ).alias("_sum_py"),
+        "_sum_p2",
+        "_sum_py",
     )
     g = binned.groupBy().agg(
         F.sum("_n").cast("long").alias("n"),
@@ -864,21 +852,16 @@ def brier_decomposition(
         ).alias("_bins"),
         # the two corpus-level float sums fold over the <= n_bins rows in
         # bin order; each per-bin part was itself an ordered p6 fold
-        F.sort_array(F.collect_list(F.struct("_bin", "_sum_p2", "_sum_py"))).alias(
-            "_sums"
-        ),
+        *ordered_sums(["_bin"], _sum_p2=F.col("_sum_p2"), _sum_py=F.col("_sum_py")),
     )
     nd = F.col("n").cast("double")
     ybar = F.col("n_pos").cast("double") / nd
-    sum_p2 = F.aggregate(
-        F.col("_sums"), F.lit(0.0), lambda a, s: a + s["_sum_p2"]
-    )
-    sum_py = F.aggregate(
-        F.col("_sums"), F.lit(0.0), lambda a, s: a + s["_sum_py"]
-    )
+    sum_p2, sum_py = F.col("_sum_p2"), F.col("_sum_py")
     brier = (
         sum_p2 - F.lit(2.0) * sum_py + F.col("n_pos").cast("double")
     ) / nd
+    # kept as folds: each REL / RES term reads N (and RES the base rate),
+    # known only after the collect
     rel = F.aggregate(
         F.col("_bins"),
         F.lit(0.0),
@@ -1189,10 +1172,8 @@ def vmeasure(
     jterm = (F.col("_n").cast("double") / nd) * F.log(
         F.col("_n").cast("double") / nd
     )
-    joint = withn.select(
-        "_nn", F.struct("_a", "_b", jterm.alias("_t")).alias("_e")
-    ).groupBy("_nn").agg(F.sort_array(F.collect_list("_e")).alias("_es"))
-    h_ab = -F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])
+    joint = withn.groupBy("_nn").agg(*ordered_sums(["_a", "_b"], _t=jterm))
+    h_ab = -F.col("_t")
     # marginal entropies: fold ordered by label
     def _marg(col):
         m = cells.groupBy(col).agg(F.sum("_n").cast("long").alias("_m"))
@@ -1200,14 +1181,7 @@ def vmeasure(
         t = (F.col("_m").cast("double") / F.col("_nn").cast("double")) * F.log(
             F.col("_m").cast("double") / F.col("_nn").cast("double")
         )
-        per = mn.select(F.struct(F.col(col), t.alias("_t")).alias("_e")).agg(
-            F.sort_array(F.collect_list("_e")).alias("_es")
-        )
-        return per.select(
-            (-F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])).alias(
-                "_h"
-            )
-        )
+        return mn.agg(*ordered_sums([col], _t=t)).select((-F.col("_t")).alias("_h"))
 
     ha = _marg("_a").select(F.col("_h").alias("_ha"))
     hb = _marg("_b").select(F.col("_h").alias("_hb"))

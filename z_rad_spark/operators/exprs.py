@@ -104,6 +104,49 @@ def chain(terms):
     return acc
 
 
+def chain_sql(terms) -> str:
+    """:func:`chain` as SQL text: ``((t0 + t1) + t2) + ...`` over the
+    SQL expressions ``terms`` — the same parenthesization, for
+    SQL-built plans."""
+    acc = None
+    for t in terms:
+        acc = t if acc is None else f"({acc} + {t})"
+    return acc
+
+
+def ordered_sums(order, **terms: Column) -> list[Column]:
+    """The engine's one ordered float reduction over a group: aggregate
+    expressions, one per keyword, each the left fold ``((0.0 + t_1) +
+    t_2) + ...`` of its per-row term over the group's rows in ascending
+    ``order``, aliased to its keyword.
+
+    Float addition is not associative, so a plain ``F.sum`` depends on
+    how rows meet across partitions and tasks. Here each group collects
+    one ``struct(*order, *terms)`` per row, sorts it and folds it left,
+    so the result is one fixed chain of IEEE additions whatever the
+    partitioning — the DuckDB oracles replay it bit for bit as a
+    ``list_reduce`` over ``list(term ORDER BY order)``. The terms share
+    one collected array: Catalyst plans a single ``collect_list`` for
+    every fold of one call.
+
+    ``order`` is a list of column names or Columns and must be unique
+    within the group (as a groupBy key is); where it is not, ties break
+    on the following fields in struct order, terms last. Each term is
+    a Column computed per row before the collect, so it may read only
+    that row's columns, not an aggregate of the group; and it runs on
+    every row, whatever gates the caller puts on the result, so it must
+    not fail (say, divide by zero under ANSI) on a row whose sum is
+    discarded."""
+    arr = F.sort_array(
+        F.collect_list(F.struct(*order, *(t.alias(n) for n, t in terms.items())))
+    )
+
+    def fold(name):
+        return F.aggregate(arr, F.lit(0.0), lambda a, e: a + e[name]).alias(name)
+
+    return [fold(n) for n in terms]
+
+
 @pandas_udf(DoubleType())  # a type object: no DDL parse, so no session at import
 def np_log(x):
     """Natural log through NumPy (glibc ``log``, the oracles' ``ln``)

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 # frames persisted here are released by session.unpersist_intermediates()
 from ..session import persist_intermediate
-from .exprs import literal_frame
+from .exprs import literal_frame, ordered_sums
 from .skew import conv_window
 
 
@@ -53,7 +53,7 @@ def pagerank_bipartite(
     construction gives every node at least one out- and in-edge.
 
     Determinism: with exact_fold=True (the oracle-gated mode) each
-    node's incoming contributions combine in a SRC-ORDERED left fold,
+    node's incoming contributions are ``exprs.ordered_sums`` by src,
     so the SQL oracle replays every iteration bit-for-bit; the per-node
     collect is bounded by in-degree — fine for the entity-interaction
     graphs here (right-side hubs collect the left cardinality), but a
@@ -105,18 +105,12 @@ def pagerank_bipartite(
         )
         inbox = edges.join(share, "src")
         if exact_fold:
-            folded = inbox.groupBy("dst").agg(
-                F.sort_array(F.collect_list(F.struct("src", "sh"))).alias("_c")
-            )
-            summed = F.aggregate(
-                F.col("_c"), F.lit(0.0), lambda acc, e: acc + e["sh"]
-            )
+            folded = inbox.groupBy("dst").agg(*ordered_sums(["src"], _c=F.col("sh")))
         else:
             folded = inbox.groupBy("dst").agg(F.sum("sh").alias("_c"))
-            summed = F.col("_c")
         pr = folded.select(
             F.col("dst").alias("node"),
-            (base + F.lit(damping) * summed).alias("pr"),
+            (base + F.lit(damping) * F.col("_c")).alias("pr"),
         )
     return (
         pr.orderBy(F.col("pr").desc(), F.col("node").asc())
@@ -228,7 +222,7 @@ def hits_bipartite(
 
     from h_0 = 1, over the DISTINCT interacting pairs.
 
-    Determinism: every per-node sum is a neighbor-ordered left fold and
+    Determinism: every per-node sum is ``exprs.ordered_sums`` by neighbor and
     both L2 normalizations fold in node order (one sqrt each), so the
     SQL oracle replays all n_iter iterations bit-for-bit. Structurally
     identical entities get exactly equal scores — the output tie-break
@@ -264,14 +258,9 @@ def hits_bipartite(
         # itself overflows toString). localCheckpoint(eager=False) is the
         # engine-wide iterative idiom (connected_components_star).
         scores = scores.localCheckpoint(eager=False)
-        nrm = scores.agg(
-            F.sqrt(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct(node_col, score_col))),
-                    F.lit(0.0),
-                    lambda acc, e: acc + e[score_col] * e[score_col],
-                )
-            ).alias("_nrm")
+        sq = F.col(score_col) * F.col(score_col)
+        nrm = scores.agg(*ordered_sums([node_col], _nrm=sq)).select(
+            F.sqrt("_nrm").alias("_nrm")
         )
         return scores.crossJoin(nrm).select(  # single-row norm side
             node_col, (F.col(score_col) / F.col("_nrm")).alias(score_col)
@@ -280,29 +269,9 @@ def hits_bipartite(
     h = pairs.select("u").distinct().select("u", F.lit(1.0).alias("h"))
     a = None
     for _ in range(n_iter):
-        a_raw = (
-            pairs.join(h, "u")
-            .groupBy("t")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("u", "h"))),
-                    F.lit(0.0),
-                    lambda acc, e: acc + e["h"],
-                ).alias("a")
-            )
-        )
+        a_raw = pairs.join(h, "u").groupBy("t").agg(*ordered_sums(["u"], a=F.col("h")))
         a = _l2_normalize(a_raw, "t", "a")
-        h_raw = (
-            pairs.join(a, "t")
-            .groupBy("u")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("t", "a"))),
-                    F.lit(0.0),
-                    lambda acc, e: acc + e["a"],
-                ).alias("h")
-            )
-        )
+        h_raw = pairs.join(a, "t").groupBy("u").agg(*ordered_sums(["t"], h=F.col("a")))
         h = _l2_normalize(h_raw, "u", "h")
     hubs = (
         h.orderBy(F.col("h").desc(), F.col("u").asc())
@@ -704,10 +673,10 @@ def adamic_adar(
     [[triangle_stats]] and capped upstream by the LSH max_bucket; the
     existing-edge exclusion is a broadcast-or-shuffle anti-join on the
     canonical (u, v) key; degrees broadcast back (bounded by node
-    count). No float summation exists: aa folds 1/ln(deg) in SORTED
-    centre-node order via F.aggregate over the per-pair sorted
-    (w, deg) list, so the SQL oracle replays the sum term-for-term
-    bit-for-bit. deg(w) >= 2 for any common neighbour, so ln(deg) > 0.
+    count). No unordered float summation exists: aa is
+    ``exprs.ordered_sums`` of 1/ln(deg) in centre-node order, so the
+    SQL oracle replays the sum term-for-term bit-for-bit. deg(w) >= 2
+    for any common neighbour, so ln(deg) > 0.
 
     Output: top_k rows (u long, v long, cn long, deg_u, deg_v long,
     aa double, jaccard double) by (aa DESC, u, v) — a total order
@@ -748,7 +717,7 @@ def adamic_adar(
     )
     pairs = wedges.groupBy("u", "v").agg(
         F.count("*").cast("long").alias("cn"),
-        F.sort_array(F.collect_list(F.struct("w", "d"))).alias("_ws"),
+        *ordered_sums(["w"], _aa=F.lit(1.0) / F.log(F.col("d").cast("double"))),
     )
     # existing edges out (link PREDICTION scores non-edges only) — or
     # flagged, when the caller wants the embeddedness view
@@ -765,11 +734,7 @@ def adamic_adar(
         pairs = pairs.join(flag, ["u", "v"], "left").withColumn(
             "is_edge", F.coalesce(F.col("_ie"), F.lit(0)).cast("long")
         )
-    aa = F.aggregate(
-        F.col("_ws"),
-        F.lit(0.0),
-        lambda acc, s: acc + F.lit(1.0) / F.log(s["d"].cast("double")),
-    )
+    aa = F.col("_aa")
     du = deg.select(F.col("n").alias("u"), F.col("d").alias("deg_u"))
     dv = deg.select(F.col("n").alias("v"), F.col("d").alias("deg_v"))
     sel = [
@@ -966,9 +931,9 @@ def powerlaw_alpha(
     everything — expect [[rich_club]] to confirm), alpha > 3 = tail
     thin enough that hub-aware special-casing is not worth it.
 
-    Determinism: the log-sum folds over the DISTINCT-DEGREE histogram
-    (m_d * ln(d / (d_min - 0.5)) per distinct degree, degree-ascending
-    fold) — the fold state is max-degree-bounded, never node-count-
+    Determinism: the log-sum is ``exprs.ordered_sums`` over the
+    DISTINCT-DEGREE histogram (m_d * ln(d / (d_min - 0.5)) per distinct
+    degree, degree-ascending) — the fold state is max-degree-bounded, never node-count-
     bounded, and exact long counts feed fixed chains. Bit-replayable.
 
     Output one row: (n long, d_min long, alpha double — NULL when
@@ -994,18 +959,13 @@ def powerlaw_alpha(
     term = F.col("_m").cast("double") * F.log(
         F.col("_d").cast("double") / F.lit(float(d_min) - 0.5)
     )
-    g = hist.select(
-        F.struct("_d", term.alias("_t")).alias("_e"),
-        "_m",
-        (F.col("_m") * F.col("_d")).cast("long").alias("_md"),
-        "_d",
-    ).agg(
+    g = hist.agg(
         F.sum("_m").cast("long").alias("n"),
-        F.sum("_md").cast("long").alias("_sumd"),
+        F.sum((F.col("_m") * F.col("_d")).cast("long")).cast("long").alias("_sumd"),
         F.max("_d").cast("long").alias("max_deg"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_d"], _t=term),
     )
-    ls = F.aggregate(F.col("_es"), F.lit(0.0), lambda acc, e: acc + e["_t"])
+    ls = F.col("_t")
     nd = F.col("n").cast("double")
     return g.select(
         F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),

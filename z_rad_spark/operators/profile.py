@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import convstats
-from .exprs import literal_frame
+from .exprs import literal_frame, ordered_sums
 from .sessionize import spearman_trend
 from .skew import ORDER as _ORDER, conv_window
 
@@ -620,10 +620,10 @@ def signal_transition_entropy(df: DataFrame, signal_col: str = "signal") -> Data
     predictability block (a flat conditional entropy means the signal
     wanders; near zero means it tracks itself).
 
-    Counts per (conv, prev, cur) are exact integers; the three
-    entropies fold over the (prev, cur)-SORTED compacted transition
-    list per conversation (ordered-fold parity idiom; at most
-    |values|^2 cells per conversation). H(cur|prev) = H(joint) -
+    Counts per (conv, prev, cur) are exact integers; the joint and
+    marginal entropies are ``exprs.ordered_sums`` over the compacted
+    (prev, cur) / prev cells of each conversation (at most |values|^2
+    cells per conversation). H(cur|prev) = H(joint) -
     H(prev) — two folds and one subtraction.
 
     Output: (conv_id, n_trans long, n_cells long, joint_entropy double,
@@ -632,42 +632,32 @@ def signal_transition_entropy(df: DataFrame, signal_col: str = "signal") -> Data
     """
     w = conv_window()
     x = F.col(signal_col).cast("long")
+    # each transition carries its conversation's transition count n, on
+    # the window's own partitioning and order, so every cell's p log2 p
+    # term is known before the collect
     p = df.select(
         "conv_id", x.alias("_cur"), F.lag(x).over(w).alias("_prev")
     ).where(F.col("_prev").isNotNull() & F.col("_cur").isNotNull())
+    p = p.withColumn("_n", F.count("*").over(Window.partitionBy("conv_id")))
+    # p*log2(p) of a cell (or marginal) count _c
+    plogp = (F.col("_c").cast("double") / F.col("_n").cast("double")) * F.log2(
+        F.col("_c").cast("double") / F.col("_n").cast("double")
+    )
     cells = p.groupBy("conv_id", "_prev", "_cur").agg(
-        F.count("*").cast("long").alias("_c")
+        F.count("*").cast("long").alias("_c"), F.max("_n").alias("_n")
     )
     per = cells.groupBy("conv_id").agg(
         F.sum("_c").cast("long").alias("n_trans"),
         F.count("*").cast("long").alias("n_cells"),
-        F.sort_array(F.collect_list(F.struct("_prev", "_cur", "_c"))).alias("_a"),
+        *ordered_sums(["_prev", "_cur"], _joint=plogp),
     )
-    n = F.col("n_trans").cast("double")
-
-    def _h(arr, key_fields):
-        # fold -p*log2(p) over the sorted cell list, merging cells that
-        # share the key via a pre-aggregation in the lambda would need
-        # state; instead marginals get their own compacted frame below
-        return -F.aggregate(
-            arr,
-            F.lit(0.0),
-            lambda a, s: a
-            + (s["_c"].cast("double") / n) * F.log2(s["_c"].cast("double") / n),
-        )
-
-    joint = _h(F.col("_a"), None)
-    marg = p.groupBy("conv_id", "_prev").agg(F.count("*").cast("long").alias("_c"))
-    perm = marg.groupBy("conv_id").agg(
-        F.sort_array(F.collect_list(F.struct("_prev", "_c"))).alias("_m")
+    joint = -F.col("_joint")
+    marg = p.groupBy("conv_id", "_prev").agg(
+        F.count("*").cast("long").alias("_c"), F.max("_n").alias("_n")
     )
+    perm = marg.groupBy("conv_id").agg(*ordered_sums(["_prev"], _prev_h=plogp))
     out = per.join(perm, "conv_id")
-    prev_h = -F.aggregate(
-        F.col("_m"),
-        F.lit(0.0),
-        lambda a, s: a
-        + (s["_c"].cast("double") / n) * F.log2(s["_c"].cast("double") / n),
-    )
+    prev_h = -F.col("_prev_h")
     return out.select(
         "conv_id",
         "n_trans",
@@ -1310,7 +1300,7 @@ def log_rank(
 
     Determinism: every n/d count is an exact long; each bucket's two
     terms are fixed chains over single casts; and the two totals are
-    LEFT FOLDS over the bucket-ordered term arrays — the SQL oracle
+    ``exprs.ordered_sums`` over the buckets — the SQL oracle
     replays the same fold with list_reduce, so z and chi2 match
     bit-for-bit. Buckets with d = 0 or n <= 1 contribute exactly 0.
 
@@ -1387,14 +1377,8 @@ def log_rank(
     g = terms.groupBy().agg(
         F.sum("d1").cast("long").alias("d1"),
         F.sum("d2").cast("long").alias("d2"),
-        F.sort_array(
-            F.collect_list(F.struct("tb", "_numt", "_vart"))
-        ).alias("_a"),
+        *ordered_sums(["tb"], _num=F.col("_numt"), _var=F.col("_vart")),
     )
-    zero = F.lit(0.0)
-    num = F.aggregate(F.col("_a"), zero, lambda acc, s: acc + s["_numt"])
-    var = F.aggregate(F.col("_a"), zero, lambda acc, s: acc + s["_vart"])
-    g = g.withColumn("_num", num).withColumn("_var", var)
     z = F.when(F.col("_var") > 0, F.col("_num") / F.sqrt("_var"))
     totals = terms.groupBy().agg(
         F.max("n1").cast("long").alias("n1"), F.max("n2").cast("long").alias("n2")
@@ -1631,6 +1615,8 @@ def jackknife_cluster_se(
         F.sort_array(F.collect_list(F.struct("_c", "_s", "_n"))).alias("_arr"),
     )
 
+    # kept as folds: each term reads the group totals _S / _N, and the
+    # second fold the first fold's mean, all known only after the collect
     def _m(x):
         # the G=1 degenerate group would divide by zero inside the fold
         # (ANSI errors where DuckDB's float division yields inf); its
@@ -2006,6 +1992,7 @@ def nelson_aalen(
         ),
     )
     one = one.withColumn("_rows", rows)
+    # prefix folds, one per bucket: each output row is its own partial sum
     haz = F.transform(
         F.sequence(F.lit(0), m - F.lit(1)),
         lambda i: F.aggregate(
@@ -2129,15 +2116,15 @@ def permutation_entropy(df: DataFrame, signal_col: str = "signal") -> DataFrame:
 
         h_norm = H / log2(6)     (6 = strict-order pattern count)
 
-    Determinism: codes and counts are exact integers; the entropy fold
-    runs ordered by code (at most 8 terms, each one division + one
-    log2 + one multiply), so the SQL oracle replays H bit-for-bit.
+    Determinism: codes and counts are exact integers; the entropy is
+    ``exprs.ordered_sums`` by code (at most 8 terms, each one division
+    + one log2 + one multiply), so the SQL oracle replays H bit-for-bit.
 
     Scale: two LEADs on the shared per-conversation window, one
     (conv_id, code) groupBy (map-side combined, state <= 8 rows per
-    conversation), one conv_id aggregate with a <= 8-element fold. No
-    per-row float math. Output: (conv_id, n_windows long, n_patterns
-    long, h double, h_norm double — NULL when n_windows = 0).
+    conversation), one conv_id aggregate with a <= 8-element fold.
+    Output: (conv_id, n_windows long, n_patterns long, h double, h_norm
+    double — NULL when n_windows = 0).
     """
     x = F.col(signal_col).cast("long")
     w = conv_window()
@@ -2156,21 +2143,22 @@ def permutation_entropy(df: DataFrame, signal_col: str = "signal") -> DataFrame:
         + F.when(F.col("_x0") > F.col("_x2"), F.lit(2)).otherwise(F.lit(0))
         + F.when(F.col("_x1") > F.col("_x2"), F.lit(1)).otherwise(F.lit(0))
     ).cast("long")
+    # each window carries its conversation's window count, on the lead
+    # window's own partitioning and order
+    trip = trip.withColumn("_nw", F.count("*").over(Window.partitionBy("conv_id")))
     per_code = trip.groupBy("conv_id", code.alias("_code")).agg(
-        F.count("*").cast("long").alias("_c")
+        F.count("*").cast("long").alias("_c"), F.max("_nw").alias("_nw")
     )
+    nd = F.col("_nw").cast("double")
     g = per_code.groupBy("conv_id").agg(
         F.sum("_c").cast("long").alias("n_windows"),
         F.count("*").cast("long").alias("n_patterns"),
-        F.sort_array(F.collect_list(F.struct("_code", "_c"))).alias("_cs"),
+        *ordered_sums(
+            ["_code"],
+            _h=(F.col("_c").cast("double") / nd) * F.log2(F.col("_c").cast("double") / nd),
+        ),
     )
-    nd = F.col("n_windows").cast("double")
-    h = -F.aggregate(
-        F.col("_cs"),
-        F.lit(0.0),
-        lambda acc, e: acc
-        + (e["_c"].cast("double") / nd) * F.log2(e["_c"].cast("double") / nd),
-    )
+    h = -F.col("_h")
     ok = F.col("n_windows") > 0
     return g.select(
         "conv_id",
@@ -2596,7 +2584,7 @@ def rmst(
     Determinism: builds on kaplan_meier's exact-long bucket rows; each
     interval term is S_before (the PREVIOUS row's fold product — the
     identical double) times an exact-long bucket gap, summed by an
-    ordered fold in bucket order plus one tail term. The SQL oracle
+    ``exprs.ordered_sums`` in bucket order plus one tail term. The SQL oracle
     replays the same products and fold bit-for-bit.
 
     Scale: everything past the per-conv collapse runs on the bounded
@@ -2632,16 +2620,11 @@ def rmst(
     ).otherwise(F.lit(0.0))
     rows = rows.withColumn("_tail", tail)
     n_conv = F.col("_nr")  # first row's n_risk is the cohort size
-    g = rows.select(
-        F.struct("t_bucket", (F.col("_term") + F.col("_tail")).alias("_t")).alias(
-            "_e"
-        ),
-        F.when(F.col("_rn") == 1, n_conv).alias("_n0"),
-    ).agg(
-        F.sort_array(F.collect_list("_e")).alias("_es"),
-        F.max("_n0").cast("long").alias("n_conv"),
+    g = rows.agg(
+        *ordered_sums(["t_bucket"], _t=F.col("_term") + F.col("_tail")),
+        F.max(F.when(F.col("_rn") == 1, n_conv)).cast("long").alias("n_conv"),
     )
-    area_b = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])
+    area_b = F.col("_t")
     return g.select(
         (tau * F.lit(int(bucket_s))).alias("tau_s"),
         "n_conv",

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..session import persist_intermediate
 from . import convstats
+from .exprs import ordered_sums
 from .skew import ORDER as _ORDER, conv_window, map_conversations
 
 
@@ -1234,10 +1235,11 @@ def spectral_profile(
     -sum_k p_k ln p_k, p_k = P_k / sum_j P_j.
 
     Determinism: bucket counts are exact longs; the centered trig
-    terms are fixed chains folded in t order per harmonic (the oracle
-    replays the identical IEEE sequence — cos/sin agree across engines
-    on identical double arguments to within an ulp, absorbed by the
-    6dp contract); entropy folds in k order. Bit-replayable.
+    terms are fixed chains summed by ``exprs.ordered_sums`` in t order
+    per harmonic (the oracle replays the identical IEEE sequence —
+    cos/sin agree across engines on identical double arguments to
+    within an ulp, absorbed by the 6dp contract); entropy folds in k
+    order. Bit-replayable.
 
     Scale: the series length is CALENDAR-bounded (hours in the data
     window — ~9k rows/year), never corpus-sized: one map-side-combined
@@ -1273,34 +1275,22 @@ def spectral_profile(
         * F.col("_t").cast("double")
         / F.col("_n").cast("double")
     )
-    per = j.select(
-        "k",
-        "_n",
-        F.struct(
-            "_t", (x * F.cos(theta)).alias("_tc"), (x * F.sin(theta)).alias("_ts")
-        ).alias("_e"),
-    ).groupBy("k").agg(
+    per = j.groupBy("k").agg(
         F.max("_n").alias("n"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_t"], _tc=x * F.cos(theta), _ts=x * F.sin(theta)),
     )
-    sc = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_tc"])
-    ss = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_ts"])
+    sc, ss = F.col("_tc"), F.col("_ts")
     pw = per.select("k", "n", (sc * sc + ss * ss).alias("power"))
     tot = pw.withColumn("_tot", F.sum("power").over(w_all))
     np_ = F.when(F.col("_tot") > 0, F.col("power") / F.col("_tot"))
     normed = tot.select("k", "n", "power", np_.alias("norm_power"))
-    ent_src = normed.where(F.col("norm_power").isNotNull()).select(
-        F.struct(
-            "k",
-            F.when(
+    ent = normed.where(F.col("norm_power").isNotNull()).agg(
+        *ordered_sums(
+            ["k"],
+            spec_entropy=F.when(
                 F.col("norm_power") > 0,
                 -F.col("norm_power") * F.log("norm_power"),
-            ).otherwise(F.lit(0.0)).alias("_t"),
-        ).alias("_e")
-    )
-    ent = ent_src.agg(F.sort_array(F.collect_list("_e")).alias("_es")).select(
-        F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"]).alias(
-            "spec_entropy"
+            ).otherwise(F.lit(0.0)),
         )
     )
     return normed.crossJoin(F.broadcast(ent)).select(
@@ -1501,7 +1491,7 @@ def entropy_rate(df: DataFrame) -> DataFrame:
     cousin of [[q_theil_u]]'s association view).
 
     Determinism: transition counts are exact longs on the stable
-    (ts, turn_idx) order; both entropies fold ordered by (u, v) /
+    (ts, turn_idx) order; both entropies are ``exprs.ordered_sums`` by (u, v) /
     v; fixed chains. Bit-replayable.
 
     Scale: one window pass + one |roles|^2 aggregate. Output one row:
@@ -1530,22 +1520,13 @@ def entropy_rate(df: DataFrame) -> DataFrame:
     # conditional term: (n_uv/N) * ln(n_uv/n_u) summed over (u, v)
     p_joint = F.col("_n").cast("double") / F.col("_nn").cast("double")
     p_cond = F.col("_n").cast("double") / F.col("_nu").cast("double")
-    hr = cells.select(
-        "_nn",
-        F.struct("_u", "_v", (p_joint * F.log(p_cond)).alias("_t")).alias("_e"),
-    ).groupBy("_nn").agg(F.sort_array(F.collect_list("_e")).alias("_es"))
-    h_rate = -F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])
+    hr = cells.groupBy("_nn").agg(*ordered_sums(["_u", "_v"], _t=p_joint * F.log(p_cond)))
+    h_rate = -F.col("_t")
     # marginal next-role entropy over v
     marg = trans.groupBy("_v").agg(F.sum("_n").cast("long").alias("_m"))
     margn = marg.withColumn("_nn", F.sum("_m").over(w_all).cast("long"))
     q = F.col("_m").cast("double") / F.col("_nn").cast("double")
-    hm = margn.select(
-        F.struct("_v", (q * F.log(q)).alias("_t")).alias("_e")
-    ).agg(F.sort_array(F.collect_list("_e")).alias("_es")).select(
-        (-F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])).alias(
-            "_hm"
-        )
-    )
+    hm = margn.agg(*ordered_sums(["_v"], _t=q * F.log(q))).select((-F.col("_t")).alias("_hm"))
     g = hr.select(F.col("_nn").alias("n_trans"), h_rate.alias("h_rate")).crossJoin(
         F.broadcast(hm)
     )
@@ -1568,9 +1549,9 @@ def seasonality_strength(df: DataFrame) -> DataFrame:
         eta2 = [sum_g S_g^2 / n_g - S^2 / n] / [sum c^2 - S^2 / n]
 
     Determinism: S_g, n_g, S, sum c^2 are exact longs (squares ride
-    DECIMAL(38,0)); each eta2 folds the per-group S_g^2/n_g terms
-    ordered by group key and finishes with a fixed chain. NULL when
-    the series is constant (SST = 0). Bit-replayable.
+    DECIMAL(38,0)); each eta2 sums the per-group S_g^2/n_g terms by
+    ``exprs.ordered_sums`` in group-key order and finishes with a fixed
+    chain. NULL when the series is constant (SST = 0). Bit-replayable.
 
     Scale: calendar-bounded series; two tiny (<= 24 / 7 cell)
     aggregates. Output one row: (n long, eta2_hour, eta2_dow
@@ -1594,14 +1575,7 @@ def seasonality_strength(df: DataFrame) -> DataFrame:
         term = (
             d19(F.col("_sg")) * d19(F.col("_sg"))
         ).cast("double") / F.col("_ng").cast("double")
-        per = g.select(F.struct("_g", term.alias("_t")).alias("_e")).agg(
-            F.sort_array(F.collect_list("_e")).alias("_es")
-        )
-        return per.select(
-            F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"]).alias(
-                name
-            )
-        )
+        return g.agg(*ordered_sums(["_g"], **{name: term}))
 
     eh = _eta(F.hour(F.col("_h")), "_bh")
     ed = _eta(F.dayofweek(F.col("_h")), "_bd")
@@ -1692,8 +1666,8 @@ def markov_stationary(df: DataFrame, n_iter: int = 3) -> DataFrame:
     unrolls the same three steps declaratively.
 
     Determinism: P's cells are exact-count ratios; each iteration
-    folds the incoming terms ordered by source role; the start vector
-    is the exact 1/k. Bit-replayable.
+    sums the incoming terms by ``exprs.ordered_sums`` over source
+    roles; the start vector is the exact 1/k. Bit-replayable.
 
     Scale: the chain lives on the |roles|^2 cell table — corpus-sized
     work is ONE counting pass. Output: (role, pi double, marginal
@@ -1726,17 +1700,7 @@ def markov_stationary(df: DataFrame, n_iter: int = 3) -> DataFrame:
         j = pi.join(cells, pi["_r"] == cells["_u"]).select(
             F.col("_v"), F.col("_u"), (F.col("_pi") * F.col("_p")).alias("_t")
         )
-        pi = (
-            j.select(F.col("_v").alias("_r"), F.struct("_u", "_t").alias("_e"))
-            .groupBy("_r")
-            .agg(F.sort_array(F.collect_list("_e")).alias("_es"))
-            .select(
-                "_r",
-                F.aggregate(
-                    F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"]
-                ).alias("_pi"),
-            )
-        )
+        pi = j.groupBy(F.col("_v").alias("_r")).agg(*ordered_sums(["_u"], _pi=F.col("_t")))
     marg = trans.groupBy(F.col("_v").alias("_r")).agg(
         F.sum("_n").cast("long").alias("_m")
     )

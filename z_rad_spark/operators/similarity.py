@@ -22,7 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .exprs import chain
+from .exprs import chain, chain_sql, ordered_sums
 
 
 def _dot(a, b):
@@ -1290,12 +1290,10 @@ def _projection_expr(
         if mean is not None:
             x = f"({x} - {mean[i - 1]!r})"
         terms.append(f"{x} * {float(w)!r}")
-    chain = terms[0]
-    for t in terms[1:]:
-        chain = f"({chain} + {t})"
+    expr = chain_sql(terms)
     if scale is not None:
-        chain = f"({chain}) * {float(scale)!r}"
-    return chain
+        expr = f"({expr}) * {float(scale)!r}"
+    return expr
 
 
 def random_project(
@@ -1428,10 +1426,7 @@ def mahalanobis_score(
         proj_exprs.append(f"(({p}) * ({p}) / {float(lam)!r})")
     if not proj_exprs:
         return df.withColumn(out, F.lit(None).cast("double"))
-    chain = proj_exprs[0]
-    for t in proj_exprs[1:]:
-        chain = f"({chain} + {t})"
-    return df.withColumn(out, F.expr(chain))
+    return df.withColumn(out, F.expr(chain_sql(proj_exprs)))
 
 
 def embedding_stats(
@@ -1884,7 +1879,7 @@ def intra_list_diversity(
 
     Determinism: the top-k lists come from [[cosine_topk]]'s
     deterministic (cosine desc, id asc) ranking; each pair distance is
-    the fixed dot/norm chain and the per-query reduction folds ordered
+    the fixed dot/norm chain and the per-query reduction is ``exprs.ordered_sums``
     by (rank_i, rank_j). Bit-replayable.
 
     Scale: the result-id set (|Q| * k rows) BROADCASTS onto the corpus
@@ -1912,13 +1907,11 @@ def intra_list_diversity(
     )
     pairs = a.join(b, "_q").where(F.col("_ri") < F.col("_rj"))
     dist = F.lit(1.0) - _cosine(F.col("_vi"), F.col("_vj")).cast("double")
-    per = pairs.select(
-        "_q", F.struct("_ri", "_rj", dist.alias("_d")).alias("_e")
-    ).groupBy("_q").agg(
+    per = pairs.groupBy("_q").agg(
         F.count("*").cast("long").alias("n_pairs"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_ri", "_rj"], _d=dist),
     )
-    s = F.aggregate(F.col("_es"), F.lit(0.0), lambda acc, e: acc + e["_d"])
+    s = F.col("_d")
     return per.select(
         F.col("_q").alias(query_id),
         "n_pairs",
@@ -1946,9 +1939,9 @@ def anisotropy(
     cosine retrieval — pushes it toward 1. The one-number space
     screen beside the per-vector [[embedding_stats]].
 
-    Determinism: per-dim sums fold ordered by id (exact replay);
-    each u_i = x_i / norm_i with the norm its own dim-ordered fold;
-    the final dim-ordered fold squares the per-dim sums. Zero-norm
+    Determinism: per-dim sums are ``exprs.ordered_sums`` by id (exact
+    replay); each u_i = x_i / norm_i with the norm its own dim-ordered
+    fold; the final ``ordered_sums`` by dim squares the per-dim sums. Zero-norm
     and non-finite vectors are excluded (count reported). This is
     the EXACT baseline: the id-ordered fold state is corpus-sized
     per dim — at 10^12 rows run the covariance-style partial-sum
@@ -1972,21 +1965,8 @@ def anisotropy(
     ex = kept.select(
         "_id", F.posexplode(u).alias("_d", "_x")
     )
-    per_dim = ex.groupBy("_d").agg(
-        F.sort_array(F.collect_list(F.struct("_id", "_x"))).alias("_es")
-    ).select(
-        "_d",
-        F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_x"]).alias(
-            "_s"
-        ),
-    )
-    tot = per_dim.select(F.struct("_d", "_s").alias("_e")).agg(
-        F.sort_array(F.collect_list("_e")).alias("_es")
-    ).select(
-        F.aggregate(
-            F.col("_es"), F.lit(0.0), lambda a, e: a + e["_s"] * e["_s"]
-        ).alias("sum_norm_sq")
-    )
+    per_dim = ex.groupBy("_d").agg(*ordered_sums(["_id"], _s=F.col("_x")))
+    tot = per_dim.agg(*ordered_sums(["_d"], sum_norm_sq=F.col("_s") * F.col("_s")))
     counts = flagged.agg(
         F.count(F.when(~F.col("_bad"), 1)).cast("long").alias("n"),
         F.count(F.when(F.col("_bad"), 1)).cast("long").alias("n_dropped"),
@@ -2024,7 +2004,7 @@ def sq8_quantize(
 
     Determinism: per-dim min/max are ORDER-FREE exact reductions (no
     float summation), so the corpus pass is deterministic at any
-    scale; per-vector mse folds in dim order; floor(z + 0.5) is the
+    scale; per-vector mse is ``exprs.ordered_sums`` by dim; floor(z + 0.5) is the
     same half-up in both engines (banker's-rounding-proof).
     Degenerate dims (max = min) quantize to code 0 with zero error.
 
@@ -2060,20 +2040,15 @@ def sq8_quantize(
     err = F.when(F.col("_mx") == F.col("_mn"), F.lit(0.0)).otherwise(
         F.col("_x") - recon
     )
-    per = j.select(
-        "_id", F.struct("_d", err.alias("_e")).alias("_s")
-    ).groupBy("_id").agg(
-        F.sort_array(F.collect_list("_s")).alias("_es")
+    per = j.groupBy("_id").agg(
+        *ordered_sums(["_d"], _sse=err * err),
+        F.max(F.abs(err)).alias("max_abs_err"),
+        F.count("*").alias("_n"),
     )
-    sse = F.aggregate(
-        F.col("_es"), F.lit(0.0), lambda a, e: a + e["_e"] * e["_e"]
-    )
-    mx = F.array_max(F.transform(F.col("_es"), lambda e: F.abs(e["_e"])))
-    d = F.size("_es").cast("double")
     return per.select(
         F.col("_id").alias(id_col),
-        (sse / d).alias("mse"),
-        mx.alias("max_abs_err"),
+        (F.col("_sse") / F.col("_n").cast("double")).alias("mse"),
+        "max_abs_err",
     )
 
 
@@ -2090,8 +2065,8 @@ def label_centroids(
     different directions?') that pairs with [[anisotropy]]'s
     whole-space collapse number.
 
-    Determinism: per-(label, dim) and per-dim sums fold ordered by
-    id; norms and the dot product fold in dim order; fixed double
+    Determinism: per-(label, dim) and per-dim sums are
+    ``exprs.ordered_sums`` by id; norms and the dot product by dim; fixed double
     chains. Zero-norm/non-finite vectors excluded. Exact baseline
     (see [[anisotropy]] for the 10^12-row note).
 
@@ -2109,44 +2084,21 @@ def label_centroids(
         "_id", "_l", F.posexplode("_v").alias("_d", "_x")
     )
     lab_dim = ex.groupBy("_l", "_d").agg(
-        F.sort_array(F.collect_list(F.struct("_id", "_x"))).alias("_es"),
-    ).select(
-        "_l",
-        "_d",
-        F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_x"]).alias("_s"),
-        F.size("_es").cast("long").alias("_n"),
+        *ordered_sums(["_id"], _s=F.col("_x")), F.count("*").cast("long").alias("_n")
     )
-    glob_dim = lab_dim.select(F.struct("_l", F.col("_s").alias("_gs")).alias("_e"), "_d").groupBy(
-        "_d"
-    ).agg(F.sort_array(F.collect_list("_e")).alias("_ls")).select(
-        "_d",
-        F.aggregate(F.col("_ls"), F.lit(0.0), lambda a, e: a + e["_gs"]).alias("_g"),
-    )
+    glob_dim = lab_dim.groupBy("_d").agg(*ordered_sums(["_l"], _g=F.col("_s")))
     lab_n = lab_dim.groupBy("_l").agg(F.max("_n").cast("long").alias("n"))
     tot_n = lab_n.agg(F.sum("n").cast("long").alias("_tn"))
-    j = lab_dim.join(F.broadcast(glob_dim), "_d")
-    per = j.select(
-        "_l",
-        "_n",
-        F.struct(
-            "_d",
-            (F.col("_s") / F.col("_n").cast("double")).alias("_c"),
-            F.col("_g").alias("_gd"),
-        ).alias("_e"),
-    ).groupBy("_l").agg(
+    # the global centroid divides by the total row count, broadcast in
+    # before the per-label fold
+    j = lab_dim.join(F.broadcast(glob_dim), "_d").crossJoin(F.broadcast(tot_n))
+    c = F.col("_s") / F.col("_n").cast("double")
+    gc = F.col("_g") / F.col("_tn").cast("double")
+    per = j.groupBy("_l").agg(
         F.max("_n").cast("long").alias("n"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_d"], _cn2=c * c, _gn2=gc * gc, _dot=c * gc),
     )
-    # global centroid uses the total row count (broadcast below)
-    per = per.crossJoin(F.broadcast(tot_n))
-    gc = lambda e: e["_gd"] / F.col("_tn").cast("double")  # noqa: E731
-    cn2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_c"] * e["_c"])
-    gn2 = F.aggregate(
-        F.col("_es"), F.lit(0.0), lambda a, e: a + gc(e) * gc(e)
-    )
-    dot = F.aggregate(
-        F.col("_es"), F.lit(0.0), lambda a, e: a + e["_c"] * gc(e)
-    )
+    cn2, gn2, dot = F.col("_cn2"), F.col("_gn2"), F.col("_dot")
     ok = (cn2 > 0) & (gn2 > 0)
     return per.select(
         F.col("_l").alias(label_col),
@@ -2172,10 +2124,10 @@ def mahalanobis_diag(
     the isotropic norm in [[embedding_stats]] averages away).
     Zero-variance dims contribute 0 (they carry no information).
 
-    Determinism: per-dim mean and E[x^2] fold ordered by id (exact
+    Determinism: per-dim mean and E[x^2] are ``exprs.ordered_sums`` by id (exact
     replay; the documented exact-baseline pattern — see
     [[anisotropy]] for the 10^12-row partial-sum alternative); the
-    per-vector score folds in dim order. Non-finite vectors are
+    per-vector score sums by dim. Non-finite vectors are
     excluded.
 
     Output: (id, score double, max_dim_z double — the single worst
@@ -2188,14 +2140,8 @@ def mahalanobis_diag(
     )
     ex = base.where(~bad).select("_id", F.posexplode("_v").alias("_d", "_x"))
     per_dim = ex.groupBy("_d").agg(
-        F.sort_array(F.collect_list(F.struct("_id", "_x"))).alias("_es"),
-    ).select(
-        "_d",
-        F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_x"]).alias("_s"),
-        F.aggregate(
-            F.col("_es"), F.lit(0.0), lambda a, e: a + e["_x"] * e["_x"]
-        ).alias("_s2"),
-        F.size("_es").cast("long").alias("_n"),
+        *ordered_sums(["_id"], _s=F.col("_x"), _s2=F.col("_x") * F.col("_x")),
+        F.count("*").cast("long").alias("_n"),
     )
     nd = F.col("_n").cast("double")
     mu = F.col("_s") / nd
@@ -2206,13 +2152,9 @@ def mahalanobis_diag(
         F.col("_var") > 0,
         (F.col("_x") - F.col("_mu")) * (F.col("_x") - F.col("_mu")) / F.col("_var"),
     ).otherwise(F.lit(0.0))
-    per = j.select(
-        "_id", F.struct("_d", z2.alias("_z2")).alias("_e")
-    ).groupBy("_id").agg(F.sort_array(F.collect_list("_e")).alias("_es"))
-    s2 = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_z2"])
-    mx = F.sqrt(F.array_max(F.transform(F.col("_es"), lambda e: e["_z2"])))
+    per = j.groupBy("_id").agg(*ordered_sums(["_d"], _z2=z2), F.max(z2).alias("_mx"))
     return per.select(
         F.col("_id").alias(id_col),
-        F.sqrt(s2).alias("score"),
-        mx.alias("max_dim_z"),
+        F.sqrt("_z2").alias("score"),
+        F.sqrt("_mx").alias("max_dim_z"),
     )

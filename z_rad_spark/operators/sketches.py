@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .exprs import ordered_sums
+
 
 def approx_distinct_by(
     df: DataFrame,
@@ -241,7 +243,7 @@ def hyperloglog_by(
 
     Determinism: rank is a generated integer CASE ladder (no float
     log2 — exact at every power-of-two boundary); 2^(-M_j) terms are
-    exact dyadic doubles combined in a bucket-ordered left fold; the
+    exact dyadic doubles summed by ``exprs.ordered_sums`` by bucket; the
     zero registers contribute the exact integer m - occupied. One ln()
     and a fixed division chain — same libm double in both engines
     under the 6dp gate (the linear_count_by precedent).
@@ -296,13 +298,9 @@ def hyperloglog_by(
     j = regs.groupBy("_g").agg(
         F.count("*").cast("long").alias("occupied"),
         F.max("_nkk").cast("long").alias("exact_distinct"),
-        F.sort_array(F.collect_list(F.struct("_b", "_reg"))).alias("_bs"),
+        *ordered_sums(["_b"], _z_occ=F.pow(F.lit(2.0), -F.col("_reg").cast("double"))),
     )
-    z_occ = F.aggregate(
-        F.col("_bs"),
-        F.lit(0.0),
-        lambda acc, e: acc + F.pow(F.lit(2.0), -e["_reg"].cast("double")),
-    )
+    z_occ = F.col("_z_occ")
     v = (F.lit(m) - F.col("occupied")).cast("long")
     zsum = z_occ + v.cast("double")
     alpha = F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(float(m)))

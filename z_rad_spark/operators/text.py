@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import normalize_text
-from .exprs import chain, literal_frame, np_log
+from .exprs import chain, literal_frame, np_log, ordered_sums
 
 
 def with_json_field(
@@ -300,7 +300,7 @@ def bm25_topk(
     broadcast; per-term df is a count-window over the postings frame
     (one postings-sized exchange — NOT a second corpus explode); the
     query bag is a broadcast literal; scoring is a map-side
-    expression; the per-(query, doc) sum is an ORDERED fold
+    expression; the per-(query, doc) sum is ``exprs.ordered_sums``
     over the token-sorted contributions (collect_list bounded by the
     query length), so the float addition order is engine-independent
     and DuckDB replays the score bit-for-bit. Ranking is on the
@@ -362,17 +362,8 @@ def bm25_topk(
         )
     )
     agg = contrib.groupBy("query_id", id_col).agg(
-        F.round(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("token"), F.col("_c").alias("c")))
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ),
-            6,
-        ).alias("score")
-    )
+        *ordered_sums(["token"], score=F.col("_c"))
+    ).withColumn("score", F.round("score", 6))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
     return (
         agg.withColumn("rank", F.row_number().over(w))
@@ -628,6 +619,8 @@ def lexical_diversity(
     n = F.col("n_tokens").cast("double")
     v = F.col("n_types").cast("double")
     p = lambda s: s["_c"].cast("double") / n  # noqa: E731
+    # kept as folds: each term reads the document's n_tokens, known only
+    # after the collect
     ent = -F.aggregate(
         F.col("_arr"), F.lit(0.0), lambda a, s: a + p(s) * F.log2(p(s))
     )
@@ -670,7 +663,7 @@ def zipf_fit(
 
     Scale + determinism shape: the rank table is top_tokens' bounded
     top-k (heavy-hitter window over the vocab-sized aggregate, integer
-    counts, token-asc ties); the four OLS sums then fold over the
+    counts, token-asc ties); the four OLS sums are ``exprs.ordered_sums`` over the
     RANK-SORTED k-element list — the ordered-fold parity idiom, k
     bounded by the operator parameter, so the whole fit costs one
     vocab-shuffle plus a k-row fold regardless of corpus size.
@@ -679,23 +672,14 @@ def zipf_fit(
     double). Groups with fewer than 2 distinct tokens emit NULL fits.
     """
     ranks = top_tokens(docs, k=k, group_col=group_col, text_col=text_col, id_col=id_col)
+    x = F.log(F.col("rank").cast("double"))
+    y = F.log(F.col("n").cast("double"))
     per = ranks.groupBy(group_col).agg(
         F.count("*").cast("long").alias("k_used"),
-        F.sort_array(
-            F.collect_list(F.struct("rank", "n"))
-        ).alias("_a"),
+        *ordered_sums(["rank"], _sx=x, _sy=y, _sxy=x * y, _sxx=x * x),
     )
-    x = lambda s: F.log(s["rank"].cast("double"))  # noqa: E731
-    y = lambda s: F.log(s["n"].cast("double"))  # noqa: E731
-
-    def _fold(term):
-        return F.aggregate(F.col("_a"), F.lit(0.0), lambda a, s: a + term(s))
-
     kk = F.col("k_used").cast("double")
-    sx = _fold(x)
-    sy = _fold(y)
-    sxy = _fold(lambda s: x(s) * y(s))
-    sxx = _fold(lambda s: x(s) * x(s))
+    sx, sy, sxy, sxx = F.col("_sx"), F.col("_sy"), F.col("_sxy"), F.col("_sxx")
     den = kk * sxx - sx * sx
     slope = (kk * sxy - sx * sy) / den
     return per.select(
@@ -789,10 +773,9 @@ def tfidf_hashed_embedding(
     so unseen-df never divides by zero).
 
     Determinism shape: tf and df are exact integers; each token's
-    weight is a fixed float chain; the PER-BUCKET sums fold over the
-    TOKEN-SORTED (token, weight) list — the engine's ordered-fold
-    parity idiom (a plain SUM over floats would be engine-order
-    dependent) — and the bucket lists are bounded by per-document
+    weight is a fixed float chain; the PER-BUCKET sums are
+    ``exprs.ordered_sums`` by token (a plain SUM over floats would be
+    engine-order dependent) — and the bucket lists are bounded by per-document
     vocabulary. One (doc, token) aggregate, one token equi-join to the
     df side, one (doc, bucket) fold, one doc regroup.
 
@@ -821,13 +804,7 @@ def tfidf_hashed_embedding(
         .join(F.broadcast(n_docs))
         .select(id_col, "token", bucket.alias("_b"), w.alias("_w"))
     )
-    per_bucket = scored.groupBy(id_col, "_b").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("token", "_w"))),
-            F.lit(0.0),
-            lambda a, s: a + s["_w"],
-        ).alias("_v")
-    )
+    per_bucket = scored.groupBy(id_col, "_b").agg(*ordered_sums(["token"], _v=F.col("_w")))
     wide = per_bucket.groupBy(id_col).agg(
         *[
             F.coalesce(
@@ -1661,12 +1638,9 @@ def naive_bayes_lang(
             ).alias("_lp"),
         )
     )
-    per = scored_tok.groupBy("_doc", "_lang").agg(
-        F.sort_array(F.collect_list(F.struct("_pos", "_lp"))).alias("_arr")
-    )
-    s = F.aggregate(F.col("_arr"), F.lit(0.0), lambda a, e: a + e["_lp"])
+    per = scored_tok.groupBy("_doc", "_lang").agg(*ordered_sums(["_pos"], _lp=F.col("_lp")))
     scored = per.join(broadcast(prior), "_lang").select(
-        "_doc", "_lang", (F.col("_ln_prior") + s).alias("_score")
+        "_doc", "_lang", (F.col("_ln_prior") + F.col("_lp")).alias("_score")
     )
     w = Window.partitionBy("_doc").orderBy(F.col("_score").desc(), F.asc("_lang"))
     ranked = scored.withColumn("_rk", F.row_number().over(w)).withColumn(
@@ -1707,9 +1681,9 @@ def heaps_law(
     sampled at <= ``max_points`` evenly spaced docs so the fit state
     is bounded regardless of corpus size.
 
-    Determinism: n_i / V_i are exact longs; the OLS moments fold over
-    the checkpoint list ordered by doc rank with fixed ln/multiply
-    chains. Bit-replayable.
+    Determinism: n_i / V_i are exact longs; the OLS moments are
+    ``exprs.ordered_sums`` over the checkpoints by doc rank, with fixed
+    ln/multiply chains. Bit-replayable.
 
     Scale: one explode + token groupBy (map-side combined) for first
     occurrences, one doc-level cumsum. The global doc order is a
@@ -1751,17 +1725,11 @@ def heaps_law(
     )
     x = F.log(F.col("_n").cast("double"))
     y = F.log(F.col("_v").cast("double"))
-    g = pts.select(
-        F.col("_nd").alias("n_docs"),
-        F.struct("_rk", x.alias("_x"), y.alias("_y")).alias("_e"),
-    ).groupBy("n_docs").agg(
+    g = pts.groupBy(F.col("_nd").alias("n_docs")).agg(
         F.count("*").cast("long").alias("n_points"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
+        *ordered_sums(["_rk"], _sx=x, _sy=y, _sxx=x * x, _sxy=x * y),
     )
-    sx = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_x"])
-    sy = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_y"])
-    sxx = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_x"] * e["_x"])
-    sxy = F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_x"] * e["_y"])
+    sx, sy, sxx, sxy = F.col("_sx"), F.col("_sy"), F.col("_sxx"), F.col("_sxy")
     md = F.col("n_points").cast("double")
     denom = md * sxx - sx * sx
     beta = (md * sxy - sx * sy) / denom
@@ -1791,7 +1759,7 @@ def char_bigram_entropy(
     Characters are the lowercase text's code points; bigrams are
     consecutive pairs WITHIN a document (no cross-doc pairs).
 
-    Determinism: counts are exact longs; entropies fold ordered by
+    Determinism: counts are exact longs; entropies are ``exprs.ordered_sums`` by
     the (character, character-pair) key; fixed chains.
     Bit-replayable.
 
@@ -1810,18 +1778,9 @@ def char_bigram_entropy(
     w_g = Window.partitionBy("_g")
     unin = uni.withColumn("_nn", F.sum("_n").over(w_g).cast("long"))
     p1 = F.col("_n").cast("double") / F.col("_nn").cast("double")
-    h1df = unin.select(
-        "_g", "_nn", F.struct("_c", (p1 * F.log(p1)).alias("_t")).alias("_e")
-    ).groupBy("_g").agg(
-        F.max("_nn").alias("n_chars"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
-    ).select(
-        "_g",
-        "n_chars",
-        (-F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])).alias(
-            "_h1"
-        ),
-    )
+    h1df = unin.groupBy("_g").agg(
+        F.max("_nn").alias("n_chars"), *ordered_sums(["_c"], _t=p1 * F.log(p1))
+    ).select("_g", "n_chars", (-F.col("_t")).alias("_h1"))
     # bigrams within each document
     pairs = df.select(
         F.col(group_col).alias("_g"),
@@ -1833,18 +1792,9 @@ def char_bigram_entropy(
     bi = pairs.groupBy("_g", "_b").agg(F.count("*").cast("long").alias("_n"))
     bin_ = bi.withColumn("_nn", F.sum("_n").over(w_g).cast("long"))
     p2 = F.col("_n").cast("double") / F.col("_nn").cast("double")
-    h2df = bin_.select(
-        "_g", "_nn", F.struct("_b", (p2 * F.log(p2)).alias("_t")).alias("_e")
-    ).groupBy("_g").agg(
-        F.max("_nn").alias("n_bigrams"),
-        F.sort_array(F.collect_list("_e")).alias("_es"),
-    ).select(
-        "_g",
-        "n_bigrams",
-        (-F.aggregate(F.col("_es"), F.lit(0.0), lambda a, e: a + e["_t"])).alias(
-            "_h2"
-        ),
-    )
+    h2df = bin_.groupBy("_g").agg(
+        F.max("_nn").alias("n_bigrams"), *ordered_sums(["_b"], _t=p2 * F.log(p2))
+    ).select("_g", "n_bigrams", (-F.col("_t")).alias("_h2"))
     j = h1df.join(h2df, "_g", "left")
     h_cond = F.col("_h2") - F.col("_h1")
     return j.select(
