@@ -204,6 +204,35 @@ def test_stats_asof_counts_only_turns_up_to_each_cutoff(spark, synth, cutoffs):
         assert r.n == synth.where(F.col("ts") <= F.lit(r.as_of)).count(), r
 
 
+def test_stats_asof_skips_null_signals_as_the_kernel_does(spark):
+    """A NULL signal is no value: the declarative stats equal the kernel
+    path's, which masks the NaN, for a conversation with NULL signals and
+    for one without."""
+    from pyspark.sql import functions as F
+
+    from z_rad_spark.operators import firstorder_sql
+    from z_rad_spark.transcripts import with_signal
+
+    vals = {"a": [3, None, 5, 8, None, 1, 4], "b": [2, 2, 7, 1, 9]}
+    rows = [
+        (c, i, "user", f"w{i}", None, f"2024-01-01 10:{i:02d}:00", None if v is None else float(v))
+        for c, vs in vals.items()
+        for i, v in enumerate(vs)
+    ]
+    t = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string,"
+        " val double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    cut = ["2024-01-02 00:00:00"]
+    kernel = _asof_frame(extract_features(t, FeatureConfig(signal="val", families=("stats",)), cut))
+    decl = _asof_frame(firstorder_sql.stats_asof(with_signal(t, "val"), spark, cut))
+    assert decl["n_turns"].tolist() == [5, 5]
+    cols = [c for c in decl.columns if c.startswith("stat_")]
+    assert len(cols) == 18
+    pd.testing.assert_frame_equal(decl[cols], kernel[cols], check_exact=True)
+
+
 @pytest.mark.parametrize("name", ["stats_asof", "hist_asof"])
 @pytest.mark.parametrize("cutoffs", _SPELLINGS)
 def test_declarative_grid_follows_instants_not_text(spark, synth, name, cutoffs):

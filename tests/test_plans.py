@@ -124,47 +124,90 @@ def _turns(spark, n_convs=4, n_turns=30):
 
 
 def test_hist_asof_never_expands_turns_across_the_grid(spark):
-    """hist_asof must ride the compacted value histogram: the only
-    non-equi broadcast join allowed is (iv <= gi) over ALREADY-compacted
-    rows. A join whose condition touches the raw `ts` column is the
-    O(turns x cutoffs) expansion the module contract forbids."""
-    from z_rad_spark.operators import firstorder_sql
+    """hist_asof and quantile_state_asof must ride the compacted value
+    histogram: the only non-equi broadcast join allowed is (iv <= gi)
+    over ALREADY-compacted rows. A join whose condition touches the raw
+    `ts` column is the O(turns x cutoffs) expansion the module contract
+    forbids."""
+    from z_rad_spark.operators import asof, firstorder_sql
 
     cutoffs = [f"2024-01-{d:02d} 00:00:00" for d in range(2, 31)]
-    plan = _plan(firstorder_sql.hist_asof(_turns(spark), spark, cutoffs, 6))
-    for line in plan.splitlines():
-        if "Join" in line:
-            assert "ts#" not in line, line
+    for df in (
+        firstorder_sql.hist_asof(_turns(spark), spark, cutoffs, 6),
+        asof.quantile_state_asof(_turns(spark), spark, cutoffs),
+    ):
+        for line in _plan(df).splitlines():
+            if "Join" in line:
+                assert "ts#" not in line, line
 
 
-def test_fbn_grey_asof_refuses_dense_grids(spark):
-    """fbn_grey_asof keeps every turn row of its O(turns x cutoffs)
-    expansion and must refuse dense grids (the compacted fbn_hist_asof
-    path serves those); a small grid still works, and the expansion's
-    ``ts <= as_of`` filter is spelled only in asof.py (source-asserted, so
-    every point-in-time read keeps one definition)."""
-    import pathlib
+def _code(path: pathlib.Path) -> str:
+    """``path``'s Python source without comments and statement-level
+    strings (docstrings), its tokens joined with no whitespace, so a
+    spelling split across lines still reads as one string."""
+    import io
+    import tokenize
 
-    import pytest
+    out, line_start = [], True
+    for tok in tokenize.generate_tokens(io.StringIO(path.read_text()).readline):
+        if tok.type in (tokenize.NEWLINE, tokenize.INDENT, tokenize.DEDENT):
+            line_start = True
+            continue
+        if tok.type in (tokenize.COMMENT, tokenize.NL, tokenize.ENDMARKER):
+            continue
+        if not (line_start and tok.type == tokenize.STRING):
+            out.append(tok.string)
+        line_start = False
+    return "".join(out)
 
-    from z_rad_spark.operators import firstorder_sql
 
-    dense = [f"2024-01-{d:02d} 00:00:00" for d in range(2, 31)]
-    with pytest.raises(ValueError, match="O\\(turns x cutoffs\\)"):
-        firstorder_sql.fbn_grey_asof(_turns(spark), spark, dense, 6)
-    small = firstorder_sql.fbn_grey_asof(
-        _turns(spark), spark, ["2024-01-15 00:00:00"], 6
-    )
-    assert small.where(F.col("grey").isNotNull()).count() > 0
-    # no engine code outside asof.py compares a column against as_of
-    pkg = pathlib.Path(firstorder_sql.__file__).parent.parent
+# Input conventions the oracles replay, spelled once in operators/exprs.py
+_CONVENTIONS = {
+    "words": re.compile(re.escape("F.split(F.lower(F.trim(")),
+    "norm_words": re.compile(re.escape("F.split(normalize_text(")),
+    "normalize_text": re.compile(r'regexp_replace\(.*?,r"\\s\+"," "\)'),
+    "epoch_us": re.compile(r'unix_micros\(F\.col\([^()]*\)\.cast\("timestamp"\)\)'),
+    "mix31": re.compile("48271"),
+}
+
+
+def test_input_conventions_are_spelled_only_in_exprs():
+    """No library code outside exprs.py restates an oracle-replayed input
+    convention (word tokens, normalized text, epoch microseconds, the
+    31-bit mixer), and only asof.py compares a column against ``as_of``:
+    each keeps one definition. Docstrings and comments may name them."""
+    pkg = pathlib.Path(z_rad_spark.__file__).parent
+    code = {p.relative_to(pkg).as_posix(): _code(p) for p in sorted(pkg.rglob("*.py"))}
     hits = {
-        p.name
-        for p in pkg.rglob("*.py")
-        for line in p.read_text().splitlines()
-        if '<= F.col("as_of")' in line
+        (name, conv)
+        for name, src in code.items()
+        for conv, pat in _CONVENTIONS.items()
+        if pat.search(src)
     }
-    assert hits == {"asof.py"}, hits
+    assert {n for n, _ in hits} == {"operators/exprs.py"}, sorted(hits)
+    assert {c for _, c in hits} == set(_CONVENTIONS)
+    as_of = {n for n, src in code.items() if '<=F.col("as_of")' in src}
+    assert as_of == {"operators/asof.py"}, as_of
+
+
+def test_mix31_matches_its_numpy_twin(spark):
+    """The column mixer and its NumPy twin agree: the hash contract
+    between the sketches and their streaming replays."""
+    import numpy as np
+
+    from z_rad_spark.operators.exprs import mix31, mix31_np
+
+    rng = np.random.default_rng(13)
+    xs = [0, 1, 12345, 2**31 - 2] + rng.integers(-(2**47), 2**47, 10_000).tolist()
+    got = (
+        spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x long")
+        .select("i", mix31(F.col("x")).alias("h"))
+        .orderBy("i")
+        .collect()
+    )
+    want = mix31_np(np.array(xs, dtype=np.int64))
+    assert [r["h"] for r in got] == want.tolist()
+    assert [mix31_np(x) for x in xs[:4]] == want[:4].tolist()
 
 
 def test_kmeans_assignment_is_shuffle_free(spark):
@@ -1386,7 +1429,6 @@ def _pit_ops():
         "hist_asof": lambda s, t, c: firstorder_sql.hist_asof(t, s, c, 6),
         "horizon_features": lambda s, t, c: asof.horizon_features(t, s, c),
         "fbn_hist_asof": lambda s, t, c: firstorder_sql.fbn_hist_asof(t, s, c, 6),
-        "fbn_grey_asof": lambda s, t, c: firstorder_sql.fbn_grey_asof(t, s, c, 6),
     }
 
 
@@ -1451,7 +1493,7 @@ def _extract(spark, turns, cutoffs):
 
 
 @pytest.mark.parametrize("name", ["asof_state", "stats_asof", "hist_asof",
-                                  "horizon_features", "fbn_hist_asof", "fbn_grey_asof",
+                                  "horizon_features", "fbn_hist_asof",
                                   "extract_features"])
 def test_empty_cutoff_list_gives_empty_frame_same_schema(spark, name):
     op = {**_pit_ops(), "extract_features": _extract}[name]

@@ -19,8 +19,10 @@ at scan time" snapshot (SURVEY.md §0) made explicit.
 
 This module is the one place that knows how a point-in-time read is
 done: ``_carry`` is the as-of scan that ``asof_join`` and
-``backfill.backfill`` select their matches from, and ``cutoff_history``
-the ``ts <= as_of`` expansion every as-of aggregate reads.
+``backfill.backfill`` select their matches from, ``cutoff_history``
+the ``ts <= as_of`` expansion the as-of aggregates read, and
+``value_histogram_asof`` the compacted per-cutoff value histogram that
+the quantile and first-order paths read instead of that expansion.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .exprs import literal_rows
+from .exprs import epoch_us, literal_rows
 from .sessionize import opens_session
 from .skew import conv_window
 
@@ -46,7 +48,7 @@ def cutoff_grid(spark: SparkSession, cutoffs: Iterable[str]) -> DataFrame:
     in time order whatever the spelling or order of the strings. A turn whose ``ts`` has ``iv`` listed cutoffs strictly
     before it therefore satisfies ``iv <= gi`` exactly when
     ``ts <= as_of`` — the contract the compacted-histogram path of
-    ``firstorder_sql.value_histogram_asof`` joins on. Repeated instants
+    :func:`value_histogram_asof` joins on. Repeated instants
     give one row, so no operator doubles its rows or counts.
 
     The grid is built from literals (``exprs.literal_rows``), never from
@@ -76,6 +78,43 @@ def cutoff_history(df: DataFrame, spark: SparkSession, cutoffs: Iterable[str]) -
     the expansion."""
     return expand_cutoffs(df, cutoff_grid(spark, cutoffs)).where(
         F.col("ts").cast("timestamp") <= F.col("as_of")
+    )
+
+
+def value_histogram_asof(
+    df: DataFrame, spark: SparkSession, cutoffs: Iterable[str], signal_col: str = "signal"
+) -> DataFrame:
+    """Per-(conv_id, as_of) value histogram WITHOUT expanding turns:
+
+    1. interval index = number of listed cutoffs strictly before ts (a
+       literal comparison chain — constant-folded, no join); rows past
+       the last cutoff are dropped at the scan.
+    2. ONE full-data shuffle: groupBy (conv_id, x, interval) with
+       map-side combine collapses 10^12 turns to
+       distinct-values x intervals per conversation.
+    3. The compacted histogram is broadcast-joined to the cutoff grid
+       (interval <= grid index) and re-aggregated — amplification is
+       bounded by the grid size on ALREADY-compacted rows. The grid's
+       ``gi`` counts the same listed cutoffs (:func:`cutoff_grid`), so
+       ``iv <= gi`` holds exactly when ``ts <= as_of``.
+
+    Turns whose signal is NULL are dropped at the scan, so ``c`` counts
+    only turns with a value. Output: (conv_id, as_of, x double, c long).
+    """
+    cuts = list(cutoffs)
+    x = F.col(signal_col).cast("double")
+    iv = F.lit(0)
+    for c in cuts:
+        iv = iv + F.when(F.col("ts") > F.to_timestamp(F.lit(c)), 1).otherwise(0)
+    base = df.select("conv_id", x.alias("x"), iv.alias("iv")).where(
+        (F.col("iv") < len(cuts)) & F.col("x").isNotNull()
+    )
+    h0 = base.groupBy("conv_id", "x", "iv").agg(F.count("*").cast("long").alias("c"))
+    grid = cutoff_grid(spark, cuts)
+    return (
+        h0.join(F.broadcast(grid), F.col("iv") <= F.col("gi"))
+        .groupBy("conv_id", "as_of", "x")
+        .agg(F.sum("c").alias("c"))
     )
 
 
@@ -125,7 +164,7 @@ def _carry(
         *[F.lit(None).cast(turns.schema[c].dataType).alias(c) for c in value_cols],
         *[F.col(c) for c in probe_extra],
     )
-    t_us = F.unix_micros(F.col("_t").cast("timestamp"))
+    t_us = epoch_us("_t")
     scans = {
         "b": Window.partitionBy(key).orderBy("_t", "_src", "_tie"),
         "f": Window.partitionBy(key).orderBy(
@@ -193,7 +232,7 @@ def asof_join(
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
     m = _carry(turns, probes, value_cols, key, turns_ts, probe_ts, tie_break)
-    p_us = F.unix_micros(F.col(probe_ts).cast("timestamp"))
+    p_us = epoch_us(probe_ts)
     tol_us = (
         int(tolerance_seconds * 1_000_000) if tolerance_seconds is not None else None
     )
@@ -274,9 +313,7 @@ def horizon_features(
     x = F.col(signal_col).cast("long")
     j = cutoff_history(df, spark, cutoffs)
     # exact integer microsecond age — no truncating seconds cast
-    age = F.unix_micros(F.col("as_of")) - F.unix_micros(
-        F.col("ts").cast("timestamp")
-    )
+    age = F.unix_micros(F.col("as_of")) - epoch_us("ts")
     h1, h6, h24 = h1 * 1_000_000, h6 * 1_000_000, h24 * 1_000_000
     g = j.groupBy("conv_id", "as_of").agg(
         F.sum(F.when(age < h1, 1).otherwise(0)).cast("long").alias("n_1h"),
@@ -324,7 +361,7 @@ def recency_features(
     double ...), one row per (conversation, cutoff) with history.
     """
     j = cutoff_history(df, spark, cutoffs)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     aggs = [F.max(ts_us).alias("_any")]
     for r in roles:
         aggs.append(
@@ -437,7 +474,7 @@ def sessions_asof(
     history.
     """
     w = conv_window()
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     marked = df.select(
         "conv_id",
         F.col("ts").cast("timestamp").alias("ts"),
@@ -496,7 +533,7 @@ def state_matrix(
     (conversation, cutoff) with history.
     """
     j = cutoff_history(df, spark, cutoffs)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     aggs = []
     for r in roles:
         aggs.append(
@@ -618,33 +655,30 @@ def quantile_state_asof(
     (ceil(q n), value asc — no interpolation) on the compacted
     (conv, cutoff, value) histogram; counts exact. Bit-replayable.
 
-    Scale: broadcast grid join -> one (conv, cutoff, value) groupBy
-    (value cardinality bounds the state) -> rank windows on the
-    compacted frame. Output: (conv_id, as_of, n long, p25, p50, p75
-    doubles), one row per (conversation, cutoff) with history.
+    Scale: :func:`value_histogram_asof` (one combine-heavy shuffle,
+    the grid multiplies only compacted rows, never the turns) -> rank
+    windows on the compacted frame. NULL signals are not counted.
+    Output: (conv_id, as_of, n long, p25, p50, p75 doubles), one row
+    per (conversation, cutoff) with a signal in its history.
     """
-    x = F.col(signal_col).cast("double")
-    j = cutoff_history(df.where(x.isNotNull()), spark, cutoffs)
-    hist = j.groupBy("conv_id", "as_of", x.alias("_v")).agg(
-        F.count("*").cast("long").alias("_m")
-    )
+    hist = value_histogram_asof(df, spark, cutoffs, signal_col)
     w_cum = (
         Window.partitionBy("conv_id", "as_of")
-        .orderBy("_v")
+        .orderBy("x")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_all = Window.partitionBy("conv_id", "as_of")
     cum = hist.select(
         "conv_id",
         "as_of",
-        "_v",
-        F.sum("_m").over(w_cum).cast("long").alias("_cm"),
-        F.sum("_m").over(w_all).cast("long").alias("_n"),
+        "x",
+        F.sum("c").over(w_cum).cast("long").alias("_cm"),
+        F.sum("c").over(w_all).cast("long").alias("_n"),
     )
 
     def pick(q):
         thresh = F.ceil(F.lit(q) * F.col("_n")).cast("long")
-        return F.min(F.when(F.col("_cm") >= thresh, F.col("_v")))
+        return F.min(F.when(F.col("_cm") >= thresh, F.col("x")))
 
     return cum.groupBy("conv_id", "as_of").agg(
         F.max("_n").cast("long").alias("n"),

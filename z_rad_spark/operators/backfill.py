@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .asof import _carry
+from .exprs import epoch_us
 
 
 def regular_grid(turns: DataFrame, step_seconds: int, key: str = "conv_id") -> DataFrame:
@@ -173,7 +174,7 @@ def backfill_gaussian(
     )
     t = turns.join(span, key).select(
         F.col(key),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("_tu"),
+        epoch_us("ts").alias("_tu"),
         F.col(value_col).cast("double").alias("_v"),
         F.col("_t0u"),
     )
@@ -198,9 +199,7 @@ def backfill_gaussian(
     # join back on the integer micro key: regular_grid's grid_ts may be
     # TIMESTAMP_NTZ depending on the source, timestamp_micros always
     # builds TIMESTAMP — the long key sidesteps the tz-type mismatch
-    grid = regular_grid(turns, step_seconds, key).withColumn(
-        "_gu", F.unix_micros(F.col("grid_ts").cast("timestamp"))
-    )
+    grid = regular_grid(turns, step_seconds, key).withColumn("_gu", epoch_us("grid_ts"))
     out = grid.join(agg, [key, "_gu"], "left")
     val = F.when(F.col("_ws") != 0, F.col("_wv") / F.col("_ws"))
     return out.select(key, "grid_ts", val.alias(value_col))
@@ -214,7 +213,7 @@ def backfill_eligible_frac(
 ) -> DataFrame:
     """MaskResampler analogue: fraction of eligible turns per grid step,
     thresholded to a boolean (interpolation.py:149-230, default 0.5)."""
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     bucketed = turns.withColumn(
         "grid_ts",
         F.timestamp_micros(

@@ -23,13 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .drift import _is_ref
-from .exprs import ordered_sums
-
-
-def _toks(text_col: str) -> F.Column:
-    """Whitespace tokens of the lowercased, trimmed text (the same
-    tokenizer as text.py's TOKS_RAW oracle fragment)."""
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+from .exprs import epoch_us, normalize_text, ordered_sums, words
 
 
 def _word_ngrams(toks: F.Column, n: int) -> F.Column:
@@ -63,7 +57,7 @@ def gopher_quality_rules(
     plan is engine-portable bit-for-bit. Pure narrow column expressions:
     no shuffle at all — this filter streams through a 100 TB scan.
     """
-    toks = _toks(text_col)
+    toks = words(F.col(text_col))
     n_words = F.size(toks)
     total_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
@@ -117,7 +111,7 @@ def decontaminate(
     def grams(df: DataFrame) -> DataFrame:
         return df.select(
             F.col(id_col),
-            F.explode(F.array_distinct(_word_ngrams(_toks(text_col), n))).alias("gram"),
+            F.explode(F.array_distinct(_word_ngrams(words(F.col(text_col)), n))).alias("gram"),
         )
 
     bench_grams = grams(benchmark).select("gram").distinct()
@@ -147,7 +141,7 @@ def repetition_stats(
     inside the token array, not across rows) — no shuffle, exact-integer
     ratios.
     """
-    toks = _toks(text_col)
+    toks = words(F.col(text_col))
     out = df
     for n in (2, 3):
         g = _word_ngrams(toks, n)
@@ -183,7 +177,7 @@ def rare_token_stats(
     on the token key.
     """
     toks_tbl = df.select(
-        F.col(id_col), F.explode(_toks(text_col)).alias("token")
+        F.col(id_col), F.explode(words(F.col(text_col))).alias("token")
     )
     freq = toks_tbl.groupBy("token").agg(
         F.count("*").cast("long").alias("corpus_tf"),
@@ -239,7 +233,7 @@ def unigram_logprob(
     groupBy(doc) whose collect_list is bounded by document length.
     """
     toks_tbl = df.select(
-        F.col(id_col), F.posexplode(_toks(text_col)).alias("pos", "token")
+        F.col(id_col), F.posexplode(words(F.col(text_col))).alias("pos", "token")
     )
     freq = toks_tbl.groupBy("token").agg(F.count("*").cast("long").alias("tf"))
     tot = freq.agg(
@@ -294,7 +288,7 @@ def bigram_logprob(
     on token-ish keys plus a 1-row totals broadcast; the per-doc fold is
     the unigram's collect_list(pos, lp) -> ordered aggregate.
     """
-    toks = _toks(text_col)
+    toks = words(F.col(text_col))
     triple = (
         f"transform(sequence(0, size(_tk) - 1), "
         f"i -> named_struct('pos', i, 'token', element_at(_tk, i + 1), "
@@ -384,7 +378,7 @@ def kneser_ney_logprob(
     bigram set), and every join key is a token string — the same
     shuffle profile as bigram_logprob, which is plan-audited.
     """
-    toks = _toks(text_col)
+    toks = words(F.col(text_col))
     triple = (
         f"transform(sequence(0, size(_tk) - 1), "
         f"i -> named_struct('pos', i, 'token', element_at(_tk, i + 1), "
@@ -520,7 +514,7 @@ def source_reputation(
 
     ``mean_chars`` is sum(int)/count — exact integers into one division.
     """
-    norm = F.md5(F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))))
+    norm = F.md5(normalize_text(F.col(text_col)))
     per_source = (
         df.withColumn("_k", norm)
         .groupBy(source_col)
@@ -659,7 +653,7 @@ def chunk_documents(
             "token gaps no chunk covers, breaking the every-token-covered "
             "guarantee"
         )
-    toks = _toks(text_col)
+    toks = words(F.col(text_col))
     n = F.size(toks)
     # starts: 0, stride, ..., with the last start covering the tail:
     # n_starts = 1 + ceil(max(n - chunk, 0) / stride), in integer math
@@ -716,9 +710,9 @@ def dsir_weights(
         F.lit(n_buckets),
     )
     raw_toks = df.select(
-        F.col(id_col), F.posexplode(_toks(text_col)).alias("pos", "token")
+        F.col(id_col), F.posexplode(words(F.col(text_col))).alias("pos", "token")
     ).withColumn("b", bucket(F.col("token")))
-    tgt_toks = target.select(F.posexplode(_toks(text_col)).alias("pos", "token")).select(
+    tgt_toks = target.select(F.posexplode(words(F.col(text_col))).alias("pos", "token")).select(
         bucket(F.col("token")).alias("b")
     )
 
@@ -881,7 +875,7 @@ def quality_classifier(
         f"t -> element_at({wlit}, CAST(CAST(conv(substring(md5(t), 1, 4), 16, 10) AS BIGINT) % {dims} AS INT) + 1)), "
         "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-    out = df.withColumn("_n", F.size(_toks(text_col)))
+    out = df.withColumn("_n", F.size(words(F.col(text_col))))
     out = out.withColumn(
         "_score", F.expr(fold) / F.col("_n").cast("double") + F.lit(float(bias))
     )
@@ -933,7 +927,7 @@ def cdc_chunk(
     if not 1 <= boundary_bits <= 4:
         raise ValueError("boundary_bits must be in 1..4 (expected chunk 2..16 tokens)")
     thresh_char = str(2 ** (4 - boundary_bits))
-    toks = df.select(F.col(id_col), _toks(text_col).alias("_tk"))
+    toks = df.select(F.col(id_col), words(F.col(text_col)).alias("_tk"))
     cuts = F.filter(
         F.transform(
             F.col("_tk"),
@@ -1057,7 +1051,7 @@ def temporal_split(
     """
     h_us = int(horizon_seconds * 1_000_000)
     e_us = int(embargo_seconds * 1_000_000)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
 
     def reaches_test(lead_us: int):
         # ts + lead > split_ts in integer micros, i.e. NOT (ts + lead - 1us
@@ -1193,9 +1187,7 @@ def snapshot_diff(
     def _h(df):
         return df.select(
             F.col(id_col),
-            F.md5(
-                F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-            ).alias("_h"),
+            F.md5(normalize_text(F.col(text_col))).alias("_h"),
         )
 
     o = _h(old).withColumnRenamed("_h", "old_hash")
@@ -1231,7 +1223,7 @@ def length_buckets(
 
     Adds: n_tokens long, bucket_ceil long, pad_frac double.
     """
-    n = F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).cast("long")
+    n = F.size(words(F.col(text_col))).cast("long")
     # smallest power of two >= n without float log: walk the candidate
     # ceilings as a fixed CASE chain over the clamped range
     ceilings = []
@@ -1269,8 +1261,8 @@ def corpus_report(
     n_sources long, n_unique_texts long, dup_rate double,
     mean_tokens double, mean_chars double).
     """
-    toks = F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).cast("long")
-    norm_h = F.md5(F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))))
+    toks = F.size(words(F.col(text_col))).cast("long")
+    norm_h = F.md5(normalize_text(F.col(text_col)))
     g = df.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum(toks).cast("long").alias("n_tokens"),
@@ -1322,7 +1314,7 @@ def truncate_middle(
     budget = int(max_tokens) - 1  # one slot reserved for the marker
     head_n = int(budget * head_frac)
     tail_n = budget - head_n
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     n = F.size(toks)
     truncated = F.concat_ws(
         " ",
@@ -1652,7 +1644,7 @@ def source_jaccard(
     overlap, src_a < src_b.
     """
     inv = df.select(
-        F.explode(_toks(text_col)).alias("_t"), F.col(group_col).alias("_s")
+        F.explode(words(F.col(text_col))).alias("_t"), F.col(group_col).alias("_s")
     ).distinct()
     sizes = inv.groupBy("_s").agg(F.count("*").cast("long").alias("_v"))
     a = inv.select(F.col("_t"), F.col("_s").alias("_sa"))
@@ -1712,7 +1704,7 @@ def source_kl(
     source is empty), one row per source.
     """
     tok = df.select(
-        F.explode(_toks(text_col)).alias("_t"), F.col(group_col).alias("_s")
+        F.explode(words(F.col(text_col))).alias("_t"), F.col(group_col).alias("_s")
     )
     corpus = tok.groupBy("_t").agg(F.count("*").cast("long").alias("_cc"))
     w_rank = Window.orderBy(F.col("_cc").desc(), F.asc("_t"))
@@ -1827,7 +1819,7 @@ def source_temperature(
     (source, n_tokens long, p, w, boost doubles), one row per
     non-empty source.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     per = docs.groupBy(F.col(group_col).alias("_s")).agg(
         F.sum(F.size(toks)).cast("long").alias("n_tokens")
     )
@@ -1883,7 +1875,7 @@ def length_gini(
     repeated per row), deciles 1..10 ascending.
     """
     d19 = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     lens = docs.select(
         F.col("doc_id").cast("long").alias("_id"),
         F.size(toks).cast("long").alias("_x"),
@@ -2024,7 +2016,7 @@ def ht_estimate(
     Output one row: (n_docs long, n_sampled long, exact_tokens long,
     ht_tokens double, err_pct double — NULL when nothing sampled).
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     h8 = F.substring(
         F.md5(F.concat(F.lit(salt), F.lit("|"), F.col("doc_id").cast("string"))),
         1,
@@ -2077,7 +2069,7 @@ def content_manifest(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (digest mod-summed the same way).
     """
     P = (1 << 61) - 1
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     h = F.conv(
         F.substring(
             F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"), F.col(text_col))),
@@ -2127,7 +2119,7 @@ def mix_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Output one row: (n_sources long, h_docs, eff_docs, h_tokens,
     eff_tokens doubles).
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     per = docs.groupBy(F.col("source").alias("_s")).agg(
         F.count("*").cast("long").alias("_d"),
         F.sum(F.size(toks)).cast("long").alias("_t"),

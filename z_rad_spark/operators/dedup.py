@@ -25,12 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import persist_intermediate
+from .exprs import epoch_us, norm_words, normalize_text, words
 from .skew import _spread
-
-
-def normalize_text(col):
-    """Lowercase + collapse whitespace (portable: lower/trim/regexp)."""
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -65,7 +61,7 @@ def word_shingles(
     # serialized over a corpus it dominates the whole LSH job).
     toks = (
         _spread(docs, id_col)
-        .select(F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("toks"))
+        .select(F.col(id_col), norm_words(F.col(text_col)).alias("toks"))
         .where(F.size("toks") >= n)
     )
     sh = toks.select(
@@ -542,7 +538,7 @@ def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text", id_col: str
     """
     n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
     toks = docs.repartition(n_parts, id_col).select(
-        F.col(id_col), F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok")
+        F.col(id_col), F.explode(norm_words(F.col(text_col))).alias("tok")
     )
     # one md5 per token folded to a `bits`-bit integer; the bit votes are
     # `bits` conditional sums in ONE aggregation (shift/and integer ops,
@@ -590,7 +586,7 @@ def winnow_fingerprints(
     n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
     toks = (
         docs.repartition(n_parts, id_col)
-        .select(F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("toks"))
+        .select(F.col(id_col), norm_words(F.col(text_col)).alias("toks"))
         .where(F.size("toks") >= k + w - 1)
     )
     gram_hash = lambda i: (
@@ -742,7 +738,7 @@ def dup_span_stats(
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     t_sz = F.size(toks)
     gram_arr = F.when(
         t_sz >= n,
@@ -895,9 +891,7 @@ def dup_survivors(
         )
     toks = docs.select(
         F.col(id_col),
-        F.size(F.split(normalize_text(F.col(text_col)), " ")).cast("long").alias(
-            "n_toks"
-        ),
+        F.size(norm_words(F.col(text_col))).cast("long").alias("n_toks"),
     )
     assigned = toks.join(
         clusters.select(id_col, "cluster_id"), id_col, "left"
@@ -952,7 +946,7 @@ def flag_retries(
 
     win_us = int(float(window_seconds) * 1_000_000)
     h = F.md5(normalize_text(F.col(text_col)))
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     w = Window.partitionBy("conv_id", h).orderBy("ts", "turn_idx")
     gap = ts_us - F.lag(ts_us).over(w)
     return df.withColumn(
@@ -1152,7 +1146,7 @@ def template_groups(
     Adds: template_size long (docs sharing this source+prefix),
     is_templated boolean (template_size >= min_group).
     """
-    toks = F.split(normalize_text(F.col(text_col)), " ")
+    toks = norm_words(F.col(text_col))
     prefix = F.md5(
         F.concat_ws(" ", F.slice(toks, 1, prefix_tokens))
     )
@@ -1499,8 +1493,7 @@ def shingle_profile(
     shingle_share double, occurrence_share double), bands in
     df order.
     """
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    tk = F.split(norm, " ")
+    tk = norm_words(F.col(text_col))
     sh = docs.select(
         F.col("doc_id"),
         F.explode(

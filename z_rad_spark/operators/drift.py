@@ -46,7 +46,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .exprs import chain, ordered_sums
+from .exprs import chain, epoch_us, ordered_sums, words
 from .skew import ORDER as _ORDER, conv_window
 
 
@@ -212,7 +212,7 @@ def cusum_summary(
     first_alarm_us long).
     """
     charted = with_cusum(df, target, slack, threshold, signal_col)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     return charted.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum(F.col("cusum_alarm").cast("long")).cast("long").alias("n_alarms"),
@@ -644,7 +644,7 @@ def page_hinkley_summary(
     first_alarm_us long).
     """
     charted = with_page_hinkley(df, delta, threshold, signal_col)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     return charted.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum(F.col("ph_alarm").cast("long")).cast("long").alias("n_alarms"),
@@ -1443,7 +1443,7 @@ def corr_drift(
     window has n <= 3 or zero variance).
     """
     x = F.col(signal_col).cast("long")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us("ts")
     y = F.pmod(F.floor(us.cast("double") / F.lit(1000000.0)).cast("long"), F.lit(86400))
     is_ref = _is_ref(split_ts)
     base = df.where(x.isNotNull()).select(
@@ -4211,7 +4211,7 @@ def token_js_drift(
     """
     is_ref = _is_ref(split_ts)
     tok = df.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("_t"),
+        F.explode(words(F.col("text"))).alias("_t"),
         is_ref.alias("_r"),
     ).where(F.col("_t") != "")
     pooled = tok.groupBy("_t").agg(F.count("*").cast("long").alias("_cc"))

@@ -5,6 +5,19 @@ each helper's exact element-pick / fold convention, so a drift between
 two copies would silently fork the engine's determinism contract.
 ``literal_rows`` / ``literal_frame`` are the one way the operators build
 small constant data (cutoff grids, query tokens, k / budget lists).
+
+The input conventions every operator reads its raw columns through are
+spelled here once, each beside the oracle fragment that replays it
+(``oracle_sql_defs``):
+
+* :func:`words` — whitespace word tokens of the lowercased, trimmed
+  text; ``TOKS_RAW`` (``string_split_regex(lower(trim(text)), '\\s+')``).
+* :func:`normalize_text` / :func:`norm_words` — whitespace-collapsed,
+  lowercased text and its single-space tokens; ``NORM_DOC`` / ``TOKS_DOC``.
+* :func:`epoch_us` — a timestamp as exact integer epoch microseconds;
+  DuckDB's ``epoch_us(ts)``.
+* :func:`mix31` / :func:`mix31_np` — the square-mod 31-bit mixing hash;
+  ``(((x * x + x) % 2147483647) * 48271) % 2147483647``.
 """
 
 from __future__ import annotations
@@ -18,6 +31,48 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DataType, DoubleType
+
+
+MIX31_P = 2147483647  # 2^31 - 1, the mixing hash's prime modulus
+MIX31_A = 48271  # its multiplier (the minimal-standard LCG's)
+
+
+def words(text: Column) -> Column:
+    """Whitespace word tokens of the lowercased, trimmed text."""
+    return F.split(F.lower(F.trim(text)), r"\s+")
+
+
+def normalize_text(text: Column) -> Column:
+    """Lowercase + collapse whitespace (portable: lower/trim/regexp)."""
+    return F.lower(F.trim(F.regexp_replace(text, r"\s+", " ")))
+
+
+def norm_words(text: Column) -> Column:
+    """Single-space tokens of :func:`normalize_text`."""
+    return F.split(normalize_text(text), " ")
+
+
+def epoch_us(name: str) -> Column:
+    """Column ``name`` cast to timestamp, as exact epoch microseconds."""
+    return F.unix_micros(F.col(name).cast("timestamp"))
+
+
+def mix31(lin: Column) -> Column:
+    """Square-mod mixing hash of a long: ``x = lin mod P``, then
+    ``((x*x + x) mod P) * A mod P`` with ``P = 2^31 - 1`` and ``A =
+    48271``. Every intermediate is below 2^62, exact signed-64 in Spark,
+    NumPy and DuckDB; the square decorrelates inputs that a plain LCG
+    leaves striding."""
+    p = F.lit(MIX31_P)
+    x = F.pmod(lin, p)
+    return F.pmod(F.pmod(x * x + x, p) * F.lit(MIX31_A), p)
+
+
+def mix31_np(lin):
+    """:func:`mix31` over an int64 array (or a Python int): the streaming
+    sketches' side of the same hash contract."""
+    x = lin % MIX31_P
+    return ((x * x + x) % MIX31_P * MIX31_A) % MIX31_P
 
 
 def _sql_literal(v, sql_type: str) -> str:

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import memo_plan
-from .asof import cutoff_grid, cutoff_history
+from .asof import value_histogram_asof
 
 SENTINEL = 1_000_000.0
 
@@ -57,46 +57,14 @@ def _lerp(nm: str, qf: float) -> Column:
     )
 
 
-def value_histogram_asof(
-    df: DataFrame, spark: SparkSession, cutoffs: Iterable[str], signal_col: str = "signal"
-) -> DataFrame:
-    """Per-(conv_id, as_of) value histogram WITHOUT expanding turns:
-
-    1. interval index = number of listed cutoffs strictly before ts (a
-       literal comparison chain — constant-folded, no join); rows past
-       the last cutoff are dropped at the scan.
-    2. ONE full-data shuffle: groupBy (conv_id, x, interval) with
-       map-side combine collapses 10^12 turns to
-       distinct-values x intervals per conversation.
-    3. The compacted histogram is broadcast-joined to the cutoff grid
-       (interval <= grid index) and re-aggregated — amplification is
-       bounded by the grid size on ALREADY-compacted rows. The grid's
-       ``gi`` counts the same listed cutoffs (``asof.cutoff_grid``), so
-       ``iv <= gi`` holds exactly when ``ts <= as_of``.
-
-    Output: (conv_id, as_of, x, c).
-    """
-    cuts = list(cutoffs)
-    x = F.col(signal_col).cast("double")
-    iv = F.lit(0)
-    for c in cuts:
-        iv = iv + F.when(F.col("ts") > F.to_timestamp(F.lit(c)), 1).otherwise(0)
-    base = df.select("conv_id", x.alias("x"), iv.alias("iv")).where(F.col("iv") < len(cuts))
-    h0 = base.groupBy("conv_id", "x", "iv").agg(F.count("*").cast("long").alias("c"))
-    grid = cutoff_grid(spark, cuts)
-    return (
-        h0.join(F.broadcast(grid), F.col("iv") <= F.col("gi"))
-        .groupBy("conv_id", "as_of", "x")
-        .agg(F.sum("c").alias("c"))
-    )
-
-
 def stats_asof(
     df: DataFrame, spark: SparkSession, cutoffs: Iterable[str], signal_col: str = "signal"
 ) -> DataFrame:
     """18 intensity statistics per (conv_id, as_of), declaratively, from
-    the as-of value histogram (see value_histogram_asof for the scale
-    shape and the module docstring for the determinism contract).
+    the as-of value histogram (see ``asof.value_histogram_asof`` for the
+    scale shape and the module docstring for the determinism contract).
+    Turns with a NULL signal are left out: ``n_turns`` counts the turns
+    that have a signal, as the kernel path's NaN mask does.
 
     Pure plan construction (no job, no collect), so the built frame is
     memoized per (application, input frame, cutoffs, signal)."""
@@ -233,40 +201,6 @@ def _fbn_grey(x: Column, lo: Column, hi: Column, n_bins: int) -> Column:
         .when(x == hi, F.lit(float(n_bins)))
         .otherwise(F.floor(n_bins * (x - lo) / (hi - lo)) + 1)
     )
-
-
-FBN_GREY_MAX_CUTOFFS = 8
-
-
-def fbn_grey_asof(
-    df: DataFrame, spark: SparkSession, cutoffs: Iterable[str], n_bins: int,
-    signal_col: str = "signal", max_cutoffs: int = FBN_GREY_MAX_CUTOFFS,
-) -> DataFrame:
-    """PER-ROW FBN discretization per (conv_id, as_of) — for consumers
-    that need turn-level grey values. It replicates every turn once per
-    cutoff (``asof.cutoff_history``, O(turns x cutoffs) rows, as the
-    as-of aggregates of ``asof`` do before they aggregate) and has no
-    internal consumers (every histogram / distribution path rides
-    :func:`fbn_hist_asof`, which bins the COMPACTED value histogram and
-    is grid-size safe) — it exists for callers who genuinely need
-    per-turn grey values at a handful of cutoffs, and keeps every turn
-    row in its output. To keep the footgun out of dense-grid plans it
-    REFUSES grids larger than ``max_cutoffs`` (raise the bound explicitly
-    only if you accept replicating every turn once per cutoff)."""
-    cutoffs = list(cutoffs)
-    if len(cutoffs) > max_cutoffs:
-        raise ValueError(
-            f"fbn_grey_asof expands every turn once per cutoff "
-            f"(O(turns x cutoffs)); got {len(cutoffs)} cutoffs > "
-            f"max_cutoffs={max_cutoffs}. Dense grids must use fbn_hist_asof "
-            f"(compacted-histogram path) instead; pass max_cutoffs "
-            f"explicitly only if you accept the expansion."
-        )
-    x = F.col(signal_col)
-    rows = cutoff_history(df.select("conv_id", "ts", "turn_idx", signal_col), spark, cutoffs)
-    w = Window.partitionBy(*KEYS)
-    grey = _fbn_grey(x, F.min(x).over(w), F.max(x).over(w), n_bins)
-    return rows.withColumn("grey", grey.cast("double"))
 
 
 def fbn_hist_asof(

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 
+from .exprs import epoch_us
+
 
 def filter_conversations(
     df: DataFrame,
@@ -77,24 +79,19 @@ def interval_join(
     if how != "inner":
         raise ValueError(f"only how='inner' is supported, got {how!r}")
     b_us = int(bucket_seconds) * 1_000_000
-    s = F.unix_micros(F.col(start_col).cast("timestamp"))
-    e = F.unix_micros(F.col(end_col).cast("timestamp"))
+    s = epoch_us(start_col)
+    e = epoch_us(end_col)
     ivals = intervals.withColumn(
         "_bk", F.explode(F.sequence(F.floor(s / b_us), F.floor(e / b_us)))
     ).alias("i")
-    pts = points.withColumn(
-        "_bk", F.floor(F.unix_micros(F.col(point_ts).cast("timestamp")) / b_us)
-    ).alias("p")
-    p_ts = F.unix_micros(F.col(f"p.{point_ts}").cast("timestamp"))
+    pts = points.withColumn("_bk", F.floor(epoch_us(point_ts) / b_us)).alias("p")
+    p_ts = epoch_us(f"p.{point_ts}")
     joined = pts.join(
         ivals,
         [F.col(f"p.{k}") == F.col(f"i.{k}") for k in keys]
         + [F.col("p._bk") == F.col("i._bk")],
         "inner",
-    ).where(
-        (p_ts >= F.unix_micros(F.col(f"i.{start_col}").cast("timestamp")))
-        & (p_ts <= F.unix_micros(F.col(f"i.{end_col}").cast("timestamp")))
-    )
+    ).where((p_ts >= epoch_us(f"i.{start_col}")) & (p_ts <= epoch_us(f"i.{end_col}")))
     ival_cols = [c for c in intervals.columns if c not in keys]
     return joined.select(
         *[F.col(f"p.{c}") for c in points.columns],

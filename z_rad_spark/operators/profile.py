@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import convstats
-from .exprs import literal_frame, ordered_sums
+from .exprs import MIX31_A, epoch_us, literal_frame, mix31, ordered_sums, words
 from .sessionize import spearman_trend
 from .skew import ORDER as _ORDER, conv_window
 
@@ -292,7 +292,7 @@ def arrival_stats(df: DataFrame) -> DataFrame:
     """
     # hourly Fano over the full span: counts per hour bucket, then the
     # exact-integer fold (empty buckets contribute 0 to both sums)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     hb = (ts_us - ts_us % 3600000000) / F.lit(3600000000)
     per_h = df.groupBy("conv_id", hb.cast("long").alias("_hb")).agg(
         F.count("*").cast("long").alias("_c")
@@ -485,7 +485,7 @@ def event_uplift(
     Output: (conv_id, has_event boolean, n_before long, n_after long,
     mean_before double, mean_after double, uplift double).
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     key = F.struct(ts_us.alias("t"), F.col("turn_idx").cast("long").alias("i"))
     anchors = df.groupBy("conv_id").agg(
         F.min(F.when(F.col("role") == event_role, key)).alias("_ev")
@@ -534,7 +534,7 @@ def time_weighted_mean(df: DataFrame, signal_col: str = "signal") -> DataFrame:
     plain_mean double — the unweighted mean over the same held turns,
     for the over-count diagnostic twm - plain_mean).
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     w = conv_window()
     hold = F.lead(ts_us).over(w) - ts_us
     x = F.col(signal_col).cast("long")
@@ -687,7 +687,7 @@ def role_token_ratios(
     Output: (conv_id, n_turns long, tokens_num long, tokens_den long,
     token_ratio double).
     """
-    n_toks = F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).cast("long")
+    n_toks = F.size(words(F.col(text_col))).cast("long")
     g = df.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.coalesce(F.sum(F.when(F.col("role") == num_role, n_toks)), F.lit(0))
@@ -1195,7 +1195,7 @@ def kaplan_meier(
     s_km double — survival AFTER this bucket), one row per non-empty
     bucket, ascending.
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     per_conv = df.groupBy("conv_id").agg(
         F.min(ts_us).alias("_t0"),
         F.min(F.when(F.col(role_col) == event_role, ts_us)).alias("_tev"),
@@ -1310,7 +1310,7 @@ def log_rank(
     """
     if group_expr is None:
         group_expr = F.dayofweek(F.col("ts").cast("timestamp")).isin(1, 7)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     w = conv_window()
     flagged = df.withColumn("_rn", F.row_number().over(w)).withColumn(
         "_g1", group_expr
@@ -1430,7 +1430,7 @@ def rfm_features(
     Output: (user_col, recency_days long, frequency long,
     monetary_cents long, monetary double).
     """
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = epoch_us(ts_col)
     ev = df.where(F.col(type_col) == event_type)
     per_u = ev.groupBy(user_col).agg(
         F.max(ts_us).alias("_last"),
@@ -1465,6 +1465,14 @@ _POIS1_CDF = (
     "0.981011843123846",
     "0.996340153172656",
 )
+
+
+def _replicate_u() -> F.Column:
+    """Replicate ``b``'s uniform draw for row ``_id``: ``exprs.mix31`` of
+    the linear key ``id*A + b*69621 + 12345``, over p = 2^31 - 1 (see
+    poisson_bootstrap_ci)."""
+    lin = F.col("_id") * F.lit(MIX31_A) + F.col("b").cast("long") * F.lit(69621) + F.lit(12345)
+    return mix31(lin).cast("double") / F.lit(2147483647.0)
 
 
 def poisson_bootstrap_ci(
@@ -1519,13 +1527,7 @@ def poisson_bootstrap_ci(
     rep = base.select(
         "grp", "_id", "_cents", F.explode(F.sequence(F.lit(0), F.lit(n_boot - 1))).alias("b")
     )
-    p = F.lit(2147483647)
-    x = F.pmod(
-        F.col("_id") * F.lit(48271) + F.col("b").cast("long") * F.lit(69621) + F.lit(12345), p
-    )
-    y = F.pmod(x * x + x, p)
-    z = F.pmod(y * F.lit(48271), p)
-    u = z.cast("double") / F.lit(2147483647.0)
+    u = _replicate_u()
     wgt = F.when(u < F.lit(float(_POIS1_CDF[0])), F.lit(0))
     for k in range(1, len(_POIS1_CDF)):
         wgt = wgt.when(u < F.lit(float(_POIS1_CDF[k])), F.lit(k))
@@ -1691,9 +1693,8 @@ def permutation_test(
 
     Output: (group, n long, obs_diff, n_ge long, n_valid long,
     p_hat)."""
-    p = F.lit(2147483647)
     cents = F.floor(F.col(value_col).cast("double") * F.lit(100.0)).cast("long")
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = epoch_us(ts_col)
     dow = F.pmod(F.floor(us.cast("double") / F.lit(86400000000.0)).cast("long") + F.lit(4), F.lit(7))
     is_we = dow.isin(0, 6)
     base = df.select(
@@ -1716,10 +1717,7 @@ def permutation_test(
         F.when((F.col("_n1") > 0) & (F.col("_n0") > 0), mean1 - mean0),
     ).select("_g", "n", "obs_diff")
     rep = base.select("_g", "_id", "_v", F.explode(F.sequence(F.lit(0), F.lit(n_perm - 1))).alias("b"))
-    x = F.pmod(F.col("_id") * F.lit(48271) + F.col("b").cast("long") * F.lit(69621) + F.lit(12345), p)
-    y = F.pmod(x * x + x, p)
-    z = F.pmod(y * F.lit(48271), p)
-    u = z.cast("double") / F.lit(2147483647.0)
+    u = _replicate_u()
     side = (u < F.lit(0.5)).alias("_side")
     diffs = (
         rep.withColumn("_side", side)
@@ -1872,7 +1870,7 @@ def burstiness(df: DataFrame, group_col: str = "event_type") -> DataFrame:
     n_gaps long, cv_gap double — NULL when no gaps or zero mean gap,
     burstiness double).
     """
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us("ts")
     hb = F.floor(us.cast("double") / F.lit(3600000000.0)).cast("long")
     base = df.select(F.col(group_col).alias("_g"), us.alias("_us"), hb.alias("_hb"),
                      F.col("event_id"))
@@ -1948,7 +1946,7 @@ def nelson_aalen(
     c long, h_na double — cumulative hazard AFTER this bucket,
     var_h double, s_fh double = exp(-h_na)), ascending.
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     per_conv = df.groupBy("conv_id").agg(
         F.min(ts_us).alias("_t0"),
         F.min(F.when(F.col(role_col) == event_role, ts_us)).alias("_tev"),
@@ -2404,7 +2402,7 @@ def concordance_index(
     from pyspark.sql.functions import broadcast
 
     x = F.col(signal_col).cast("long")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     per = df.groupBy("conv_id").agg(
         F.min(ts_us).alias("_t0"),
         F.min(F.when(F.col("role") == event_role, ts_us)).alias("_tev"),
@@ -2724,7 +2722,7 @@ def handoff_latency_matrix(df: DataFrame) -> DataFrame:
     mean_sec, p50_sec, p90_sec doubles), pairs with n >= 1.
     """
     w = conv_window()
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     pairs = (
         df.select(
             "conv_id",
@@ -2848,7 +2846,7 @@ def conv_endings(df: DataFrame) -> DataFrame:
     Output: (role, n_convs long, share double, mean_last_signal
     double), one row per observed ending role.
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     role_ord = (
         F.when(F.col("role") == "user", 0)
         .when(F.col("role") == "assistant", 1)
@@ -3107,7 +3105,7 @@ def first_response_stats(df: DataFrame) -> DataFrame:
     double, p50_sec, p90_sec, p99_sec doubles — NULL when nothing
     answered).
     """
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     per = df.groupBy("conv_id").agg(
         F.min(F.when(F.col("role") == "user", ts_us)).alias("_fu"),
     )
@@ -3376,7 +3374,7 @@ def view_to_purchase(
     (n_views long, n_converted long, conv_rate double, p50_sec,
     p90_sec doubles — NULL when nothing converts).
     """
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us("ts")
     views = events.where(F.col("event_type") == "view").select(
         F.col("user_id").cast("long").alias("_u"),
         F.col("event_id").cast("long").alias("_vid"),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..session import persist_intermediate
 from . import convstats
-from .exprs import ordered_sums
+from .exprs import epoch_us, ordered_sums, words
 from .skew import ORDER as _ORDER, conv_window, map_conversations
 
 
@@ -28,7 +28,7 @@ def with_sessions(df: DataFrame, gap_seconds: float) -> DataFrame:
     zrad/io/dicom.py:89-100).
     """
     w = conv_window()
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     gap_us = ts_us - F.lag(ts_us).over(w)
     df = df.withColumn("gap_sec", (gap_us / 1e6).cast("double"))
     new_sess = F.when(opens_session(F.col("gap_sec"), gap_seconds), 1).otherwise(0)
@@ -64,7 +64,7 @@ def with_rolling_time_window(
     the signal over [ts - window_seconds, ts] within the conversation —
     a RANGE frame keyed on the microsecond axis (one exchange + one sort,
     streaming frame evaluation; no self-join)."""
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    ts_us = epoch_us("ts")
     df = df.withColumn("_ts_us", ts_us)
     w = (
         Window.partitionBy("conv_id")
@@ -374,7 +374,7 @@ def with_echo_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     Adds: n_common long, n_union long, echo double (NULL on the first
     turn of a conversation or when both token sets are empty).
     """
-    toks = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+    toks = F.array_distinct(words(F.col(text_col)))
     w = conv_window()
     with_t = df.withColumn("_tk", toks).withColumn(
         "_pk", F.lag("_tk").over(w)
@@ -556,7 +556,7 @@ def with_vocab_growth(df: DataFrame, text_col: str = "text") -> DataFrame:
     distinct tokens, n_new long — first occurrences, vocab long —
     running distinct-token count including this turn).
     """
-    toks = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+    toks = F.array_distinct(words(F.col(text_col)))
     ex = df.select(
         "conv_id", "turn_idx", "ts", F.explode(toks).alias("_tok")
     )
@@ -730,9 +730,7 @@ def with_topic_boundaries(
     """
     from pyspark.sql import Window
 
-    toks = F.array_distinct(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    )
+    toks = F.array_distinct(words(F.col(text_col)))
     base = df.withColumn("_tk", toks)
     w = conv_window()
     left_f = w.rowsBetween(-(k - 1), 0)
@@ -943,7 +941,7 @@ def with_dialog_acts(df: DataFrame, text_col: str = "text") -> DataFrame:
     Adds: dialog_act string, and (via the companion rollup join)
     question_rate double per conversation.
     """
-    first = F.element_at(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), 1)
+    first = F.element_at(words(F.col(text_col)), 1)
     is_q = F.col(text_col).rlike(r"\?\s*$") | first.isin(*_INTERROGATIVES)
     is_cmd = first.isin(*_IMPERATIVES)
     act = (

@@ -272,16 +272,7 @@ def ivf_topk(
     cosine_topk is the exact baseline.
     """
     if centroids is None:
-        centroids = (
-            vectors.select(
-                F.col(id_col).alias("cent_id"),
-                F.col(vec_col).alias("cent_vec"),
-                F.md5(F.concat(F.lit("ivf|"), F.col(id_col).cast("string"))).alias("_h"),
-            )
-            .orderBy("_h")
-            .limit(n_centroids)
-            .drop("_h")
-        )
+        centroids = _hash_sample(vectors, "ivf|", n_centroids, id_col, vec_col)
     # one collect of the k-row codebook (the distributed top-K / training
     # job runs exactly once, and nothing is left persisted behind)
     cents = _codebook_rows(centroids)
@@ -396,17 +387,21 @@ def lsh_bucket_topk(
 
 
 
-def _seed_centroids(vectors, k, id_col="vec_id", vec_col="embedding"):
-    """Deterministic hash-sampled seed codebook shared by kmeans_assign
-    and kmeans_lloyd: the k vectors with the smallest md5("km|" + id)."""
+def _hash_sample(vectors, tag, k, id_col, vec_col):
+    """Deterministic hash-sampled codebook: the ``k`` vectors with the
+    smallest md5(tag + id), as (cent_id, cent_vec) in md5 order — data-
+    order- and partitioning-invariant, a distributed top-K. The tags:
+    ``ivf|`` the IVF coarse cells, ``km|`` the k-means seeds, ``pq|``
+    the PQ codewords."""
     return (
         vectors.select(
             F.col(id_col).alias("cent_id"),
             F.col(vec_col).alias("cent_vec"),
-            F.md5(F.concat(F.lit("km|"), F.col(id_col).cast("string"))).alias("_h"),
+            F.md5(F.concat(F.lit(tag), F.col(id_col).cast("string"))).alias("_h"),
         )
         .orderBy("_h")
         .limit(k)
+        .drop("_h")
     )
 
 
@@ -439,7 +434,7 @@ def kmeans_assign(
     rounded to 6dp like every float the engine emits.
     """
     if centroids is None:
-        centroids = _seed_centroids(vectors, k, id_col, vec_col).drop("_h")
+        centroids = _hash_sample(vectors, "km|", k, id_col, vec_col)
     cents = _codebook_rows(centroids)
     best = _argmax_score(F.col("_sc"))
     return _with_cent_scores(vectors, vec_col, cents).select(
@@ -470,7 +465,7 @@ def kmeans_lloyd(
     # one seed collect feeds both the first assignment and the
     # keep-old-centroid fallback (clusters that lose every member keep
     # their previous centroid instead of silently shrinking k mid-run)
-    seed_rows = _codebook_rows(_seed_centroids(vectors, k, id_col, vec_col).drop("_h"))
+    seed_rows = _codebook_rows(_hash_sample(vectors, "km|", k, id_col, vec_col))
     assigned = kmeans_assign(vectors, k=k, id_col=id_col, vec_col=vec_col, centroids=seed_rows)
     prev = {int(cid): vec for cid, vec in seed_rows}
     for _ in range(iters):
@@ -533,7 +528,7 @@ def semdedup(
     (6dp), both NULL for keepers.
     """
     if centroids is None:
-        centroids = _seed_centroids(vectors, k, id_col, vec_col).drop("_h")
+        centroids = _hash_sample(vectors, "km|", k, id_col, vec_col)
     cents = _codebook_rows(centroids)
     best = _argmax_score(F.col("_sc"))
     # One explicit exchange on cluster_id right after the assignment: the
@@ -625,22 +620,13 @@ def _pq_sample_codebooks(
     ordering). Production would train these with kmeans_lloyd per
     subspace and pass them via ``codebooks``; the plan shape is identical
     either way."""
-    rows = (
-        vectors.select(
-            F.col(vec_col).alias("_v"),
-            F.md5(F.concat(F.lit("pq|"), F.col(id_col).cast("string"))).alias("_h"),
-        )
-        .orderBy("_h")
-        .limit(k)
-        .collect()
-    )
-    rows = sorted(rows, key=lambda r: r["_h"])  # belt-and-braces: never trust collect order
-    dim = len(rows[0]["_v"])
+    rows = _hash_sample(vectors, "pq|", k, id_col, vec_col).collect()
+    dim = len(rows[0]["cent_vec"])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
     return [
-        [[float(x) for x in r["_v"][s * sub : (s + 1) * sub]] for r in rows]
+        [[float(x) for x in r["cent_vec"][s * sub : (s + 1) * sub]] for r in rows]
         for s in range(m)
     ]
 
@@ -832,16 +818,7 @@ def ivfpq_topk(
     Output: (query_id, vec_id, approx_dist double 6dp, rank).
     """
     if centroids is None:
-        centroids = (
-            vectors.select(
-                F.col(id_col).alias("cent_id"),
-                F.col(vec_col).alias("cent_vec"),
-                F.md5(F.concat(F.lit("ivf|"), F.col(id_col).cast("string"))).alias("_h"),
-            )
-            .orderBy("_h")
-            .limit(n_centroids)
-            .drop("_h")
-        )
+        centroids = _hash_sample(vectors, "ivf|", n_centroids, id_col, vec_col)
     if codebooks is None:
         codebooks = _pq_sample_codebooks(vectors, m, k, id_col, vec_col)
     cents = _codebook_rows(centroids)

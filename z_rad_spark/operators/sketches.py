@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .exprs import ordered_sums
+from .exprs import MIX31_A, mix31, ordered_sums
 
 
 def approx_distinct_by(
@@ -82,6 +82,13 @@ _HASH_AB = (
 def _bucket(key: F.Column, a: int, b: int, width: int) -> F.Column:
     k = F.pmod(F.abs(key.cast("long")), F.lit(_HASH_P))
     return F.pmod(F.pmod(F.lit(a) * k + F.lit(b), F.lit(_HASH_P)), F.lit(width))
+
+
+def _mixed_key(key: F.Column) -> F.Column:
+    """31-bit square-mod mixing hash (``exprs.mix31``) of a key, as HLL
+    and KMV read it; the streaming sketches replay it with ``mix31_np``."""
+    k = F.pmod(F.abs(key.cast("long")), F.lit(_HASH_P))
+    return mix31(k * F.lit(MIX31_A) + F.lit(12345))
 
 
 def count_min_heavy_hitters(
@@ -257,17 +264,11 @@ def hyperloglog_by(
     m = 1 << p_bits
     w = 31 - p_bits
 
-    def _h(col):
-        k = F.pmod(F.abs(col.cast("long")), F.lit(_HASH_P))
-        x = F.pmod(k * F.lit(48271) + F.lit(12345), F.lit(_HASH_P))
-        y = F.pmod(x * x + x, F.lit(_HASH_P))
-        return F.pmod(y * F.lit(48271), F.lit(_HASH_P))
-
     def bucket_of(c):
-        return F.pmod(_h(F.col(c)), F.lit(m)).cast("int")
+        return F.pmod(_mixed_key(F.col(c)), F.lit(m)).cast("int")
 
     def rank_of(c):
-        rest = F.floor(_h(F.col(c)).cast("double") / F.lit(float(m))).cast("long")
+        rest = F.floor(_mixed_key(F.col(c)).cast("double") / F.lit(float(m))).cast("long")
         # CASE ladder: rank r <=> highest set bit of the w-bit rest is
         # at position w - r (0-based); rest == 0 -> w + 1
         rank = F.lit(w + 1)
@@ -363,11 +364,7 @@ def kmv_distinct_by(
     from pyspark.sql import Window
 
     dk = df.select(F.col(group_col).alias("g"), F.col(key_col).alias("_k")).distinct()
-    kk = F.pmod(F.abs(F.col("_k").cast("long")), F.lit(_HASH_P))
-    x = F.pmod(kk * F.lit(48271) + F.lit(12345), F.lit(_HASH_P))
-    y = F.pmod(x * x + x, F.lit(_HASH_P))
-    h = F.pmod(y * F.lit(48271), F.lit(_HASH_P))
-    hs = dk.select("g", h.alias("_h")).groupBy("g", "_h").agg(
+    hs = dk.select("g", _mixed_key(F.col("_k")).alias("_h")).groupBy("g", "_h").agg(
         F.count("*").cast("long").alias("_ck")
     )
     rn = F.row_number().over(Window.partitionBy("g").orderBy("_h"))

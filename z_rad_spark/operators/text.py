@@ -10,8 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import normalize_text
-from .exprs import chain, literal_frame, np_log, ordered_sums
+from .exprs import chain, epoch_us, literal_frame, norm_words, np_log, ordered_sums, words
 
 
 def with_json_field(
@@ -50,7 +49,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
     n_digit = F.length(F.regexp_replace(F.col(text_col), r"[^0-9]", ""))
     n_upper = F.length(F.regexp_replace(F.col(text_col), r"[^A-Z]", ""))
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     n_stop = F.size(
         F.filter(toks, lambda t: t.isin(*[w for ws in _LANG_MARKERS.values() for w in ws]))
     )
@@ -78,12 +77,12 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Rule-based language id: argmax of per-language marker-token hits,
     'und' (undetermined) when no marker occurs. Deterministic and
     SQL-portable by construction."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
 
-    def _marker_count(words):
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
+    def _marker_count(markers):
+        return F.size(F.filter(toks, lambda t: t.isin(*markers)))
 
-    scores = {lang: _marker_count(words) for lang, words in _LANG_MARKERS.items()}
+    scores = {lang: _marker_count(markers) for lang, markers in _LANG_MARKERS.items()}
     best = F.lit("und")
     best_score = F.lit(0)
     # deterministic order: later languages win ties only with strictly
@@ -100,7 +99,7 @@ def with_fingerprint(df: DataFrame, n: int = 4, text_col: str = "text") -> DataF
     """Document fingerprint: min md5 over word n-gram shingles (the
     winnowing-min idea with a single global window). Stable, portable,
     useful as a cheap near-dup prefilter."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     shingles = F.transform(
         F.sequence(F.lit(0), F.greatest(n_sh - 1, F.lit(0))),
@@ -141,7 +140,7 @@ def tfidf_topk(
     """
     n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
     toks = docs.repartition(n_parts, id_col).select(
-        F.col(id_col), F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("token")
+        F.col(id_col), F.explode(norm_words(F.col(text_col))).alias("token")
     )
     tf = toks.groupBy(id_col, "token").agg(F.count("*").cast("double").alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count("*").cast("double").alias("df_t"))
@@ -205,7 +204,7 @@ def top_tokens(
     over ~|groups|x|vocab| rows, not the corpus."""
     n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
     toks = docs.repartition(n_parts, id_col).select(
-        F.col(group_col), F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("token")
+        F.col(group_col), F.explode(norm_words(F.col(text_col))).alias("token")
     )
     counts = toks.groupBy(group_col, "token").agg(F.count("*").cast("long").alias("n"))
     w = Window.partitionBy(group_col).orderBy(F.desc("n"), F.asc("token"))
@@ -253,7 +252,7 @@ def hashed_embedding(
     )
     toks = df.select(
         F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
+        F.explode(words(F.col(text_col))).alias("token"),
     ).withColumn("_b", bucket)
     counts = toks.groupBy(id_col).agg(
         *[
@@ -316,7 +315,7 @@ def bm25_topk(
     spark = docs.sparkSession
 
     base = docs.select(
-        F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("_tk")
+        F.col(id_col), norm_words(F.col(text_col)).alias("_tk")
     ).select(id_col, "_tk", F.size("_tk").cast("long").alias("_dl"))
     stats = base.agg(
         F.count("*").cast("double").alias("_n_docs"),
@@ -402,9 +401,7 @@ def trending_tokens(
     """
     from pyspark.sql import Window
 
-    toks = F.array_distinct(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    )
+    toks = F.array_distinct(words(F.col(text_col)))
     ex = df.select(
         F.to_date(F.col(ts_col).cast("timestamp")).alias("day"),
         F.explode(toks).alias("token"),
@@ -461,7 +458,7 @@ def pmi_collocations(
     n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
     base = docs.repartition(n_parts, id_col).select(
         F.col(group_col).alias("g"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("_tk"),
+        norm_words(F.col(text_col)).alias("_tk"),
     )
     uni = (
         base.select("g", F.explode("_tk").alias("tok"))
@@ -538,7 +535,7 @@ def ngram_novelty(
     Output: (day date, n_grams long — distinct n-grams that day,
     n_new long — first seen that day, novelty double).
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     # Spark's sequence(1, 0) is the DESCENDING [1, 0] (not empty), so a
     # turn with < n tokens must be guarded explicitly or slice() sees
     # start = 0 and errors under ANSI mode.
@@ -606,7 +603,7 @@ def lexical_diversity(
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
+        F.explode(words(F.col(text_col))).alias("_tok"),
     )
     tf = toks.groupBy(id_col, "_tok").agg(F.count("*").cast("long").alias("_c"))
     per = tf.groupBy(id_col).agg(
@@ -784,7 +781,7 @@ def tfidf_hashed_embedding(
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
+        F.explode(words(F.col(text_col))).alias("token"),
     )
     tf = toks.groupBy(id_col, "token").agg(F.count("*").cast("long").alias("_tf"))
     dfc = tf.groupBy("token").agg(F.count("*").cast("long").alias("_df"))
@@ -852,15 +849,11 @@ def vocab_turnover(
     """
     from pyspark.sql import Window
 
-    week = (
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86400000000)
-    ).cast("long") / F.lit(7)
+    week = (epoch_us("ts") / F.lit(86400000000)).cast("long") / F.lit(7)
     toks = df.select(
         F.col(group_col),
         week.cast("long").alias("week"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("token"),
+        F.explode(words(F.col(text_col))).alias("token"),
     )
     counts = toks.groupBy(group_col, "week", "token").agg(
         F.count("*").cast("long").alias("n")
@@ -911,18 +904,16 @@ def with_readability(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     t = F.col(text_col)
     sents = F.greatest(F.regexp_count(t, F.lit(r"[.!?]+")), F.lit(1)).cast("long")
-    words = F.greatest(
-        F.size(F.split(F.lower(F.trim(t)), r"\s+")), F.lit(1)
-    ).cast("long")
+    n_words = F.greatest(F.size(words(t)), F.lit(1)).cast("long")
     syls = F.greatest(
         F.regexp_count(F.lower(t), F.lit(r"[aeiouy]+")), F.lit(1)
     ).cast("long")
-    wps = words.cast("double") / sents.cast("double")
-    spw = syls.cast("double") / words.cast("double")
+    wps = n_words.cast("double") / sents.cast("double")
+    spw = syls.cast("double") / n_words.cast("double")
     flesch = F.lit(206.835) - F.lit(1.015) * wps - F.lit(84.6) * spw
     return (
         df.withColumn("n_sentences", sents)
-        .withColumn("n_words", words)
+        .withColumn("n_words", n_words)
         .withColumn("words_per_sentence", wps)
         .withColumn("syllables_per_word", spw)
         .withColumn("flesch", flesch)
@@ -954,7 +945,7 @@ def role_style_distance(
     )
     toks = df.select(
         F.col(group_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
+        F.explode(words(F.col(text_col))).alias("token"),
     ).withColumn("_b", bucket)
     prof = toks.groupBy(group_col).agg(
         *[
@@ -1005,7 +996,7 @@ def with_code_switching(df: DataFrame, text_col: str = "text") -> DataFrame:
     Adds: n_tagged long, n_langs int, n_switches long, switch_rate
     double (NULL when fewer than 2 tagged tokens).
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
 
     def tag(t):
         e = None
@@ -1062,7 +1053,7 @@ def oov_rate(
     """
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
+        F.explode(words(F.col(text_col))).alias("token"),
     )
     counts = toks.groupBy("token").agg(F.count("*").cast("long").alias("_n"))
     w = Window.orderBy(F.desc("_n"), F.asc("token"))
@@ -1169,7 +1160,7 @@ def chao1_richness(
     """
     toks = df.select(
         F.col(group_col).alias("_g"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("_tok"),
+        F.explode(norm_words(F.col(text_col))).alias("_tok"),
     )
     per_tok = toks.groupBy("_g", "_tok").agg(F.count("*").cast("long").alias("_c"))
     g = per_tok.groupBy("_g").agg(
@@ -1231,7 +1222,7 @@ def lexical_concentration(
     """
     toks = df.select(
         F.col(group_col).alias("_g"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("_tok"),
+        F.explode(norm_words(F.col(text_col))).alias("_tok"),
     )
     per_tok = toks.groupBy("_g", "_tok").agg(F.count("*").cast("long").alias("_c"))
     g = per_tok.groupBy("_g").agg(
@@ -1284,7 +1275,7 @@ def bpe_top_pairs(
     """
     n_parts = max(docs.sparkSession.sparkContext.defaultParallelism, 2)
     toks = docs.repartition(n_parts, id_col).select(
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("token")
+        F.explode(norm_words(F.col(text_col))).alias("token")
     )
     vocab = toks.groupBy("token").agg(F.count("*").cast("long").alias("_c"))
     pairs = vocab.where(F.length("token") >= 2).select(
@@ -1433,7 +1424,7 @@ def log_odds_keyness(
     """
     toks = docs.select(
         (F.col(group_col) == target).alias("_is_a"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("_tok"),
+        F.explode(norm_words(F.col(text_col))).alias("_tok"),
     )
     per = toks.groupBy("_tok").agg(
         F.coalesce(F.sum(F.when(F.col("_is_a"), F.lit(1))), F.lit(0))
@@ -1506,7 +1497,7 @@ def chi2_token_selection(
     pairs = docs.select(
         F.col(id_col).alias("_doc"),
         (F.col(group_col) == target).alias("_is_a"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("_tok"),
+        F.explode(norm_words(F.col(text_col))).alias("_tok"),
     ).distinct()
     per = pairs.groupBy("_tok").agg(
         F.coalesce(F.sum(F.when(F.col("_is_a"), F.lit(1))), F.lit(0))
@@ -1592,7 +1583,7 @@ def naive_bayes_lang(
 
     toks = docs.select(
         F.col(id_col).alias("_doc"),
-        F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias(
+        F.posexplode(norm_words(F.col(text_col))).alias(
             "_pos", "_tok"
         ),
     )
@@ -1691,9 +1682,7 @@ def heaps_law(
     or a per-shard curve instead. Output one row: (n_docs, n_points
     longs; beta, k doubles — NULL when < 2 checkpoints).
     """
-    from z_rad_spark.operators.curation import _toks
-
-    d = df.select(F.col(id_col).alias("_doc"), _toks(text_col).alias("_tk"))
+    d = df.select(F.col(id_col).alias("_doc"), words(F.col(text_col)).alias("_tk"))
     per_doc = d.select("_doc", F.size("_tk").cast("long").alias("_nt"))
     tok = d.select("_doc", F.explode("_tk").alias("_t"))
     first = tok.groupBy("_t").agg(F.min("_doc").alias("_fd"))
@@ -1831,7 +1820,7 @@ def token_audit(
     nonascii_ratio, hexblob_ratio doubles — NULL when the group has
     no tokens), one row per group.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     t = df.select(
         F.col(group_col).alias("_g"), F.explode(toks).alias("_t")
     ).where(F.col("_t") != "")
@@ -1879,7 +1868,7 @@ def coverage_curve(
     vocab_size long, n_tokens long, covered long, coverage double),
     one row per k ascending.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = words(F.col(text_col))
     tok = df.select(F.explode(toks).alias("_t")).where(F.col("_t") != "")
     counts = tok.groupBy("_t").agg(F.count("*").cast("long").alias("_c"))
     w_rank = Window.orderBy(F.col("_c").desc(), F.asc("_t"))
@@ -1940,7 +1929,7 @@ def bytes_per_token(
     one row per group.
     """
     s = F.col(text_col)
-    toks = F.split(F.lower(F.trim(s)), r"\s+")
+    toks = words(s)
     nonws = F.length(F.regexp_replace(s, r"\s", ""))
     g = df.groupBy(F.col(group_col).alias("_g")).agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -1985,8 +1974,7 @@ def ngram_orders(
     Output: (n int, n_types long, n_tokens long, type_token_ratio
     double), orders ascending.
     """
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    tk = F.split(norm, " ")
+    tk = norm_words(F.col(text_col))
     out = None
     for n in sorted(int(x) for x in orders):
         grams = df.select(

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .operators.drift import psi_term
+from .operators.exprs import MIX31_A, mix31_np
 
 SESSION_SCHEMA = T.StructType(
     [
@@ -643,9 +644,7 @@ def streaming_hll(stream: DataFrame, p_bits: int = 8) -> DataFrame:
         if len(rows) == 0:
             return
         k = np.abs(rows["key"].astype("int64").to_numpy()) % P
-        x = (k * 48271 + 12345) % P
-        y = (x * x + x) % P  # x < 2^31 -> x*x < 2^62, safe in int64
-        h = (y * 48271) % P
+        h = mix31_np(k * MIX31_A + 12345)
         b = (h % m).astype("int64")
         rest = h // m
         # rank = w - floor(log2(rest)) = w + 1 - frexp exponent; frexp is
@@ -736,9 +735,7 @@ def streaming_kmv(stream: DataFrame, k: int = 64) -> DataFrame:
         if len(rows) == 0:
             return
         kk = np.abs(rows["key"].astype("int64").to_numpy()) % P
-        x = (kk * 48271 + 12345) % P
-        y = (x * x + x) % P  # x < 2^31 -> x*x < 2^62, safe in int64
-        h = (y * 48271) % P
+        h = mix31_np(kk * MIX31_A + 12345)
         prev = (
             np.array(state.get[0], dtype=np.int64)
             if state.exists
@@ -893,10 +890,7 @@ def streaming_cms(stream: DataFrame) -> DataFrame:
     """
 
     def _h(key_codes: np.ndarray, salt: int) -> np.ndarray:
-        P = 2147483647
-        x = (key_codes * salt + 12345) % P
-        y = (x * x + x) % P
-        return ((y * 48271) % P) % _CMS_W
+        return mix31_np(key_codes * salt + 12345) % _CMS_W
 
     def fn(
         key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
