@@ -205,15 +205,21 @@ def test_stats_asof_counts_only_turns_up_to_each_cutoff(spark, synth, cutoffs):
 
 
 def test_stats_asof_skips_null_signals_as_the_kernel_does(spark):
-    """A NULL signal is no value: the declarative stats equal the kernel
-    path's, which masks the NaN, for a conversation with NULL signals and
-    for one without."""
+    """A NULL or NaN signal is no value: the declarative stats equal the
+    kernel path's, which masks both with ``~isnan``, for a conversation
+    with NULL signals, one with a NaN signal and one with neither; the
+    value histogram's quantile state counts the same turns."""
     from pyspark.sql import functions as F
 
     from z_rad_spark.operators import firstorder_sql
+    from z_rad_spark.operators.asof import quantile_state_asof
     from z_rad_spark.transcripts import with_signal
 
-    vals = {"a": [3, None, 5, 8, None, 1, 4], "b": [2, 2, 7, 1, 9]}
+    vals = {
+        "a": [3, None, 5, 8, None, 1, 4],
+        "b": [2, 2, 7, 1, 9],
+        "c": [3, float("nan"), 5, 8, 1, 4],
+    }
     rows = [
         (c, i, "user", f"w{i}", None, f"2024-01-01 10:{i:02d}:00", None if v is None else float(v))
         for c, vs in vals.items()
@@ -227,10 +233,13 @@ def test_stats_asof_skips_null_signals_as_the_kernel_does(spark):
     cut = ["2024-01-02 00:00:00"]
     kernel = _asof_frame(extract_features(t, FeatureConfig(signal="val", families=("stats",)), cut))
     decl = _asof_frame(firstorder_sql.stats_asof(with_signal(t, "val"), spark, cut))
-    assert decl["n_turns"].tolist() == [5, 5]
+    assert decl["n_turns"].tolist() == [5, 5, 5]
     cols = [c for c in decl.columns if c.startswith("stat_")]
     assert len(cols) == 18
     pd.testing.assert_frame_equal(decl[cols], kernel[cols], check_exact=True)
+    assert (decl.loc[2, "stat_mean"], decl.loc[2, "stat_median"]) == (4.2, 4.0)
+    q = _asof_frame(quantile_state_asof(with_signal(t, "val"), spark, cut))
+    assert q["n"].tolist() == [5, 5, 5]
 
 
 @pytest.mark.parametrize("name", ["stats_asof", "hist_asof"])

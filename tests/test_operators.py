@@ -2385,3 +2385,35 @@ def test_rank_biased_overlap_hand_computed(spark):
     # X_1 = |{1} ∩ {2}| = 0, X_2 = |{1,2} ∩ {2,3}| = 1, X_3 = 2
     want = (1 - p) * (0.0 + p * 1 / 2 + p ** 2 * 2 / 3)
     assert np.isclose(g2.rbo, want)
+
+
+def test_hist_asof_entropy_sums_in_ascending_grey_order(spark):
+    """ih_entropy is -(left fold of p*log2(p) in ascending grey order),
+    bit for bit, on level counts whose fold order changes the last bits
+    (the descending fold gives another double)."""
+    from z_rad_spark.operators.firstorder_sql import hist_asof
+
+    counts = [4, 8, 3, 2, 6, 4]  # signal v in 1..6 is grey level v of 6 bins
+    vals = [float(v) for v, k in enumerate(counts, 1) for _ in range(k)]
+    turns = spark.createDataFrame(
+        [("c0", f"2024-01-01 10:{i:02d}:00", v) for i, v in enumerate(vals)],
+        "conv_id string, ts string, signal double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = hist_asof(turns, spark, ["2024-01-02 00:00:00"], 6).collect()[0]
+
+    n = sum(counts)
+    p = F.col("c") / F.lit(n)
+    terms = [
+        r.t for r in spark.createDataFrame([(float(k),) for k in counts], "c double")
+        .select((p * F.log2(p)).alias("t")).collect()
+    ]
+
+    def fold(ts):
+        acc = 0.0
+        for t in ts:
+            acc += t
+        return -acc
+
+    assert fold(terms) != fold(terms[::-1])
+    assert got.ih_entropy.hex() == fold(terms).hex()
+    assert (got.ih_mode, got.ih_max_grad_g, got.ih_min_grad_g) == (2.0, 1.0, 3.0)

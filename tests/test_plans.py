@@ -141,6 +141,38 @@ def test_hist_asof_never_expands_turns_across_the_grid(spark):
                 assert "ts#" not in line, line
 
 
+def _count_nodes(plan: str, node: str) -> int:
+    """Operator lines of ``plan`` whose node name is ``node``."""
+    return re.findall(r"^[ :+\-*()\d]*(\w+)", plan, re.M).count(node)
+
+
+def test_firstorder_asof_plans_read_one_conv_id_layout(spark):
+    """The value-histogram consumers shuffle the turns once (the
+    map-side-combined compaction) and the compacted rows once (by
+    conv_id); every window and groupBy after that reads that
+    partitioning and one value- (grey-) ordered sort. Pinned on the
+    29-cutoff daily grid: hash exchanges, Window operators, Sorts."""
+    from z_rad_spark.operators import asof, firstorder_sql
+
+    cutoffs = [f"2024-01-{d:02d} 00:00:00" for d in range(2, 31)]
+    turns = _jvm_turns(spark)
+    shapes = {
+        "stats_asof": (firstorder_sql.stats_asof(turns, spark, cutoffs), 2, 1),
+        "hist_asof": (firstorder_sql.hist_asof(turns, spark, cutoffs, 6), 2, 2),
+        "quantile_state_asof": (asof.quantile_state_asof(turns, spark, cutoffs), 1, 1),
+    }
+    for name, (df, windows, sorts) in shapes.items():
+        plan = _plan(df)
+        assert plan.count("Exchange hashpartitioning") == 2, (name, plan)
+        n_window, n_sort = _count_nodes(plan, "Window"), _count_nodes(plan, "Sort")
+        if name == "quantile_state_asof":
+            assert (n_window, n_sort) == (windows, sorts), (name, plan)
+        else:
+            assert n_window <= windows and n_sort <= sorts, (name, plan)
+        joins = [ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln]
+        assert len(joins) == 1 and re.search(r"\(iv#\d+ <= gi#\d+\)", joins[0]), (name, plan)
+
+
 def _code(path: pathlib.Path) -> str:
     """``path``'s Python source without comments and statement-level
     strings (docstrings), its tokens joined with no whitespace, so a

@@ -84,22 +84,28 @@ def cutoff_history(df: DataFrame, spark: SparkSession, cutoffs: Iterable[str]) -
 def value_histogram_asof(
     df: DataFrame, spark: SparkSession, cutoffs: Iterable[str], signal_col: str = "signal"
 ) -> DataFrame:
-    """Per-(conv_id, as_of) value histogram WITHOUT expanding turns:
+    """Per-(conv_id, as_of) value histogram WITHOUT expanding turns,
+    hash-partitioned on ``conv_id`` so every consumer's windows and
+    groupBys on ``(conv_id, as_of, ...)`` run with no further exchange:
 
     1. interval index = number of listed cutoffs strictly before ts (a
        literal comparison chain — constant-folded, no join); rows past
        the last cutoff are dropped at the scan.
-    2. ONE full-data shuffle: groupBy (conv_id, x, interval) with
-       map-side combine collapses 10^12 turns to
+    2. ONE combine-heavy shuffle of the turns: groupBy (conv_id, x,
+       interval) with map-side combine collapses 10^12 turns to
        distinct-values x intervals per conversation.
-    3. The compacted histogram is broadcast-joined to the cutoff grid
-       (interval <= grid index) and re-aggregated — amplification is
-       bounded by the grid size on ALREADY-compacted rows. The grid's
-       ``gi`` counts the same listed cutoffs (:func:`cutoff_grid`), so
-       ``iv <= gi`` holds exactly when ``ts <= as_of``.
+    3. ONE shuffle of the compacted rows: ``repartition("conv_id")``
+       (partition count left to AQE).
+    4. The compacted histogram is broadcast-joined to the cutoff grid
+       (interval <= grid index) and re-aggregated on that partitioning —
+       amplification is bounded by the grid size on ALREADY-compacted
+       rows. The grid's ``gi`` counts the same listed cutoffs
+       (:func:`cutoff_grid`), so ``iv <= gi`` holds exactly when
+       ``ts <= as_of``.
 
-    Turns whose signal is NULL are dropped at the scan, so ``c`` counts
-    only turns with a value. Output: (conv_id, as_of, x double, c long).
+    Turns whose signal is NULL or NaN are dropped at the scan, as the
+    kernel path's ``~isnan`` mask drops them, so ``c`` counts only turns
+    with a value. Output: (conv_id, as_of, x double, c long).
     """
     cuts = list(cutoffs)
     x = F.col(signal_col).cast("double")
@@ -107,9 +113,13 @@ def value_histogram_asof(
     for c in cuts:
         iv = iv + F.when(F.col("ts") > F.to_timestamp(F.lit(c)), 1).otherwise(0)
     base = df.select("conv_id", x.alias("x"), iv.alias("iv")).where(
-        (F.col("iv") < len(cuts)) & F.col("x").isNotNull()
+        (F.col("iv") < len(cuts)) & F.col("x").isNotNull() & ~F.isnan("x")
     )
-    h0 = base.groupBy("conv_id", "x", "iv").agg(F.count("*").cast("long").alias("c"))
+    h0 = (
+        base.groupBy("conv_id", "x", "iv")
+        .agg(F.count("*").cast("long").alias("c"))
+        .repartition("conv_id")
+    )
     grid = cutoff_grid(spark, cuts)
     return (
         h0.join(F.broadcast(grid), F.col("iv") <= F.col("gi"))
@@ -656,24 +666,23 @@ def quantile_state_asof(
     (conv, cutoff, value) histogram; counts exact. Bit-replayable.
 
     Scale: :func:`value_histogram_asof` (one combine-heavy shuffle,
-    the grid multiplies only compacted rows, never the turns) -> rank
-    windows on the compacted frame. NULL signals are not counted.
+    one shuffle of compacted rows by conv_id, the grid multiplies only
+    compacted rows, never the turns) -> one value-ordered Window with a
+    running and a whole frame on that partitioning. NULL and NaN
+    signals are not counted.
     Output: (conv_id, as_of, n long, p25, p50, p75 doubles), one row
     per (conversation, cutoff) with a signal in its history.
     """
     hist = value_histogram_asof(df, spark, cutoffs, signal_col)
-    w_cum = (
-        Window.partitionBy("conv_id", "as_of")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("conv_id", "as_of")
+    w_x = Window.partitionBy("conv_id", "as_of").orderBy("x")
+    running = w_x.rowsBetween(Window.unboundedPreceding, 0)
+    whole = w_x.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     cum = hist.select(
         "conv_id",
         "as_of",
         "x",
-        F.sum("c").over(w_cum).cast("long").alias("_cm"),
-        F.sum("c").over(w_all).cast("long").alias("_n"),
+        F.sum("c").over(running).cast("long").alias("_cm"),
+        F.sum("c").over(whole).cast("long").alias("_n"),
     )
 
     def pick(q):

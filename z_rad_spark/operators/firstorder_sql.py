@@ -9,7 +9,7 @@ This is the scale fast-path when only first-order families are requested:
 partial aggregation (map-side combine) applies, and Catalyst prunes
 columns down to (conv_id, ts, signal).
 
-Two design contracts:
+Three design contracts:
 
 * **Histogram rollup, not row expansion.** ``stats_asof`` never joins
   every turn against every cutoff (O(turns x cutoffs) rows — unbounded
@@ -18,13 +18,27 @@ Two design contracts:
   expands only the compacted histogram across the (tiny) cutoff grid,
   and computes every statistic — including exact lerp percentiles and
   the rank-trimmed rmad — from the weighted histogram.
+* **One conv_id layout, one value order.** The compacted rows move once
+  more, by ``conv_id`` (``asof.value_histogram_asof``); everything after
+  that runs on that partitioning with no further exchange: at most two
+  Window operators over ONE ``(conv_id, as_of)`` spec ordered by value
+  (by grey level for ``hist_asof``), so one sort, then one
+  ``groupBy(conv_id, as_of)``. Order statistics are rank picks on the
+  running count ``cum`` — the value at rank r is the row with
+  ``cum - c < r <= cum`` — and a value range bounded by order statistics
+  is a rank predicate: ``x >= value_at_rank(r)`` iff ``cum >= r`` and
+  ``x <= value_at_rank(r)`` iff ``cum - c < r``. The stats plan thus
+  has 2 hash exchanges, 2 Windows and 1 Sort; ``hist_asof`` has 2, 2
+  and 2 (its per-cutoff min/max binning window is the second).
 * **Deterministic value algebra.** Every statistic is the same fixed
   expression tree over exact aggregates as kernels/firstorder._det_stats
   and the DuckDB oracles (see that docstring): order statistics instead
   of engine percentile lerp, raw moments over exact sums instead of
-  Welford, scaled-integer deviations. For integer-valued signals the
-  results are bit-identical across Spark / NumPy / DuckDB regardless of
-  partitioning — which the driver's 6dp value hash requires.
+  Welford, scaled-integer deviations. Every float sum runs in ascending
+  value (grey) order, the one order all operators after the sort read.
+  For integer-valued signals the results are bit-identical across
+  Spark / NumPy / DuckDB regardless of partitioning — which the
+  driver's 6dp value hash requires.
 """
 
 from __future__ import annotations
@@ -63,13 +77,15 @@ def stats_asof(
     """18 intensity statistics per (conv_id, as_of), declaratively, from
     the as-of value histogram (see ``asof.value_histogram_asof`` for the
     scale shape and the module docstring for the determinism contract).
-    Turns with a NULL signal are left out: ``n_turns`` counts the turns
-    that have a signal, as the kernel path's NaN mask does.
+    Turns with a NULL or NaN signal are left out: ``n_turns`` counts the
+    turns that have a signal, as the kernel path's NaN mask does.
 
     Pure plan construction (no job, no collect), so the built frame is
     memoized per (application, input frame, cutoffs, signal)."""
     cutoffs = tuple(cutoffs)
-    # the build is ~5,000 py4j round-trips (0.5-0.8 s, profiled r6)
+    # on a 29-cutoff grid the Column-API build makes ~7,000 py4j calls
+    # (~2,000 of them the histogram's cutoff chain): ~0.9 s on a warm
+    # JVM, ~2.1 s as the first build on a fresh one (4-core x86 host)
     return memo_plan(
         spark,
         ("stats_asof", id(df), cutoffs, signal_col),
@@ -83,74 +99,74 @@ def _stats_asof_build(
 ) -> DataFrame:
     h = value_histogram_asof(df, spark, cutoffs, signal_col)
 
-    # Single-consumer window-chained pipeline: every group-level scalar
-    # (sums, order statistics, trim bounds, trimmed sums) is attached to
-    # the histogram rows via unbounded windows over ONE (conv_id, as_of)
-    # partitioning, then a final groupBy on the same keys emits one row
-    # per group. No self-joins, no multi-consumption of the histogram
-    # subtree (which would recompute the full-data shuffle per consumer),
-    # and Catalyst folds the chained Window projections into one exchange.
+    # Everything after the histogram reads its conv_id partitioning and
+    # one (conv_id, as_of, x) order: two Window operators over the same
+    # x-ordered spec (one sort), then one groupBy on the same keys. Every
+    # float sum therefore runs in ascending x order, whichever operator
+    # holds it.
     c, xx = F.col("c"), F.col("x")
-    wk = Window.partitionBy(*KEYS)
-    wo = Window.partitionBy(*KEYS).orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
+    wo = Window.partitionBy(*KEYS).orderBy("x")
+    run = wo.rowsBetween(Window.unboundedPreceding, 0)
+    whole = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     r = h.select(
         *KEYS, "x", "c",
-        F.sum("c").over(wk).alias("n"),
-        F.sum("c").over(wo).alias("cum"),
+        F.sum(c).over(whole).alias("n"),
+        F.sum(c * xx).over(whole).alias("s1"),
+        F.sum(c).over(run).alias("cum"),
     )
 
     cum, n = F.col("cum"), F.col("n")
 
-    def at_rank(rank: Column) -> Column:
+    def rank(qf: float) -> Column:
+        # 1-based rank of the lower order statistic of the qf percentile
+        return F.floor((n - 1).cast("double") * F.lit(qf)).cast("long") + 1
+
+    def at_rank(r: Column) -> Column:
         # value at 1-based rank r: the histogram row whose cumulative
         # range [cum-c+1, cum] contains r
-        return F.max(F.when((cum - c < rank) & (rank <= cum), xx)).over(wk)
+        return F.max(F.when((cum - c < r) & (r <= cum), xx))
 
-    rank_cols = []
+    # The rank-trimmed range [value_at_rank(r_lo), value_at_rank(r_hi)]
+    # is a predicate on rank alone: x >= value_at_rank(r) <=> cum >= r and
+    # x <= value_at_rank(r) <=> cum - c < r. The lower bound is b10 when
+    # the 10th percentile interpolates (t10 > 0), else a10; when
+    # b10 = a10 both ranks select the same rows.
+    h10 = (n - 1).cast("double") * F.lit(0.1)
+    r_lo = rank(0.1) + F.when(h10 - F.floor(h10) > 0, 1).otherwise(0)
+    trim = (cum >= r_lo) & (cum - c < rank(0.9))
+    r = r.select(
+        *KEYS, "x", "c", "n", "s1", "cum",
+        at_rank(rank(0.5)).over(whole).alias("a50"),
+        at_rank(rank(0.5) + 1).over(whole).alias("b50"),
+        F.sum(F.when(trim, c)).over(whole).alias("m"),
+        F.sum(F.when(trim, c * xx)).over(whole).alias("st"),
+    )
+
+    rank_picks = []
     for nm, qf in _QFRACS:
-        j = F.floor((n - 1).cast("double") * F.lit(qf)).cast("long")
-        rank_cols.append(at_rank(j + 1).alias(f"a{nm}"))
-        rank_cols.append(at_rank(j + 2).alias(f"b{nm}"))
-    r = r.select(
-        *KEYS, "x", "c", "n", "cum",
-        F.sum(c * xx).over(wk).alias("s1"),
-        F.sum(c * (xx * xx)).over(wk).alias("s2"),
-        F.sum(c * ((xx * xx) * xx)).over(wk).alias("s3"),
-        F.sum(c * ((xx * xx) * (xx * xx))).over(wk).alias("s4"),
-        F.min(xx).over(wk).alias("mn"),
-        F.max(xx).over(wk).alias("mx"),
-        *rank_cols,
-    )
-
-    nn = F.col("n")
-    mean_e = F.col("s1") / nn
-    var_e = F.greatest(F.col("s2") / nn - (F.col("s1") / nn) * (F.col("s1") / nn), F.lit(0.0))
-    h10 = (nn - 1).cast("double") * F.lit(0.1)
-    t10 = h10 - F.floor(h10)
-    lo_b = F.when((t10 > 0) & (F.col("b10") > F.col("a10")), F.col("b10")).otherwise(F.col("a10"))
-    r = r.select(
-        *KEYS, "x", "c", "n", "s1", "s2", "s3", "s4", "mn", "mx",
-        mean_e.alias("mean"),
-        var_e.alias("var"),
-        *[_lerp(nm, qf).alias(f"p{nm}") for nm, qf in _QFRACS],
-        lo_b.alias("lo_b"),
-        F.col("a90").alias("hi_b"),
-    )
-    trim = (xx >= F.col("lo_b")) & (xx <= F.col("hi_b"))
-    r = r.withColumn("m", F.sum(F.when(trim, c)).over(wk)).withColumn(
-        "st", F.sum(F.when(trim, c * xx)).over(wk)
-    )
-
-    firsts = [
-        F.first(col).alias(col)
-        for col in ["n", "s1", "s2", "s3", "s4", "mn", "mx", "mean", "var",
-                    "p10", "p25", "p50", "p75", "p90", "m"]
-    ]
+        if nm != "50":
+            rank_picks.append(at_rank(rank(qf)).alias(f"a{nm}"))
+            rank_picks.append(at_rank(rank(qf) + 1).alias(f"b{nm}"))
     j = r.groupBy(*KEYS).agg(
-        *firsts,
-        F.sum(c * F.abs(F.col("n") * xx - F.col("s1"))).alias("sad1"),
-        F.sum(c * F.abs(xx - F.col("p50"))).alias("sadmed"),
+        *[F.first(col).alias(col) for col in ["n", "s1", "a50", "b50", "m", "st"]],
+        F.sum(c * (xx * xx)).alias("s2"),
+        F.sum(c * ((xx * xx) * xx)).alias("s3"),
+        F.sum(c * ((xx * xx) * (xx * xx))).alias("s4"),
+        F.min(xx).alias("mn"),
+        F.max(xx).alias("mx"),
+        *rank_picks,
+        F.sum(c * F.abs(n * xx - F.col("s1"))).alias("sad1"),
+        F.sum(c * F.abs(xx - _lerp("50", 0.5))).alias("sadmed"),
         F.sum(F.when(trim, c * F.abs(F.col("m") * xx - F.col("st")))).alias("sadt"),
+    )
+    nn = F.col("n")
+    mean = F.col("s1") / nn
+    var = F.greatest(F.col("s2") / nn - (F.col("s1") / nn) * (F.col("s1") / nn), F.lit(0.0))
+    j = j.select(
+        "*",
+        mean.alias("mean"),
+        var.alias("var"),
+        *[_lerp(nm, qf).alias(f"p{nm}") for nm, qf in _QFRACS],
     )
     mean, var = F.col("mean"), F.col("var")
     s2n = F.col("s2") / nn
@@ -235,9 +251,12 @@ def hist_asof(
     (intensity.py:179-185, 284-324).
 
     Scale shape: rides :func:`fbn_hist_asof`'s compacted histogram path —
-    one combine-heavy full-data shuffle, grid amplification bounded by
-    (distinct values x cutoffs), no turn expansion (plan-asserted by
-    tests/test_plans.py).
+    one combine-heavy full-data shuffle plus one shuffle of compacted
+    rows by conv_id, grid amplification bounded by (distinct values x
+    cutoffs), no turn expansion — then one grey-ordered Window (count
+    total, running count, lag/lead) and one groupBy, where mode
+    and the gradient extremes are ``min(struct(key, grey))`` picks
+    (plan-asserted by tests/test_plans.py).
 
     Pure plan construction (no job, no collect), so the built frame is
     memoized per (application, input frame, cutoffs, bins, signal)."""
@@ -253,49 +272,49 @@ def hist_asof(
 def _hist_asof_build(
     df: DataFrame, spark: SparkSession, cutoffs: Iterable[str], n_bins: int, signal_col: str
 ) -> DataFrame:
+    # One grey-ordered Window over the per-level counts holds every
+    # neighbour and group scalar; the groupBy on the same keys then reads
+    # the rows in ascending grey order, so its sums (the entropy's
+    # included) run in that order.
     counts = fbn_hist_asof(df, spark, cutoffs, n_bins, signal_col)
-    wk = Window.partitionBy(*KEYS)
-    wo = Window.partitionBy(*KEYS).orderBy("grey").rowsBetween(Window.unboundedPreceding, 0)
-    counts = (
-        counts.withColumn("n", F.sum("ci").over(wk))
-        .withColumn("cum", F.sum("ci").over(wo))
-        .withColumn("c", F.col("ci").cast("double"))
+    wg = Window.partitionBy(*KEYS).orderBy("grey")
+    whole = wg.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ci = F.col("ci")
+    c = ci.cast("double")
+    r = counts.select(
+        *KEYS, "grey", "ci",
+        F.sum(ci).over(whole).alias("n"),
+        F.sum(ci).over(wg.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
+        F.lag(c).over(wg).alias("prev_c"),
+        F.lead(c).over(wg).alias("next_c"),
     )
-    counts = counts.withColumn("p", F.col("c") / F.col("n"))
-    wl = Window.partitionBy(*KEYS).orderBy("grey")
-    prev_c = F.lag("c").over(wl)
-    next_c = F.lead("c").over(wl)
+    prev_c, next_c = F.col("prev_c"), F.col("next_c")
     grad = (
         F.when(prev_c.isNull() & next_c.isNull(), F.lit(None).cast("double"))
-        .when(prev_c.isNull(), next_c - F.col("c"))
-        .when(next_c.isNull(), F.col("c") - prev_c)
+        .when(prev_c.isNull(), next_c - c)
+        .when(next_c.isNull(), c - prev_c)
         .otherwise((next_c - prev_c) / 2)
     )
-    counts = counts.withColumn("grad", grad)
-    n_levels = F.count("*").over(wk)
-    counts = counts.withColumn("n_levels", n_levels)
+    cum, n, gy = F.col("cum"), F.col("n"), F.col("grey")
+    p = c / n
 
-    mode_w = Window.partitionBy(*KEYS).orderBy(F.col("c").desc(), F.col("grey").asc())
-    maxg_w = Window.partitionBy(*KEYS).orderBy(F.col("grad").desc(), F.col("grey").asc())
-    ming_w = Window.partitionBy(*KEYS).orderBy(F.col("grad").asc(), F.col("grey").asc())
-    counts = (
-        counts.withColumn("rn_mode", F.row_number().over(mode_w))
-        .withColumn("rn_maxg", F.row_number().over(maxg_w))
-        .withColumn("rn_ming", F.row_number().over(ming_w))
-    )
-    # moments from the SAME counts pass with the deterministic value
-    # algebra (module docstring): exact integer sums, order-statistic
-    # median — no second scan of g, no var_pop/percentile lerp drift
-    ci, cum, n, gy = F.col("ci"), F.col("cum"), F.col("n"), F.col("grey")
+    def grey_at_least(key: Column) -> Column:
+        # the level with the least key, the smallest grey among ties
+        return F.min(F.struct(key.alias("k"), gy.alias("g")))["g"]
+
+    # moments with the deterministic value algebra (module docstring):
+    # exact integer sums, order-statistic median — no var_pop/percentile
+    # lerp drift
     j50 = F.floor((n - 1).cast("double") * F.lit(0.5)).cast("long")
-    agg = counts.groupBy(*KEYS).agg(
-        (-F.sum(F.col("p") * F.log2("p"))).alias("ih_entropy"),
+    multi = F.count("*") > 1  # one row per grey level
+    agg = r.groupBy(*KEYS).agg(
+        (-F.sum(p * F.log2(p))).alias("ih_entropy"),
         (F.sum(ci * ci) / (F.max("n") * F.max("n"))).alias("ih_uniformity"),
-        F.max(F.when(F.col("rn_mode") == 1, F.col("grey"))).alias("ih_mode"),
-        F.max(F.when((F.col("rn_maxg") == 1) & (F.col("n_levels") > 1), F.col("grad"))).alias("ih_max_grad"),
-        F.max(F.when((F.col("rn_maxg") == 1) & (F.col("n_levels") > 1), F.col("grey"))).alias("ih_max_grad_g"),
-        F.max(F.when((F.col("rn_ming") == 1) & (F.col("n_levels") > 1), F.col("grad"))).alias("ih_min_grad"),
-        F.max(F.when((F.col("rn_ming") == 1) & (F.col("n_levels") > 1), F.col("grey"))).alias("ih_min_grad_g"),
+        grey_at_least(-ci).alias("ih_mode"),
+        F.max(grad).alias("ih_max_grad"),
+        F.when(multi, grey_at_least(-grad)).alias("ih_max_grad_g"),
+        F.min(grad).alias("ih_min_grad"),
+        F.when(multi, grey_at_least(grad)).alias("ih_min_grad_g"),
         F.max("n").alias("n"),
         F.sum(ci * gy).alias("s1"),
         F.sum(ci * (gy * gy)).alias("s2"),
