@@ -1040,6 +1040,8 @@ def test_ppl_buckets_window_on_compacted_histogram_only(spark):
     # on the raw document frame
     for frag in plan.split("Window [")[1:]:
         assert "lang" in frag.split("windowspecdefinition")[1][:120]
+    # the running count and the total share one Window operator
+    assert _count_nodes(plan.split("== Initial Plan ==")[0], "Window") == 1
 
 
 def test_js_and_w1_drift_plan_shapes(spark):
@@ -1155,7 +1157,7 @@ def test_quantiles_window_on_compacted_histogram(spark):
     from z_rad_spark.operators.encoding import value_quantiles, winsorize
 
     plan = _plan(value_quantiles(_roled_turns_df(spark), group_col="role"))
-    assert 1 <= plan.count("Window") <= 2
+    assert plan.count("Window") == 1
     assert plan.count("HashAggregate") >= 2
     assert "Join" not in plan
 
@@ -1602,3 +1604,66 @@ def test_chain_sql_parses_to_the_chain_tree(spark):
         return re.sub(r"#\d+", "", d._jdf.queryExecution().analyzed().toString())
 
     assert tree(sql) == tree(col)
+
+
+def test_corpus_rank_picks_plan_one_window(spark):
+    """The corpus-wide rank picks take the running count and the total
+    over one value-ordered spec: one Window operator each."""
+    from z_rad_spark.operators.profile import first_response_stats, view_to_purchase
+    from z_rad_spark.operators.sessionize import key_skew_profile
+
+    turns = _jvm_turns(spark)
+    i = F.col("id")
+    events = spark.range(40).select(
+        i.alias("event_id"),
+        (i % 5).alias("user_id"),
+        F.when(i % 3 == 0, "purchase").otherwise("view").alias("event_type"),
+        F.timestamp_seconds(F.lit(1704067200) + i * 600).alias("ts"),
+    )
+    for df in (key_skew_profile(turns), first_response_stats(turns), view_to_purchase(events)):
+        assert _count_nodes(_plan(df), "Window") == 1, _plan(df)
+
+
+def test_rank_pick_matches_numpy(spark):
+    """running_counts + value_at_rank give the order statistic of the
+    expanded multiset (np.repeat, sort, pick) for keyed histograms and
+    the corpus-wide case, with counts > 1 so values tie: rank 0 and 1
+    pick the minimum, n the maximum, n + 1 NULL, and a double rank n p
+    the smallest value whose running count reaches it."""
+    import math
+
+    import numpy as np
+
+    from z_rad_spark.operators.exprs import running_counts, value_at_rank
+
+    rng = np.random.default_rng(29)
+    rows = [
+        (g, float(v), int(rng.integers(2, 6)))
+        for g in ("a", "b", "c")
+        for v in rng.choice(40, size=int(rng.integers(1, 12)), replace=False)
+    ]
+    hist = spark.createDataFrame(rows, "g string, v double, c long").repartition(3)
+    p = 0.37
+
+    def want(sub):
+        s = np.sort(np.repeat([v for _, v, _ in sub], [c for *_, c in sub]))
+        n = len(s)
+        picks = [float(s[max(math.ceil(r), 1) - 1]) if r <= n else None
+                 for r in (0, 1, n, n + 1, n * p)]
+        return n, picks
+
+    def got(keys):
+        cum = running_counts(hist, keys, "v", "c")
+        assert _count_nodes(_plan(cum), "Window") == 1
+        n = F.col("_n")
+        ranks = [F.lit(0), F.lit(1), n, n + 1, n.cast("double") * F.lit(p)]
+        out = cum.groupBy(*keys).agg(
+            F.max("_n").alias("n"), *[value_at_rank("v", r).alias(f"r{j}") for j, r in enumerate(ranks)]
+        )
+        return {
+            tuple(r[k] for k in keys): (r["n"], [r[f"r{j}"] for j in range(len(ranks))])
+            for r in out.collect()
+        }
+
+    assert got(["g"]) == {(g,): want([r for r in rows if r[0] == g]) for g in ("a", "b", "c")}
+    assert got([]) == {(): want(rows)}

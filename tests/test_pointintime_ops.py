@@ -1488,6 +1488,29 @@ def test_winsorize_clips_to_group_cutoffs(spark):
     assert (got.signal_w[got.signal > q.q_95] == q.q_95).all()
 
 
+def test_winsorize_full_range_keeps_every_value(spark):
+    """lower=0.0 / upper=1.0 clip to each group's min and max, so no value
+    moves (the two bounds once resolved to one column name)."""
+    from z_rad_spark.operators.encoding import winsorize
+
+    df, pdf = _turns(spark, n_conv=4, n_turns=30, seed=61)
+    df = df.withColumn("role", F.when(F.col("turn_idx") % 2 == 0, "a").otherwise("b"))
+    pdf = pdf.assign(role=np.where(pdf.turn_idx % 2 == 0, "a", "b"))
+    got = winsorize(df, lower=0.0, upper=1.0, group_col="role").toPandas()
+    assert (got.signal_w == got.signal).all()
+    for role, grp in pdf.groupby("role"):
+        sub = got[got.role == role]
+        assert (sub._lo == grp.signal.min()).all() and (sub._hi == grp.signal.max()).all()
+
+
+def test_value_quantiles_rejects_probabilities_sharing_a_name(spark):
+    from z_rad_spark.operators.encoding import value_quantiles
+
+    df, _ = _turns(spark, n_conv=2, n_turns=10, seed=67)
+    with pytest.raises(ValueError, match="q_0"):
+        value_quantiles(df.withColumn("role", F.lit("all")), probs=(0.0, 1.0))
+
+
 def test_feature_cross_deterministic_and_bounded(spark):
     from z_rad_spark.operators.encoding import with_feature_cross
 

@@ -32,7 +32,14 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .exprs import epoch_us, literal_rows
+from .exprs import (
+    _sql_literal,
+    chain_sql,
+    epoch_us,
+    literal_rows,
+    running_counts,
+    value_at_rank,
+)
 from .sessionize import opens_session
 from .skew import conv_window
 
@@ -109,9 +116,10 @@ def value_histogram_asof(
     """
     cuts = list(cutoffs)
     x = F.col(signal_col).cast("double")
-    iv = F.lit(0)
-    for c in cuts:
-        iv = iv + F.when(F.col("ts") > F.to_timestamp(F.lit(c)), 1).otherwise(0)
+    # one parsed expression: a Column-API term per cutoff costs dozens of
+    # py4j calls each
+    terms = [f"CASE WHEN ts > {_sql_literal(c, 'timestamp')} THEN 1 ELSE 0 END" for c in cuts]
+    iv = F.expr(chain_sql(["0", *terms]))
     base = df.select("conv_id", x.alias("x"), iv.alias("iv")).where(
         (F.col("iv") < len(cuts)) & F.col("x").isNotNull() & ~F.isnan("x")
     )
@@ -674,20 +682,10 @@ def quantile_state_asof(
     per (conversation, cutoff) with a signal in its history.
     """
     hist = value_histogram_asof(df, spark, cutoffs, signal_col)
-    w_x = Window.partitionBy("conv_id", "as_of").orderBy("x")
-    running = w_x.rowsBetween(Window.unboundedPreceding, 0)
-    whole = w_x.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cum = hist.select(
-        "conv_id",
-        "as_of",
-        "x",
-        F.sum("c").over(running).cast("long").alias("_cm"),
-        F.sum("c").over(whole).cast("long").alias("_n"),
-    )
+    cum = running_counts(hist, ["conv_id", "as_of"], "x", "c")
 
     def pick(q):
-        thresh = F.ceil(F.lit(q) * F.col("_n")).cast("long")
-        return F.min(F.when(F.col("_cm") >= thresh, F.col("x")))
+        return value_at_rank("x", F.ceil(F.lit(q) * F.col("_n")).cast("long"))
 
     return cum.groupBy("conv_id", "as_of").agg(
         F.max("_n").cast("long").alias("n"),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .drift import _is_ref
-from .exprs import epoch_us, normalize_text, ordered_sums, words
+from .exprs import epoch_us, normalize_text, ordered_sums, running_counts, value_at_rank, words
 
 
 def _word_ngrams(toks: F.Column, n: int) -> F.Column:
@@ -471,24 +471,10 @@ def perplexity_buckets(
     scored = scored.join(df.select(id_col, lang_col), id_col)
     s = scored.withColumn("_nll6", F.round("nll", 6))
     hist = s.groupBy(lang_col, "_nll6").agg(F.count("*").cast("long").alias("_c"))
-    w = Window.partitionBy(lang_col).orderBy("_nll6")
-    cum = hist.withColumn("_cum", F.sum("_c").over(w)).withColumn(
-        "_n", F.sum("_c").over(Window.partitionBy(lang_col))
-    )
-    cuts = cum.groupBy(lang_col).agg(
-        F.min(
-            F.when(
-                F.col("_cum").cast("double") >= F.col("_n").cast("double") * F.lit(head_frac),
-                F.col("_nll6"),
-            )
-        ).alias("_head_cut"),
-        F.min(
-            F.when(
-                F.col("_cum").cast("double")
-                >= F.col("_n").cast("double") * F.lit(head_frac + middle_frac),
-                F.col("_nll6"),
-            )
-        ).alias("_mid_cut"),
+    n = F.col("_n").cast("double")
+    cuts = running_counts(hist, [lang_col], "_nll6", "_c").groupBy(lang_col).agg(
+        value_at_rank("_nll6", n * F.lit(head_frac)).alias("_head_cut"),
+        value_at_rank("_nll6", n * F.lit(head_frac + middle_frac)).alias("_mid_cut"),
     )
     out = s.join(F.broadcast(cuts), lang_col).withColumn(
         "bucket",

@@ -46,7 +46,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .exprs import chain, epoch_us, ordered_sums, words
+from .exprs import chain, epoch_us, ordered_sums, running_counts, value_at_rank, words
 from .skew import ORDER as _ORDER, conv_window
 
 
@@ -906,7 +906,8 @@ def brown_forsythe(
 
     Scale: per-group median via one sorted collect of the group's
     values — bounded by per-group row count (fine for per-source audits;
-    for huge groups swap in the compacted-histogram rank pick). The
+    for huge groups swap in ``exprs.value_at_rank`` over the compacted
+    value histogram). The
     median table is k rows, broadcast back; everything after is one
     map-side-combined groupBy.
 
@@ -1655,18 +1656,12 @@ def conformal_interval(
         .groupBy("_g", "n_ref", "_r")
         .agg(F.sum("_c").cast("long").alias("_c"))
     )
-    w_cum = (
-        Window.partitionBy("_g")
-        .orderBy("_r")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
     k = (F.lit(level_pct) * (F.col("n_ref") + 1) + 99).cast("long") / F.lit(100)
     k = F.floor(k).cast("long")  # integer ceil((n_ref+1)*pct/100)
     radius = (
-        rh.withColumn("_cum", F.sum("_c").over(w_cum))
-        .where(F.col("_cum") >= F.least(k, F.col("n_ref")))
+        running_counts(rh, ["_g"], "_r", "_c")
         .groupBy("_g")
-        .agg(F.min("_r").alias("radius"))
+        .agg(value_at_rank("_r", F.least(k, F.col("n_ref"))).alias("radius"))
     )
     cur = (
         base.where(~F.col("_ref"))
@@ -3203,18 +3198,10 @@ def mood_median(
         .agg(F.count("*").cast("long").alias("_c"))
     )
     gl = hist.groupBy("_v").agg(F.sum("_c").cast("long").alias("_gc"))
-    w_cum = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    med = running_counts(gl, [], "_v", "_gc").agg(
+        value_at_rank("_v", F.floor((F.col("_n") + F.lit(1)) / F.lit(2))).alias("_med"),
+        F.max("_n").alias("_n"),
     )
-    lv = gl.select(
-        "_v",
-        F.sum("_gc").over(w_cum).cast("long").alias("_cum"),
-        F.sum("_gc").over(w_all).cast("long").alias("_n"),
-    )
-    med = lv.where(
-        F.col("_cum") >= F.floor((F.col("_n") + F.lit(1)) / F.lit(2))
-    ).agg(F.min("_v").alias("_med"), F.max("_n").alias("_n"))
     from pyspark.sql.functions import broadcast
 
     hb = hist.crossJoin(broadcast(med))

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .drift import two_class_ecdf
-from .exprs import chain, ordered_sums
+from .exprs import chain, ordered_sums, running_counts, value_at_rank
 
 
 def with_loo_target_encoding(
@@ -231,9 +231,9 @@ def value_quantiles(
 ) -> DataFrame:
     """Per-group exact quantile table on the COMPACTED value histogram:
     q_p = the smallest observed value whose cumulative count reaches
-    ceil-style p * n (the hist_asof / perplexity_buckets cutoff
-    convention — ties collapse to one value, so the answer is a pure
-    function of the distribution, not of engine order).
+    p * n (``exprs.value_at_rank`` with the rank compared as a double),
+    so ties collapse to one value and the answer is a pure function of
+    the distribution, not of engine order.
 
     Scale shape: one (group, value) aggregate compacts the input to
     |groups| x |distinct values| rows; the cumulative window and the
@@ -242,41 +242,35 @@ def value_quantiles(
     as literal doubles, so the p * n comparison is the identical IEEE
     multiply in the SQL oracle.
 
-    Output: (group_col, n long, q_<p> double ...) — one row per group.
+    Output: (group_col, n long, q_<p> double ...) — one row per group,
+    ``q_<p>`` the digits of p after the point (``q_25`` for 0.25,
+    ``q_0`` for 0.0 and for 1.0); two probabilities that give one name
+    raise ValueError.
     """
-    from pyspark.sql import Window
+    named = {}
+    for p in probs:
+        name = f"q_{str(p).replace('.', '')[1:] or '0'}"
+        if name in named:
+            raise ValueError(
+                f"value_quantiles: probabilities {named[name]} and {p} both name column {name}"
+            )
+        named[name] = p
+    return _quantile_table(df, signal_col, named, group_col)
 
+
+def _quantile_table(df: DataFrame, signal_col: str, named: dict, group_col: str) -> DataFrame:
+    """:func:`value_quantiles` with the output column named by ``named``'s keys."""
     x = F.col(signal_col).cast("double")
     hist = (
         df.where(x.isNotNull())
         .groupBy(F.col(group_col), x.alias("_val"))
         .agg(F.count("*").cast("long").alias("_c"))
     )
-    w_cum = (
-        Window.partitionBy(group_col)
-        .orderBy("_val")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    n = F.col("_n").cast("double")
+    return running_counts(hist, [group_col], "_val", "_c").groupBy(group_col).agg(
+        F.max("_n").cast("long").alias("n"),
+        *[value_at_rank("_val", n * F.lit(float(p))).alias(k) for k, p in named.items()],
     )
-    w_all = Window.partitionBy(group_col)
-    cum = hist.select(
-        group_col,
-        "_val",
-        F.sum("_c").over(w_cum).alias("_cum"),
-        F.sum("_c").over(w_all).alias("_n"),
-    )
-    aggs = [F.max("_n").cast("long").alias("n")]
-    for p in probs:
-        name = f"q_{str(p).replace('.', '')[1:] or '0'}"
-        aggs.append(
-            F.min(
-                F.when(
-                    F.col("_cum").cast("double")
-                    >= F.col("_n").cast("double") * F.lit(float(p)),
-                    F.col("_val"),
-                )
-            ).alias(name)
-        )
-    return cum.groupBy(group_col).agg(*aggs)
 
 
 def winsorize(
@@ -289,21 +283,14 @@ def winsorize(
     """Per-group winsorization (percentile clipping): values below the
     lower value-cutoff rise to it, values above the upper cutoff fall to
     it — the outlier guard a feature pipeline applies before scaling.
-    Cutoffs are the value_quantiles convention (smallest value whose
-    cumulative count reaches p * n on the compacted histogram), so the
-    clip bounds are deterministic and the one-row-per-group cutoff frame
-    broadcasts back onto the input.
+    Cutoffs are :func:`value_quantiles`' (computed by the same builder),
+    so the clip bounds are deterministic and the one-row-per-group
+    cutoff frame broadcasts back onto the input.
 
     Adds: <signal_col>_w double (clipped), plus _lo/_hi bound columns.
     """
-    q = value_quantiles(df, signal_col, (lower, upper), group_col)
-    lo_name = f"q_{str(lower).replace('.', '')[1:] or '0'}"
-    hi_name = f"q_{str(upper).replace('.', '')[1:] or '0'}"
-    cuts = q.select(
-        group_col,
-        F.col(lo_name).alias("_lo"),
-        F.col(hi_name).alias("_hi"),
-    )
+    q = _quantile_table(df, signal_col, {"_lo": lower, "_hi": upper}, group_col)
+    cuts = q.select(group_col, "_lo", "_hi")
     x = F.col(signal_col).cast("double")
     # LEFT join (the 'adds columns' contract): rows whose group has no
     # cutoffs — NULL group, or all-NULL signals — keep their value

@@ -18,6 +18,15 @@ spelled here once, each beside the oracle fragment that replays it
   DuckDB's ``epoch_us(ts)``.
 * :func:`mix31` / :func:`mix31_np` — the square-mod 31-bit mixing hash;
   ``(((x * x + x) % 2147483647) * 48271) % 2147483647``.
+
+Every exact order statistic is one rank pick over a compacted
+``(keys, value) -> count`` histogram: :func:`running_counts` adds the
+running count and the group total over one value-ordered window, and
+:func:`value_at_rank` picks the smallest value whose running count
+reaches the rank; ``MIN(CASE WHEN cum >= r THEN value END)`` over
+``SUM(c) OVER (PARTITION BY keys ORDER BY value ROWS BETWEEN UNBOUNDED
+PRECEDING AND CURRENT ROW) AS cum``. Each caller keeps its own rank
+rule (``ceil(q n)``, ``floor((n - 1) q) + 1``, ``n p`` as a double, ...).
 """
 
 from __future__ import annotations
@@ -27,7 +36,7 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DataType, DoubleType
@@ -200,6 +209,33 @@ def ordered_sums(order, **terms: Column) -> list[Column]:
         return F.aggregate(arr, F.lit(0.0), lambda a, e: a + e[name]).alias(name)
 
     return [fold(n) for n in terms]
+
+
+def running_counts(hist: DataFrame, keys, value: str, count: str) -> DataFrame:
+    """``hist`` plus ``_cum``, the running sum of ``count`` in ascending
+    ``value`` order (ROWS frame, so ties in ``value`` still step), and
+    ``_n``, the group total, both over ONE ``partitionBy(*keys)
+    .orderBy(value)`` spec: Spark plans the two frames, and any further
+    column a caller adds over the same spec, as one Window operator.
+    ``keys=[]`` is the corpus-wide case (one task)."""
+    w = Window.partitionBy(*keys).orderBy(value)
+    return hist.select(
+        "*",
+        F.sum(count).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("_cum"),
+        F.sum(count)
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("_n"),
+    )
+
+
+def value_at_rank(value: str | Column, rank: Column, cum: str = "_cum") -> Column:
+    """The aggregate ``min(when(cum >= rank, value))`` over a
+    :func:`running_counts` frame: the smallest value whose running count
+    reaches the 1-based ``rank``, NULL when ``rank`` exceeds the total.
+    With counts >= 1 the running count rises strictly in value order, so
+    this is the row with ``cum - count < rank <= cum``."""
+    v = F.col(value) if isinstance(value, str) else value
+    return F.min(F.when(F.col(cum) >= rank, v))
 
 
 @pandas_udf(DoubleType())  # a type object: no DDL parse, so no session at import

@@ -23,10 +23,10 @@ Three design contracts:
   that runs on that partitioning with no further exchange: at most two
   Window operators over ONE ``(conv_id, as_of)`` spec ordered by value
   (by grey level for ``hist_asof``), so one sort, then one
-  ``groupBy(conv_id, as_of)``. Order statistics are rank picks on the
-  running count ``cum`` — the value at rank r is the row with
-  ``cum - c < r <= cum`` — and a value range bounded by order statistics
-  is a rank predicate: ``x >= value_at_rank(r)`` iff ``cum >= r`` and
+  ``groupBy(conv_id, as_of)``. Order statistics are
+  ``exprs.value_at_rank`` picks on the running count ``cum``, and a value
+  range bounded by order statistics is a rank predicate:
+  ``x >= value_at_rank(r)`` iff ``cum >= r`` and
   ``x <= value_at_rank(r)`` iff ``cum - c < r``. The stats plan thus
   has 2 hash exchanges, 2 Windows and 1 Sort; ``hist_asof`` has 2, 2
   and 2 (its per-cutoff min/max binning window is the second).
@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..session import memo_plan
 from .asof import value_histogram_asof
+from .exprs import running_counts, value_at_rank
 
 SENTINEL = 1_000_000.0
 
@@ -83,9 +84,9 @@ def stats_asof(
     Pure plan construction (no job, no collect), so the built frame is
     memoized per (application, input frame, cutoffs, signal)."""
     cutoffs = tuple(cutoffs)
-    # on a 29-cutoff grid the Column-API build makes ~7,000 py4j calls
-    # (~2,000 of them the histogram's cutoff chain): ~0.9 s on a warm
-    # JVM, ~2.1 s as the first build on a fresh one (4-core x86 host)
+    # on a 29-cutoff grid the Column-API build makes ~5,200 py4j calls
+    # (~400 of them the value histogram's): ~0.6 s on a warm JVM (4-core
+    # x86 host)
     return memo_plan(
         spark,
         ("stats_asof", id(df), cutoffs, signal_col),
@@ -105,26 +106,22 @@ def _stats_asof_build(
     # float sum therefore runs in ascending x order, whichever operator
     # holds it.
     c, xx = F.col("c"), F.col("x")
-    wo = Window.partitionBy(*KEYS).orderBy("x")
-    run = wo.rowsBetween(Window.unboundedPreceding, 0)
-    whole = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    r = h.select(
-        *KEYS, "x", "c",
-        F.sum(c).over(whole).alias("n"),
-        F.sum(c * xx).over(whole).alias("s1"),
-        F.sum(c).over(run).alias("cum"),
+    whole = (
+        Window.partitionBy(*KEYS)
+        .orderBy("x")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
+    # s1 goes below the running counts so that Catalyst merges the two
+    # (its c * x input is projected beneath its own window)
+    r = running_counts(
+        h.select(*KEYS, "x", "c", F.sum(c * xx).over(whole).alias("s1")), KEYS, "x", "c"
+    ).withColumnRenamed("_n", "n")
 
-    cum, n = F.col("cum"), F.col("n")
+    cum, n = F.col("_cum"), F.col("n")
 
     def rank(qf: float) -> Column:
         # 1-based rank of the lower order statistic of the qf percentile
         return F.floor((n - 1).cast("double") * F.lit(qf)).cast("long") + 1
-
-    def at_rank(r: Column) -> Column:
-        # value at 1-based rank r: the histogram row whose cumulative
-        # range [cum-c+1, cum] contains r
-        return F.max(F.when((cum - c < r) & (r <= cum), xx))
 
     # The rank-trimmed range [value_at_rank(r_lo), value_at_rank(r_hi)]
     # is a predicate on rank alone: x >= value_at_rank(r) <=> cum >= r and
@@ -135,9 +132,9 @@ def _stats_asof_build(
     r_lo = rank(0.1) + F.when(h10 - F.floor(h10) > 0, 1).otherwise(0)
     trim = (cum >= r_lo) & (cum - c < rank(0.9))
     r = r.select(
-        *KEYS, "x", "c", "n", "s1", "cum",
-        at_rank(rank(0.5)).over(whole).alias("a50"),
-        at_rank(rank(0.5) + 1).over(whole).alias("b50"),
+        *KEYS, "x", "c", "n", "s1", "_cum",
+        value_at_rank(xx, rank(0.5)).over(whole).alias("a50"),
+        value_at_rank(xx, rank(0.5) + 1).over(whole).alias("b50"),
         F.sum(F.when(trim, c)).over(whole).alias("m"),
         F.sum(F.when(trim, c * xx)).over(whole).alias("st"),
     )
@@ -145,8 +142,8 @@ def _stats_asof_build(
     rank_picks = []
     for nm, qf in _QFRACS:
         if nm != "50":
-            rank_picks.append(at_rank(rank(qf)).alias(f"a{nm}"))
-            rank_picks.append(at_rank(rank(qf) + 1).alias(f"b{nm}"))
+            rank_picks.append(value_at_rank(xx, rank(qf)).alias(f"a{nm}"))
+            rank_picks.append(value_at_rank(xx, rank(qf) + 1).alias(f"b{nm}"))
     j = r.groupBy(*KEYS).agg(
         *[F.first(col).alias(col) for col in ["n", "s1", "a50", "b50", "m", "st"]],
         F.sum(c * (xx * xx)).alias("s2"),
@@ -278,16 +275,18 @@ def _hist_asof_build(
     # included) run in that order.
     counts = fbn_hist_asof(df, spark, cutoffs, n_bins, signal_col)
     wg = Window.partitionBy(*KEYS).orderBy("grey")
-    whole = wg.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ci = F.col("ci")
     c = ci.cast("double")
-    r = counts.select(
-        *KEYS, "grey", "ci",
-        F.sum(ci).over(whole).alias("n"),
-        F.sum(ci).over(wg.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
-        F.lag(c).over(wg).alias("prev_c"),
-        F.lead(c).over(wg).alias("next_c"),
-    )
+    # lag/lead go below the running counts so that Catalyst merges the
+    # two (their double casts are projected beneath their own window)
+    r = running_counts(
+        counts.select(
+            *KEYS, "grey", "ci",
+            F.lag(c).over(wg).alias("prev_c"),
+            F.lead(c).over(wg).alias("next_c"),
+        ),
+        KEYS, "grey", "ci",
+    ).withColumnRenamed("_n", "n")
     prev_c, next_c = F.col("prev_c"), F.col("next_c")
     grad = (
         F.when(prev_c.isNull() & next_c.isNull(), F.lit(None).cast("double"))
@@ -295,7 +294,7 @@ def _hist_asof_build(
         .when(next_c.isNull(), c - prev_c)
         .otherwise((next_c - prev_c) / 2)
     )
-    cum, n, gy = F.col("cum"), F.col("n"), F.col("grey")
+    n, gy = F.col("n"), F.col("grey")
     p = c / n
 
     def grey_at_least(key: Column) -> Column:
@@ -320,8 +319,8 @@ def _hist_asof_build(
         F.sum(ci * (gy * gy)).alias("s2"),
         F.min(gy).alias("ih_min"),
         F.max(gy).alias("ih_max"),
-        F.max(F.when((cum - ci < j50 + 1) & (j50 + 1 <= cum), gy)).alias("a50"),
-        F.max(F.when((cum - ci < j50 + 2) & (j50 + 2 <= cum), gy)).alias("b50"),
+        value_at_rank(gy, j50 + 1).alias("a50"),
+        value_at_rank(gy, j50 + 2).alias("b50"),
     )
     nn = F.col("n")
     mean = F.col("s1") / nn

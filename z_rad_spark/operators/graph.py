@@ -40,7 +40,6 @@ def pagerank_bipartite(
     n_iter: int = 4,
     damping: float = 0.85,
     top_k: int = 20,
-    exact_fold: bool = True,
 ) -> DataFrame:
     """PageRank over the bipartite interaction graph (left entities x
     right entities, an undirected edge per DISTINCT interacting pair,
@@ -52,14 +51,11 @@ def pagerank_bipartite(
     No dangling-node correction is needed: the bipartite symmetric
     construction gives every node at least one out- and in-edge.
 
-    Determinism: with exact_fold=True (the oracle-gated mode) each
-    node's incoming contributions are ``exprs.ordered_sums`` by src,
-    so the SQL oracle replays every iteration bit-for-bit; the per-node
-    collect is bounded by in-degree — fine for the entity-interaction
-    graphs here (right-side hubs collect the left cardinality), but a
-    web-scale hub would want exact_fold=False, which swaps the fold for
-    a plain partial-aggregated F.sum (same plan shape as every other
-    aggregate; compare with tolerance, not hashes).
+    Determinism: each node's incoming contributions are
+    ``exprs.ordered_sums`` by src, so the SQL oracle replays every
+    iteration bit-for-bit; the per-node collect is bounded by in-degree
+    — fine for the entity-interaction graphs here (right-side hubs
+    collect the left cardinality).
 
     Scale: per iteration, one equi-join (ranks x degrees on node — both
     node-cardinality tables), one equi-join (edges x shares on src),
@@ -104,10 +100,7 @@ def pagerank_bipartite(
             (F.col("pr") / F.col("od").cast("double")).alias("sh"),
         )
         inbox = edges.join(share, "src")
-        if exact_fold:
-            folded = inbox.groupBy("dst").agg(*ordered_sums(["src"], _c=F.col("sh")))
-        else:
-            folded = inbox.groupBy("dst").agg(F.sum("sh").alias("_c"))
+        folded = inbox.groupBy("dst").agg(*ordered_sums(["src"], _c=F.col("sh")))
         pr = folded.select(
             F.col("dst").alias("node"),
             (base + F.lit(damping) * F.col("_c")).alias("pr"),
@@ -231,9 +224,7 @@ def hits_bipartite(
     Scale: per half-iteration one equi-join (pairs x scores) + one
     aggregation exchange; the pair table is persisted and reused 2K
     times (the [[pagerank_bipartite]] registry idiom). The
-    normalization is a single-row aggregate broadcast back — at
-    web-hub scale swap the folds for plain sums as in pagerank's
-    exact_fold=False.
+    normalization is a single-row aggregate broadcast back.
 
     Output: 2 * top_k rows (kind string 'hub'|'authority', node
     string, score double), hubs first, each block by (score desc,

@@ -28,7 +28,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import convstats
-from .exprs import MIX31_A, epoch_us, literal_frame, mix31, ordered_sums, words
+from .exprs import (
+    MIX31_A,
+    epoch_us,
+    literal_frame,
+    mix31,
+    ordered_sums,
+    running_counts,
+    value_at_rank,
+    words,
+)
 from .sessionize import spearman_trend
 from .skew import ORDER as _ORDER, conv_window
 
@@ -2741,28 +2750,14 @@ def handoff_latency_matrix(df: DataFrame) -> DataFrame:
     hist = pairs.groupBy("_u", "_v", "_gap").agg(
         F.count("*").cast("long").alias("_m")
     )
-    w_cum = (
-        Window.partitionBy("_u", "_v")
-        .orderBy("_gap")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("_u", "_v")
-    cum = hist.select(
-        "_u",
-        "_v",
-        "_gap",
-        F.sum("_m").over(w_cum).cast("long").alias("_cm"),
-        F.sum("_m").over(w_all).cast("long").alias("_n"),
-        F.sum(F.col("_gap") * F.col("_m")).over(w_all).cast("long").alias("_sg"),
-    )
+    cum = running_counts(hist, ["_u", "_v"], "_gap", "_m")
 
     def pick(q):
-        thresh = F.ceil(F.lit(q) * F.col("_n")).cast("long")
-        return F.min(F.when(F.col("_cm") >= thresh, F.col("_gap")))
+        return value_at_rank("_gap", F.ceil(F.lit(q) * F.col("_n")).cast("long"))
 
     g = cum.groupBy("_u", "_v").agg(
         F.max("_n").alias("n"),
-        F.max("_sg").alias("_sgm"),
+        F.sum(F.col("_gap") * F.col("_m")).cast("long").alias("_sgm"),
         pick(0.50).alias("_p50"),
         pick(0.90).alias("_p90"),
     )
@@ -3124,19 +3119,10 @@ def first_response_stats(df: DataFrame) -> DataFrame:
     hist = base.where(F.col("_s").isNotNull()).groupBy("_s").agg(
         F.count("*").cast("long").alias("_m")
     )
-    w_cum = Window.orderBy("_s").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "_s",
-        F.sum("_m").over(w_cum).cast("long").alias("_cm"),
-        F.sum("_m").over(w_all).cast("long").alias("_n"),
-    )
+    cum = running_counts(hist, [], "_s", "_m")
 
     def pick(q):
-        thresh = F.ceil(F.lit(q) * F.col("_n")).cast("long")
-        return F.min(F.when(F.col("_cm") >= thresh, F.col("_s")))
+        return value_at_rank("_s", F.ceil(F.lit(q) * F.col("_n")).cast("long"))
 
     qs = cum.agg(
         F.max("_n").alias("n_answered"),
@@ -3403,19 +3389,10 @@ def view_to_purchase(
     hist = scored.where(F.col("_d").isNotNull()).groupBy("_d").agg(
         F.count("*").cast("long").alias("_m")
     )
-    w_cum = Window.orderBy("_d").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "_d",
-        F.sum("_m").over(w_cum).cast("long").alias("_cm"),
-        F.sum("_m").over(w_all).cast("long").alias("_n"),
-    )
+    cum = running_counts(hist, [], "_d", "_m")
 
     def pick(q):
-        thresh = F.ceil(F.lit(q) * F.col("_n")).cast("long")
-        return F.min(F.when(F.col("_cm") >= thresh, F.col("_d")))
+        return value_at_rank("_d", F.ceil(F.lit(q) * F.col("_n")).cast("long"))
 
     qs = cum.agg(
         F.max("_n").alias("_nconv"),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..session import persist_intermediate
 from . import convstats
-from .exprs import epoch_us, ordered_sums, words
+from .exprs import epoch_us, ordered_sums, running_counts, value_at_rank, words
 from .skew import ORDER as _ORDER, conv_window, map_conversations
 
 
@@ -1611,30 +1611,19 @@ def key_skew_profile(df: DataFrame, key_col: str = "conv_id") -> DataFrame:
         F.count("*").cast("long").alias("_c")
     )
     hist = counts.groupBy("_c").agg(F.count("*").cast("long").alias("_m"))
-    w_cum = Window.orderBy("_c").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "_c",
-        F.sum("_m").over(w_cum).cast("long").alias("_cum"),
-        F.sum("_m").over(w_all).cast("long").alias("_nk"),
-        F.sum(F.col("_c") * F.col("_m")).over(w_all).cast("long").alias("_nr"),
-        F.max("_c").over(w_all).cast("long").alias("_mx"),
-    )
+    cum = running_counts(hist, [], "_c", "_m")
 
     def pick(q):
         # smallest count whose cumulative key coverage reaches ceil(q*nk)
-        thresh = F.ceil(F.lit(q) * F.col("_nk")).cast("long")
-        return F.min(F.when(F.col("_cum") >= thresh, F.col("_c")))
+        return value_at_rank("_c", F.ceil(F.lit(q) * F.col("_n")).cast("long"))
 
     g = cum.agg(
-        F.max("_nk").alias("n_keys"),
-        F.max("_nr").alias("n_rows"),
+        F.max("_n").alias("n_keys"),
+        F.sum(F.col("_c") * F.col("_m")).cast("long").alias("n_rows"),
         pick(0.50).cast("long").alias("p50"),
         pick(0.90).cast("long").alias("p90"),
         pick(0.99).cast("long").alias("p99"),
-        F.max("_mx").cast("long").alias("max_count"),
+        F.max("_c").cast("long").alias("max_count"),
     )
     return g.select(
         F.col("n_keys").cast("long").alias("n_keys"),

@@ -20,10 +20,10 @@ by the configured rsd / accuracy).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .exprs import MIX31_A, mix31, ordered_sums
+from .exprs import MIX31_A, mix31, ordered_sums, running_counts, value_at_rank
 
 
 def approx_distinct_by(
@@ -517,22 +517,13 @@ def approx_quantile_check(
     hist = df.where(x.isNotNull()).groupBy(x.alias("_v")).agg(
         F.count("*").cast("long").alias("_m")
     )
-    w_cum = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "_v",
-        F.sum("_m").over(w_cum).cast("long").alias("_cm"),
-        F.sum("_m").over(w_all).cast("long").alias("_n"),
-    )
+    cum = running_counts(hist, [], "_v", "_m")
     approx = df.where(x.isNotNull()).agg(
         F.percentile_approx(x, [0.5, 0.9, 0.99], int(accuracy)).alias("_ap")
     )
 
     def exact(q):
-        thresh = F.ceil(F.lit(q) * F.col("_n")).cast("long")
-        return F.min(F.when(F.col("_cm") >= thresh, F.col("_v")))
+        return value_at_rank("_v", F.ceil(F.lit(q) * F.col("_n")).cast("long"))
 
     g = cum.agg(
         F.max("_n").alias("n"),
@@ -543,7 +534,7 @@ def approx_quantile_check(
     # rank of the estimate = exact CDF count at-or-below it; the GK
     # contract: |rank - q n| <= n / accuracy. The rank lookup folds
     # over the compacted histogram (broadcast back as an array).
-    cells = cum.select(F.struct("_v", "_cm").alias("_e")).agg(
+    cells = cum.select(F.struct("_v", "_cum").alias("_e")).agg(
         F.sort_array(F.collect_list("_e")).alias("_cells")
     )
     g = g.crossJoin(F.broadcast(cells))
@@ -553,7 +544,7 @@ def approx_quantile_check(
         return F.aggregate(
             F.col("_cells"),
             F.lit(0).cast("long"),
-            lambda acc, e: F.when(e["_v"] <= val, e["_cm"]).otherwise(acc),
+            lambda acc, e: F.when(e["_v"] <= val, e["_cum"]).otherwise(acc),
         )
 
     def ok(idx, q):
@@ -571,7 +562,7 @@ def approx_quantile_check(
         prev = F.aggregate(
             F.col("_cells"),
             F.lit(0).cast("long"),
-            lambda acc, e: F.when(e["_v"] < est, e["_cm"]).otherwise(acc),
+            lambda acc, e: F.when(e["_v"] < est, e["_cum"]).otherwise(acc),
         )
         return (rk.cast("double") >= lo) & (prev.cast("double") <= hi)
 
