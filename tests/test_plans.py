@@ -725,8 +725,12 @@ def test_two_class_ecdf_preaggregates_before_window(spark, name):
     must collapse to |groups| x |values| rows BEFORE any window runs
     (the whole point of the shape at 10^12 turns) — the lowest Window
     node sits above a HashAggregate — and join nothing. energy_drift
-    runs no window at all; its pair grid is the one join."""
-    lines = _plan(_two_class_op_frame(spark, name)).splitlines()
+    runs no window at all; its pair grid is the one join. The running
+    sums, totals and next value ride one value-ordered Window operator
+    (score_ks adds its row_number pick)."""
+    plan = _plan(_two_class_op_frame(spark, name))
+    assert _count_nodes(plan, "Window") == {"energy_drift": 0, "score_ks": 2}.get(name, 1), plan
+    lines = plan.splitlines()
     wins = [i for i, ln in enumerate(lines) if "Window" in ln]
     aggs = [i for i, ln in enumerate(lines) if "HashAggregate" in ln]
     joins = [ln for ln in lines if "Join" in ln]

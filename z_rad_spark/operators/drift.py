@@ -68,20 +68,18 @@ def two_class_ecdf(df: DataFrame, value: Column, is_a: Column, keys=()) -> DataF
     ``_na``/``_nb`` — all exact longs — plus ``_next``, the next larger
     value (NULL on the last), the width of each ECDF step. It filters
     nothing: each caller drops its own NULL values or flags first.
-    Windows whose outputs a caller never reads are pruned from the plan.
+
+    The two-count form of ``exprs.running_counts``, on its rule: every
+    column rides ONE value-ordered spec (the totals take its whole
+    frame), so Spark plans them as one Window operator, and columns a
+    caller never reads are pruned from it.
 
     Output: (*keys, _val, _a, _b, _ca, _cb, _na, _nb, _next).
     """
     keys = list(keys)
     order = Window.partitionBy(*keys).orderBy("_val")
     run = order.rowsBetween(Window.unboundedPreceding, 0)
-    # keyed totals take the bare partition; a keyless frame is one sorted
-    # partition already, so its totals share the running sort's window
-    whole = (
-        Window.partitionBy(*keys)
-        if keys
-        else order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
+    whole = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     hist = df.groupBy(*keys, value.alias("_val")).agg(
         F.count(F.when(is_a, 1)).alias("_a"),
         F.count(F.when(~is_a, 1)).alias("_b"),

@@ -228,14 +228,13 @@ def running_counts(hist: DataFrame, keys, value: str, count: str) -> DataFrame:
     )
 
 
-def value_at_rank(value: str | Column, rank: Column, cum: str = "_cum") -> Column:
-    """The aggregate ``min(when(cum >= rank, value))`` over a
+def value_at_rank(value: str, rank: Column) -> Column:
+    """The aggregate ``min(when(_cum >= rank, value))`` over a
     :func:`running_counts` frame: the smallest value whose running count
     reaches the 1-based ``rank``, NULL when ``rank`` exceeds the total.
     With counts >= 1 the running count rises strictly in value order, so
-    this is the row with ``cum - count < rank <= cum``."""
-    v = F.col(value) if isinstance(value, str) else value
-    return F.min(F.when(F.col(cum) >= rank, v))
+    this is the row with ``_cum - count < rank <= _cum``."""
+    return F.min(F.when(F.col("_cum") >= rank, F.col(value)))
 
 
 @pandas_udf(DoubleType())  # a type object: no DDL parse, so no session at import

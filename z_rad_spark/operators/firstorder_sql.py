@@ -61,8 +61,9 @@ _QFRACS = (("10", 0.1), ("25", 0.25), ("50", 0.5), ("75", 0.75), ("90", 0.9))
 
 def _lerp(nm: str, qf: float) -> Column:
     """NumPy-convention percentile lerp over order statistics a{nm}/b{nm}
-    (same tree as kernels/firstorder._pct_sorted and the SQL oracles)."""
-    h = (F.col("n") - 1).cast("double") * F.lit(qf)
+    of ``_n`` values (same tree as kernels/firstorder._pct_sorted and the
+    SQL oracles)."""
+    h = (F.col("_n") - 1).cast("double") * F.lit(qf)
     t = h - F.floor(h)
     a, b = F.col(f"a{nm}"), F.col(f"b{nm}")
     return (
@@ -115,9 +116,9 @@ def _stats_asof_build(
     # (its c * x input is projected beneath its own window)
     r = running_counts(
         h.select(*KEYS, "x", "c", F.sum(c * xx).over(whole).alias("s1")), KEYS, "x", "c"
-    ).withColumnRenamed("_n", "n")
+    )
 
-    cum, n = F.col("_cum"), F.col("n")
+    cum, n = F.col("_cum"), F.col("_n")
 
     def rank(qf: float) -> Column:
         # 1-based rank of the lower order statistic of the qf percentile
@@ -132,9 +133,9 @@ def _stats_asof_build(
     r_lo = rank(0.1) + F.when(h10 - F.floor(h10) > 0, 1).otherwise(0)
     trim = (cum >= r_lo) & (cum - c < rank(0.9))
     r = r.select(
-        *KEYS, "x", "c", "n", "s1", "_cum",
-        value_at_rank(xx, rank(0.5)).over(whole).alias("a50"),
-        value_at_rank(xx, rank(0.5) + 1).over(whole).alias("b50"),
+        *KEYS, "x", "c", "_n", "s1", "_cum",
+        value_at_rank("x", rank(0.5)).over(whole).alias("a50"),
+        value_at_rank("x", rank(0.5) + 1).over(whole).alias("b50"),
         F.sum(F.when(trim, c)).over(whole).alias("m"),
         F.sum(F.when(trim, c * xx)).over(whole).alias("st"),
     )
@@ -142,10 +143,10 @@ def _stats_asof_build(
     rank_picks = []
     for nm, qf in _QFRACS:
         if nm != "50":
-            rank_picks.append(value_at_rank(xx, rank(qf)).alias(f"a{nm}"))
-            rank_picks.append(value_at_rank(xx, rank(qf) + 1).alias(f"b{nm}"))
+            rank_picks.append(value_at_rank("x", rank(qf)).alias(f"a{nm}"))
+            rank_picks.append(value_at_rank("x", rank(qf) + 1).alias(f"b{nm}"))
     j = r.groupBy(*KEYS).agg(
-        *[F.first(col).alias(col) for col in ["n", "s1", "a50", "b50", "m", "st"]],
+        *[F.first(col).alias(col) for col in ["_n", "s1", "a50", "b50", "m", "st"]],
         F.sum(c * (xx * xx)).alias("s2"),
         F.sum(c * ((xx * xx) * xx)).alias("s3"),
         F.sum(c * ((xx * xx) * (xx * xx))).alias("s4"),
@@ -156,9 +157,8 @@ def _stats_asof_build(
         F.sum(c * F.abs(xx - _lerp("50", 0.5))).alias("sadmed"),
         F.sum(F.when(trim, c * F.abs(F.col("m") * xx - F.col("st")))).alias("sadt"),
     )
-    nn = F.col("n")
-    mean = F.col("s1") / nn
-    var = F.greatest(F.col("s2") / nn - (F.col("s1") / nn) * (F.col("s1") / nn), F.lit(0.0))
+    mean = F.col("s1") / n
+    var = F.greatest(F.col("s2") / n - (F.col("s1") / n) * (F.col("s1") / n), F.lit(0.0))
     j = j.select(
         "*",
         mean.alias("mean"),
@@ -166,9 +166,9 @@ def _stats_asof_build(
         *[_lerp(nm, qf).alias(f"p{nm}") for nm, qf in _QFRACS],
     )
     mean, var = F.col("mean"), F.col("var")
-    s2n = F.col("s2") / nn
-    s3n = F.col("s3") / nn
-    s4n = F.col("s4") / nn
+    s2n = F.col("s2") / n
+    s3n = F.col("s3") / n
+    s4n = F.col("s4") / n
     skew = F.when(var == 0, 0.0).otherwise(
         (s3n - F.lit(3.0) * mean * s2n + F.lit(2.0) * mean * mean * mean)
         / (var * F.sqrt(var))
@@ -181,7 +181,7 @@ def _stats_asof_build(
     )
     return j.select(
         *KEYS,
-        nn.cast("long").alias("n_turns"),
+        n.cast("long").alias("n_turns"),
         mean.alias("stat_mean"),
         var.alias("stat_var"),
         skew.alias("stat_skew"),
@@ -193,9 +193,9 @@ def _stats_asof_build(
         F.col("mx").alias("stat_max"),
         (F.col("p75") - F.col("p25")).alias("stat_iqr"),
         (F.col("mx") - F.col("mn")).alias("stat_range"),
-        (F.col("sad1") / (nn * nn)).alias("stat_mad"),
+        (F.col("sad1") / (n * n)).alias("stat_mad"),
         (F.col("sadt") / (F.col("m") * F.col("m"))).alias("stat_rmad"),
-        (F.col("sadmed") / nn).alias("stat_medad"),
+        (F.col("sadmed") / n).alias("stat_medad"),
         F.when(mean == 0, SENTINEL).otherwise(F.sqrt(var) / mean).alias("stat_cov"),
         F.when(F.col("p75") + F.col("p25") == 0, SENTINEL)
         .otherwise((F.col("p75") - F.col("p25")) / (F.col("p75") + F.col("p25")))
@@ -286,7 +286,7 @@ def _hist_asof_build(
             F.lead(c).over(wg).alias("next_c"),
         ),
         KEYS, "grey", "ci",
-    ).withColumnRenamed("_n", "n")
+    )
     prev_c, next_c = F.col("prev_c"), F.col("next_c")
     grad = (
         F.when(prev_c.isNull() & next_c.isNull(), F.lit(None).cast("double"))
@@ -294,7 +294,7 @@ def _hist_asof_build(
         .when(next_c.isNull(), c - prev_c)
         .otherwise((next_c - prev_c) / 2)
     )
-    n, gy = F.col("n"), F.col("grey")
+    n, gy = F.col("_n"), F.col("grey")
     p = c / n
 
     def grey_at_least(key: Column) -> Column:
@@ -308,26 +308,25 @@ def _hist_asof_build(
     multi = F.count("*") > 1  # one row per grey level
     agg = r.groupBy(*KEYS).agg(
         (-F.sum(p * F.log2(p))).alias("ih_entropy"),
-        (F.sum(ci * ci) / (F.max("n") * F.max("n"))).alias("ih_uniformity"),
+        (F.sum(ci * ci) / (F.max(n) * F.max(n))).alias("ih_uniformity"),
         grey_at_least(-ci).alias("ih_mode"),
         F.max(grad).alias("ih_max_grad"),
         F.when(multi, grey_at_least(-grad)).alias("ih_max_grad_g"),
         F.min(grad).alias("ih_min_grad"),
         F.when(multi, grey_at_least(grad)).alias("ih_min_grad_g"),
-        F.max("n").alias("n"),
+        F.max(n).alias("_n"),
         F.sum(ci * gy).alias("s1"),
         F.sum(ci * (gy * gy)).alias("s2"),
         F.min(gy).alias("ih_min"),
         F.max(gy).alias("ih_max"),
-        value_at_rank(gy, j50 + 1).alias("a50"),
-        value_at_rank(gy, j50 + 2).alias("b50"),
+        value_at_rank("grey", j50 + 1).alias("a50"),
+        value_at_rank("grey", j50 + 2).alias("b50"),
     )
-    nn = F.col("n")
-    mean = F.col("s1") / nn
+    mean = F.col("s1") / n
     return agg.select(
         *KEYS,
         mean.alias("ih_mean"),
-        F.greatest(F.col("s2") / nn - (F.col("s1") / nn) * (F.col("s1") / nn), F.lit(0.0)).alias("ih_var"),
+        F.greatest(F.col("s2") / n - (F.col("s1") / n) * (F.col("s1") / n), F.lit(0.0)).alias("ih_var"),
         _lerp("50", 0.5).alias("ih_median"),
         "ih_min",
         "ih_max",
